@@ -6719,7 +6719,7 @@ object SparkEntry {
         |  FROM sup WHERE k % 4 = 0)
         |SELECT k AS supplier_key, code AS supplier_code, name AS supplier_name,
         |  state AS supplier_state, action AS _action, isup AS _is_update,
-        |  md5(code) AS _row_id
+        |  md5(coalesce(CAST(length(code) AS VARCHAR) || ':' || code, '~')) AS _row_id
         |FROM cdc ORDER BY supplier_key, _action""".stripMargin),
 
     "scd_cdc_deletes" -> (supCte +

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.StructType
   *      also an input of the running plan is undefined behavior.
   *   2. '''Atomic multi-table commit''' — the CDC stream's
   *      advance-on-consume contract ("Stream data once used will be GONE
-  *      permanently", `SCD-Automation.sql:142`) couples the CDC snapshot
-  *      advance to the staging write: both must land, or neither.
+  *      permanently", `SCD-Automation.sql:142`) couples the stream's
+  *      advance (landing's commit: the offset is landing's version) to
+  *      the staging write: both must land, or neither.
   *
   * Design: every table write goes to a fresh immutable version directory
   * (`<root>/<table>/v<nnnnn>-<uuid>`); a single root-level `_manifest` file

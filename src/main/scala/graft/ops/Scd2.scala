@@ -34,7 +34,7 @@ import graft.core.Schemas
   * returning value — a new version is opened as standard SCD2 would.
   *
   * Scale: the CDC delta is per-cycle small against an ever-growing history —
-  * both joins broadcast the delta side by default so the 100 TB history
+  * both joins broadcast the delta side so the 100 TB history
   * never shuffles; the history table itself is only ever appended-to/
   * column-touched via this rewrite, and should be stored partitioned by
   * `current_flag` (tiny hot partition) or bucketed by the business key.
@@ -54,14 +54,11 @@ object Scd2 {
       cdc: DataFrame,
       batchTime: Timestamp,
       matchKeys: Seq[String],
-      faithful: Boolean = true,
-      broadcastCdc: Boolean = true): DataFrame = {
+      faithful: Boolean = true): DataFrame = {
 
     val ts = lit(batchTime).cast(TimestampType)
     val baseCols = staging.columns.toSeq
       .filterNot(Seq("start_date", "end_date", "current_flag").contains)
-
-    def hint(df: DataFrame) = if (broadcastCdc) broadcast(df) else df
 
     // Match-key equality: faithful mode keeps Snowflake's null-unsafe `=`
     // (a NULL tracked value never matches, so NULL-keyed images re-insert
@@ -74,7 +71,7 @@ object Scd2 {
       }.reduce(_ && _)
 
     // WHEN MATCHED AND action='DELETE' → close out.
-    val closeKeys = hint(cdc
+    val closeKeys = broadcast(cdc
       .filter(col(Schemas.cdcActionCol) === "DELETE")
       .select(matchKeys.map(col): _*)
       .distinct()

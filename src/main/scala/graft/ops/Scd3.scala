@@ -48,8 +48,7 @@ object Scd3 {
       source: DataFrame,
       keys: Seq[String],
       trackedCols: Seq[String],
-      nullSafe: Boolean = false,
-      broadcastSource: Boolean = true): DataFrame = {
+      nullSafe: Boolean = false): DataFrame = {
     val srcCols = source.columns.toSeq
     require(trackedCols.forall(srcCols.contains), "tracked cols must exist in source")
     val prevOf = trackedCols.map(c => c -> s"${c}_prev").toMap
@@ -59,7 +58,7 @@ object Scd3 {
 
     val t = target.columns.foldLeft(target)((d, c) => d.withColumnRenamed(c, s"__t_$c"))
     val s0 = srcCols.foldLeft(source)((d, c) => d.withColumnRenamed(c, s"__s_$c"))
-    val s = if (broadcastSource) broadcast(s0) else s0
+    val s = broadcast(s0)
     val joinCond = keys.map(k => col(s"__t_$k") === col(s"__s_$k")).reduce(_ && _)
     val matchedFlag = keys.map(k => col(s"__s_$k").isNotNull).reduce(_ && _)
 

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-import graft.core.{Schemas, TableStore}
+import graft.core.Schemas
 
 /** Table-stream (CDC) emulation — the one genuinely custom piece of the
   * reference's surface (SURVEY.md §2.7 W1).
@@ -20,53 +19,20 @@ import graft.core.{Schemas, TableStore}
   *   - '''Advance-on-consume''': DML over the stream moves the offset;
   *     the data is read exactly once (`SCD-Automation.sql:142`).
   *
-  * Implementation: persist the table snapshot as of the last consumption in
-  * a [[TableStore]]; `changes(current)` is a single full-outer join diff of
-  * saved-snapshot vs current keyed on the business key; `commitVersion` is
-  * obtained by staging the new snapshot and committing it '''in the same
-  * manifest swap as the consumer's own write''' (see
-  * [[graft.pipeline.ScdPipeline]]), which makes advance-on-consume atomic
-  * with consumption — the §7.5.1 hard part.
+  * Like a Snowflake stream, the offset holds no data of its own: it is a
+  * committed version of the source table. [[diff]] of the version at the
+  * offset against the new version is the delta; the consumer advances the
+  * offset by committing the new source version '''in the same manifest
+  * swap as its own write''' (see [[graft.pipeline.ScdPipeline]]), which
+  * makes advance-on-consume atomic with consumption — the §7.5.1 hard part.
   *
-  * Scale: the diff join shuffles both snapshots on the key. At 100 TB the
-  * snapshots should be written bucketed/partitioned by the key so the diff
-  * is a co-partitioned join with no exchange; AQE handles skew. The row-id
-  * is a deterministic md5 of the business key (stable across versions, like
-  * the reference's ROW_ID; md5 chosen because every engine — including the
-  * DuckDB oracle — computes it identically).
+  * Scale: the diff join shuffles both versions on the key unless both are
+  * stored bucketed on it ([[graft.core.TableStore.stageBucketed]]), in
+  * which case it is a co-partitioned join with no exchange; AQE handles
+  * skew. The row-id is a deterministic md5 of the business key (stable
+  * across versions, like the reference's ROW_ID; md5 chosen because every
+  * engine — including the DuckDB oracle — computes it identically).
   */
-class SnapshotCdc(
-    store: TableStore,
-    snapshotTable: String,
-    keys: Seq[String],
-    schema: StructType,
-    /** When set, snapshots are staged hash-bucketed on `keys` with this
-      * bucket count ([[TableStore.stageBucketed]]) so the diff against an
-      * equally-bucketed current table runs with no Exchange on either
-      * side — the scale story of the class doc, implemented. */
-    buckets: Option[Int] = None) {
-
-  def lastSnapshot: DataFrame = store.readOrEmpty(snapshotTable, schema)
-
-  /** The unconsumed delta: diff(last committed snapshot, `current`).
-    * Output = base columns + `_action` ('INSERT'|'DELETE') + `_is_update` +
-    * `_row_id`. Reading is side-effect free (like SELECTing a stream,
-    * `SCD-Configuration Setup.sql:127`); only a commit advances the offset. */
-  def changes(current: DataFrame): DataFrame = diff(lastSnapshot, current, keys)
-
-  /** Stage the post-consumption snapshot; include the returned
-    * `snapshotTable -> version` in the consumer's commit to advance the
-    * stream atomically with the consuming write. */
-  def stageAdvance(current: DataFrame): (String, String) =
-    snapshotTable -> (buckets match {
-      case Some(n) => store.stageBucketed(snapshotTable, current, keys, n)
-      case None    => store.stage(snapshotTable, current)
-    })
-
-  private def diff(prev: DataFrame, curr: DataFrame, keys: Seq[String]): DataFrame =
-    SnapshotCdc.diff(prev, curr, keys)
-}
-
 object SnapshotCdc {
 
   /** Pure snapshot diff (J3 in SURVEY.md §2.3): emits
@@ -75,6 +41,7 @@ object SnapshotCdc {
     *   - DELETE(old)+INSERT(new) with _is_update=true for keys present in
     *     both whose non-key columns differ (null-safely);
     *   - nothing for unchanged keys.
+    * Output = base columns + `_action` + `_is_update` + `_row_id`.
     * One full-outer join feeds both output branches. */
   def diff(prev: DataFrame, curr: DataFrame, keys: Seq[String]): DataFrame = {
     val cols = curr.columns.toSeq
@@ -90,7 +57,7 @@ object SnapshotCdc {
       .reduceOption(_ || _).getOrElse(lit(false))
 
     def rowId(side: String) =
-      md5(concat_ws("", keys.map(k => col(s"$side.$k")): _*))
+      md5(concat(keys.map(k => keyPart(col(s"$side.$k"))): _*))
 
     val inserts = joined
       .filter(cPresent && (!pPresent || valueChanged))
@@ -107,5 +74,14 @@ object SnapshotCdc {
         rowId("__p").as(Schemas.cdcRowIdCol)): _*)
 
     inserts.unionByName(deletes)
+  }
+
+  /** One key's part of the row-id preimage: `<length>:<value>`, or `~` for
+    * NULL. Length prefixes keep the concatenation decodable whatever the
+    * values hold, and `~` cannot start a prefixed part, so distinct keys
+    * (NULLs included) never share a preimage. */
+  private def keyPart(k: Column): Column = {
+    val s = k.cast("string")
+    coalesce(concat(length(s).cast("string"), lit(":"), s), lit("~"))
   }
 }

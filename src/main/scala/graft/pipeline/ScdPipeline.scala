@@ -35,10 +35,22 @@ import graft.sources.Stage
   *
   * Atomicity: every table version is staged first (plain immutable parquet
   * writes), then ONE [[TableStore.commit]] flips raw, landing, staging,
-  * master, the CDC snapshot, and the run log together. A crash anywhere
-  * before the commit leaves the previous cycle fully intact and the stream
-  * unconsumed — the reference's advance-on-consume contract
-  * (`SCD-Automation.sql:142`) with no partial-cycle window.
+  * master, the run log, the load ledger and any materialized aggregates
+  * together. A crash anywhere before the commit leaves the previous cycle
+  * fully intact and the stream unconsumed — the reference's
+  * advance-on-consume contract (`SCD-Automation.sql:142`) with no
+  * partial-cycle window.
+  *
+  * The CDC stream on landing keeps no data: its offset is landing's
+  * committed version, and a cycle's delta is [[SnapshotCdc.diff]] of that
+  * version against the one the cycle stages. This rests on one invariant:
+  * '''landing is written only by the cycle that consumes it'''.
+  *
+  * Concurrency: a cycle reads every input at the manifest it read on
+  * start, and its commit expects those versions, so a cycle another
+  * writer committed meanwhile makes this one refuse
+  * (`ConcurrentModificationException`, logged FAILED) instead of
+  * overwriting it.
   *
   * All rows touched in a cycle share the single `batchTime`
   * (SURVEY.md §4b.3); tests inject it, production passes `now`.
@@ -53,19 +65,14 @@ class ScdPipeline(
   private val Landing = config.table("landing")
   private val Staging = config.table("staging")
   private val Master = config.table("master")
-  private val CdcSnapshot = config.table("landing__cdc_snapshot")
   private val RunLog = s"${config.prefix}_run_log"
   private val LoadHistory = s"${config.prefix}_load_history"
 
   private val stagingSchema = Schemas.scd2(config.baseSchema)
 
-  private val cdcStream =
-    new SnapshotCdc(store, CdcSnapshot, config.businessKeys, config.baseSchema,
-      buckets = config.snapshotBuckets)
-
-  /** Landing and the CDC snapshot share one layout: bucketed by business
-    * key when [[ScdConfig.snapshotBuckets]] is set, so the per-cycle diff
-    * joins co-partitioned scans with no Exchange. */
+  /** Landing's one layout: bucketed by business key when
+    * [[ScdConfig.snapshotBuckets]] is set, so the per-cycle diff of two
+    * landing versions joins co-partitioned scans with no Exchange. */
   private def stageLanding(df: DataFrame): String =
     config.snapshotBuckets match {
       case Some(n) => store.stageBucketed(Landing, df, config.businessKeys, n)
@@ -91,17 +98,31 @@ class ScdPipeline(
           .select(cols.map(c => col(s"__row.$c").as(c)): _*)
     }
 
+  /** `table` at the version `pin` maps it to, or empty when unmapped. */
+  private def readAt(pin: Map[String, String], table: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    pin.get(table) match {
+      case Some(v) => store.readVersion(table, v, schema)
+      case None    => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
+
   /** Peek the unconsumed stream (SELECT * FROM stream,
-    * `SCD-Configuration Setup.sql:127` — side-effect free). */
-  def streamChanges(): DataFrame =
-    cdcStream.changes(store.readOrEmpty(Landing, config.baseSchema))
+    * `SCD-Configuration Setup.sql:127` — side-effect free): landing at the
+    * stream's offset diffed against landing now. The offset is landing's
+    * committed version, so between cycles the peek is empty. */
+  def streamChanges(): DataFrame = {
+    val now = landing
+    SnapshotCdc.diff(now, now, config.businessKeys)
+  }
 
   /** Of the staged files, the ones NOT yet in the committed load-history
     * ledger. An anti-join against the ledger, not a driver-side Set of
     * every file ever loaded: only the current stage listing (one cycle's
     * files) and the anti-join survivors ever reach the driver, so the
     * check stays cycle-sized even after millions of loaded files. */
-  private def unloadedFiles(files: Seq[String]): Seq[String] = {
+  private def unloadedFiles(pin: Map[String, String],
+      files: Seq[String]): Seq[String] = {
     if (files.isEmpty) return Nil
     val staged = spark.createDataFrame(
       files.map(f =>
@@ -110,7 +131,7 @@ class ScdPipeline(
         .add("path", org.apache.spark.sql.types.StringType)
         .add("file_name", org.apache.spark.sql.types.StringType))
     staged
-      .join(store.readOrEmpty(LoadHistory, Schemas.loadHistory)
+      .join(readAt(pin, LoadHistory, Schemas.loadHistory)
         .select("file_name"), Seq("file_name"), "left_anti")
       .select("path").collect().map(_.getString(0)).toSeq
   }
@@ -127,9 +148,10 @@ class ScdPipeline(
     * file (exactly-once per file), never half-loads it. */
   def runCycle(stage: Stage, batchTime: Timestamp,
       purge: Boolean = true): Long = {
+    val pin = store.manifest
     val files = stage.list()
-    val newFiles = unloadedFiles(files)
-    runCycleWithBatch(Stage.readCsv(spark, config.baseSchema, newFiles),
+    val newFiles = unloadedFiles(pin, files)
+    cycle(pin, Stage.readCsv(spark, config.baseSchema, newFiles),
       batchTime,
       afterCommit = () => if (purge) stage.rm(files),
       loadedFiles = newFiles.map(f => Paths.get(f).getFileName.toString))
@@ -144,12 +166,7 @@ class ScdPipeline(
   def runCycleWithBatch(rawBatch: DataFrame, batchTime: Timestamp,
       afterCommit: () => Unit = () => (),
       loadedFiles: Seq[String] = Nil): Long =
-    try runCycleInner(rawBatch, batchTime, afterCommit, loadedFiles)
-    catch {
-      case e: Throwable =>
-        recordFailure(batchTime)
-        throw e
-    }
+    cycle(store.manifest, rawBatch, batchTime, afterCommit, loadedFiles)
 
   /** Best-effort FAILED history row (never masks the original failure). */
   private def recordFailure(batchTime: Timestamp): Unit =
@@ -176,12 +193,14 @@ class ScdPipeline(
       Schemas.runLog)
   }
 
-  private def runCycleInner(rawBatch: DataFrame, batchTime: Timestamp,
-      afterCommit: () => Unit, loadedFiles: Seq[String]): Long = {
+  /** One cycle against `pin`, the manifest read at its start. */
+  private def cycle(pin: Map[String, String], rawBatch: DataFrame,
+      batchTime: Timestamp, afterCommit: () => Unit,
+      loadedFiles: Seq[String]): Long = try {
 
-    // ---- read a consistent pre-cycle snapshot (one manifest read) --------
-    val landingPrev = store.readOrEmpty(Landing, config.baseSchema)
-    val stagingPrev = store.readOrEmpty(Staging, stagingSchema)
+    // ---- the pre-cycle snapshot: every input is read at `pin` ------------
+    val landingPrev = readAt(pin, Landing, config.baseSchema)
+    val stagingPrev = readAt(pin, Staging, stagingSchema)
 
     // task1+2: truncate raw + COPY INTO raw. Materialized first so the CSV
     // files can be purged after commit and downstream reads are from
@@ -197,11 +216,12 @@ class ScdPipeline(
     val landingVersion = stageLanding(landingNext)
     val landingNew = store.readVersion(Landing, landingVersion, config.baseSchema)
 
-    // the stream on landing now holds the delta since last consumption.
+    // the stream on landing now holds the delta since last consumption:
+    // its offset is the committed landing version the cycle started from.
     // With registered aggregates the delta is consumed twice (SCD2 merge +
     // MV maintenance) — materialize it once, delta-sized, instead of
     // re-running the diff join per consumer.
-    val cdc0 = cdcStream.changes(landingNew)
+    val cdc0 = SnapshotCdc.diff(landingPrev, landingNew, config.businessKeys)
     val cdc =
       if (config.aggregates.isEmpty) cdc0 else cdc0.localCheckpoint(true)
 
@@ -218,9 +238,6 @@ class ScdPipeline(
     val masterVersion = store.stage(Master,
       Scd2.currentView(stagingNew, config.baseSchema.fieldNames.toSeq))
 
-    // stream advance staged, committed together with everything else
-    val (snapTable, snapVersion) = cdcStream.stageAdvance(landingNew)
-
     // registered materialized aggregates: refreshed by signed application
     // of the SAME consumed delta (IncrementalAgg) and committed in the
     // SAME manifest swap — the MV, the staging history, and the stream
@@ -228,13 +245,13 @@ class ScdPipeline(
     // the group domain, never a landing rescan
     val mvUpdates = config.aggregates.map { mv =>
       val tbl = mvTable(mv)
-      val prev = store.readOrEmpty(tbl, mvSchema(mv))
+      val prev = readAt(pin, tbl, mvSchema(mv))
       tbl -> store.stage(tbl,
         graft.ops.IncrementalAgg.applyCdc(prev, cdc, mv.keys, mv.measures))
     }.toMap
 
     // run-log append (TASK_HISTORY stand-in)
-    val prevLog = store.readOrEmpty(RunLog, Schemas.runLog)
+    val prevLog = readAt(pin, RunLog, Schemas.runLog)
     val logVersion = store.stage(RunLog, prevLog.unionByName(
       logRow(prevLog, batchTime, rowsLoaded, "SUCCEEDED")))
 
@@ -243,24 +260,30 @@ class ScdPipeline(
     val ledgerUpdate =
       if (loadedFiles.isEmpty) Map.empty[String, String]
       else {
-        val prevLedger = store.readOrEmpty(LoadHistory, Schemas.loadHistory)
+        val prevLedger = readAt(pin, LoadHistory, Schemas.loadHistory)
         val rows = spark.createDataFrame(
           loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
           Schemas.loadHistory)
         Map(LoadHistory -> store.stage(LoadHistory, prevLedger.unionByName(rows)))
       }
 
-    // ---- the atomic multi-table commit ----------------------------------
+    // ---- the atomic multi-table commit: committing landing advances the
+    // stream; every table the cycle read must still be at `pin` -----------
+    val readTables = Seq(Landing, Staging, RunLog, LoadHistory) ++ mvUpdates.keys
     store.commit(Map(
-      Raw -> rawVersion,
-      Landing -> landingVersion,
-      Staging -> stagingVersion,
-      Master -> masterVersion,
-      snapTable -> snapVersion,
-      RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates)
+        Raw -> rawVersion,
+        Landing -> landingVersion,
+        Staging -> stagingVersion,
+        Master -> masterVersion,
+        RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates,
+      expect = readTables.map(t => t -> pin.get(t)).toMap)
 
     afterCommit()
     rowsLoaded
+  } catch {
+    case e: Throwable =>
+      recordFailure(batchTime)
+      throw e
   }
 
   /** The COPY load-history ledger (file name → load batch time). */
@@ -292,11 +315,6 @@ class ScdPipeline(
 
   // -- verification reads (SURVEY.md §3.3) --------------------------------
 
-  /** Typed view of any tier for case-class consumers
-    * (`pipeline.as[SupplierVersion](pipeline.staging)`). */
-  def as[T: org.apache.spark.sql.Encoder](df: DataFrame): org.apache.spark.sql.Dataset[T] =
-    df.as[T]
-
   def raw: DataFrame = store.readOrEmpty(Raw, config.baseSchema)
   def landing: DataFrame = store.readOrEmpty(Landing, config.baseSchema)
   def staging: DataFrame = store.readOrEmpty(Staging, stagingSchema)
@@ -307,11 +325,11 @@ class ScdPipeline(
     store.readOrEmpty(RunLog, Schemas.runLog).orderBy(col("completed_time").desc)
 
   /** SHOW STREAMS (`SCD-Configuration Setup.sql:60`, `SCD-Automation.sql:18`
-    * — D5): the CDC streams this pipeline maintains, with the snapshot
+    * — D5): the CDC streams this pipeline maintains, with the landing
     * version their offset sits at. */
   def showStreams(): DataFrame = {
     import spark.implicits._
-    Seq((s"${Landing}_cdc", Landing, store.manifest.getOrElse(CdcSnapshot, "<unconsumed>")))
+    Seq((s"${Landing}_cdc", Landing, store.manifest.getOrElse(Landing, "<unconsumed>")))
       .toDF("stream_name", "source_table", "consumed_version")
   }
 }
@@ -322,7 +340,6 @@ object ScdPipeline {
   val Staging = "supplier_staging"
   val Master = "supplier_master"
   val RunLog = "supplier_run_log"
-  val CdcSnapshot = "supplier_landing__cdc_snapshot"
 }
 
 /** Dimension parametrization: the reference pipeline is the supplier
@@ -342,11 +359,11 @@ case class ScdConfig(
       * nondeterministic-MERGE error; [[DuplicatePolicy.KeepOne]] keeps a
       * deterministic representative (min by full row) — duplicates left in
       * place would multiply landing rows through the merge join AND make
-      * the CDC snapshot diff self-join explode. */
+      * the CDC diff join explode. */
     duplicatePolicy: DuplicatePolicy = DuplicatePolicy.Error,
-    /** When set, the landing table and its CDC snapshot are stored
-      * hash-bucketed on the business key with this bucket count, making
-      * the per-cycle snapshot diff exchange-free on both sides — the last
+    /** When set, the landing table is stored hash-bucketed on the
+      * business key with this bucket count, making the per-cycle diff of
+      * two landing versions exchange-free on both sides — the last
       * full shuffle in the core pipeline at 100 TB. Size so one bucket of
       * the dimension fits an executor core (e.g. 4096 for a 10 TB
       * dimension). */
@@ -364,7 +381,7 @@ case class ScdConfig(
 }
 
 object ScdConfig {
-  /** The reference dimension. Bucketed snapshots are ON by default: the
+  /** The reference dimension. Bucketed landing is ON by default: the
     * 10-cycle soak measured the bucketed layout ~30% faster end-to-end
     * even at 20k-row local scale (the CDC diff loses both shuffles), and
     * the gap only widens with data size. Set `snapshotBuckets = None` for

@@ -403,6 +403,18 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
       plan should not include "Exchange"
       plan should include("SortMergeJoin")
       plan should include("SelectedBucketsCount")
+
+      // the shape the cycle runs: the previous committed landing version
+      // (the stream's offset) diffed against the next one
+      val landing = graft.pipeline.ScdPipeline.Landing
+      val Seq(v1, v2) = store.committedVersions(landing)
+      def at(v: String) =
+        store.readVersion(landing, v, graft.core.Schemas.landing)
+      val cyclePlan = executedPlan(
+        graft.ops.SnapshotCdc.diff(at(v1), at(v2), Seq("supplier_code")))
+      cyclePlan should not include "Exchange"
+      cyclePlan should include("SortMergeJoin")
+      cyclePlan should include("SelectedBucketsCount")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 

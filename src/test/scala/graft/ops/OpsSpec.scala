@@ -89,6 +89,23 @@ class OpsSpec extends AnyFunSuite with Matchers with SparkSpec {
     a103.head.getAs[Boolean]("_is_update") shouldBe false
   }
 
+  test("cdc row ids never collide across composite keys, separator characters or NULLs") {
+    val s = spark
+    import s.implicits._
+    // splits of one string, with and without a separator-like character
+    // inside a value, and NULL in either position or against ''
+    val curr = Seq[(String, String, Int)](
+        ("ab", "c", 1), ("a", "bc", 2),
+        ("a\u0001b", "c", 3), ("a", "b\u0001c", 4),
+        (null, "x", 5), ("x", null, 6), ("", "x", 7), ("", null, 8))
+      .toDF("k1", "k2", "v")
+    val ids = SnapshotCdc.diff(curr.limit(0), curr, Seq("k1", "k2"))
+      .select("_row_id").collect().map(_.getString(0))
+    ids.length shouldBe 8
+    ids.forall(_ != null) shouldBe true
+    ids.distinct.length shouldBe 8
+  }
+
   // ---- Scd2.merge (J2) ----------------------------------------------------
 
   private val t1 = Timestamp.valueOf("2024-01-01 00:00:00")

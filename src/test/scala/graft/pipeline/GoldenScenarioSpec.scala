@@ -94,7 +94,7 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
     {
       val s = spark
       import s.implicits._
-      val typed = pipeline.as[graft.core.SupplierVersion](pipeline.staging)
+      val typed = pipeline.staging.as[graft.core.SupplierVersion]
       typed.filter(_.current_flag == "Y").count() shouldBe 8
       typed.filter(_.end_date.isDefined).count() shouldBe 2
     }
@@ -265,7 +265,8 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
     pipeline.runCycle(stage, t1)
 
     // apply scenario 2 to landing WITHOUT consuming (simulate the peek at
-    // setup.sql:218-228): run the landing merge manually
+    // setup.sql:218-228): run the landing merge manually and diff it
+    // against landing at the stream's offset — its committed version
     val raw = {
       stage.putContent("suppliers_v2.csv", scenario2)
       stage.readCsv(spark, graft.core.Schemas.raw)
@@ -273,9 +274,8 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
     val landingNext = graft.ops.Merge.upsert(
       pipeline.landing, raw, Seq("supplier_code"))
 
-    val changes = new graft.ops.SnapshotCdc(store, ScdPipeline.CdcSnapshot,
-      Seq("supplier_code"), graft.core.Schemas.landing)
-      .changes(landingNext)
+    val changes = graft.ops.SnapshotCdc
+      .diff(pipeline.landing, landingNext, Seq("supplier_code"))
       .collect()
 
     // 2 inserts + 2 update pairs = 6 rows (setup.sql:220-232)
@@ -287,5 +287,86 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
     // update pair shares one ROW_ID, stable across versions (setup.sql:224-227)
     val a105 = changes.filter(_.getAs[String]("supplier_code") == "A105")
     a105.map(_.getAs[String]("_row_id")).distinct.length shouldBe 1
+  }
+
+  test("the stream keeps no copy of landing: its offset is landing's committed version, across vacuum") {
+    val store = new TableStore(tmpDir("offset-store"), spark)
+    val stage = new Stage(tmpDir("offset-stage"))
+    val pipeline = new ScdPipeline(spark, store)
+    def consumedVersion =
+      pipeline.showStreams().collect().head.getAs[String]("consumed_version")
+
+    stage.putContent("suppliers.csv", scenario1)
+    pipeline.runCycle(stage, t1)
+    pipeline.runCycle(stage, t1) // empty cycles still write a landing version
+    pipeline.runCycle(stage, t1)
+    store.vacuum(retain = 2)
+
+    store.manifest.keys.filter(_.contains("__cdc_snapshot")) shouldBe empty
+    consumedVersion shouldBe store.manifest(ScdPipeline.Landing)
+    pipeline.streamChanges().count() shouldBe 0
+
+    // the next cycle consumes exactly scenario 2's delta from the offset:
+    // 2 inserts + 2 update pairs, applied to the history
+    stage.putContent("suppliers_v2.csv", scenario2)
+    pipeline.runCycle(stage, t2) shouldBe 4L
+    val Seq(offset, current) =
+      store.committedVersions(ScdPipeline.Landing).takeRight(2)
+    consumedVersion shouldBe current
+    def landingAt(v: String) =
+      store.readVersion(ScdPipeline.Landing, v, graft.core.Schemas.landing)
+    val delta = graft.ops.SnapshotCdc
+      .diff(landingAt(offset), landingAt(current), Seq("supplier_code"))
+      .collect()
+    delta.length shouldBe 6
+    delta.count(_.getAs[Boolean]("_is_update")) shouldBe 4
+
+    pipeline.staging.count() shouldBe 10
+    pipeline.staging.filter("current_flag = 'N'")
+      .select("supplier_code", "supplier_state").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
+      Set(("A105", "Hyderabad"), ("A106", "Karnataka"))
+    pipeline.streamChanges().count() shouldBe 0
+  }
+
+  test("a cycle raced by another writer's cycle refuses its commit instead of overwriting it") {
+    val root = tmpDir("occ-store")
+    val stageA = new Stage(tmpDir("occ-stage-a"))
+    val stageB = new Stage(tmpDir("occ-stage-b"))
+    val pipelineB = new ScdPipeline(spark, new TableStore(root, spark))
+    // writer A's store runs writer B's whole cycle on the same root just
+    // before A's cycle commit: B commits after A pinned its inputs
+    var raced = false
+    val storeA = new TableStore(root, spark) {
+      override def commit(updates: Map[String, String],
+          expect: Map[String, Option[String]]): Unit = {
+        if (!raced) {
+          raced = true
+          stageB.putContent("suppliers_v2.csv", scenario2)
+          pipelineB.runCycle(stageB, t2) shouldBe 4L
+        }
+        super.commit(updates, expect)
+      }
+    }
+    val pipelineA = new ScdPipeline(spark, storeA)
+
+    stageA.putContent("suppliers.csv", scenario1)
+    a[java.util.ConcurrentModificationException] should be thrownBy
+      pipelineA.runCycle(stageA, t1)
+
+    // B's cycle is intact: its rows, its ledger entry, its SUCCEEDED row
+    pipelineB.staging.count() shouldBe 4
+    pipelineB.landing.count() shouldBe 4
+    pipelineB.loadHistory.select("file_name").collect().map(_.getString(0))
+      .toSeq shouldBe Seq("suppliers_v2.csv")
+    // A's file stays staged for a retry, and A's run is on record as FAILED
+    stageA.list().size shouldBe 1
+    pipelineA.taskHistory.orderBy("cycle_id").collect()
+      .map(_.getAs[String]("status")).toSeq shouldBe Seq("SUCCEEDED", "FAILED")
+
+    // the retry reads the new versions and commits on top of B's cycle
+    pipelineA.runCycle(stageA, t2) shouldBe 6L
+    pipelineA.landing.count() shouldBe 8
+    pipelineA.loadHistory.count() shouldBe 2
   }
 }

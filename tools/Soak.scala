@@ -6,7 +6,7 @@ import graft.sources.Stage
 import org.apache.spark.sql.types._
 
 /** Pipeline soak: 10 cycles x 20k-row duplicate-laden deltas, run twice —
-  * once with plain snapshots and once with bucketed snapshots
+  * once with a plain landing table and once with a bucketed one
   * (snapshotBuckets=16, the exchange-free CDC-diff layout) — asserting the
   * two layouts produce identical staging histories. */
 object Soak {
