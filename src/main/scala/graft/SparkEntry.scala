@@ -4282,15 +4282,15 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // k-core decomposition (batch peeling): the graph-datacard density
+    // k-core decomposition: the graph-datacard density
     // signal. Closed-form synthetic graph with a genuine 7-round peel
     // cascade — the +1/+2 ring and d²+7 chords give everyone degree ~6
     // (below k=7, so the periphery unravels wave by wave), while a
     // dense j=3..6 block on nodes 0..60 survives as a 57-node core with
     // fixpoint degrees 7..14 (GraphSpec pins the shape and that the
     // cascade fits the oracle's 12 unrolled rounds with margin). The
-    // oracle replays each peel round as one degree aggregate + two
-    // membership filters — the identical batch-peel semantics.
+    // oracle replays batch peeling, one degree aggregate + two
+    // membership filters per round, which reaches the same core.
     "graph_kcore" -> ((s, dir) => {
       val d = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") <= 300).select(col("doc_id"))
@@ -5420,9 +5420,9 @@ object SparkEntry {
     * pins the cascade at 7 rounds on this graph, so 12 is fixpoint plus
     * margin — extra rounds past the fixpoint are no-ops). Each round is
     * one degree aggregate over the symmetrized edges plus two
-    * membership filters, exactly the operator's round. MATERIALIZED for
-    * the [[pageRankDanglingSql]] reason: each round reads its
-    * predecessor three times. */
+    * membership filters (GraphSpec pins the operator equal to a batch
+    * peel on this graph). MATERIALIZED for the [[pageRankDanglingSql]]
+    * reason: each round reads its predecessor three times. */
   private val kCoreSql: String = {
     val iters = 12
     val step = (i: Int) =>

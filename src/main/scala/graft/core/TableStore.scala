@@ -55,16 +55,27 @@ class TableStore(val root: String, spark: SparkSession) {
   Files.createDirectories(rootPath)
   private def manifestPath: Path = rootPath.resolve("_manifest")
 
-  /** table → current version dir name. Lines starting with `#` are
-    * commit-history records ([[history]]), not mappings. */
-  def manifest: Map[String, String] =
-    if (!Files.exists(manifestPath)) Map.empty
-    else Files.readAllLines(manifestPath, StandardCharsets.UTF_8).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { line =>
+  /** One read and parse of the manifest file: (table → current
+    * version, table → superseded versions). A caller that needs both
+    * halves takes them from one call, so they describe the same commit. */
+  private def readManifest(): (Map[String, String], Map[String, Seq[String]]) =
+    if (!Files.exists(manifestPath)) (Map.empty, Map.empty)
+    else {
+      val lines = Files.readAllLines(manifestPath, StandardCharsets.UTF_8)
+        .asScala.toSeq.filter(_.nonEmpty)
+      val current = lines.filterNot(_.startsWith("#")).map { line =>
         val i = line.indexOf('\t')
         line.substring(0, i) -> line.substring(i + 1)
       }.toMap
+      val hist = lines.filter(_.startsWith("#hist\t")).map { line =>
+        val f = line.split('\t'); (f(1), f(2))
+      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      (current, hist)
+    }
+
+  /** table → current version dir name. Lines starting with `#` are
+    * commit-history records ([[history]]), not mappings. */
+  def manifest: Map[String, String] = readManifest()._1
 
   /** table → superseded committed versions, oldest first (current NOT
     * included). Recorded as `#hist` lines in the SAME manifest file, so
@@ -73,19 +84,16 @@ class TableStore(val root: String, spark: SparkSession) {
     * lets [[vacuum]] retain genuine time-travel targets while still
     * sweeping crashed write-ahead garbage (whose versions never reached
     * any manifest). Bounded to the last [[MaxHistory]] per table. */
-  def history: Map[String, Seq[String]] =
-    if (!Files.exists(manifestPath)) Map.empty
-    else Files.readAllLines(manifestPath, StandardCharsets.UTF_8).asScala
-      .filter(_.startsWith("#hist\t")).toSeq
-      .map { line =>
-        val f = line.split('\t'); (f(1), f(2))
-      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  def history: Map[String, Seq[String]] = readManifest()._2
 
   /** committed versions of a table, oldest first, current last — the
     * time-travel index (unlike the raw directory listing, this never
-    * contains crashed write-ahead versions). */
-  def committedVersions(table: String): Seq[String] =
-    history.getOrElse(table, Seq.empty) ++ manifest.get(table).toSeq
+    * contains crashed write-ahead versions). One manifest read, so a
+    * commit landing mid-call cannot drop the version it superseded. */
+  def committedVersions(table: String): Seq[String] = {
+    val (current, hist) = readManifest()
+    hist.getOrElse(table, Seq.empty) ++ current.get(table).toSeq
+  }
 
   private val MaxHistory = 32
 
@@ -508,11 +516,23 @@ class TableStore(val root: String, spark: SparkSession) {
     * pass nothing by design). Single-writer-per-table remains the
     * PERFORMANCE assumption — this makes violating it loud, not fast.
     * On an object store the same protocol is a conditional PUT /
-    * metastore CAS on the manifest key. */
+    * metastore CAS on the manifest key.
+    *
+    * Every updated version's directory must exist: a staged version
+    * that another handle's [[vacuum]] swept before this commit is
+    * refused, never published as a dangling pointer. Vacuum holds the
+    * same lock, so the check cannot race it. */
   def commit(updates: Map[String, String],
       expect: Map[String, Option[String]] = Map.empty): Unit =
     withManifestLock {
-      val cur = manifest // fresh read under the lock
+      updates.foreach { case (t, v) =>
+        val dir = versionDir(t, v)
+        if (!Files.isDirectory(dir))
+          throw new IllegalStateException(
+            s"commit('$t'): staged version directory $dir does not exist " +
+              "(swept by a vacuum before this commit); stage it again")
+      }
+      val (cur, hist) = readManifest() // fresh read under the lock
       expect.foreach { case (t, exp) =>
         val got = cur.get(t)
         if (got != exp)
@@ -523,7 +543,7 @@ class TableStore(val root: String, spark: SparkSession) {
               "(the staged data is write-ahead garbage, swept by vacuum)")
       }
       val next = cur ++ updates
-      val nextHist = updates.foldLeft(history) { case (h, (t, v)) =>
+      val nextHist = updates.foldLeft(hist) { case (h, (t, v)) =>
         cur.get(t) match {
           case Some(old) if old != v =>
             h.updated(t, (h.getOrElse(t, Seq.empty) :+ old).takeRight(MaxHistory))
@@ -584,11 +604,12 @@ class TableStore(val root: String, spark: SparkSession) {
     * `vacuum(0)` is the hard purge). Dropping a missing table throws —
     * a silent no-op would hide an orchestration bug. */
   def dropTable(table: String): Unit = withManifestLock {
-    val cur = manifest.getOrElse(table,
+    val (current, hist) = readManifest()
+    val cur = current.getOrElse(table,
       throw new IllegalStateException(s"table '$table' does not exist in $root"))
-    writeManifest(manifest - table,
-      history.updated(table,
-        (history.getOrElse(table, Seq.empty) :+ cur).takeRight(MaxHistory)))
+    writeManifest(current - table,
+      hist.updated(table,
+        (hist.getOrElse(table, Seq.empty) :+ cur).takeRight(MaxHistory)))
   }
 
   /** UNDROP TABLE: restore the most recently dropped version with one
@@ -598,16 +619,17 @@ class TableStore(val root: String, spark: SparkSession) {
     * first) or when no retained version remains (a retention vacuum
     * already swept it — restores never resurrect reclaimed bytes). */
   def undropTable(table: String): Unit = withManifestLock {
-    require(!manifest.contains(table),
+    val (current, hists) = readManifest()
+    require(!current.contains(table),
       s"undropTable: '$table' already exists in $root")
-    val hist = history.getOrElse(table, Seq.empty)
+    val hist = hists.getOrElse(table, Seq.empty)
     if (hist.isEmpty)
       throw new IllegalStateException(
         s"undropTable: no retained version of '$table' in $root — " +
           "a retention vacuum already swept it")
-    writeManifest(manifest + (table -> hist.last),
-      if (hist.size > 1) history.updated(table, hist.dropRight(1))
-      else history - table)
+    writeManifest(current + (table -> hist.last),
+      if (hist.size > 1) hists.updated(table, hist.dropRight(1))
+      else hists - table)
   }
 
   /** Predicate DELETE — the right-to-be-forgotten sweep the reference has
@@ -1414,9 +1436,10 @@ class TableStore(val root: String, spark: SparkSession) {
     * tmp file of a commit that is between its write and its rename, even
     * when that commit comes from another JVM. */
   def vacuum(retain: Int = 0): Unit = withManifestLock {
-    val live = manifest.map { case (t, v) => versionDir(t, v).toAbsolutePath }.toSet ++
+    val (current, hist) = readManifest()
+    val live = current.map { case (t, v) => versionDir(t, v).toAbsolutePath }.toSet ++
       (if (retain <= 0) Set.empty[Path]
-       else history.flatMap { case (t, vs) =>
+       else hist.flatMap { case (t, vs) =>
          vs.takeRight(retain).map(v => versionDir(t, v).toAbsolutePath)
        }.toSet)
     // prune swept versions from the #hist records FIRST, so the
@@ -1424,11 +1447,11 @@ class TableStore(val root: String, spark: SparkSession) {
     // advertises versions whose directories exist — a crash between this
     // swap and the sweep below just leaves orphan dirs for the next
     // vacuum, never a history entry pointing at a deleted path
-    val keptHist = history
+    val keptHist = hist
       .map { case (t, vs) =>
         t -> vs.filter(v => live.contains(versionDir(t, v).toAbsolutePath)) }
       .filter(_._2.nonEmpty)
-    if (keptHist != history) writeManifest(manifest, keptHist)
+    if (keptHist != hist) writeManifest(current, keptHist)
     if (Files.exists(rootPath)) {
       // stale tmp manifests are the debris of a crash in the one
       // non-atomic window (between tmp-write and rename in [[commit]]):

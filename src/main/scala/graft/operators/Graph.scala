@@ -47,7 +47,9 @@ object Graph {
     * no join, no collect_list adjacency materialization, no pair
     * expansion — so per-round cost is O(|E|) shuffled bytes however
     * skewed the degree distribution (a hot node's neighborhood streams
-    * through the window's spill-safe container). */
+    * through the window's spill-safe container). Windows, not hash
+    * aggregates + equi-joins: the window form measured faster on every
+    * GraphScale cell (BENCH_AB_r11.json). */
   private[graft] def starRound(e: DataFrame): DataFrame = {
     // large-star: for every center c over the SYMMETRIZED edges, each
     // strictly-larger neighbor links to min(neighborhood ∪ {c}) — long
@@ -76,43 +78,6 @@ object Graph {
       .distinct()
   }
 
-  /** [[starRound]] re-planned as hash aggregates + equi-joins — the
-    * same contraction (GraphSpec pins exact per-round equivalence):
-    * min-per-center computes in a map-side-combined aggregate (no
-    * per-partition sort, unlike WindowExec) and the join back against
-    * the one-row-per-center min relation is AQE-skew-splittable. Join
-    * output is exactly |E'| rows — an equi-join against a keyed
-    * singleton relation, never pair amplification.
-    *
-    * MEASURED on single-giant-component graphs (tools/GraphScale,
-    * local[32], adjudication in BENCH_AB_r11.json): the window rounds
-    * WIN — 8M-node binary tree 36 s window vs 43 s agg; 8M-node
-    * degree-4M hub + 4M chain 167 s vs 211 s; both variants scale
-    * linearly 2M→8M. The hot window partition does not serialize the
-    * round at these scales: the per-center min over a sorted run is a
-    * sequential but memory-bandwidth-cheap pass, while this variant
-    * pays one extra shuffle per star. Kept (tested, not wired as
-    * default) as the documented fallback for a real cluster where one
-    * task per mega-hub per round becomes the wall — flip with
-    * `connectedComponents(aggRounds = true)`. */
-  private[graft] def starRoundAgg(e: DataFrame): DataFrame = {
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    val ls = sym.filter(col("v") > col("u"))
-      .join(mins, "u")
-      .select(col("m").as("u"), col("v"))
-      .filter(col("u") =!= col("v"))
-    val x = ls.select(greatest(col("u"), col("v")).as("hi"),
-      least(col("u"), col("v")).as("lo"))
-    val mins2 = x.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-    x.join(mins2, "hi")
-      .select(col("m").as("u"), col("lo").as("v"))
-      .unionByName(mins2.select(col("m").as("u"), col("hi").as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
   /** Connected components of the undirected graph given by `edges`.
     *
     * Returns `(node, component)` with one row per distinct node, where
@@ -133,9 +98,7 @@ object Graph {
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       nodes: Option[DataFrame] = None, nodeCol: String = "node",
-      maxIter: Int = 50, aggRounds: Boolean = false): DataFrame = {
-    val round: DataFrame => DataFrame =
-      if (aggRounds) starRoundAgg else starRound
+      maxIter: Int = 50): DataFrame = {
     // checkpoint the canonical edge set FIRST: both the node universe
     // and round 0 read it, and without the checkpoint the caller's
     // whole edge-derivation pipeline (e.g. linkage_entities' deletion-
@@ -180,7 +143,7 @@ object Graph {
     var converged = sig._1 == 0L
     var it = 0
     while (!converged && it < maxIter) {
-      val next = round(e).localCheckpoint(true)
+      val next = starRound(e).localCheckpoint(true)
       val nextSig = signature(next)
       Dedup.releaseCheckpoint(e)
       e = next
@@ -609,28 +572,16 @@ object Graph {
     * relaxation settles at first discovery and the result equals
     * [[bfsDistances]] (spec-pinned).
     *
-    * Two engines, identical results (spec-pinned equivalent, the
-    * [[kCore]] pattern), and the MEASUREMENT picked the default: the
-    * full-merge loop ([[shortestPathsMerge]]) pays an O(n) shuffle +
-    * `localCheckpoint` of the complete distance relation every round —
-    * the write pattern the r11 BFS probe measured at 1.8× — yet the
-    * GraphScale `sp` A/B (BENCH_AB_r13.json: 2M and 8M nodes, a
-    * realistic weighted expander AND an adversarial 66-round
-    * deep-improvement comb) has it AHEAD of the improvement-delta
-    * engine on every cell (8M: 84 vs 115 s expander, 104 vs 121 s
-    * comb), with sub-linear 2M→8M growth (1.25×/1.88× for 4× data).
-    * Unlike BFS — where settled levels never change, so dropping the
-    * full re-checkpoint was free — the improvable-distance check costs
-    * the delta engine a scan-join-aggregate plus its own checkpoint per
-    * round, which on memory-resident local checkpoints outweighs the
-    * O(n) write it saves. `deltaRounds = true` selects the delta engine
-    * ([[shortestPathsDelta]]) for environments where checkpoint bytes
-    * are genuinely expensive (disk- or network-backed executor
-    * storage). */
+    * Each round full-outer merges the candidate relation into the
+    * COMPLETE distance relation and re-checkpoints it: an O(n) shuffle
+    * and memory-resident checkpoint write per round, but one job and one
+    * relation. Checkpointing only each round's improvements instead
+    * measured slower on every GraphScale `sp` cell (BENCH_AB_r13.json):
+    * on memory-resident local checkpoints the saved O(n) write costs
+    * less than the extra join, aggregate and checkpoint per round. */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String = "node",
-      weightCol: String = "w", maxIter: Int = 200,
-      deltaRounds: Boolean = false): DataFrame = {
+      weightCol: String = "w", maxIter: Int = 200): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val base = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
@@ -649,21 +600,6 @@ object Graph {
       .select(col(sourceCol).as("node")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(true)
-    if (deltaRounds) shortestPathsDelta(sym, src, maxIter)
-    else shortestPathsMerge(sym, src, maxIter)
-  }
-
-  /** The full-merge relaxation loop — [[shortestPaths]]' DEFAULT engine,
-    * kept on the throne by measurement (see the two-engine paragraph in
-    * [[shortestPaths]]' scaladoc and BENCH_AB_r13.json): each round
-    * full-outer merges the candidate relation into the COMPLETE distance
-    * relation and re-checkpoints it — an O(n) shuffle and O(n)
-    * memory-resident checkpoint write per round, but only ONE job and
-    * one relation, which beats the delta engine's
-    * scan-join-aggregate-plus-checkpoint round on every GraphScale `sp`
-    * cell at 2M and 8M nodes. */
-  private[graft] def shortestPathsMerge(sym: DataFrame, src: DataFrame,
-      maxIter: Int): DataFrame = {
     var dist = src
     var frontier = dist
     var frontierSize = frontier.count()
@@ -689,7 +625,7 @@ object Graph {
       // frontier is always a view over dist's checkpoint — releasing
       // dist releases both
       Dedup.releaseCheckpoint(dist)
-      dist = merged // keep the checkpoint alive; `next` is a view of it
+      dist = merged // keep the checkpoint alive; `nextFrontier` is a view of it
       frontier = nextFrontier
       it += 1
     }
@@ -700,87 +636,6 @@ object Graph {
           "return unsettled distances")
     Dedup.releaseCheckpoint(sym)
     dist.select(col("node"), col("dist"))
-  }
-
-  /** IMPROVEMENT-DELTA relaxation (`deltaRounds = true`) — the BFS
-    * per-level-checkpoint rework adapted for distances that can improve
-    * after discovery. Instead of re-checkpointing the complete
-    * node-sized distance relation every round, each round checkpoints
-    * only its IMPROVEMENTS (the delta: nodes whose best distance
-    * changed, with the new value), and best-so-far is read through a
-    * min-per-node view over `settled ∪ recent deltas`: the stack is
-    * SCANNED (never shuffled, never rewritten) into a join against the
-    * frontier-neighborhood-sized candidate relation, so per-round
-    * shuffled bytes and checkpoint writes are both frontier-sized.
-    * Every `compactEvery` rounds the stack collapses into a fresh
-    * settled checkpoint, bounding view depth and pinned bytes; total
-    * writes across the traversal are O(improvements +
-    * n·rounds/compactEvery) instead of O(n·rounds). Identical result to
-    * [[shortestPathsMerge]] on every graph (spec-pinned, the
-    * [[kCoreFrontier]] discipline): the per-round frontier — candidates
-    * strictly better than best-so-far — is the same set, so the
-    * relaxation schedule is byte-identical. NOT the default: the
-    * GraphScale `sp` A/B measured it behind the full-merge loop on
-    * every 2M/8M cell (the saved O(n) write is memory-resident locally,
-    * the extra per-round join/aggregate/checkpoint jobs are not free) —
-    * it exists for executor storage where checkpoint bytes genuinely
-    * hurt, and as the structural answer if a future probe at deeper
-    * round counts flips the measurement. */
-  private[graft] def shortestPathsDelta(sym: DataFrame, src: DataFrame,
-      maxIter: Int, compactEvery: Int = 8): DataFrame = {
-    var settled = src
-    var deltas = List.empty[DataFrame]
-    var frontier = src
-    var frontierSize = frontier.count()
-    var it = 0
-    def stack: DataFrame = (settled :: deltas).reduce(_ unionByName _)
-    while (frontierSize > 0L && it < maxIter) {
-      // candidates touched this round: frontier-neighborhood-sized
-      val cand = frontier.select(col("node").as("u"), col("dist"))
-        .join(sym, "u")
-        .groupBy(col("v").as("node"))
-        .agg(min(col("dist") + col("w")).as("__c"))
-      // one join + re-aggregate computes the improvement set: the stack
-      // (settled ∪ recent deltas) is SCANNED, never shuffled — cand is
-      // the frontier-neighborhood-sized side AQE broadcasts, and the
-      // re-aggregate collapses a node's stack matches back to one row
-      // (min __d = best-so-far; __c is constant per node). Per-round
-      // shuffled bytes and checkpoint writes are both frontier-sized.
-      val delta = cand
-        .join(stack.withColumnRenamed("dist", "__d0"), Seq("node"), "left")
-        .groupBy(col("node"))
-        .agg(min(col("__c")).as("__c"), min(col("__d0")).as("__d"))
-        .filter(col("__d").isNull || col("__c") < col("__d"))
-        .select(col("node"), col("__c").as("dist"))
-        .localCheckpoint(true)
-      frontierSize = delta.count()
-      if (frontierSize > 0L) deltas ::= delta
-      else Dedup.releaseCheckpoint(delta)
-      frontier = delta
-      it += 1
-      if (deltas.length >= compactEvery) {
-        // collapse everything EXCEPT the newest delta — it is the live
-        // frontier's checkpoint, and releasing a checkpoint the next
-        // round still reads is the lineage-truncation trap the release
-        // helper's contract warns about. The view stays correct: the
-        // kept delta's rows are simply not pre-merged yet.
-        val keep = deltas.head
-        val rest = settled :: deltas.tail
-        val merged = rest.reduce(_ unionByName _)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        rest.foreach(Dedup.releaseCheckpoint)
-        settled = merged
-        deltas = List(keep)
-      }
-    }
-    if (frontierSize > 0L)
-      throw new IllegalStateException(
-        s"shortestPaths did not settle in $maxIter relaxation rounds " +
-          "(round count = max shortest-path hop count); refusing to " +
-          "return unsettled distances")
-    Dedup.releaseCheckpoint(sym)
-    stack.groupBy(col("node")).agg(min(col("dist")).as("dist"))
   }
 
   /** The k-core of the undirected graph — the maximal subgraph in which
@@ -795,84 +650,27 @@ object Graph {
     * duplicate and reversed edges, and null endpoints are dropped; an
     * empty result means the graph has no k-core.
     *
-    * Algorithm: FRONTIER-DELTA peeling by default ([[kCoreFrontier]] —
-    * measured 2.4×/1.7× faster than batch peeling on the 2M/8M-node
-    * worst-cascade tree, GraphScale `kcore` A/B); `frontier = false`
-    * keeps the BATCH peel, the spec-pinned-equivalent fallback (the
-    * starRoundAgg pattern): each round recomputes all degrees (one
-    * map-side-combined aggregate over the symmetrized slim edge
-    * relation) and drops every node below k at once (two semi-joins),
-    * so the round count is the peel DEPTH of the cascade (how many
-    * waves of removals k triggers), not the node count of sequential
-    * peeling. The edge set only ever shrinks, so convergence is
-    * witnessed by the edge COUNT alone (equal count + subset ⇒ equal
-    * set — cheaper than the [[connectedComponents]] signature, no hash
-    * involved). Per-round cost is O(|E|) shuffled bytes; rounds are
-    * `localCheckpoint`ed and superseded sets released eagerly, the
+    * Algorithm: FRONTIER-DELTA peeling. Degrees are computed ONCE;
+    * each wave broadcasts the removed set (wave-sized) against the
+    * static canonical edge relation to count per-neighbor decrements — a
+    * map-side scan with an O(touched)-sized aggregate, no edge shuffle —
+    * and the surviving degree relation (node-sized, not edge-sized) is
+    * the only per-wave checkpoint. Each node is removed exactly once, so
+    * each edge fires at most one decrement per endpoint ever and the
+    * stale edge relation never double-counts; survivors' degrees at the
+    * fixpoint ARE the within-core degrees. The round count is the peel
+    * DEPTH of the cascade (how many waves of removals k triggers), not
+    * the node count of sequential peeling. It measured 2.4×/1.7× faster
+    * than a batch peel that recomputes all degrees and re-filters the
+    * whole edge set every wave, on the 2M/8M-node worst-cascade tree
+    * (GraphScale `kcore`, BENCH_AB_r12.json). Rounds are
+    * `localCheckpoint`ed and superseded relations released eagerly, the
     * iterative-operator discipline of this file. `maxIter` is a loud
     * backstop (adversarial shapes — a bare chain at k=2 — peel O(n)
     * rounds two endpoints at a time; real graphs cascade out in tens),
     * throwing instead of returning a supergraph of the core. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIter: Int = 500, frontier: Boolean = true): DataFrame = {
-    if (frontier) return kCoreFrontier(edges, srcCol, dstCol, k, maxIter)
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-    var e = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-    var cnt = e.count()
-    var converged = cnt == 0L
-    var it = 0
-    while (!converged && it < maxIter) {
-      val keep = degrees(e).filter(col("core_deg") >= k).select(col("node"))
-      val next = e
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint(true)
-      val nextCnt = next.count()
-      Dedup.releaseCheckpoint(e)
-      e = next
-      converged = nextCnt == cnt || nextCnt == 0L
-      cnt = nextCnt
-      it += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not converge in $maxIter peel rounds; " +
-          "refusing to return a supergraph of the core")
-    degrees(e)
-  }
-
-  /** FRONTIER-DELTA peeling — [[kCore]]'s default engine since the
-    * GraphScale A/B (2M: 4.8 vs 11.4 s; 8M: 8.8 vs 15.2 s on the
-    * worst-cascade tree); identical result to batch peeling
-    * (spec-pinned equivalent on every graph, the starRoundAgg pattern),
-    * different per-wave cost model. Batch peeling recomputes ALL
-    * degrees and re-filters the whole edge set every wave: O(|E|)
-    * shuffled bytes per wave even when a wave removes three nodes.
-    * Here degrees are computed ONCE; each wave broadcasts the removed
-    * set (wave-sized) against the static canonical edge relation to
-    * count per-neighbor decrements — a map-side scan with an
-    * O(touched)-sized aggregate, no edge shuffle — and the surviving
-    * degree relation (node-sized, not edge-sized) is the only per-wave
-    * checkpoint. Each node is removed exactly once, so each edge fires
-    * at most one decrement per endpoint ever and the stale edge
-    * relation never double-counts; survivors' degrees at the fixpoint
-    * ARE the within-core degrees. The trade: waves scan (not shuffle)
-    * the full edge relation, so batch peeling can win when waves are
-    * few and removals are huge; GraphScale's `kcore` mode measures both
-    * arms on the adversarial deep-cascade tree. */
-  def kCoreFrontier(edges: DataFrame, srcCol: String,
-      dstCol: String, k: Int, maxIter: Int = 500): DataFrame = {
+      maxIter: Int = 500): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val e = edges
@@ -912,7 +710,7 @@ object Graph {
         // against the surviving degree relation. The broadcast hint is
         // gated on the driver-known wave size in BYTES (rows × 8 B vs
         // the session broadcast threshold above): typical waves are
-        // tiny (the whole point of this variant) and go map-side; a
+        // tiny (the whole point of frontier peeling) and go map-side; a
         // giant first wave (sparse graph, large k) must not be forced
         // through a driver broadcast, so it falls back to the join AQE
         // picks.
@@ -938,7 +736,7 @@ object Graph {
     }
     if (!done)
       throw new IllegalStateException(
-        s"kCoreFrontier(k=$k) did not converge in $maxIter peel rounds; " +
+        s"kCore(k=$k) did not converge in $maxIter peel rounds; " +
           "refusing to return a supergraph of the core")
     Dedup.releaseCheckpoint(e)
     deg

@@ -116,25 +116,6 @@ object Scd2 {
   def currentView(staging: DataFrame, baseCols: Seq[String]): DataFrame =
     staging.filter(col("current_flag") === "Y").select(baseCols.map(col): _*)
 
-  /** Point-in-time (as-of) join — THE consumption pattern of an SCD2
-    * history: each fact row picks the dimension version that was valid at
-    * its timestamp (`start_date <= ts` and `ts < end_date`, open versions
-    * unbounded). Left join: facts with no valid version at their time
-    * (unknown key, or ts before the first version) keep null dimension
-    * columns. The SCD2 invariant (versions of a key have disjoint
-    * [start, end) ranges) guarantees at most one match per fact.
-    *
-    * Plan shape: an EQUI join on the business key with the range predicate
-    * as a residual filter — the hash/sort-merge join machinery (and AQE
-    * skew handling) applies untouched, so this scales exactly like any
-    * key join; the range never degenerates into a cross product. History
-    * is often the small side when facts dominate — pass
-    * `broadcastHistory = true` to hint that explicitly when the dimension
-    * is KNOWN to fit an executor. The default is false: a forced broadcast
-    * hint bypasses Spark's size threshold, so defaulting it on would OOM
-    * on exactly the large histories this engine targets; with no hint AQE
-    * still picks a broadcast join whenever the history measures small at
-    * runtime, so small-dimension callers lose nothing. */
   /** Late-arriving correction splice — backfill a fact that arrives with
     * an effective timestamp IN THE PAST: each late record
     * `(keys…, corrected attrs…, tsCol)` finds its ENCLOSING version
@@ -196,6 +177,25 @@ object Scd2 {
     untouched.unionByName(before).unionByName(after)
   }
 
+  /** Point-in-time (as-of) join — THE consumption pattern of an SCD2
+    * history: each fact row picks the dimension version that was valid at
+    * its timestamp (`start_date <= ts` and `ts < end_date`, open versions
+    * unbounded). Left join: facts with no valid version at their time
+    * (unknown key, or ts before the first version) keep null dimension
+    * columns. The SCD2 invariant (versions of a key have disjoint
+    * [start, end) ranges) guarantees at most one match per fact.
+    *
+    * Plan shape: an EQUI join on the business key with the range predicate
+    * as a residual filter — the hash/sort-merge join machinery (and AQE
+    * skew handling) applies untouched, so this scales exactly like any
+    * key join; the range never degenerates into a cross product. History
+    * is often the small side when facts dominate — pass
+    * `broadcastHistory = true` to hint that explicitly when the dimension
+    * is KNOWN to fit an executor. The default is false: a forced broadcast
+    * hint bypasses Spark's size threshold, so defaulting it on would OOM
+    * on exactly the large histories this engine targets; with no hint AQE
+    * still picks a broadcast join whenever the history measures small at
+    * runtime, so small-dimension callers lose nothing. */
   def pointInTime(
       facts: DataFrame,
       history: DataFrame,

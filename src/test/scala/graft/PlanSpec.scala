@@ -595,16 +595,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     plan should not include "Join"
     plan should not include "collect_list"
     plan should not include "CartesianProduct"
-    // the agg-round fallback (measured alternative for mega-hub
-    // clusters — Graph.starRoundAgg scaladoc): min-per-center as a
-    // partial-combined HashAggregate, equi-joins only (exactly-|E'|
-    // output — no pair amplification), never a window sort and still
-    // never an adjacency array
-    val aggPlan = executedPlan(graft.operators.Graph.starRoundAgg(edges))
-    aggPlan should include("HashAggregate")
-    aggPlan should not include "Window"
-    aggPlan should not include "collect_list"
-    aggPlan should not include "CartesianProduct"
     // and the converged operator assigns every node its component min
     // with the star forest joined back once (broadcast at this size)
     val comp = graft.operators.Graph.connectedComponents(

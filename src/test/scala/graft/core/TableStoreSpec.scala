@@ -199,6 +199,62 @@ class TableStoreSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("commit refuses a staged version that another handle's vacuum " +
+      "swept: the manifest is unchanged and the table reads its previous " +
+      "version") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("ts-vacuum-race")
+    // writer A stages; a second handle on the same root vacuums before
+    // A commits (a scheduled OPTIMIZE beside a streaming sink)
+    val a = new TableStore(root, spark)
+    val b = new TableStore(root, spark)
+    a.overwrite("t", Seq(1).toDF("gen"))
+    val v0 = a.manifest("t")
+    val staged = a.stage("t", Seq(2).toDF("gen"))
+    b.vacuum(retain = 2)
+    val manifestFile = java.nio.file.Paths.get(root, "_manifest")
+    val before = java.nio.file.Files.readAllBytes(manifestFile).toSeq
+    val err = intercept[IllegalStateException] {
+      a.commit(Map("t" -> staged), expect = Map("t" -> Some(v0)))
+    }
+    err.getMessage should include(staged)
+    java.nio.file.Files.readAllBytes(manifestFile).toSeq shouldBe before
+    a.manifest("t") shouldBe v0
+    a.read("t").as[Int].collect().toSeq shouldBe Seq(1)
+    b.read("t").as[Int].collect().toSeq shouldBe Seq(1)
+  }
+
+  test("committedVersions reads the manifest once: a commit landing " +
+      "mid-call cannot drop the version it superseded") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("ts-hist-race")
+    val other = new TableStore(root, spark)
+    // a handle whose history read is followed by another writer's commit
+    // before the caller reads anything else from the manifest
+    var armed = false
+    val store = new TableStore(root, spark) {
+      override def history: Map[String, Seq[String]] = {
+        val h = super.history
+        if (armed) {
+          armed = false
+          other.overwrite("t", Seq(3).toDF("gen"))
+        }
+        h
+      }
+    }
+    store.overwrite("t", Seq(1).toDF("gen"))
+    store.overwrite("t", Seq(2).toDF("gen"))
+    val v2 = store.manifest("t")
+    armed = true
+    val got = store.committedVersions("t")
+    // any single manifest read is a prefix of the full lineage, and the
+    // version current before the call is in it
+    other.committedVersions("t").take(got.size) shouldBe got
+    got should contain(v2)
+  }
+
   test("vacuum removes only unreferenced versions") {
     val s = spark
     import s.implicits._

@@ -83,31 +83,16 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
     cc(edges, nodes = Some(nodes)) shouldBe got // repeat run → identical
   }
 
-  test("agg-round variant: per-round output equals the window rounds " +
-      "exactly, and full CC agrees on every shape") {
+  test("connectedComponents matches union-find on random, chain and " +
+      "hub shapes") {
     val rnd = new scala.util.Random(11)
     val edges = Seq.fill(300)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter(e => e._1 != e._2)
-    val canonical = edges
-      .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-      .toDF("u", "v")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long)].collect().toSet
-    // one contraction round: identical edge sets
-    rows(Graph.starRound(canonical)) shouldBe rows(Graph.starRoundAgg(canonical))
-    // full operator: identical assignments, hub and chain included
     val shapes = Seq(
       edges,
       (0L until 60L).map(i => (i, i + 1)), // chain
       (1L until 50L).map(i => (i, 0L))) // hub
-    shapes.foreach { es =>
-      val df = es.toDF("a", "b")
-      val w = Graph.connectedComponents(df, "a", "b")
-        .as[(Long, Long)].collect().toMap
-      val a = Graph.connectedComponents(df, "a", "b", aggRounds = true)
-        .as[(Long, Long)].collect().toMap
-      a shouldBe w
-    }
+    shapes.foreach(es => cc(es) shouldBe unionFind(es, Seq.empty))
   }
 
   test("triangleCounts: known shapes exact, random graph matches the " +
@@ -430,6 +415,28 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
     unw.count { case (n, l) => wgt(n) != l } shouldBe 33
   }
 
+  /** Reference Dijkstra, the single-machine shortest-path ground truth. */
+  private def dijkstra(edges: Seq[(Long, Long, Long)],
+      sources: Seq[Long]): Map[Long, Long] = {
+    val adj = edges.filter(e => e._1 != e._2)
+      .flatMap(e => Seq((e._1, e._2, e._3), (e._2, e._1, e._3)))
+      .groupBy(_._1).view
+      .mapValues(_.groupBy(_._2).map { case (v, l) => (v, l.map(_._3).min) })
+      .toMap
+    val dist = scala.collection.mutable.Map(sources.map(_ -> 0L): _*)
+    val pq = scala.collection.mutable.PriorityQueue(
+      sources.map(n => (0L, n)): _*)(Ordering.by(t => -t._1))
+    while (pq.nonEmpty) {
+      val (d, u) = pq.dequeue()
+      if (d == dist(u))
+        for ((v, w) <- adj.getOrElse(u, Map.empty))
+          if (dist.get(v).forall(_ > d + w)) {
+            dist(v) = d + w; pq.enqueue((d + w, v))
+          }
+    }
+    dist.toMap
+  }
+
   test("shortestPaths: Dijkstra ground truth on a random weighted graph, " +
       "chain exact, multi-source takes the nearer seed, lightest parallel " +
       "edge wins, unit weights equal BFS, guards refuse loudly") {
@@ -440,26 +447,6 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
       Graph.shortestPaths(edges.toDF("a", "b", "wt"), "a", "b",
           sources = sources.toDF("node"), weightCol = "wt", maxIter = maxIter)
         .as[(Long, Long)].collect().toMap
-    def dijkstra(edges: Seq[(Long, Long, Long)],
-        sources: Seq[Long]): Map[Long, Long] = {
-      val adj = edges.filter(e => e._1 != e._2)
-        .flatMap(e => Seq((e._1, e._2, e._3), (e._2, e._1, e._3)))
-        .groupBy(_._1).view
-        .mapValues(_.groupBy(_._2).map { case (v, l) => (v, l.map(_._3).min) })
-        .toMap
-      val dist = scala.collection.mutable.Map(sources.map(_ -> 0L): _*)
-      val pq = scala.collection.mutable.PriorityQueue(
-        sources.map(n => (0L, n)): _*)(Ordering.by(t => -t._1))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d == dist(u))
-          for ((v, w) <- adj.getOrElse(u, Map.empty))
-            if (dist.get(v).forall(_ > d + w)) {
-              dist(v) = d + w; pq.enqueue((d + w, v))
-            }
-      }
-      dist.toMap
-    }
     val rnd = new scala.util.Random(29)
     val edges = Seq.fill(300)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong,
       1L + rnd.nextInt(9)))
@@ -488,53 +475,29 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
       sp((0L until 30L).map(i => (i, i + 1, 1L)), Seq(0L), maxIter = 3)
   }
 
-  test("shortestPathsDelta ≡ shortestPathsMerge on random graphs, shapes " +
-      "that force re-improvement, compaction boundaries, and the oracle " +
-      "graph — and the merge fallback still matches Dijkstra") {
-    val s = spark
-    import s.implicits._
-    def both(edges: Seq[(Long, Long, Long)], sources: Seq[Long],
-        maxIter: Int = 200): (Map[Long, Long], Map[Long, Long]) = {
-      def run(delta: Boolean) =
-        Graph.shortestPaths(edges.toDF("a", "b", "wt"), "a", "b",
-            sources = sources.toDF("node"), weightCol = "wt",
-            maxIter = maxIter, deltaRounds = delta)
-          .as[(Long, Long)].collect().toMap
-      (run(true), run(false))
-    }
+  test("shortestPaths matches Dijkstra on random graphs at two densities " +
+      "and on a comb that forces re-improvement") {
+    def sp(edges: Seq[(Long, Long, Long)], sources: Seq[Long]): Map[Long, Long] =
+      Graph.shortestPaths(edges.toDF("a", "b", "wt"), "a", "b",
+          sources = sources.toDF("node"), weightCol = "wt")
+        .as[(Long, Long)].collect().toMap
     // random weighted graphs at two densities
     val rnd = new scala.util.Random(41)
     for (m <- Seq(150, 500)) {
       val edges = Seq.fill(m)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong,
         1L + rnd.nextInt(9)))
-      val (d, f) = both(edges, Seq(0L, 17L))
-      d shouldBe f
+      sp(edges, Seq(0L, 17L)) shouldBe dijkstra(edges, Seq(0L, 17L))
     }
     // the adversarial comb: a heavy backbone chain with cheap shortcuts
     // discovered first, so every backbone hop IMPROVES already-settled
-    // group distances round after round — >8 relaxation rounds crosses
-    // the compactEvery boundary mid-traversal
+    // group distances round after round
     val comb = (0L until 12L).map(i => (i, i + 1, 10L)) ++ // backbone
       (0L until 12L).map(j => (0L, j + 1, 10L * (j + 1) + 5L)) ++ // shortcuts
       (0L until 12L).flatMap(g =>
         (0L until 4L).map(t => (g, 100L + g * 10 + t, 1L))) // teeth
-    val (dc, fc) = both(comb, Seq(0L))
-    dc shouldBe fc
+    val dc = sp(comb, Seq(0L))
+    dc shouldBe dijkstra(comb, Seq(0L))
     dc(12L) shouldBe 120L // the chain undercuts the 125 shortcut
-    // degenerate compaction window: compactEvery = 1 collapses every
-    // round and must still agree
-    val sym = {
-      val base = comb.toDF("a", "b", "wt")
-        .select(col("a").as("u"), col("b").as("v"),
-          col("wt").cast("long").as("w"))
-      base.union(base.select(col("v").as("u"), col("u").as("v"), col("w")))
-        .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
-        .localCheckpoint(true)
-    }
-    val src = Seq(0L).toDF("node").withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    Graph.shortestPathsDelta(sym, src, maxIter = 200, compactEvery = 1)
-      .as[(Long, Long)].collect().toMap shouldBe dc
   }
 
   test("bfsDistances: maxIter backstop throws instead of truncating") {
@@ -547,6 +510,24 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
       maxIter: Int = 500): Map[Long, Long] =
     Graph.kCore(edges.toDF("a", "b"), "a", "b", k, maxIter)
       .as[(Long, Long)].collect().toMap
+
+  /** Reference batch peel: drop every node below k until nothing
+    * changes — the single-machine k-core ground truth. */
+  private def kCoreBrute(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+    var e = edges.map(t => (math.min(t._1, t._2), math.max(t._1, t._2)))
+      .filter(t => t._1 != t._2).distinct
+    var done = e.isEmpty
+    while (!done) {
+      val deg = e.flatMap(t => Seq(t._1, t._2)).groupBy(identity)
+        .map { case (n, l) => (n, l.size.toLong) }
+      val keep = deg.filter(_._2 >= k).keySet
+      val ne = e.filter(t => keep(t._1) && keep(t._2))
+      done = ne.size == e.size || ne.isEmpty
+      e = ne
+    }
+    e.flatMap(t => Seq(t._1, t._2)).groupBy(identity)
+      .map { case (n, l) => (n, l.size.toLong) }
+  }
 
   test("kCore: known shapes — pendant chain peels off K5, no 5-core, " +
       "bowtie 2-core keeps all with fixpoint degrees, chain has no 2-core") {
@@ -565,24 +546,9 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   test("kCore: random graph matches the reference batch peel at every k; " +
       "degenerate edges inert") {
-    def brute(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
-      var e = edges.map(t => (math.min(t._1, t._2), math.max(t._1, t._2)))
-        .filter(t => t._1 != t._2).distinct
-      var done = e.isEmpty
-      while (!done) {
-        val deg = e.flatMap(t => Seq(t._1, t._2)).groupBy(identity)
-          .map { case (n, l) => (n, l.size.toLong) }
-        val keep = deg.filter(_._2 >= k).keySet
-        val ne = e.filter(t => keep(t._1) && keep(t._2))
-        done = ne.size == e.size || ne.isEmpty
-        e = ne
-      }
-      e.flatMap(t => Seq(t._1, t._2)).groupBy(identity)
-        .map { case (n, l) => (n, l.size.toLong) }
-    }
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-    for (k <- Seq(2, 4, 8, 20)) kc(edges, k) shouldBe brute(edges, k)
+    for (k <- Seq(2, 4, 8, 20)) kc(edges, k) shouldBe kCoreBrute(edges, k)
     // self-loops, duplicates, reversed edges, null endpoints
     val df = Seq[(java.lang.Long, java.lang.Long)](
       (1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (null, 5L), (6L, null),
@@ -591,46 +557,33 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkSpec {
       Map(1L -> 2L, 2L -> 2L, 3L -> 2L)
   }
 
-  test("kCoreFrontier: equivalent to batch peeling on known shapes, " +
-      "random graphs at every k, degenerate edges, and the oracle graph") {
-    val s = spark
-    import s.implicits._
-    def kcf(edges: Seq[(Long, Long)], k: Int,
-        maxIter: Int = 500): Map[Long, Long] =
-      Graph.kCoreFrontier(edges.toDF("a", "b"), "a", "b", k, maxIter)
-        .as[(Long, Long)].collect().toMap
-    // the batch arm explicitly: kCore's default now IS the frontier
-    // engine, so the equivalence pin must drive the fallback directly
-    def kc(edges: Seq[(Long, Long)], k: Int,
-        maxIter: Int = 500): Map[Long, Long] =
-      Graph.kCore(edges.toDF("a", "b"), "a", "b", k, maxIter,
-          frontier = false)
-        .as[(Long, Long)].collect().toMap
+  test("kCore matches the brute batch peel on known shapes, random " +
+      "graphs at every k, degenerate edges, and the oracle graph") {
     val k5 = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val chain = Seq((4L, 10L), (10L, 11L), (11L, 12L))
     val bowtie = Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 3L), (3L, 4L), (4L, 0L))
     for ((e, k) <- Seq((k5 ++ chain, 4), (k5 ++ chain, 5), (bowtie, 2),
         (Seq((1L, 2L), (2L, 3L)), 2)))
-      kcf(e, k) shouldBe kc(e, k)
+      kc(e, k) shouldBe kCoreBrute(e, k)
     val rnd = new scala.util.Random(13)
     val edges = Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-    for (k <- Seq(2, 4, 8, 20)) kcf(edges, k) shouldBe kc(edges, k)
+    for (k <- Seq(2, 4, 8, 20)) kc(edges, k) shouldBe kCoreBrute(edges, k)
     // degenerate edges: self-loops, duplicates, reversed, nulls
     val df = Seq[(java.lang.Long, java.lang.Long)](
       (1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (null, 5L), (6L, null),
       (2L, 3L), (3L, 1L)).toDF("a", "b")
-    Graph.kCoreFrontier(df, "a", "b", 2).as[(Long, Long)].collect()
+    Graph.kCore(df, "a", "b", 2).as[(Long, Long)].collect()
       .toMap shouldBe Map(1L -> 2L, 2L -> 2L, 3L -> 2L)
-    // the oracle graph: same 57-node core at the same peel depth bound
+    // the oracle graph: the same 57-node core within the oracle's 12 rounds
     val m = 301L
     val ring = (0L until m).flatMap(d =>
       Seq((d, (d + 1) % m), (d, (d + 2) % m), (d, (d * d + 7) % m)))
     val block = for (d <- 0L to 60L; j <- 3L to 6L if d + j <= 60L)
       yield (d, d + j)
-    kcf(ring ++ block, 7, maxIter = 12) shouldBe kc(ring ++ block, 7, 12)
+    kc(ring ++ block, 7, maxIter = 12) shouldBe kCoreBrute(ring ++ block, 7)
     // the maxIter backstop throws, never returns a supergraph
     an[IllegalStateException] should be thrownBy
-      kcf((0L until 30L).map(i => (i, i + 1)), 2, maxIter = 3)
+      kc((0L until 30L).map(i => (i, i + 1)), 2, maxIter = 3)
   }
 
   test("kCore: the graph_kcore oracle graph converges within the 12 " +

@@ -34,8 +34,9 @@ object GraphScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val mode = if (args.length > 1) args(1) else "cc"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -52,18 +53,15 @@ object GraphScale {
       .unionByName(spark.range(n / 2, n)
         .select(col("id").as("src"), (col("id") - 1).as("dst")))
     if (mode == "cc" || mode == "all") {
-      for ((label, edges) <- Seq("tree" -> tree, "hub_chain" -> hubChain);
-           agg <- Seq(false, true)) {
-        val variant = if (agg) "agg-rounds" else "window-rounds"
-        val dist = time(s"$label/$variant n=$n cc+distribution") {
-          val cc = graft.operators.Graph.connectedComponents(edges, "src", "dst",
-            aggRounds = agg)
-          cc.groupBy("component").agg(count(lit(1)).as("sz"))
+      for ((label, edges) <- Seq("tree" -> tree, "hub_chain" -> hubChain)) {
+        val dist = time(s"$label n=$n cc+distribution") {
+          graft.operators.Graph.connectedComponents(edges, "src", "dst")
+            .groupBy("component").agg(count(lit(1)).as("sz"))
             .groupBy("sz").agg(count(lit(1)).as("n_components"))
             .orderBy(col("sz")).collect()
         }
         dist.foreach(r => println(
-          s"[graph-scale] $label/$variant component_size=${r.get(0)} n=${r.get(1)}"))
+          s"[graph-scale] $label component_size=${r.get(0)} n=${r.get(1)}"))
       }
     }
     if (mode == "kcore" || mode == "all") {
@@ -73,24 +71,15 @@ object GraphScale {
           explode(array((col("id") + 1) % c, (col("id") + 2) % c,
             (col("id") + 3) % c)).as("dst"))
       val edges = tree.unionByName(ring)
-      // A/B: batch peeling (re-shuffles all degrees each wave) vs
-      // frontier-delta peeling (broadcasts the wave's removals, degree
-      // relation is the only per-wave checkpoint) — same cascade, same
-      // result asserted below
-      for (frontier <- Seq(false, true)) {
-        val variant = if (frontier) "frontier-peel" else "batch-peel"
-        val core = time(s"tree_ring/kcore/$variant k=4 n=$n") {
-          (if (frontier)
-            graft.operators.Graph.kCoreFrontier(edges, "src", "dst", k = 4)
-          else graft.operators.Graph.kCore(edges, "src", "dst", k = 4))
-            .agg(count(lit(1)), min(col("core_deg")), max(col("core_deg")))
-            .head()
-        }
-        println(s"[graph-scale] kcore/$variant n=$n " +
-          s"core_nodes=${core.getLong(0)} " +
-          s"deg_range=[${core.getLong(1)}, ${core.getLong(2)}] " +
-          s"(expect core_nodes=$c: the tree unravels, the ring survives)")
+      val core = time(s"tree_ring/kcore k=4 n=$n") {
+        graft.operators.Graph.kCore(edges, "src", "dst", k = 4)
+          .agg(count(lit(1)), min(col("core_deg")), max(col("core_deg")))
+          .head()
       }
+      println(s"[graph-scale] kcore n=$n " +
+        s"core_nodes=${core.getLong(0)} " +
+        s"deg_range=[${core.getLong(1)}, ${core.getLong(2)}] " +
+        s"(expect core_nodes=$c: the tree unravels, the ring survives)")
     }
     if (mode == "bfs" || mode == "all") {
       val doubling = spark.range(0, n)
@@ -106,9 +95,7 @@ object GraphScale {
       println(s"[graph-scale] bfs n=$n reached=${r.getLong(0)} " +
         s"max_dist=${r.getLong(1)}")
     }
-    // mode `sp` — Graph.shortestPaths A/B (merge-rounds vs delta-rounds,
-    // same result asserted via the count/max/sum signature) over two
-    // shapes:
+    // mode `sp` — Graph.shortestPaths over two shapes:
     //  - `expander`: the doubling expander with weights 1+(src+dst)%5 —
     //    small-world hop counts, mild re-improvement (the realistic
     //    link-graph shape);
@@ -118,9 +105,8 @@ object GraphScale {
     //    two rounds), and the other n−64 nodes as weight-1 teeth hanging
     //    off backbone nodes. Each backbone hop then UNDERCUTS one
     //    shortcut per round, re-improving that node's whole tooth group:
-    //    ~66 relaxation rounds × ~n/64 improvements — every round the
-    //    merge engine re-checkpoints all n distances while the delta
-    //    engine writes one group.
+    //    ~66 relaxation rounds × ~n/64 improvements, every round
+    //    re-checkpointing all n distances.
     // mode `scc` — Graph.stronglyConnectedComponents over two shapes:
     //  - `rings_up`: n/32 directed 32-cycles chained by ASCENDING
     //    one-way bridges — every ring is its own color class (ids rise
@@ -189,18 +175,16 @@ object GraphScale {
         .unionByName(spark.range(b, n)
           .select(pmod(col("id"), lit(b)).as("src"), col("id").as("dst"),
             lit(1L).as("w")))
-      for ((label, edges, srcId) <- Seq(("expander", wexp, 7L), ("comb", comb, 0L));
-           delta <- Seq(false, true)) {
-        val variant = if (delta) "delta-rounds" else "merge-rounds"
-        val r = time(s"$label/sp/$variant n=$n") {
+      for ((label, edges, srcId) <- Seq(("expander", wexp, 7L), ("comb", comb, 0L))) {
+        val r = time(s"$label/sp n=$n") {
           graft.operators.Graph.shortestPaths(edges, "src", "dst",
               sources = Seq(srcId).toDF("node"), weightCol = "w",
-              maxIter = 500, deltaRounds = delta)
+              maxIter = 500)
             .agg(count(lit(1)), max(col("dist")), sum(col("dist"))).head()
         }
-        println(s"[graph-scale] sp/$label/$variant n=$n " +
+        println(s"[graph-scale] sp/$label n=$n " +
           s"reached=${r.getLong(0)} max_dist=${r.getLong(1)} " +
-          s"sum_dist=${r.getLong(2)} (signatures must match across arms)")
+          s"sum_dist=${r.getLong(2)}")
       }
     }
     spark.stop()
