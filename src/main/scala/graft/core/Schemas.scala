@@ -45,7 +45,6 @@ object Schemas {
 
   val raw: StructType = supplierBase
   val landing: StructType = supplierBase
-  val master: StructType = supplierBase
 
   /** Staging = base + SCD2 version columns
     * (`SCD-Configuration Setup.sql:32-41`). */

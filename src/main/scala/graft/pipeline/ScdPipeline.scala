@@ -21,9 +21,10 @@ import graft.sources.Stage
   *   task2  COPY stage → raw, PURGE     (SCD-Automation.sql:43-49)
   *   task3  MERGE raw → landing         (SCD-Automation.sql:53-74)   [J1]
   *   task4  MERGE stream → staging      (SCD-Automation.sql:79-93)   [J2]
-  *   task5  INSERT OVERWRITE master     (SCD-Automation.sql:97-102)  [D4]
+  *   task5  master := staging 'Y' view  (SCD-Automation.sql:97-102)  [D4]
   * }}}
   * plus a run-log append (our TASK_HISTORY, `SCD-Automation.sql:116,147`).
+  * Task 5 writes nothing: [[master]] is a pruned read of staging.
   *
   * The driver program '''is''' the DAG (SURVEY.md §2.7 W3): the five tasks
   * are sequential statements here; Snowflake's AFTER-chaining is Scala
@@ -35,7 +36,7 @@ import graft.sources.Stage
   *
   * Atomicity: every table version is staged first (plain immutable parquet
   * writes), then ONE [[TableStore.commit]] flips raw, landing, staging,
-  * master, the run log, the load ledger and any materialized aggregates
+  * the run log, the load ledger and any materialized aggregates
   * together. A crash anywhere before the commit leaves the previous cycle
   * fully intact and the stream unconsumed — the reference's
   * advance-on-consume contract (`SCD-Automation.sql:142`) with no
@@ -64,7 +65,6 @@ class ScdPipeline(
   private val Raw = config.table("raw")
   private val Landing = config.table("landing")
   private val Staging = config.table("staging")
-  private val Master = config.table("master")
   private val RunLog = s"${config.prefix}_run_log"
   private val LoadHistory = s"${config.prefix}_load_history"
 
@@ -168,13 +168,18 @@ class ScdPipeline(
       loadedFiles: Seq[String] = Nil): Long =
     cycle(store.manifest, rawBatch, batchTime, afterCommit, loadedFiles)
 
-  /** Best-effort FAILED history row (never masks the original failure). */
-  private def recordFailure(batchTime: Timestamp): Unit =
+  /** Best-effort FAILED history row, read and committed at one manifest
+    * pin: a run-log row another writer commits meanwhile makes the append
+    * refuse rather than overwrite it. A failed append never masks the
+    * cycle's failure; it rides on `cause` as a suppressed exception. */
+  private def recordFailure(batchTime: Timestamp, cause: Throwable): Unit =
     try {
-      val prevLog = store.readOrEmpty(RunLog, Schemas.runLog)
-      store.overwrite(RunLog, prevLog.unionByName(logRow(prevLog, batchTime,
-        rowsLoaded = null, status = "FAILED")))
-    } catch { case _: Throwable => () }
+      val pin = store.manifest
+      val prevLog = readAt(pin, RunLog, Schemas.runLog)
+      store.commit(Map(RunLog -> store.stage(RunLog, prevLog.unionByName(
+          logRow(prevLog, batchTime, rowsLoaded = null, status = "FAILED")))),
+        expect = Map(RunLog -> pin.get(RunLog)))
+    } catch { case f: Throwable => cause.addSuppressed(f) }
 
   /** One run-log row; `cycle_id` = max(cycle_id)+1 from the PREVIOUS log
     * contents — a one-row driver read of a table that grows one row per
@@ -226,17 +231,12 @@ class ScdPipeline(
       if (config.aggregates.isEmpty) cdc0 else cdc0.localCheckpoint(true)
 
     // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
-    // Partitioned by current_flag: the master refresh (and most readers)
-    // touch only the pruned 'Y' partition, never the closed history.
+    // Partitioned by current_flag: master (and most readers) touch only
+    // the pruned 'Y' partition, never the closed history.
     val stagingNext = Scd2.merge(stagingPrev, cdc, batchTime,
       matchKeys = config.matchKeys, faithful = faithful)
     val stagingVersion = store.stage(Staging, stagingNext,
       partitionBy = Seq("current_flag"))
-    val stagingNew = store.readVersion(Staging, stagingVersion, stagingSchema)
-
-    // task5: INSERT OVERWRITE master = current view of staging.
-    val masterVersion = store.stage(Master,
-      Scd2.currentView(stagingNew, config.baseSchema.fieldNames.toSeq))
 
     // registered materialized aggregates: refreshed by signed application
     // of the SAME consumed delta (IncrementalAgg) and committed in the
@@ -274,7 +274,6 @@ class ScdPipeline(
         Raw -> rawVersion,
         Landing -> landingVersion,
         Staging -> stagingVersion,
-        Master -> masterVersion,
         RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates,
       expect = readTables.map(t => t -> pin.get(t)).toMap)
 
@@ -282,7 +281,7 @@ class ScdPipeline(
     rowsLoaded
   } catch {
     case e: Throwable =>
-      recordFailure(batchTime)
+      recordFailure(batchTime, e)
       throw e
   }
 
@@ -318,7 +317,10 @@ class ScdPipeline(
   def raw: DataFrame = store.readOrEmpty(Raw, config.baseSchema)
   def landing: DataFrame = store.readOrEmpty(Landing, config.baseSchema)
   def staging: DataFrame = store.readOrEmpty(Staging, stagingSchema)
-  def master: DataFrame = store.readOrEmpty(Master, config.baseSchema)
+  /** The end-user current view (task 5): the committed staging version's
+    * `current_flag = 'Y'` partition, so it can never disagree with it. */
+  def master: DataFrame =
+    Scd2.currentView(staging, config.baseSchema.fieldNames.toSeq)
 
   /** Task history, latest first (`SCD-Automation.sql:116,147` — O2). */
   def taskHistory: DataFrame =
@@ -335,10 +337,7 @@ class ScdPipeline(
 }
 
 object ScdPipeline {
-  val Raw = "supplier_raw"
   val Landing = "supplier_landing"
-  val Staging = "supplier_staging"
-  val Master = "supplier_master"
   val RunLog = "supplier_run_log"
 }
 

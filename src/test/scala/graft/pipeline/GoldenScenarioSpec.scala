@@ -100,6 +100,105 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("the cycle writes no master table: master is staging's current partition") {
+    val store = new TableStore(tmpDir("nomaster-store"), spark)
+    val stage = new Stage(tmpDir("nomaster-stage"))
+    val pipeline = new ScdPipeline(spark, store)
+    stage.putContent("suppliers.csv", scenario1)
+    pipeline.runCycle(stage, t1)
+    stage.putContent("suppliers_v2.csv", scenario2)
+    pipeline.runCycle(stage, t2)
+
+    store.manifest.keys should not contain "supplier_master"
+    java.nio.file.Files.exists(
+      java.nio.file.Paths.get(store.root).resolve("supplier_master")) shouldBe false
+
+    // the 8 current rows (setup.sql:272-275)
+    def masterRows = pipeline.master.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+      .toSet
+    val expected = Set(
+      (1L, "A101", "Virat Kohli", "Delhi"),
+      (2L, "A102", "MS Dhoni", "Ranchi"),
+      (3L, "A103", "Pujara", "Gujarat"),
+      (4L, "A104", "Bumrah", "Mumbai"),
+      (5L, "A105", "Rohit Sharma", "Tamilnadu"),
+      (6L, "A106", "Dravid", "Tamilnadu"),
+      (7L, "A107", "Pujara", "Saurasthra"),
+      (8L, "A108", "Hanuma Vihari", "Andhra Pradesh"))
+    masterRows shouldBe expected
+    pipeline.master.count() shouldBe 8
+
+    // an old store's leftover master mapping is simply not read
+    val s = spark
+    import s.implicits._
+    store.overwrite("supplier_master",
+      Seq((9L, "A999", "Stale", "Nowhere")).toDF(
+        "supplier_key", "supplier_code", "supplier_name", "supplier_state"))
+    store.manifest.keys should contain("supplier_master")
+    masterRows shouldBe expected
+  }
+
+  test("a FAILED append that itself fails rides on the cycle's exception as suppressed") {
+    val injected = new java.io.IOException("injected run-log commit failure")
+    val store = new TableStore(tmpDir("suppress-store"), spark) {
+      override def commit(updates: Map[String, String],
+          expect: Map[String, Option[String]]): Unit =
+        if (updates.keySet == Set(ScdPipeline.RunLog)) throw injected
+        else super.commit(updates, expect)
+    }
+    val stage = new Stage(tmpDir("suppress-stage"))
+    val pipeline = new ScdPipeline(spark, store) // DuplicatePolicy.Error
+    stage.putContent("suppliers.csv", scenario1)
+    pipeline.runCycle(stage, t1)
+
+    stage.putContent("poison.csv",
+      "9,A105,Dup One,StateA\n10,A105,Dup Two,StateB")
+    val e = intercept[IllegalArgumentException](pipeline.runCycle(stage, t2))
+    e.getMessage should include("duplicate business keys")
+    e.getSuppressed.toSeq shouldBe Seq(injected)
+    pipeline.taskHistory.collect().map(_.getAs[String]("status")).toSeq shouldBe
+      Seq("SUCCEEDED")
+  }
+
+  test("a FAILED append raced by another writer's run-log row refuses instead of overwriting it") {
+    val root = tmpDir("failrace-store")
+    val other = new TableStore(root, spark)
+    val otherRow = spark.createDataFrame(
+      java.util.Collections.singletonList(Row(42L, t2, 0L, t2, "SUCCEEDED")),
+      graft.core.Schemas.runLog)
+    // another writer appends its row after the FAILED append read the
+    // run log, just before that append commits
+    var raced = false
+    val store = new TableStore(root, spark) {
+      override def commit(updates: Map[String, String],
+          expect: Map[String, Option[String]]): Unit = {
+        if (!raced && updates.keySet == Set(ScdPipeline.RunLog)) {
+          raced = true
+          other.overwrite(ScdPipeline.RunLog,
+            other.read(ScdPipeline.RunLog).unionByName(otherRow))
+        }
+        super.commit(updates, expect)
+      }
+    }
+    val stage = new Stage(tmpDir("failrace-stage"))
+    val pipeline = new ScdPipeline(spark, store) // DuplicatePolicy.Error
+    stage.putContent("suppliers.csv", scenario1)
+    pipeline.runCycle(stage, t1)
+
+    stage.putContent("poison.csv",
+      "9,A105,Dup One,StateA\n10,A105,Dup Two,StateB")
+    val e = intercept[IllegalArgumentException](pipeline.runCycle(stage, t2))
+    raced shouldBe true
+    e.getSuppressed.map(_.getClass).toSeq shouldBe
+      Seq(classOf[java.util.ConcurrentModificationException])
+
+    // the other writer's row survives; the refused FAILED row is absent
+    pipeline.taskHistory.orderBy("cycle_id").collect()
+      .map(r => (r.getAs[Long]("cycle_id"), r.getAs[String]("status")))
+      .toSeq shouldBe Seq((1L, "SUCCEEDED"), (42L, "SUCCEEDED"))
+  }
+
   test("empty-stage cycle is a no-op, not a crash (bucketed default)") {
     val store = new TableStore(tmpDir("empty-store"), spark)
     val stage = new Stage(tmpDir("empty-stage"))

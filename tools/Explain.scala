@@ -1,12 +1,13 @@
 import org.apache.spark.sql.SparkSession
 
 /** Dump formatted physical plans for headline queries → stdout.
-  * Drive with the compile-and-run recipe in tools/README.md;
+  * Run with `sbt "runMain Explain [query...]"` (tools/README.md);
   * used to regenerate PLANS.md. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * roughly doubling each round — total traversal work O(|E|), the
   * frontier-expansion claim measured.
   *
-  * Compile/run with the recipe in tools/README.md. Iteration progress
+  * Run with `sbt "runMain GraphScale [n] [mode]"`. Iteration progress
   * comes from the operator's own per-round jobs; wall-clock per shape
   * is the headline number. */
 object GraphScale {

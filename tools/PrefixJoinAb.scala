@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
 object PrefixJoinAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cores]")
       .appName("prefix-join-ab")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", "16g")

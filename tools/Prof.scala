@@ -7,8 +7,7 @@ import scala.collection.mutable
   * and prints job/stage wall-clock, task time, shuffle bytes — the
   * empirical attribution pass of guide §1. Dev tool, not a bench.
   *
-  * Usage (tools/README.md compile recipe):
-  *   Prof <query>[,query...] [runs]
+  * Usage: `sbt "runMain Prof <query>[,query...] [runs]"`
   */
 object Prof {
   def main(args: Array[String]): Unit = {

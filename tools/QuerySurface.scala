@@ -12,7 +12,7 @@
   *   - `spec`     — no SQL-expressible oracle exists (sketch binaries);
   *                  pinned by the ScalaTest suite instead.
   *
-  * Run with the tools/README scratch-compile recipe; writes QUERIES.md
+  * Run with `sbt "runMain QuerySurface"`; writes QUERIES.md
   * in the CWD. Exits nonzero if any query ends up `spec` without being
   * a known sketch-family exception — the guard that keeps the surface
   * auditable as it grows.

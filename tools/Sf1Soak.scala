@@ -27,7 +27,7 @@ import graft.sources.Stage
   *    quadratically. Asserts the hot-bucket guard and the knnJoin
   *    right/left candidate caps keep pair counts and outputs bounded.
   *
-  * Run via the tools/README scratch-compile recipe; exits nonzero on any
+  * Run with `sbt "runMain Sf1Soak [copies] [label]"`; exits nonzero on any
   * violated invariant.
   */
 object Sf1Soak {
@@ -47,8 +47,9 @@ object Sf1Soak {
     if (args.length > 0) Copies = args(0).toInt
     Label = if (args.length > 1) args(1) else s"sf${Copies / 10}"
     if (Copies > 30) BenchRuns = 1
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * two layouts produce identical staging histories. */
 object Soak {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone","UTC")
       .config("spark.sql.adaptive.enabled","true")
       .config("spark.ui.enabled","false").getOrCreate()
