@@ -99,6 +99,27 @@ object FileStats {
       .withColumn("bloom_k", lit(bloomK))
   }
 
+  /** The parameters a sidecar describes itself with: its statted
+    * columns (the `min_*` names), its bloom columns (the `bloom_*`
+    * names minus the `bloom_bits`/`bloom_k` sizing columns) and its
+    * bloom sizing — what a rewrite needs to stat new files the way the
+    * source version was statted. None for an empty sidecar, which has
+    * no row to read the sizing from. */
+  private[core] case class Params(statsCols: Seq[String],
+      bloomCols: Seq[String], bloomBitsLog2: Int, bloomK: Int)
+
+  private[core] def params(rows: DataFrame): Option[Params] =
+    rows.select("bloom_bits", "bloom_k").take(1).headOption.map { head =>
+      Params(
+        rows.columns.collect {
+          case n if n.startsWith("min_") => n.stripPrefix("min_") }.toSeq,
+        rows.columns.collect {
+          case n if n.startsWith("bloom_") && n != "bloom_bits" &&
+            n != "bloom_k" => n.stripPrefix("bloom_") }.toSeq,
+        java.lang.Long.numberOfTrailingZeros(head.getLong(0)),
+        head.getInt(1))
+    }
+
   private[core] def writeStatsDf(stats: DataFrame, dataDir: String): Unit =
     stats.coalesce(1)
       .write.mode("overwrite").parquet(statsPath(dataDir).toString)

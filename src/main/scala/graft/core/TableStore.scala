@@ -1,13 +1,14 @@
 package graft.core
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, concat, count, element_at, lit, max, min, split, sum}
+import org.apache.spark.sql.functions.{coalesce, col, concat, count, lit, max, min, sum}
 import org.apache.spark.sql.types.StructType
 
 /** Versioned, parquet-backed multi-table store with atomic multi-table
@@ -109,11 +110,12 @@ class TableStore(val root: String, spark: SparkSession) {
 
   /** Read the current version (catalog-aware for bucketed versions).
     * Fails if the table was never committed. */
-  def read(table: String): DataFrame = manifest.get(table) match {
-    case Some(v) => readResolved(table, v)
-    case None =>
-      throw new IllegalStateException(s"table '$table' does not exist in $root")
-  }
+  def read(table: String): DataFrame = readResolved(table, currentVersion(table))
+
+  /** The table's current version; throws if it was never committed. */
+  private def currentVersion(table: String): String =
+    manifest.getOrElse(table,
+      throw new IllegalStateException(s"table '$table' does not exist in $root"))
 
   /** Resolve one (table, version) to its DataFrame — the shared read
     * body behind [[read]] and [[Snapshot.read]] (catalog-aware, DV
@@ -211,19 +213,9 @@ class TableStore(val root: String, spark: SparkSession) {
   private def restatLike(table: String, srcVersion: String,
       dstVersion: String): Unit =
     FileStats.read(spark, versionDir(table, srcVersion).toString)
-      .foreach { rows =>
-        val statsCols = rows.columns.collect {
-          case n if n.startsWith("min_") => n.stripPrefix("min_") }.toSeq
-        val bloomCols = rows.columns.collect {
-          case n if n.startsWith("bloom_") && n != "bloom_bits" &&
-            n != "bloom_k" => n.stripPrefix("bloom_") }.toSeq
-        rows.select("bloom_bits", "bloom_k").take(1).headOption
-          .foreach { head =>
-            FileStats.write(spark, versionDir(table, dstVersion).toString,
-              statsCols, bloomCols,
-              java.lang.Long.numberOfTrailingZeros(head.getLong(0)),
-              head.getInt(1))
-          }
+      .flatMap(FileStats.params).foreach { p =>
+        FileStats.write(spark, versionDir(table, dstVersion).toString,
+          p.statsCols, p.bloomCols, p.bloomBitsLog2, p.bloomK)
       }
 
   /** Commit a maintenance rewrite (compaction/clustering): same rows,
@@ -306,48 +298,29 @@ class TableStore(val root: String, spark: SparkSession) {
   def compactSmallFiles(table: String, targetBytes: Long = 128L << 20,
       minSmallFiles: Int = 4): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
-    if (Files.exists(curDir.resolve(BucketSpecFile)) || hasNestedData(curDir))
-      return 0
+    if (!isFlat(curDir)) return 0
     val (small, big) = dataFiles(curDir).partition(Files.size(_) < targetBytes)
     if (small.size < minSmallFiles) return 0
 
-    val version = newVersion()
-    val dst = versionDir(table, version)
-    Files.createDirectories(dst)
-    big.foreach(carryFile(_, dst))
-    val copiedNames = big.map(_.getFileName.toString).toSet
-    val smallNames = small.map(_.getFileName.toString).toSet
     val smallBytes = small.map(Files.size).sum
     val n = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
     val dv = DeleteVectors.read(spark, curDir.toString)
-    val smallReader = declaredSchema(curDir)
+    val smallScan = declaredSchema(curDir)
       .fold(spark.read)(sc => spark.read.schema(sc))
-    val smallScan = smallReader.option("basePath", curDir.toString)
+      .option("basePath", curDir.toString)
       .parquet(small.map(_.toUri.toString): _*)
     // rewritten files materialize their tombstones (applyTo's anti-join
     // on the full DV: entries naming carried files simply never match)
     val packed = dv.fold(smallScan)(_ =>
       DeleteVectors.applyTo(spark, smallScan, curDir.toString))
-    packed.coalesce(n).write.mode("append").parquet(dst.toString)
     // tombstones of CARRIED files keep pointing at unmoved rows
-    dv.foreach { d =>
-      val kept = d.filter(col("file").isInCollection(copiedNames))
-        .localCheckpoint(true)
-      if (kept.count() > 0L) DeleteVectors.write(kept, dst.toString)
-    }
-    FileStats.read(spark, curDir.toString).foreach { rows =>
-      val newFiles = withListing(dst)(_
-        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-          !copiedNames.contains(p.getFileName.toString))
-        .map(_.toUri.toString).toSeq)
-      val untouchedRows = rows.filter(!element_at(
-        split(col("file"), "/"), -1).isin(smallNames.toSeq: _*))
-      carrySidecar(rows, untouchedRows, dst, newFiles)
-    }
-    carryTag(curDir, dst)
+    val bigNames = big.map(_.getFileName.toString).toSet
+    val keptDv = dv.map(_.filter(col("file").isInCollection(bigNames))
+      .localCheckpoint(true)).filter(_.count() > 0L)
+    val (version, _) = stageCarry(table, curDir, big,
+      append = Some(packed.coalesce(n)), dv = keptDv)
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
     small.size
   }
@@ -396,8 +369,7 @@ class TableStore(val root: String, spark: SparkSession) {
   }
 
   private def currentPathOrFail(table: String): String =
-    currentPath(table).getOrElse(
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    versionDir(table, currentVersion(table)).toString
 
   /** Materialize `df` as a new (uncommitted) version of `table`; returns the
     * version id to pass to [[commit]]. The write is the only Spark action —
@@ -561,10 +533,8 @@ class TableStore(val root: String, spark: SparkSession) {
     * deployment). */
   private def withManifestLock[T](f: => T): T =
     TableStore.rootMonitor(rootPath).synchronized {
-      val ch = java.nio.channels.FileChannel.open(
-        rootPath.resolve("_manifest.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
+      val ch = FileChannel.open(rootPath.resolve("_manifest.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
         val lock = ch.lock()
         try f finally lock.release()
@@ -573,7 +543,11 @@ class TableStore(val root: String, spark: SparkSession) {
 
   /** Serialize mappings + history and swap them in atomically (the one
     * write path for the manifest — [[commit]] and [[vacuum]]'s history
-    * pruning both go through here). */
+    * pruning both go through here). Durable as well as atomic: the tmp
+    * file reaches disk before the rename publishes it, and the root
+    * directory is synced after, so a power loss leaves either the old
+    * manifest or the complete new one — never a published but empty
+    * `_manifest`, and never a commit that silently un-happens. */
   private def writeManifest(next: Map[String, String],
       nextHist: Map[String, Seq[String]]): Unit = {
     val tmp = rootPath.resolve(s"_manifest.tmp-${UUID.randomUUID()}")
@@ -581,8 +555,16 @@ class TableStore(val root: String, spark: SparkSession) {
       nextHist.toSeq.sortBy(_._1).flatMap { case (t, vs) =>
         vs.map(v => s"#hist\t$t\t$v") }).mkString("\n")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    fsync(tmp)
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    fsync(rootPath)
+  }
+
+  /** Force a file's bytes, or a directory's entries, to disk. */
+  private def fsync(p: Path): Unit = {
+    val ch = FileChannel.open(p, StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
   }
 
   /** stage + single-table commit. */
@@ -650,8 +632,7 @@ class TableStore(val root: String, spark: SparkSession) {
     // count of the staged files. A concurrent writer to the SAME table
     // makes the commit below REFUSE (detect-and-refuse OCC, [[commit]]
     // docs) — never a silent lost update.
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val cur = catalogNameIfBucketed(table, curV).map(spark.table).getOrElse {
       val dir = versionDir(table, curV)
       DeleteVectors.applyTo(spark, dataScan(dir), dir.toString)
@@ -671,12 +652,11 @@ class TableStore(val root: String, spark: SparkSession) {
   /** Surgical range DELETE using the [[FileStats]] sidecar: removes rows
     * with `c` in [lo, hi] (inclusive; NULLs never match) by rewriting
     * ONLY the files whose [min, max] may overlap the range — every other
-    * file is carried into the new version verbatim (a local-fs byte
-    * copy standing in for an object store's server-side copy /
-    * manifest-level file reuse), and its sidecar row is carried over
-    * with it, so the whole operation is O(matching files), not
-    * O(table). On a date-clustered 100 TB table a retention sweep
-    * rewrites one date-range's worth of files instead of the corpus.
+    * file is carried into the new version by [[stageCarry]], and its
+    * sidecar row is carried over with it, so the whole operation is
+    * O(matching files), not O(table). On a date-clustered 100 TB table
+    * a retention sweep rewrites one date-range's worth of files
+    * instead of the corpus.
     * Falls back to [[deleteWhere]]'s full copy-on-write rewrite when
     * the version has no zone maps for `c` or a layout file-level
     * surgery can't preserve (hive-partitioned / bucketed versions).
@@ -685,8 +665,7 @@ class TableStore(val root: String, spark: SparkSession) {
     * number of rows deleted; deleting zero rows commits nothing. */
   def deleteRange(table: String, c: String,
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): Long = {
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
     val fallback = () => deleteWhere(table, col(c) >= lo && col(c) <= hi)
     FileStats.read(spark, curDir.toString) match {
@@ -703,102 +682,120 @@ class TableStore(val root: String, spark: SparkSession) {
           val matched = rows.filter(FileStats.mayContainRange(c, lo, hi))
             .select("file").collect().map(_.getString(0))
           if (matched.isEmpty) return 0L
-          val untouchedRows = rows.filter(!FileStats.mayContainRange(c, lo, hi))
-          val untouched = untouchedRows.select("file")
-            .collect().map(_.getString(0))
+          val untouched = rows.filter(!FileStats.mayContainRange(c, lo, hi))
+            .select("file").collect()
+            .map(r => Paths.get(java.net.URI.create(r.getString(0)).getPath))
           // partitioned layouts nest files under key=value dirs; the
-          // flat copy below would orphan them — full rewrite instead
-          val allFiles = matched ++ untouched
-          if (allFiles.exists(f =>
-              Paths.get(java.net.URI.create(f).getPath).getParent !=
-                curDir.toAbsolutePath)) return fallback()
+          // flat carry would orphan them — full rewrite instead
+          val allFiles =
+            matched.map(f => Paths.get(java.net.URI.create(f).getPath)) ++ untouched
+          if (allFiles.exists(_.getParent != curDir.toAbsolutePath))
+            return fallback()
 
-          val version = newVersion()
-          val dst = versionDir(table, version)
-          Files.createDirectories(dst)
-          val copiedNames = untouched.map { uri =>
-            val src = Paths.get(java.net.URI.create(uri).getPath)
-            carryFile(src, dst)
-            src.getFileName.toString
-          }.toSet
-          // rewrite the matching files minus the range, landing the
-          // survivors directly in the new version dir (append mode:
-          // the dir already holds the copied files; Spark's UUID part
-          // names cannot collide with them)
           // declared-schema read (schema evolution): a matched-file set
           // spanning generations must rewrite under the union schema,
           // not whichever file's schema Spark samples first
-          declaredSchema(curDir).fold(spark.read)(sc => spark.read.schema(sc))
+          val survivors = declaredSchema(curDir)
+            .fold(spark.read)(sc => spark.read.schema(sc))
             .option("basePath", curDir.toString)
             .parquet(matched.toIndexedSeq: _*)
             .filter(!coalesce(col(c) >= lo && col(c) <= hi, lit(false)))
-            .write.mode("append").parquet(dst.toString)
-          val newFiles = withListing(dst)(_
-            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-              !copiedNames.contains(p.getFileName.toString))
-            .map(_.toUri.toString).toSeq)
-          // sidecar: fresh stats for the rewritten files only; carried
-          // rows for copied files get their path remapped (same name,
-          // new version dir) — O(changed files) maintenance
-          carrySidecar(rows, untouchedRows, dst, newFiles)
-          // stage()'s Spark write emits _SUCCESS itself; the append
-          // write above did too, so the version dir is marker-complete
+          val (version, newFiles) = stageCarry(table, curDir,
+            untouched.toSeq, append = Some(survivors))
           val before = rows.join(
             spark.createDataset(matched.toIndexedSeq)(
               org.apache.spark.sql.Encoders.STRING).toDF("file"), "file")
             .agg(sum("row_cnt")).head().getLong(0)
           val after =
             if (newFiles.isEmpty) 0L
-            else Option(FileStats.read(spark, dst.toString).get
+            else Option(FileStats.read(spark,
+                versionDir(table, version).toString).get
               .join(spark.createDataset(newFiles.toIndexedSeq)(
                 org.apache.spark.sql.Encoders.STRING).toDF("file"), "file")
               .agg(sum("row_cnt")).head().get(0))
               .map(_.asInstanceOf[Long]).getOrElse(0L)
-          // maintenance DML must not erase the streaming sink's
-          // applied-batch high-water mark ([[versionTag]]): a retention
-          // sweep between micro-batches would otherwise reset it and a
-          // redelivered batch would re-apply, voiding exactly-once
-          carryTag(curDir, dst)
           commit(Map(table -> version), expect = Map(table -> Some(curV)))
           before - after
         } finally rows.unpersist()
     }
   }
 
-  /** Sidecar maintenance shared by the surgical DML paths
-    * ([[deleteRange]], [[purgeDeletes]]): carried files keep their
-    * existing stats rows with the path remapped to the new version dir
-    * (same file name, new directory), freshly written files get stats
-    * recomputed with the sidecar's own self-described parameters —
-    * O(changed files), never a rescan of the carried data. */
-  private def carrySidecar(rows: DataFrame, untouchedRows: DataFrame,
-      dst: Path, newFiles: Seq[String]): Unit = {
-    val statsCols = rows.columns.collect {
-      case n if n.startsWith("min_") => n.stripPrefix("min_") }.toSeq
-    val bloomCols = rows.columns.collect {
-      case n if n.startsWith("bloom_") && n != "bloom_bits" &&
-        n != "bloom_k" => n.stripPrefix("bloom_") }.toSeq
-    // a statted EMPTY version has a zero-row sidecar: nothing to carry
-    // and no self-described bloom parameters to stat fresh files with —
-    // skip the sidecar entirely (readers of the new version degrade to
-    // full scans; stats can only skip, so correctness is untouched)
-    // rather than crash the enclosing DML on .head() of an empty relation
-    val headOpt = rows.select("bloom_bits", "bloom_k").take(1).headOption
-    if (headOpt.isEmpty) return
-    val head = headOpt.get
-    val bitsLog2 = java.lang.Long.numberOfTrailingZeros(head.getLong(0))
-    val dstUri = dst.toUri.toString.stripSuffix("/")
-    val carried = untouchedRows.withColumn("file",
-      concat(lit(dstUri + "/"),
-        element_at(split(col("file"), "/"), -1)))
-    val fresh =
-      if (newFiles.isEmpty) carried.limit(0)
-      else FileStats.computeStats(
-        spark.read.option("basePath", dst.toString)
-          .parquet(newFiles: _*),
-        statsCols, bloomCols, bitsLog2, head.getInt(1))
-    FileStats.writeStatsDf(carried.unionByName(fresh), dst.toString)
+  /** Build the successor version of a carry-tier DML — the one
+    * implementation behind [[deleteRange]], [[deleteWhereMoR]],
+    * [[purgeDeletes]], [[upsertMoR]], [[appendEvolved]],
+    * [[compactSmallFiles]], [[cloneTable]] and [[restoreTable]], so a
+    * sidecar kind can never be carried by one and dropped by another.
+    * In order:
+    *  1. hard-link `keep` (files of the flat version at `src`) into a
+    *     new version directory of `table`;
+    *  2. write `append` beside them as fresh files (Spark's UUID part
+    *     names cannot collide with carried ones; its append write emits
+    *     `_SUCCESS`), or, with nothing to append, create `_SUCCESS`;
+    *  3. write `dv` as the new version's deletion vector;
+    *  4. carry the stats sidecar (`carryStats`): rows of `src`'s files
+    *     outside (src files − keep) are path-remapped into the new
+    *     directory, appended files get fresh rows;
+    *  5. write a fresh `tag` and carry the declared schema, or without
+    *     one carry both from `src` — maintenance DML must not erase a
+    *     streaming sink's applied-batch high-water mark, and no carry
+    *     may drop the evolved-read contract while it carries
+    *     old-generation files.
+    * Returns the staged version (the caller owns the commit and its OCC
+    * expectation) and the appended files' URIs. */
+  private def stageCarry(table: String, src: Path, keep: Seq[Path],
+      append: Option[DataFrame] = None, dv: Option[DataFrame] = None,
+      tag: Option[String] = None,
+      carryStats: Boolean = true): (String, Seq[String]) = {
+    val version = newVersion()
+    val dst = versionDir(table, version)
+    Files.createDirectories(dst)
+    keep.foreach(carryFile(_, dst))
+    val keptNames = keep.map(_.getFileName.toString).toSet
+    val appended = append match {
+      case Some(df) =>
+        df.write.mode("append").parquet(dst.toString)
+        dataFiles(dst).filterNot(p => keptNames(p.getFileName.toString))
+          .map(_.toUri.toString)
+      case None =>
+        Files.createFile(dst.resolve("_SUCCESS"))
+        Seq.empty
+    }
+    dv.foreach(DeleteVectors.write(_, dst.toString))
+    if (carryStats) FileStats.read(spark, src.toString).foreach { rows =>
+      val dropped = dataFiles(src).map(_.getFileName.toString).toSet -- keptNames
+      carrySidecar(rows, dropped, dst, appended)
+    }
+    tag match {
+      case Some(t) =>
+        Files.write(dst.resolve(TagFile), t.getBytes(StandardCharsets.UTF_8))
+        carrySchema(src, dst)
+      case None => carryTag(src, dst)
+    }
+    (version, appended)
   }
+
+  /** The stats step of [[stageCarry]]: rows of files not `dropped` keep
+    * their stats with the path remapped to `dst` (same file name, new
+    * directory), `appended` files get stats recomputed with the
+    * sidecar's own self-described parameters — O(changed files), never
+    * a rescan of the carried data. A statted EMPTY version has a
+    * zero-row sidecar, so no parameters to stat fresh files with: the
+    * sidecar is skipped (readers of the new version degrade to full
+    * scans; stats can only skip, so correctness is untouched). */
+  private def carrySidecar(rows: DataFrame, dropped: Set[String],
+      dst: Path, appended: Seq[String]): Unit =
+    FileStats.params(rows).foreach { p =>
+      val name = DeleteVectors.fileNameOf(col("file"))
+      val carried = rows.filter(!name.isInCollection(dropped))
+        .withColumn("file",
+          concat(lit(dst.toUri.toString.stripSuffix("/") + "/"), name))
+      val fresh =
+        if (appended.isEmpty) carried.limit(0)
+        else FileStats.computeStats(
+          spark.read.option("basePath", dst.toString).parquet(appended: _*),
+          p.statsCols, p.bloomCols, p.bloomBitsLog2, p.bloomK)
+      FileStats.writeStatsDf(carried.unionByName(fresh), dst.toString)
+    }
 
   /** Carry an immutable version file into a new version dir without
     * moving data bytes: a hard link when the filesystem supports it —
@@ -808,10 +805,9 @@ class TableStore(val root: String, spark: SparkSession) {
     * linked version dir only drops a reference; the bytes live until
     * the LAST referencing version is vacuumed). Falls back to a byte
     * copy on filesystems without hard links. This is what keeps the
-    * carry-based DML tiers ([[deleteRange]], [[deleteWhereMoR]],
-    * [[upsertMoR]], [[purgeDeletes]]) at O(changed data + file count)
-    * rather than O(table bytes) per commit — on a 100 TB table a
-    * trickle upsert must not re-copy 100 TB of untouched files. */
+    * carry tier ([[stageCarry]]) at O(changed data + file count) rather
+    * than O(table bytes) per commit — on a 100 TB table a trickle
+    * upsert must not re-copy 100 TB of untouched files. */
   private def carryFile(src: Path, dstDir: Path): Unit = {
     val dst = dstDir.resolve(src.getFileName.toString)
     try Files.createLink(dst, src)
@@ -825,12 +821,14 @@ class TableStore(val root: String, spark: SparkSession) {
     withListing(dir)(_.filter(p => Files.isRegularFile(p) &&
       p.getFileName.toString.endsWith(".parquet")).toSeq)
 
-  /** Whether the version nests files in subdirectories (hive
-    * partitioning) — the layouts the flat name-keyed carry paths
-    * can't model (sidecar dirs are `_`-prefixed, not data). */
-  private def hasNestedData(dir: Path): Boolean =
-    withListing(dir)(_.exists(p => Files.isDirectory(p) &&
-      !p.getFileName.toString.startsWith("_")))
+  /** Whether the version is the plain flat layout the name-keyed carry
+    * tier models: not bucketed (its reads need the bucket spec and
+    * catalog entry) and no files nested in subdirectories (hive
+    * partitioning; sidecar dirs are `_`-prefixed, not data). */
+  private def isFlat(dir: Path): Boolean =
+    !Files.exists(dir.resolve(BucketSpecFile)) &&
+      withListing(dir)(!_.exists(p => Files.isDirectory(p) &&
+        !p.getFileName.toString.startsWith("_")))
 
   /** Merge-on-read DELETE ([[DeleteVectors]]): record the matching
     * rows as (file, position) tombstones and carry every data file
@@ -852,11 +850,9 @@ class TableStore(val root: String, spark: SparkSession) {
     * [[purgeDeletes]] plus [[vacuum]]. */
   def deleteWhereMoR(table: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
-    if (Files.exists(curDir.resolve(BucketSpecFile)) || hasNestedData(curDir))
-      return deleteWhere(table, predicate)
+    if (!isFlat(curDir)) return deleteWhere(table, predicate)
     val files = dataFiles(curDir)
     if (files.isEmpty) return 0L // empty version: nothing to delete
 
@@ -866,35 +862,21 @@ class TableStore(val root: String, spark: SparkSession) {
     // `_metadata` doesn't resolve through joins); localCheckpoint pins
     // the small result so the count and the sidecar write below don't
     // each re-run the predicate scan
-    val withPos =
-      DeleteVectors.withPosition(dataScan(curDir))
-    val alive = DeleteVectors.read(spark, curDir.toString) match {
-      case Some(old) => DeleteVectors.antiJoin(withPos, old)
-      case None      => withPos
-    }
+    val withPos = DeleteVectors.withPosition(dataScan(curDir))
+    val oldDv = DeleteVectors.read(spark, curDir.toString)
+    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _))
     val fresh = alive.filter(coalesce(predicate, lit(false)))
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
       .localCheckpoint(true)
     val freshN = fresh.count()
     if (freshN == 0L) return 0L
 
-    val version = newVersion()
-    val dst = versionDir(table, version)
-    Files.createDirectories(dst)
-    files.foreach(carryFile(_, dst))
-    Files.createFile(dst.resolve("_SUCCESS"))
-    val dv = DeleteVectors.read(spark, curDir.toString) match {
-      case Some(old) => old.unionByName(fresh) // disjoint by construction
-      case None      => fresh
-    }
-    DeleteVectors.write(dv, dst.toString)
-    // zone maps / blooms describe the FILES (tombstones included) and
+    // the old DV and the fresh tombstones are disjoint by construction.
+    // Zone maps / blooms describe the FILES (tombstones included) and
     // stats can only skip, so the sidecar carries over untouched; the
     // stale row_cnt is why [[statsAgg]] won't answer from metadata here
-    FileStats.read(spark, curDir.toString).foreach { rows =>
-      carrySidecar(rows, rows, dst, Seq.empty)
-    }
-    carryTag(curDir, dst)
+    val (version, _) = stageCarry(table, curDir, files,
+      dv = Some(oldDv.fold(fresh)(_.unionByName(fresh))))
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
     freshN
   }
@@ -908,8 +890,7 @@ class TableStore(val root: String, spark: SparkSession) {
     * [[deleteRange]]. Returns the number of tombstones materialized
     * (0, committing nothing, when the version has no DV). */
   def purgeDeletes(table: String): Long = {
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
     DeleteVectors.read(spark, curDir.toString) match {
       case None => 0L
@@ -921,32 +902,16 @@ class TableStore(val root: String, spark: SparkSession) {
           .collect().map(_.getString(0)).toSet
         val (rewrite, untouched) =
           dataFiles(curDir).partition(f => dvFiles(f.getFileName.toString))
-        val version = newVersion()
-        val dst = versionDir(table, version)
-        Files.createDirectories(dst)
-        untouched.foreach(carryFile(_, dst))
-        val copiedNames = untouched.map(_.getFileName.toString).toSet
-        if (rewrite.nonEmpty)
-          DeleteVectors.applyTo(spark,
-              // declared-schema read: DV'd files can span generations
-              // (see deleteRange) — rewrite under the union schema
-              declaredSchema(curDir).fold(spark.read)(sc => spark.read.schema(sc))
-                .option("basePath", curDir.toString)
-                .parquet(rewrite.map(_.toUri.toString): _*),
-              curDir.toString)
-            .write.mode("append").parquet(dst.toString)
-        else Files.createFile(dst.resolve("_SUCCESS"))
-        FileStats.read(spark, curDir.toString).foreach { rows =>
-          val newFiles = withListing(dst)(_
-            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-              !copiedNames.contains(p.getFileName.toString))
-            .map(_.toUri.toString).toSeq)
-          val dstUri = dst.toUri.toString.stripSuffix("/")
-          val untouchedRows = rows.filter(!element_at(
-            split(col("file"), "/"), -1).isin(dvFiles.toSeq: _*))
-          carrySidecar(rows, untouchedRows, dst, newFiles)
-        }
-        carryTag(curDir, dst)
+        // declared-schema read: DV'd files can span generations (see
+        // deleteRange) — rewrite under the union schema
+        val survivors = Option.when(rewrite.nonEmpty)(DeleteVectors.applyTo(
+          spark,
+          declaredSchema(curDir).fold(spark.read)(sc => spark.read.schema(sc))
+            .option("basePath", curDir.toString)
+            .parquet(rewrite.map(_.toUri.toString): _*),
+          curDir.toString))
+        val (version, _) =
+          stageCarry(table, curDir, untouched, append = survivors)
         commit(Map(table -> version), expect = Map(table -> Some(curV)))
         dvN
     }
@@ -1021,12 +986,11 @@ class TableStore(val root: String, spark: SparkSession) {
     * contract. */
   def upsertMoR(table: String, updates: DataFrame, keys: Seq[String],
       tag: Option[String] = None): Long = {
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
     val cols = read(table).columns.toSeq
     val aligned = updates.select(cols.map(col): _*)
-    if (Files.exists(curDir.resolve(BucketSpecFile)) || hasNestedData(curDir)) {
+    if (!isFlat(curDir)) {
       require(tag.isEmpty, "upsertMoR: version tags require the MoR path; " +
         "this layout (bucketed/partitioned) falls back to copy-on-write")
       // copy-on-write fallback: anti-join out the matched rows, append
@@ -1043,52 +1007,24 @@ class TableStore(val root: String, spark: SparkSession) {
     // tombstones for alive rows whose key a fresh update row carries;
     // position capture directly above the scan (before any join), the
     // key semi-join after — `_metadata` doesn't resolve through joins
-    val withPos =
-      DeleteVectors.withPosition(dataScan(curDir))
-    val alive = DeleteVectors.read(spark, curDir.toString) match {
-      case Some(old) => DeleteVectors.antiJoin(withPos, old)
-      case None      => withPos
-    }
+    val withPos = DeleteVectors.withPosition(dataScan(curDir))
+    val oldDv = DeleteVectors.read(spark, curDir.toString)
+    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _))
     val fresh = alive.join(aligned.select(keys.map(col): _*).distinct(),
         keys, "left_semi")
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
       .localCheckpoint(true)
     val freshN = fresh.count()
 
-    val version = newVersion()
-    val dst = versionDir(table, version)
-    Files.createDirectories(dst)
-    files.foreach(carryFile(_, dst))
-    val copiedNames = files.map(_.getFileName.toString).toSet
-    // Spark's append write emits _SUCCESS itself → marker-complete
-    aligned.write.mode("append").parquet(dst.toString)
     // pure-insert upsert with no inherited DV: no sidecar at all — the
-    // new version reads as a plain scan with no anti-join tax
-    DeleteVectors.read(spark, curDir.toString) match {
-      case Some(old) =>
-        DeleteVectors.write(old.unionByName(fresh), dst.toString)
-      case None if freshN > 0L =>
-        DeleteVectors.write(fresh, dst.toString)
-      case None => ()
-    }
-    // carried files keep their sidecar rows (stats may only skip, and
-    // tombstoned rows only widen bounds); appended files get fresh stats
-    FileStats.read(spark, curDir.toString).foreach { rows =>
-      val newFiles = withListing(dst)(_
-        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-          !copiedNames.contains(p.getFileName.toString))
-        .map(_.toUri.toString).toSeq)
-      carrySidecar(rows, rows, dst, newFiles)
-    }
-    // tag lands before the commit: visible iff the version is; an
-    // untagged upsert carries the current tag (the high-water mark
-    // survives interleaved maintenance DML)
-    tag match {
-      case Some(t) =>
-        Files.write(dst.resolve(TagFile), t.getBytes(StandardCharsets.UTF_8))
-        carrySchema(curDir, dst) // a fresh tag must not drop the evolved-read contract
-      case None => carryTag(curDir, dst)
-    }
+    // new version reads as a plain scan with no anti-join tax. Carried
+    // files keep their stats rows (stats may only skip, and tombstoned
+    // rows only widen bounds). The tag lands before the commit: visible
+    // iff the version is; an untagged upsert carries the current tag.
+    val dv = oldDv.map(_.unionByName(fresh))
+      .orElse(Option.when(freshN > 0L)(fresh))
+    val (version, _) = stageCarry(table, curDir, files,
+      append = Some(aligned), dv = dv, tag = tag)
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
     freshN
   }
@@ -1117,11 +1053,9 @@ class TableStore(val root: String, spark: SparkSession) {
     * pin theirs in the directory structure. */
   def appendEvolved(table: String, rows: DataFrame,
       tag: Option[String] = None): Unit = {
-    val curV = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val curV = currentVersion(table)
     val curDir = versionDir(table, curV)
-    require(!Files.exists(curDir.resolve(BucketSpecFile)) &&
-      !hasNestedData(curDir),
+    require(isFlat(curDir),
       "appendEvolved requires the plain flat layout (bucketed layouts pin " +
         "their schema in the bucket spec; partitioned ones in the dir tree)")
     val curSchema = declaredSchema(curDir).getOrElse(dataScan(curDir).schema)
@@ -1141,22 +1075,13 @@ class TableStore(val root: String, spark: SparkSession) {
       if (curSchema.fields.exists(_.name == f.name)) f
       else f.copy(nullable = true) // old generation is the null population
     })
-    val version = newVersion()
-    val dst = versionDir(table, version)
-    Files.createDirectories(dst)
-    dataFiles(curDir).foreach(carryFile(_, dst))
-    rows.write.mode("append").parquet(dst.toString)
-    DeleteVectors.read(spark, curDir.toString)
-      .foreach(dv => DeleteVectors.write(dv, dst.toString))
-    tag match {
-      case Some(t) =>
-        Files.write(dst.resolve(TagFile), t.getBytes(StandardCharsets.UTF_8))
-      case None => carryTag(curDir, dst)
-    }
+    val (version, _) = stageCarry(table, curDir, dataFiles(curDir),
+      append = Some(rows), dv = DeleteVectors.read(spark, curDir.toString),
+      tag = tag, carryStats = false)
     // the union declaration lands LAST among sidecars (overwriting any
     // carried older declaration) and before the commit: visible iff the
     // version is
-    Files.write(dst.resolve(SchemaFile),
+    Files.write(versionDir(table, version).resolve(SchemaFile),
       declared.toDDL.getBytes(StandardCharsets.UTF_8))
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
   }
@@ -1229,17 +1154,18 @@ class TableStore(val root: String, spark: SparkSession) {
     * the flat-version link carry can't model). `dst` must not exist. */
   def cloneTable(src: String, dst: String): Unit = {
     require(!exists(dst), s"cloneTable: '$dst' already exists in $root")
-    val curV = manifest.getOrElse(src,
-      throw new IllegalStateException(s"table '$src' does not exist in $root"))
+    val curV = currentVersion(src)
     val curDir = versionDir(src, curV)
-    if (Files.exists(curDir.resolve(BucketSpecFile)) || hasNestedData(curDir)) {
+    if (!isFlat(curDir)) {
       commit(Map(dst -> stage(dst, read(src))), expect = Map(dst -> None))
       return
     }
     // the carried files come from src's immutable pinned version, so a
     // concurrent commit on SRC cannot corrupt the clone — only a racing
     // creation of DST itself must refuse
-    commit(Map(dst -> carryVersionFrom(curDir, dst)), expect = Map(dst -> None))
+    val (version, _) = stageCarry(dst, curDir, dataFiles(curDir),
+      dv = DeleteVectors.read(spark, curDir.toString))
+    commit(Map(dst -> version), expect = Map(dst -> None))
   }
 
   /** RESTORE TABLE … TO VERSION (Delta/Snowflake-style rollback): make
@@ -1266,8 +1192,7 @@ class TableStore(val root: String, spark: SparkSession) {
     * [[cloneTable]]. Concurrent writers hit the same detect-and-refuse
     * OCC as every DML ([[commit]] with the pinned expected parent). */
   def restoreTable(table: String, version: String): Unit = {
-    val cur = manifest.getOrElse(table,
-      throw new IllegalStateException(s"table '$table' does not exist in $root"))
+    val cur = currentVersion(table)
     require(version != cur,
       s"restoreTable: '$version' is already the current version of '$table'")
     if (!committedVersions(table).contains(version))
@@ -1279,7 +1204,7 @@ class TableStore(val root: String, spark: SparkSession) {
       throw new IllegalStateException(
         s"restoreTable: version '$version' of '$table' was already " +
           "vacuumed — restores never resurrect reclaimed bytes")
-    if (Files.exists(srcDir.resolve(BucketSpecFile)) || hasNestedData(srcDir)) {
+    if (!isFlat(srcDir)) {
       val v = stage(table, readResolved(table, version))
       // the materialized fallback must still rewind the version tag (a
       // streaming sink's applied-batch high-water mark moves WITH the
@@ -1291,29 +1216,9 @@ class TableStore(val root: String, spark: SparkSession) {
       commit(Map(table -> v), expect = Map(table -> Some(cur)))
       return
     }
-    commit(Map(table -> carryVersionFrom(srcDir, table)),
-      expect = Map(table -> Some(cur)))
-  }
-
-  /** Hard-link-carry the flat version at `srcDir` into a fresh staged
-    * version of `table` — data files, deletion vector, path-remapped
-    * stats sidecar, version tag and declared schema — returning the new
-    * version name (uncommitted; the caller owns the commit and its OCC
-    * expectation). The shared body of [[cloneTable]] and
-    * [[restoreTable]]: one carry implementation so a new sidecar kind
-    * can never be carried by one and dropped by the other. */
-  private def carryVersionFrom(srcDir: Path, table: String): String = {
-    val version = newVersion()
-    val dstDir = versionDir(table, version)
-    Files.createDirectories(dstDir)
-    dataFiles(srcDir).foreach(carryFile(_, dstDir))
-    Files.createFile(dstDir.resolve("_SUCCESS"))
-    DeleteVectors.read(spark, srcDir.toString)
-      .foreach(dv => DeleteVectors.write(dv, dstDir.toString))
-    FileStats.read(spark, srcDir.toString)
-      .foreach(rows => carrySidecar(rows, rows, dstDir, Seq.empty))
-    carryTag(srcDir, dstDir)
-    version
+    val (v, _) = stageCarry(table, srcDir, dataFiles(srcDir),
+      dv = DeleteVectors.read(spark, srcDir.toString))
+    commit(Map(table -> v), expect = Map(table -> Some(cur)))
   }
 
   /** The [[upsertMoR]] `tag` of the CURRENT version, if it carries one.

@@ -704,4 +704,104 @@ class DeleteVectorsSpec extends AnyFunSuite with Matchers with SparkSpec {
     store.cloneTable("t", "c")
     store.read("c").count() shouldBe 1L
   }
+
+  /** One carry DML under the shared successor-version contract: `run`
+    * performs it (plus any setup it needs) on the fixture table `t` and
+    * returns the version dir it carried from; the successor is the
+    * current version of `table` afterwards. */
+  private case class CarryCase(name: String, table: String = "t",
+      tag: String = "7", stats: Boolean = true,
+      addedColumn: Option[String] = None)(val run: TableStore => String)
+
+  /** Runs `f` on the current version of `t`, returning that version's dir. */
+  private def carriedFrom(store: TableStore)(f: => Any): String = {
+    val src = store.currentPath("t").get
+    f
+    src
+  }
+
+  test("one carry contract for every carry DML: hard-linked kept files, " +
+      "_SUCCESS, tag, declared schema and remapped stats rows") {
+    val s = spark
+    import s.implicits._
+    val carryCases = Seq(
+      CarryCase("deleteRange")(st => carriedFrom(st)(
+        st.deleteRange("t", "id", lit(0L), lit(9L)) shouldBe 10L)),
+      CarryCase("deleteWhereMoR")(st => carriedFrom(st)(
+        st.deleteWhereMoR("t", col("id") % 10 === 0) shouldBe 41L)),
+      CarryCase("purgeDeletes") { st =>
+        st.deleteWhereMoR("t", col("id") < 5L) shouldBe 5L
+        carriedFrom(st)(st.purgeDeletes("t") shouldBe 5L)
+      },
+      CarryCase("upsertMoR")(st => carriedFrom(st)(
+        st.upsertMoR("t", Seq((1L, "u1", "n"), (900L, "u900", "n"))
+          .toDF("id", "v", "note"), Seq("id")) shouldBe 1L)),
+      CarryCase("upsertMoR tagged", tag = "8")(st => carriedFrom(st)(
+        st.upsertMoR("t", Seq((2L, "u2", "n")).toDF("id", "v", "note"),
+          Seq("id"), tag = Some("8")) shouldBe 1L)),
+      CarryCase("appendEvolved", stats = false,
+          addedColumn = Some("extra"))(st => carriedFrom(st)(
+        st.appendEvolved("t",
+          Seq((901L, "e", "n", 1L)).toDF("id", "v", "note", "extra")))),
+      CarryCase("compactSmallFiles") { st =>
+        val src = st.currentPath("t").get
+        // everything but the largest file is "small": packs, carries it
+        val target = dataFiles(src).values.max
+        carriedFrom(st)(st.compactSmallFiles("t", targetBytes = target,
+          minSmallFiles = 1) should be > 0)
+      },
+      CarryCase("cloneTable", table = "c")(st =>
+        carriedFrom(st)(st.cloneTable("t", "c"))),
+      CarryCase("restoreTable") { st =>
+        val src = st.manifest("t")
+        st.deleteWhereMoR("t", col("id") === 1L) shouldBe 1L
+        st.restoreTable("t", src)
+        Paths.get(st.root, "t", src).toString
+      })
+
+    val ino = (d: String, n: String) =>
+      Files.getAttribute(Paths.get(d, n), "unix:ino")
+    val declared = (d: String) => Some(Paths.get(d, "_graft_schema"))
+      .filter(Files.exists(_)).map(f =>
+        org.apache.spark.sql.types.StructType.fromDDL(Files.readString(f))
+          .fieldNames.toSeq)
+    carryCases.foreach { c =>
+      withClue(s"${c.name}: ") {
+        // the fixture: a flat, statted, tagged, schema-evolved version —
+        // four range files of generation 1 plus one generation-2 file,
+        // evolved under tag 7, then re-statted in place
+        val store = new TableStore(tmpDir("dv-carry"), spark)
+        store.overwrite("t", (0L until 400L).map(i => (i, s"v$i")).toDF("id", "v")
+          .repartitionByRange(4, col("id")).sortWithinPartitions("id"))
+        store.appendEvolved("t",
+          (400L until 410L).map(i => (i, s"v$i", s"n$i")).toDF("id", "v", "note")
+            .coalesce(1), tag = Some("7"))
+        FileStats.write(spark, store.currentPath("t").get, Seq("id"))
+
+        val src = c.run(store)
+        val dst = store.currentPath(c.table).get
+        dst should not be src
+        // every kept file is the source's file, hard-linked
+        val kept = dataFiles(dst).keySet intersect dataFiles(src).keySet
+        kept should not be empty
+        kept.foreach(n => ino(dst, n) shouldBe ino(src, n))
+        Files.exists(Paths.get(dst, "_SUCCESS")) shouldBe true
+        store.versionTag(c.table) shouldBe Some(c.tag)
+        declared(src) should not be empty
+        declared(dst) shouldBe declared(src).map(_ ++ c.addedColumn)
+        FileStats.read(spark, dst) match {
+          case None => c.stats shouldBe false
+          case Some(rows) =>
+            c.stats shouldBe true
+            // one stats row per data file, every one naming the new dir
+            val files = rows.select("file").collect().map(r =>
+              Paths.get(java.net.URI.create(r.getString(0)).getPath))
+            files.map(_.getFileName.toString).toSet shouldBe
+              dataFiles(dst).keySet
+            files.foreach(_.getParent shouldBe Paths.get(dst).toAbsolutePath)
+        }
+        store.read(c.table).count() should be > 0L
+      }
+    }
+  }
 }

@@ -3,7 +3,8 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-stage profiler for SparkEntry queries: runs each named query
-  * with the bench's session shape (local[$SPARK_GRAFT_CPUS], noop sink)
+  * with the bench's session shape (local[N] with N shuffle partitions,
+  * N = available processors; Bench's 64k AQE coalescing floor; noop sink)
   * and prints job/stage wall-clock, task time, shuffle bytes — the
   * empirical attribution pass of guide §1. Dev tool, not a bench.
   *
@@ -14,14 +15,18 @@ object Prof {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("dedup_jaccard_prefix"))
     val runs = if (args.length > 1) args(1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = Runtime.getRuntime.availableProcessors
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      // Bench's coalescing floor: without it AQE coalesces the CPU-heavy
+      // small shuffles to a few tasks and the profile disagrees with the
+      // bench row it is meant to explain
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
