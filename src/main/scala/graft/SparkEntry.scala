@@ -191,16 +191,16 @@ object SparkEntry {
     org.apache.spark.sql.types.StructField("flag",
       org.apache.spark.sql.types.StringType)))
 
-  /** Build-once bucketed layouts for the PRODUCTION upsert path: the
+  /** Build-once bucketed layouts for the store-level upsert: the
     * [[largeDim]] dimension and its delta staged hash-bucketed on the
     * merge key ([[graft.core.TableStore.stageBucketed]]), so the
-    * full-outer merge join plans with NO Exchange on either side. In the
-    * pipeline the cycle writes the dimension bucketed anyway
-    * (`ScdConfig.snapshotBuckets`) and the delta arrives partitioned from
-    * the stream — the layout is not an extra cost of the merge, which is
-    * why `scd_upsert_stored` measures the steady state while
-    * `scd_upsert_large` stays the honest derived-frame twin that pays
-    * (and at sf10 showed a 2.7× swing from) the two-sided shuffle. */
+    * full-outer merge join plans with NO Exchange on either side. The
+    * layout is paid once at staging time, so `scd_upsert_stored` measures
+    * a merge over tables already stored that way, while
+    * `scd_upsert_large` stays the derived-frame twin that pays (and at
+    * sf10 showed a 2.7× swing from) the two-sided shuffle. The pipeline
+    * itself writes landing plain: its cycle's merge broadcasts the delta
+    * instead ([[graft.ops.Merge.upsertChanges]]). */
   private[graft] def upsertStoredTables(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val root = java.nio.file.Paths.get(fixtureRoot,

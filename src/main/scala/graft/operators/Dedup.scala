@@ -330,7 +330,7 @@ object Dedup {
   /** Deterministically free an eager `localCheckpoint`'s blocks (the
     * ContextCleaner would only reclaim them after the frame is GC'd —
     * too late for corpus-sized projections churned per call). */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false); ()

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Schemas
+
 /** Join-based MERGE rewrite (no Delta/Iceberg in this environment, so MERGE
   * INTO is re-expressed as one full-outer join + per-row resolution +
   * full-table rewrite — SURVEY.md §2.3 J1).
@@ -58,18 +60,8 @@ object Merge {
       nullSafe: Boolean = false,
       broadcastSource: Boolean = true): DataFrame = {
 
-    val cols = target.columns.toSeq
-    require(source.columns.toSet == cols.toSet,
-      s"source columns ${source.columns.mkString(",")} must match target ${cols.mkString(",")}")
-
-    def changedCond(tSide: String, sSide: String): Column =
-      compareCols.getOrElse(cols.filterNot(keys.contains))
-        .map { c =>
-          if (nullSafe) !(col(s"$tSide.$c") <=> col(s"$sSide.$c"))
-          else col(s"$tSide.$c") =!= col(s"$sSide.$c")
-        }
-        .reduceOption(_ || _)
-        .getOrElse(lit(false))
+    val cols = columnsOf(target, source)
+    val changed = changedCond(cols, keys, compareCols, nullSafe) _
 
     if (broadcastSource) {
       val d = broadcast(source.withColumn("__s_present", lit(true))).alias("__s")
@@ -78,7 +70,7 @@ object Merge {
 
       // matched-and-changed → delta values; else target row unchanged
       val useSource = col("__s.__s_present").isNotNull &&
-        coalesce(changedCond("__t", "__s"), lit(false))
+        coalesce(changed("__t", "__s"), lit(false))
       val resolved = t.join(d, joinCond, "left_outer")
         .select(cols.map { c =>
           when(useSource, col(s"__s.$c")).otherwise(col(s"__t.$c")).as(c)
@@ -100,11 +92,76 @@ object Merge {
       val sPresent = col("__s.__s_present").isNotNull
       // Insert (target absent) or matched-and-changed → source row wins;
       // matched-unchanged (or UNKNOWN change condition) → target row kept.
-      val useSource = sPresent && (!tPresent || coalesce(changedCond("__t", "__s"), lit(false)))
+      val useSource = sPresent && (!tPresent || coalesce(changed("__t", "__s"), lit(false)))
 
       joined.select(cols.map { c =>
         when(useSource, col(s"__s.$c")).otherwise(col(s"__t.$c")).as(c)
       }: _*)
     }
   }
+
+  /** The two outputs of [[upsertChanges]], both read from the checkpointed
+    * `joined`; [[release]] frees it once they are written. */
+  final case class Changes(next: DataFrame, cdc: DataFrame, joined: DataFrame) {
+    def release(): Unit = graft.operators.Dedup.releaseCheckpoint(joined)
+  }
+
+  /** [[upsert]] that also returns the delta it applies, in
+    * [[SnapshotCdc.diff]]'s shape — the MERGE's own changes, as a stream on
+    * the target shows them (`SCD-Configuration Setup.sql:220-232`): a
+    * changed key gives DELETE(old image) + INSERT(new image), both
+    * `_is_update`; a new key an INSERT. One broadcast join of the target
+    * against the source pairs the matched keys' images; its source-sized
+    * output is checkpointed once and `next` (target minus changed keys,
+    * plus every INSERT image) and the CDC both read it. NULL keys never
+    * match, as in [[upsert]]: a NULL-key row is new each time it is sent. */
+  def upsertChanges(
+      target: DataFrame,
+      source: DataFrame,
+      keys: Seq[String],
+      compareCols: Option[Seq[String]] = None): Changes = {
+    val cols = columnsOf(target, source)
+    def image(side: String) = struct(cols.map(c => col(s"$side.$c").as(c)): _*)
+    val joined = target.alias("__t")
+      .join(broadcast(source).alias("__s"),
+        keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _))
+      .select(image("__t").as("__old"), image("__s").as("__new"), coalesce(
+        changedCond(cols, keys, compareCols, nullSafe = false)("__t", "__s"),
+        lit(false)).as("__changed"))
+      .localCheckpoint(true)
+
+    def keysOf(df: DataFrame) = broadcast(df.select(keys.map(k => col(s"__new.$k").as(k)): _*))
+    def rows(df: DataFrame, action: String, isUpdate: Boolean) =
+      df.select(cols.map(col) ++ Seq(lit(action).as(Schemas.cdcActionCol),
+        lit(isUpdate).as(Schemas.cdcIsUpdateCol),
+        SnapshotCdc.rowId(keys.map(col)).as(Schemas.cdcRowIdCol)): _*)
+    val pairs = joined.filter(col("__changed"))
+    val cdc = rows(pairs.select("__new.*"), "INSERT", isUpdate = true)
+      .unionByName(rows(pairs.select("__old.*"), "DELETE", isUpdate = true))
+      .unionByName(rows(source.join(keysOf(joined), keys, "left_anti"), "INSERT", isUpdate = false))
+    val next = target.join(keysOf(pairs), keys, "left_anti").unionByName(
+      cdc.filter(col(Schemas.cdcActionCol) === "INSERT").select(cols.map(col): _*))
+    Changes(next, cdc, joined)
+  }
+
+  private def columnsOf(target: DataFrame, source: DataFrame): Seq[String] = {
+    require(source.columns.toSet == target.columns.toSet, s"source columns " +
+      s"${source.columns.mkString(",")} must match target ${target.columns.mkString(",")}")
+    target.columns.toSeq
+  }
+
+  /** A matched row's change condition between its `tSide` and `sSide`
+    * images over `compareCols` (default: every non-key column):
+    * null-propagating `!=` like Snowflake's, so a NULL on either side
+    * makes that disjunct UNKNOWN, or `IS DISTINCT FROM` when `nullSafe`. */
+  private def changedCond(cols: Seq[String], keys: Seq[String],
+      compareCols: Option[Seq[String]], nullSafe: Boolean)(
+      tSide: String, sSide: String): Column =
+    compareCols.getOrElse(cols.filterNot(keys.contains))
+      .map { c =>
+        if (nullSafe) !(col(s"$tSide.$c") <=> col(s"$sSide.$c"))
+        else col(s"$tSide.$c") =!= col(s"$sSide.$c")
+      }
+      .reduceOption(_ || _)
+      .getOrElse(lit(false))
 }

@@ -19,19 +19,17 @@ import graft.core.Schemas
   *   - '''Advance-on-consume''': DML over the stream moves the offset;
   *     the data is read exactly once (`SCD-Automation.sql:142`).
   *
-  * Like a Snowflake stream, the offset holds no data of its own: it is a
-  * committed version of the source table. [[diff]] of the version at the
-  * offset against the new version is the delta; the consumer advances the
-  * offset by committing the new source version '''in the same manifest
-  * swap as its own write''' (see [[graft.pipeline.ScdPipeline]]), which
-  * makes advance-on-consume atomic with consumption — the §7.5.1 hard part.
+  * [[diff]] derives that delta from two versions of the source table. The
+  * pipeline does not: its cycle takes the delta from the landing MERGE
+  * itself ([[Merge.upsertChanges]], same rows, same [[rowId]]); [[diff]]
+  * serves the queries that compare two stored snapshots. Its key join is
+  * `=`, so a NULL key never pairs with itself: a NULL-key row in both
+  * versions comes out as a DELETE plus an INSERT, neither `_is_update`.
   *
   * Scale: the diff join shuffles both versions on the key unless both are
   * stored bucketed on it ([[graft.core.TableStore.stageBucketed]]), in
   * which case it is a co-partitioned join with no exchange; AQE handles
-  * skew. The row-id is a deterministic md5 of the business key (stable
-  * across versions, like the reference's ROW_ID; md5 chosen because every
-  * engine — including the DuckDB oracle — computes it identically).
+  * skew.
   */
 object SnapshotCdc {
 
@@ -56,25 +54,29 @@ object SnapshotCdc {
       .map(n => !(col(s"__p.$n") <=> col(s"__c.$n")))
       .reduceOption(_ || _).getOrElse(lit(false))
 
-    def rowId(side: String) =
-      md5(concat(keys.map(k => keyPart(col(s"$side.$k"))): _*))
+    def sideRowId(side: String) = rowId(keys.map(k => col(s"$side.$k")))
 
     val inserts = joined
       .filter(cPresent && (!pPresent || valueChanged))
       .select(cols.map(n => col(s"__c.$n").as(n)) ++ Seq(
         lit("INSERT").as(Schemas.cdcActionCol),
         pPresent.as(Schemas.cdcIsUpdateCol),
-        rowId("__c").as(Schemas.cdcRowIdCol)): _*)
+        sideRowId("__c").as(Schemas.cdcRowIdCol)): _*)
 
     val deletes = joined
       .filter(pPresent && (!cPresent || valueChanged))
       .select(cols.map(n => col(s"__p.$n").as(n)) ++ Seq(
         lit("DELETE").as(Schemas.cdcActionCol),
         cPresent.as(Schemas.cdcIsUpdateCol),
-        rowId("__p").as(Schemas.cdcRowIdCol)): _*)
+        sideRowId("__p").as(Schemas.cdcRowIdCol)): _*)
 
     inserts.unionByName(deletes)
   }
+
+  /** `_row_id` of a row with business key `keys`: an md5, stable across
+    * versions like the reference's ROW_ID, that every engine (the DuckDB
+    * oracle too) computes identically. */
+  def rowId(keys: Seq[Column]): Column = md5(concat(keys.map(keyPart): _*))
 
   /** One key's part of the row-id preimage: `<length>:<value>`, or `~` for
     * NULL. Length prefixes keep the concatenation decodable whatever the

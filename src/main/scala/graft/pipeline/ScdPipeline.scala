@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Schemas, TableStore}
-import graft.ops.{Merge, Scd2, SnapshotCdc}
+import graft.ops.{Merge, Scd2}
 import graft.sources.Stage
 
 /** The full SCD Type-2 pipeline — the Spark re-expression of the
@@ -43,9 +43,12 @@ import graft.sources.Stage
   * partial-cycle window.
   *
   * The CDC stream on landing keeps no data: its offset is landing's
-  * committed version, and a cycle's delta is [[SnapshotCdc.diff]] of that
-  * version against the one the cycle stages. This rests on one invariant:
-  * '''landing is written only by the cycle that consumes it'''.
+  * committed version. Task 3's MERGE ([[Merge.upsertChanges]]) yields the
+  * rows it changes in landing, in the stream's shape, from its own
+  * broadcast join of landing against the raw batch: the stream's content
+  * since the offset, which task 4 and the aggregate refresh consume. This
+  * rests on one invariant: '''landing is written only by the cycle that
+  * consumes it''' — so between cycles the stream is empty.
   *
   * Concurrency: a cycle reads every input at the manifest it read on
   * start, and its commit expects those versions, so a cycle another
@@ -70,33 +73,31 @@ class ScdPipeline(
 
   private val stagingSchema = Schemas.scd2(config.baseSchema)
 
-  /** Landing's one layout: bucketed by business key when
-    * [[ScdConfig.snapshotBuckets]] is set, so the per-cycle diff of two
-    * landing versions joins co-partitioned scans with no Exchange. */
-  private def stageLanding(df: DataFrame): String =
-    config.snapshotBuckets match {
-      case Some(n) => store.stageBucketed(Landing, df, config.businessKeys, n)
-      case None    => store.stage(Landing, df)
-    }
-
-  /** Enforce [[ScdConfig.duplicatePolicy]] on a loaded batch. */
-  private def applyDuplicatePolicy(raw: DataFrame): DataFrame =
+  /** The loaded batch's row count, and the batch with
+    * [[ScdConfig.duplicatePolicy]] enforced. One aggregation (rows per
+    * business key, summed and maxed) gives both the count and the
+    * duplicate verdict; the offenders are collected only when it fails. */
+  private def load(raw: DataFrame): (Long, DataFrame) = {
+    val perKey = raw.groupBy(config.businessKeys.map(col): _*).count()
+    val verdict = perKey.agg(sum("count"), max("count")).head()
+    val rowsLoaded = if (verdict.isNullAt(0)) 0L else verdict.getLong(0)
     config.duplicatePolicy match {
       case DuplicatePolicy.Error =>
-        val dups = raw.groupBy(config.businessKeys.map(col): _*)
-          .count().filter(col("count") > 1).limit(5)
-          .collect()
-        if (dups.nonEmpty) throw new IllegalArgumentException(
-          "duplicate business keys in one batch (nondeterministic MERGE, " +
-            s"Snowflake would raise too); first offenders: ${dups.mkString(", ")}. " +
-            "Set ScdConfig.duplicatePolicy = DuplicatePolicy.KeepOne to dedupe.")
-        raw
+        if (!verdict.isNullAt(1) && verdict.getLong(1) > 1) {
+          val dups = perKey.filter(col("count") > 1).limit(5).collect()
+          throw new IllegalArgumentException(
+            "duplicate business keys in one batch (nondeterministic MERGE, " +
+              s"Snowflake would raise too); first offenders: ${dups.mkString(", ")}. " +
+              "Set ScdConfig.duplicatePolicy = DuplicatePolicy.KeepOne to dedupe.")
+        }
+        (rowsLoaded, raw)
       case DuplicatePolicy.KeepOne =>
         val cols = raw.columns.toSeq
-        raw.groupBy(config.businessKeys.map(col): _*)
+        (rowsLoaded, raw.groupBy(config.businessKeys.map(col): _*)
           .agg(min(struct(cols.map(col): _*)).as("__row"))
-          .select(cols.map(c => col(s"__row.$c").as(c)): _*)
+          .select(cols.map(c => col(s"__row.$c").as(c)): _*))
     }
+  }
 
   /** `table` at the version `pin` maps it to, or empty when unmapped. */
   private def readAt(pin: Map[String, String], table: String,
@@ -108,13 +109,13 @@ class ScdPipeline(
     }
 
   /** Peek the unconsumed stream (SELECT * FROM stream,
-    * `SCD-Configuration Setup.sql:127` — side-effect free): landing at the
-    * stream's offset diffed against landing now. The offset is landing's
-    * committed version, so between cycles the peek is empty. */
-  def streamChanges(): DataFrame = {
-    val now = landing
-    SnapshotCdc.diff(now, now, config.businessKeys)
-  }
+    * `SCD-Configuration Setup.sql:127` — side-effect free). The offset is
+    * landing's committed version and only the consuming cycle writes
+    * landing, so between cycles nothing is unconsumed: an empty frame in
+    * the stream's schema, built without a scan. */
+  def streamChanges(): DataFrame = spark.createDataFrame(
+    java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+    Schemas.withCdcColumns(config.baseSchema))
 
   /** Of the staged files, the ones NOT yet in the committed load-history
     * ledger. An anti-join against the ledger, not a driver-side Set of
@@ -176,27 +177,24 @@ class ScdPipeline(
     try {
       val pin = store.manifest
       val prevLog = readAt(pin, RunLog, Schemas.runLog)
-      store.commit(Map(RunLog -> store.stage(RunLog, prevLog.unionByName(
-          logRow(prevLog, batchTime, rowsLoaded = null, status = "FAILED")))),
+      store.commit(Map(RunLog -> store.stage(RunLog,
+          logAppend(prevLog, batchTime, rowsLoaded = null, status = "FAILED"))),
         expect = Map(RunLog -> pin.get(RunLog)))
     } catch { case f: Throwable => cause.addSuppressed(f) }
 
-  /** One run-log row; `cycle_id` = max(cycle_id)+1 from the PREVIOUS log
-    * contents — a one-row driver read of a table that grows one row per
-    * cycle, so it stays metadata-cheap at any data scale. (Counting the
-    * on-disk version dirs instead broke monotonicity: `vacuum()` deletes
-    * superseded versions, so every post-vacuum cycle re-counted to the
-    * same id.) */
-  private def logRow(prevLog: DataFrame, batchTime: Timestamp,
-      rowsLoaded: java.lang.Long, status: String): DataFrame = {
-    val maxPrev = Option(prevLog.agg(max(col("cycle_id"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    spark.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row(
-        java.lang.Long.valueOf(maxPrev + 1L), batchTime, rowsLoaded,
-        new Timestamp(System.currentTimeMillis()), status)),
-      Schemas.runLog)
-  }
+  /** The run log plus one row; its `cycle_id` = max(cycle_id)+1 of the
+    * PREVIOUS log contents, an aggregate inside the write that stages the
+    * new log, not a separate driver read. (Counting the on-disk version
+    * dirs instead broke monotonicity: `vacuum()` deletes superseded
+    * versions, so every post-vacuum cycle re-counted to the same id.) */
+  private def logAppend(prevLog: DataFrame, batchTime: Timestamp,
+      rowsLoaded: java.lang.Long, status: String): DataFrame =
+    prevLog.unionByName(prevLog
+      .agg((coalesce(max(col("cycle_id")), lit(0L)) + 1L).as("cycle_id"))
+      .select(col("cycle_id"), lit(batchTime).as("batch_time"),
+        lit(rowsLoaded).cast("long").as("rows_loaded"),
+        lit(new Timestamp(System.currentTimeMillis())).as("completed_time"),
+        lit(status).as("status")))
 
   /** One cycle against `pin`, the manifest read at its start. */
   private def cycle(pin: Map[String, String], rawBatch: DataFrame,
@@ -211,71 +209,64 @@ class ScdPipeline(
     // files can be purged after commit and downstream reads are from
     // parquet, not the half-typed CSV path.
     val rawVersion = store.stage(Raw, rawBatch)
-    val rawLoaded = store.readVersion(Raw, rawVersion, config.baseSchema)
-    val rowsLoaded = rawLoaded.count()
-    val raw = applyDuplicatePolicy(rawLoaded)
+    val (rowsLoaded, raw) =
+      load(store.readVersion(Raw, rawVersion, config.baseSchema))
 
     // task3: MERGE raw → landing (J1), null-propagating change detection.
-    val landingNext = Merge.upsert(landingPrev, raw, config.businessKeys,
+    // Its join also yields the stream on landing since the offset (the
+    // landing version the cycle started from): the rows this merge changes.
+    val changes = Merge.upsertChanges(landingPrev, raw, config.businessKeys,
       compareCols = config.compareCols)
-    val landingVersion = stageLanding(landingNext)
-    val landingNew = store.readVersion(Landing, landingVersion, config.baseSchema)
+    try {
+      val cdc = changes.cdc
+      val landingVersion = store.stage(Landing, changes.next)
 
-    // the stream on landing now holds the delta since last consumption:
-    // its offset is the committed landing version the cycle started from.
-    // With registered aggregates the delta is consumed twice (SCD2 merge +
-    // MV maintenance) — materialize it once, delta-sized, instead of
-    // re-running the diff join per consumer.
-    val cdc0 = SnapshotCdc.diff(landingPrev, landingNew, config.businessKeys)
-    val cdc =
-      if (config.aggregates.isEmpty) cdc0 else cdc0.localCheckpoint(true)
+      // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
+      // Partitioned by current_flag: master (and most readers) touch only
+      // the pruned 'Y' partition, never the closed history.
+      val stagingNext = Scd2.merge(stagingPrev, cdc, batchTime,
+        matchKeys = config.matchKeys, faithful = faithful)
+      val stagingVersion = store.stage(Staging, stagingNext,
+        partitionBy = Seq("current_flag"))
 
-    // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
-    // Partitioned by current_flag: master (and most readers) touch only
-    // the pruned 'Y' partition, never the closed history.
-    val stagingNext = Scd2.merge(stagingPrev, cdc, batchTime,
-      matchKeys = config.matchKeys, faithful = faithful)
-    val stagingVersion = store.stage(Staging, stagingNext,
-      partitionBy = Seq("current_flag"))
+      // registered materialized aggregates: refreshed by signed application
+      // of the SAME consumed delta (IncrementalAgg) and committed in the
+      // SAME manifest swap — the MV, the staging history, and the stream
+      // offset can never disagree, and each refresh costs the delta plus
+      // the group domain, never a landing rescan
+      val mvUpdates = config.aggregates.map { mv =>
+        val tbl = mvTable(mv)
+        val prev = readAt(pin, tbl, mvSchema(mv))
+        tbl -> store.stage(tbl,
+          graft.ops.IncrementalAgg.applyCdc(prev, cdc, mv.keys, mv.measures))
+      }.toMap
 
-    // registered materialized aggregates: refreshed by signed application
-    // of the SAME consumed delta (IncrementalAgg) and committed in the
-    // SAME manifest swap — the MV, the staging history, and the stream
-    // offset can never disagree, and each refresh costs the delta plus
-    // the group domain, never a landing rescan
-    val mvUpdates = config.aggregates.map { mv =>
-      val tbl = mvTable(mv)
-      val prev = readAt(pin, tbl, mvSchema(mv))
-      tbl -> store.stage(tbl,
-        graft.ops.IncrementalAgg.applyCdc(prev, cdc, mv.keys, mv.measures))
-    }.toMap
+      // run-log append (TASK_HISTORY stand-in)
+      val logVersion = store.stage(RunLog, logAppend(
+        readAt(pin, RunLog, Schemas.runLog), batchTime, rowsLoaded, "SUCCEEDED"))
 
-    // run-log append (TASK_HISTORY stand-in)
-    val prevLog = readAt(pin, RunLog, Schemas.runLog)
-    val logVersion = store.stage(RunLog, prevLog.unionByName(
-      logRow(prevLog, batchTime, rowsLoaded, "SUCCEEDED")))
+      // COPY load-history ledger: the newly loaded file names join the same
+      // commit, so "loaded" and "visible in the tables" are one atomic fact
+      val ledgerUpdate =
+        if (loadedFiles.isEmpty) Map.empty[String, String]
+        else {
+          val prevLedger = readAt(pin, LoadHistory, Schemas.loadHistory)
+          val rows = spark.createDataFrame(
+            loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
+            Schemas.loadHistory)
+          Map(LoadHistory -> store.stage(LoadHistory, prevLedger.unionByName(rows)))
+        }
 
-    // COPY load-history ledger: the newly loaded file names join the same
-    // commit, so "loaded" and "visible in the tables" are one atomic fact
-    val ledgerUpdate =
-      if (loadedFiles.isEmpty) Map.empty[String, String]
-      else {
-        val prevLedger = readAt(pin, LoadHistory, Schemas.loadHistory)
-        val rows = spark.createDataFrame(
-          loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
-          Schemas.loadHistory)
-        Map(LoadHistory -> store.stage(LoadHistory, prevLedger.unionByName(rows)))
-      }
-
-    // ---- the atomic multi-table commit: committing landing advances the
-    // stream; every table the cycle read must still be at `pin` -----------
-    val readTables = Seq(Landing, Staging, RunLog, LoadHistory) ++ mvUpdates.keys
-    store.commit(Map(
-        Raw -> rawVersion,
-        Landing -> landingVersion,
-        Staging -> stagingVersion,
-        RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates,
-      expect = readTables.map(t => t -> pin.get(t)).toMap)
+      // ---- the atomic multi-table commit: committing landing advances the
+      // stream; every table the cycle read must still be at `pin` ---------
+      val readTables = Seq(Landing, Staging, RunLog, LoadHistory) ++ mvUpdates.keys
+      store.commit(Map(
+          Raw -> rawVersion,
+          Landing -> landingVersion,
+          Staging -> stagingVersion,
+          RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates,
+        expect = readTables.map(t => t -> pin.get(t)).toMap)
+    } finally changes.release()
 
     afterCommit()
     rowsLoaded
@@ -357,16 +348,9 @@ case class ScdConfig(
       * [[DuplicatePolicy.Error]] (default) mirrors Snowflake's
       * nondeterministic-MERGE error; [[DuplicatePolicy.KeepOne]] keeps a
       * deterministic representative (min by full row) — duplicates left in
-      * place would multiply landing rows through the merge join AND make
-      * the CDC diff join explode. */
+      * place would multiply landing rows and the cycle's CDC through the
+      * merge join. */
     duplicatePolicy: DuplicatePolicy = DuplicatePolicy.Error,
-    /** When set, the landing table is stored hash-bucketed on the
-      * business key with this bucket count, making the per-cycle diff of
-      * two landing versions exchange-free on both sides — the last
-      * full shuffle in the core pipeline at 100 TB. Size so one bucket of
-      * the dimension fits an executor core (e.g. 4096 for a 10 TB
-      * dimension). */
-    snapshotBuckets: Option[Int] = None,
     /** Materialized aggregates over the landing table, maintained
       * incrementally from each cycle's CDC delta
       * ([[graft.ops.IncrementalAgg]]) and committed atomically with the
@@ -380,17 +364,12 @@ case class ScdConfig(
 }
 
 object ScdConfig {
-  /** The reference dimension. Bucketed landing is ON by default: the
-    * 10-cycle soak measured the bucketed layout ~30% faster end-to-end
-    * even at 20k-row local scale (the CDC diff loses both shuffles), and
-    * the gap only widens with data size. Set `snapshotBuckets = None` for
-    * environments without a (even in-memory) catalog. */
+  /** The reference dimension. */
   val supplier: ScdConfig = ScdConfig(
     prefix = "supplier",
     baseSchema = Schemas.supplierBase,
     businessKeys = Seq("supplier_code"),
-    trackedCols = Seq("supplier_state"),
-    snapshotBuckets = Some(16))
+    trackedCols = Seq("supplier_state"))
 }
 
 /** A landing-table aggregate the pipeline maintains incrementally:

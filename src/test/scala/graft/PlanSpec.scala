@@ -372,50 +372,102 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toSeq shouldBe inMem
   }
 
-  test("bucketed snapshots make the CDC diff exchange-free") {
+  test("SnapshotCdc.diff of two bucketed store versions is exchange-free") {
+    val s = spark
+    import s.implicits._
     val store = new graft.core.TableStore(tmpDir("buck-store"), spark)
-    val stage = new graft.sources.Stage(tmpDir("buck-stage"))
-    val pipeline = new graft.pipeline.ScdPipeline(spark, store,
-      config = graft.pipeline.ScdConfig.supplier.copy(
-        snapshotBuckets = Some(8)))
+    def snapshot(rows: (Long, String, String, String)*) = store.stageBucketed("snap",
+      rows.toDF("supplier_key", "supplier_code", "supplier_name", "supplier_state"),
+      Seq("supplier_code"), 8)
+    val v1 = snapshot((1L, "A101", "One", "S1"), (2L, "A102", "Two", "S2"),
+      (3L, "A103", "Three", "S3"))
+    val v2 = snapshot((1L, "A101", "One", "S1"), (2L, "A102", "Two", "S9"),
+      (3L, "A103", "Three", "S3"), (4L, "A104", "Four", "S4"))
+    store.commit(Map("snap" -> v2))
+    def at(v: String) = store.readVersion("snap", v, graft.core.Schemas.landing)
 
-    stage.putContent("b1.csv",
-      "1,A101,One,S1\n2,A102,Two,S2\n3,A103,Three,S3")
-    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-    stage.putContent("b2.csv", "2,A102,Two,S9\n4,A104,Four,S4")
-    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
-
-    // results identical to the unbucketed layout
-    pipeline.staging.count() shouldBe 5 // 4 current + 1 closed
-    pipeline.master.count() shouldBe 4
-
-    // the diff of two equally-bucketed snapshots plans with NO shuffle on
+    // the diff of two equally-bucketed versions plans with NO shuffle on
     // either side: both scans report HashPartitioning(business key, 8), so
-    // the full-outer sort-merge join needs no Exchange — at 100 TB this was
-    // the last full-shuffle-per-cycle in the core pipeline. Auto-broadcast
-    // is disabled for the assertion: at test row counts Spark would prefer
-    // a broadcast join, which hides the co-partitioned path that matters
-    // at scale (a 100 TB snapshot is never broadcastable).
+    // the full-outer sort-merge join needs no Exchange. Auto-broadcast is
+    // disabled for the assertion: at test row counts Spark would prefer a
+    // broadcast join, which hides the co-partitioned path that matters at
+    // scale (a 100 TB snapshot is never broadcastable).
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = executedPlan(pipeline.streamChanges())
+      val diff = graft.ops.SnapshotCdc.diff(at(v1), at(v2), Seq("supplier_code"))
+      val plan = executedPlan(diff)
       plan should not include "Exchange"
       plan should include("SortMergeJoin")
       plan should include("SelectedBucketsCount")
-
-      // the shape the cycle runs: the previous committed landing version
-      // (the stream's offset) diffed against the next one
-      val landing = graft.pipeline.ScdPipeline.Landing
-      val Seq(v1, v2) = store.committedVersions(landing)
-      def at(v: String) =
-        store.readVersion(landing, v, graft.core.Schemas.landing)
-      val cyclePlan = executedPlan(
-        graft.ops.SnapshotCdc.diff(at(v1), at(v2), Seq("supplier_code")))
-      cyclePlan should not include "Exchange"
-      cyclePlan should include("SortMergeJoin")
-      cyclePlan should include("SelectedBucketsCount")
+      diff.count() shouldBe 3 // the A102 update pair + the A104 insert
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+  }
+
+  test("the cycle's CDC scans landing once, through a broadcast join against the raw batch") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import scala.jdk.CollectionConverters._
+    object Plans extends AdaptiveSparkPlanHelper
+
+    val root = tmpDir("cdc-store")
+    val store = new graft.core.TableStore(root, spark)
+    val stage = new graft.sources.Stage(tmpDir("cdc-stage"))
+    val pipeline = new graft.pipeline.ScdPipeline(spark, store)
+    stage.putContent("b1.csv",
+      "1,A101,One,S1\n2,A102,Two,S2\n3,A103,Three,S3")
+    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+
+    val ran = scala.collection.mutable.ArrayBuffer[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.synchronized(ran += f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // every broadcast the cycle makes over landing must be its own hint:
+    // with auto-broadcast off, an unhinted join would sort-merge
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    try {
+      stage.putContent("b2.csv", "2,A102,Two,S9\n4,A104,Four,S4")
+      pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
+
+    def scansLanding(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("/supplier_landing/"))
+      case _ => false
+    }
+    val overLanding = ran.toSeq.filter { case (_, p) => Plans.find(p)(scansLanding).isDefined }
+    // two plans read landing: the CDC join and the landing write; the
+    // staging merge and the bookkeeping never do
+    overLanding.map(_._1).sorted shouldBe Seq("command", "localCheckpoint").sorted
+    val cdcPlan = overLanding.collectFirst { case ("localCheckpoint", p) => p }.get
+    Plans.collect(cdcPlan) { case f if scansLanding(f) => f }.size shouldBe 1
+    Plans.collect(cdcPlan) { case j: BroadcastHashJoinExec => j } should not be empty
+    overLanding.foreach { case (f, p) =>
+      withClue(s"$f: $p") {
+        Plans.collect(p) { case j: SortMergeJoinExec => j } shouldBe empty
+        Plans.collect(p) { case e: ShuffleExchangeExec if Plans.find(e)(scansLanding).isDefined => e } shouldBe empty
+        Plans.collect(p) { case e: BroadcastExchangeExec if Plans.find(e)(scansLanding).isDefined => e } shouldBe empty
+      }
+    }
+
+    // landing is written plain: no bucket spec in any of its versions
+    val landingDir = java.nio.file.Paths.get(root, graft.pipeline.ScdPipeline.Landing)
+    val walk = java.nio.file.Files.walk(landingDir)
+    try walk.iterator().asScala.map(_.getFileName.toString).toSeq should not contain "_graft_buckets"
+    finally walk.close()
+
+    pipeline.staging.count() shouldBe 5 // 4 current + 1 closed
+    pipeline.master.count() shouldBe 4
   }
 
   test("bucketed dimension + delta layouts make the MERGE upsert " +

@@ -59,6 +59,60 @@ class OpsSpec extends AnyFunSuite with Matchers with SparkSpec {
     out2(0).getAs[String]("supplier_name") shouldBe "Kohli"
   }
 
+  test("upsertChanges equals upsert for the next version and SnapshotCdc.diff for the CDC") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    val schema = new StructType().add("k1", StringType).add("k2", IntegerType)
+      .add("a", StringType).add("b", IntegerType).add("c", StringType)
+    val cols = schema.fieldNames.toSeq
+    def frame(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, schema)
+    def bag(df: DataFrame) = df.select(df.columns.sorted.map(col).toSeq: _*)
+      .collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+    for (seed <- 0 until 16) withClue(s"seed=$seed: ") {
+      val rnd = new scala.util.Random(seed)
+      def pick[T](xs: T*): T = xs(rnd.nextInt(xs.size))
+      def values(): Seq[Any] = Seq(pick("x", "y", null), pick(1, 2, null), pick("p", "q"))
+      val keys = if (rnd.nextBoolean()) Seq("k1") else Seq("k1", "k2")
+      def keyOf(r: Row) = keys.map(k => r.get(cols.indexOf(k)))
+      val allKeys = rnd.shuffle(for (k1 <- 0 until 5; k2 <- 0 until 2) yield (s"K$k1", k2))
+        .distinctBy { case (k1, k2) => if (keys.size == 1) (k1, 0) else (k1, k2) }
+      val (inTarget, fresh) = allKeys.splitAt(rnd.nextInt(allKeys.size + 1))
+      val target = inTarget.map { case (k1, k2) => Row.fromSeq(Seq(k1, k2) ++ values()) }
+      // seed 0 sends an empty batch; the rest re-send some target rows
+      // unchanged, change others (NULLs included), skip some, add new keys
+      val resent = if (seed == 0) Nil else target.flatMap { r =>
+        rnd.nextInt(3) match {
+          case 0 => None
+          case 1 => Some(r)
+          case _ => Some(Row.fromSeq(Seq(r.get(0), if (keys.size == 1) pick(0, 1) else r.get(1)) ++ values()))
+        }
+      }
+      val added = if (seed == 0) Nil else fresh.take(rnd.nextInt(3))
+        .map { case (k1, k2) => Row.fromSeq(Seq(k1, k2) ++ values()) }
+      // a NULL-key row: a new key each time it is sent, as in upsert
+      val nullKey = seed % 4 == 3
+      val source = resent ++ added ++
+        (if (nullKey) Seq(Row.fromSeq(Seq(null, 0) ++ values())) else Nil)
+      require(source.map(keyOf).distinct.size == source.size)
+      val compareCols = pick(None, Some(Seq("a")), Some(Seq("b", "c")), Some(Seq("a", "c")))
+
+      val prev = frame(target)
+      val batch = frame(rnd.shuffle(source))
+      val ch = Merge.upsertChanges(prev, batch, keys, compareCols)
+      try {
+        val want = Merge.upsert(prev, batch, keys, compareCols)
+        ch.next.columns.toSeq shouldBe cols
+        bag(ch.next) shouldBe bag(want)
+        ch.cdc.schema.map(f => f.name -> f.dataType) shouldBe
+          graft.core.Schemas.withCdcColumns(schema).map(f => f.name -> f.dataType)
+        if (nullKey) ch.cdc.filter(col("k1").isNull).count() shouldBe 1
+        else bag(ch.cdc) shouldBe bag(SnapshotCdc.diff(prev, want, keys))
+      } finally ch.release()
+    }
+  }
+
   // ---- SnapshotCdc.diff (J3) ---------------------------------------------
 
   test("cdc diff: insert / update-pair / delete / unchanged") {

@@ -199,7 +199,7 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toSeq shouldBe Seq((1L, "SUCCEEDED"), (42L, "SUCCEEDED"))
   }
 
-  test("empty-stage cycle is a no-op, not a crash (bucketed default)") {
+  test("empty-stage cycle is a no-op, not a crash") {
     val store = new TableStore(tmpDir("empty-store"), spark)
     val stage = new Stage(tmpDir("empty-stage"))
     val pipeline = new ScdPipeline(spark, store)
@@ -426,6 +426,62 @@ class GoldenScenarioSpec extends AnyFunSuite with Matchers with SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set(("A105", "Hyderabad"), ("A106", "Karnataka"))
     pipeline.streamChanges().count() shouldBe 0
+  }
+
+  test("a NULL business key enters the stream once: staging keeps one open version in both modes") {
+    // the NULL-key row is loaded once; the next two cycles do not mention it
+    for (faithful <- Seq(true, false)) withClue(s"faithful=$faithful: ") {
+      val store = new TableStore(tmpDir("nullkey-store"), spark)
+      val stage = new Stage(tmpDir("nullkey-stage"))
+      val pipeline = new ScdPipeline(spark, store, faithful = faithful)
+      stage.putContent("b1.csv", "1,A101,Virat Kohli,Delhi\n9,,Nameless,Goa")
+      pipeline.runCycle(stage, t1) shouldBe 2L
+      stage.putContent("b2.csv", "1,A101,Virat Kohli,Mumbai")
+      pipeline.runCycle(stage, t2) shouldBe 1L
+      pipeline.runCycle(stage, Timestamp.valueOf("2024-03-28 00:00:00")) shouldBe 0L
+
+      pipeline.landing.filter("supplier_code IS NULL").count() shouldBe 1
+      pipeline.staging.filter("supplier_code IS NULL")
+        .select("supplier_key", "start_date", "end_date", "current_flag").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), Option(r.getTimestamp(2)), r.getString(3)))
+        .toSeq shouldBe Seq((9L, t1, None, "Y"))
+      pipeline.staging.count() shouldBe 3 // A101 Delhi closed + Mumbai + the NULL key
+    }
+  }
+
+  test("the stream peek after a NULL-key load is an empty, scan-free frame in the CDC schema") {
+    val store = new TableStore(tmpDir("nullpeek-store"), spark)
+    val stage = new Stage(tmpDir("nullpeek-stage"))
+    val pipeline = new ScdPipeline(spark, store)
+    stage.putContent("b1.csv", "1,A101,Virat Kohli,Delhi\n9,,Nameless,Goa")
+    pipeline.runCycle(stage, t1)
+
+    val peek = pipeline.streamChanges()
+    peek.count() shouldBe 0
+    peek.schema shouldBe graft.core.Schemas.withCdcColumns(graft.core.Schemas.landing)
+    peek.queryExecution.executedPlan.toString should not include "FileScan"
+  }
+
+  test("a store whose landing version was written bucketed keeps cycling without migration") {
+    val root = tmpDir("oldbuck-store")
+    val stage = new Stage(tmpDir("oldbuck-stage"))
+    val old = new TableStore(root, spark)
+    stage.putContent("suppliers.csv", scenario1)
+    new ScdPipeline(spark, old).runCycle(stage, t1)
+    // rewrite landing's committed version in the layout older cycles wrote
+    old.commit(Map(ScdPipeline.Landing -> old.stageBucketed(ScdPipeline.Landing,
+      old.read(ScdPipeline.Landing), Seq("supplier_code"), 16)))
+
+    // a fresh handle (a new process) reads it through the bucket spec
+    val pipeline = new ScdPipeline(spark, new TableStore(root, spark))
+    stage.putContent("suppliers_v2.csv", scenario2)
+    pipeline.runCycle(stage, t2) shouldBe 4L
+    pipeline.staging.count() shouldBe 10
+    pipeline.staging.filter("current_flag = 'N'")
+      .select("supplier_code", "supplier_state").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
+      Set(("A105", "Hyderabad"), ("A106", "Karnataka"))
+    pipeline.landing.count() shouldBe 8
   }
 
   test("a cycle raced by another writer's cycle refuses its commit instead of overwriting it") {

@@ -15,12 +15,12 @@ import graft.sources.Stage
   *    single-copy; embeddings jittered so vectors aren't exact dups).
   * 2. Times the headline queries through SparkEntry.queries with a
   *    noop-sink, min of 2 runs → one JSON line (BENCH_sf1).
-  * 3. Asserts the two scale invariants that matter most at this volume:
-  *    the large-dim MERGE stays a broadcast two-branch plan (zero target
-  *    shuffle), and the bucketed CDC diff stays exchange-free.
-  * 4. Runs a 5-cycle × 200k-row duplicate-laden pipeline soak (bucketed
-  *    snapshots + a registered materialized aggregate) and asserts the
-  *    MV equals a full recompute of landing at the end.
+  * 3. Asserts the scale invariant that matters most at this volume: the
+  *    large-dim MERGE stays a broadcast two-branch plan (zero target
+  *    shuffle).
+  * 4. Runs a 5-cycle × 200k-row duplicate-laden pipeline soak (with a
+  *    registered materialized aggregate) and asserts the MV equals a
+  *    full recompute of landing at the end.
   * 5. Adversarial skew soak: a boilerplate-duplicate document corpus
   *    (50% identical docs + a 50%-shared token) and a dense embedding
   *    cluster — the shapes that explode an unguarded blocking stage
@@ -373,10 +373,11 @@ object Sf1Soak {
 
   private def fail(msg: String): Unit = { System.err.println(s"[FAIL] $msg"); sys.exit(1) }
 
-  /** The invariants PlanSpec pins at test scale, re-checked against sf1
-    * volumes (where a silently regressed plan would actually hurt). */
+  /** The MERGE plan invariant PlanSpec pins at test scale, re-checked
+    * against sf1 volumes (where a silently regressed plan would actually
+    * hurt). */
   private def planInvariants(spark: SparkSession): Unit = {
-    // 1. large-dim MERGE: broadcast two-branch plan, zero target shuffle
+    // large-dim MERGE: broadcast two-branch plan, zero target shuffle
     val li = spark.read.parquet(s"$Dst/lineitem.parquet")
     val base = li.groupBy((col("l_orderkey") * 8 + col("l_linenumber")).as("dim_id"))
       .agg(max(col("l_quantity")).as("qty"), min(col("l_returnflag")).as("flag"))
@@ -390,32 +391,6 @@ object Sf1Soak {
     if (mergePlan.contains("SortMergeJoin"))
       fail(s"$Label MERGE sort-merge-joins the target")
     println(s"[plan] $Label MERGE: broadcast two-branch, no target shuffle")
-
-    // 2. bucketed snapshot diff: exchange-free on both sides
-    val root = java.nio.file.Files.createTempDirectory("sf1plan").toString
-    val store = new TableStore(s"$root/w", spark)
-    val cfg = ScdConfig("sf1dim",
-      StructType(Seq(StructField("k", LongType), StructField("code", StringType),
-        StructField("state", StringType))),
-      Seq("code"), Seq("state"),
-      duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne,
-      snapshotBuckets = Some(16))
-    val p = new ScdPipeline(spark, store, faithful = true, cfg)
-    def batch(n: Int, salt: Int): DataFrame =
-      spark.range(n).select(col("id").as("k"),
-        concat(lit("C"), col("id")).as("code"),
-        concat(lit("S"), (col("id") + salt) % 50).as("state"))
-    p.runCycleWithBatch(batch(200000, 0), Timestamp.valueOf("2024-01-01 00:00:00"))
-    p.runCycleWithBatch(batch(200000, 1), Timestamp.valueOf("2024-01-02 00:00:00"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val diffPlan = p.streamChanges().queryExecution.executedPlan.toString
-      if (diffPlan.contains("Exchange")) fail(s"$Label bucketed CDC diff grew an Exchange")
-      if (!diffPlan.contains("SelectedBucketsCount"))
-        fail(s"$Label CDC diff is not reading bucketed scans")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    println(s"[plan] $Label bucketed CDC diff: exchange-free")
   }
 
   /** Adversarial skew shapes for the dedup/ANN family, at sizes where an
@@ -562,7 +537,6 @@ object Sf1Soak {
         StructField("name", StringType), StructField("state", StringType))),
       Seq("code"), Seq("state"),
       duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne,
-      snapshotBuckets = Some(16),
       aggregates = Seq(MaterializedAggregate("by_state", Seq("state"), Seq("k"))))
     val store = new TableStore(s"$root/w", spark)
     val p = new ScdPipeline(spark, store, faithful = true, cfg)
@@ -579,7 +553,7 @@ object Sf1Soak {
       store.vacuum()
     }
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[soak] 5 cycles x $n rows (bucketed + MV) in $secs%.1f s")
+    println(f"[soak] 5 cycles x $n rows (+ MV) in $secs%.1f s")
     val got = p.aggregate("by_state").orderBy("state").collect().map(_.toSeq).toSeq
     val want = graft.ops.IncrementalAgg.fullAggregate(p.landing, Seq("state"), Seq("k"))
       .orderBy("state").collect().map(_.toSeq).toSeq

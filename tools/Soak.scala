@@ -5,10 +5,9 @@ import graft.pipeline.{ScdConfig, ScdPipeline}
 import graft.sources.Stage
 import org.apache.spark.sql.types._
 
-/** Pipeline soak: 10 cycles x 20k-row duplicate-laden deltas, run twice —
-  * once with a plain landing table and once with a bucketed one
-  * (snapshotBuckets=16, the exchange-free CDC-diff layout) — asserting the
-  * two layouts produce identical staging histories. */
+/** Pipeline soak: 10 cycles x 20k-row duplicate-laden deltas through one
+  * pipeline, checking the history's invariants and that the stream is
+  * fully consumed. */
 object Soak {
   def main(args: Array[String]): Unit = {
     val cores = Runtime.getRuntime.availableProcessors
@@ -19,56 +18,43 @@ object Soak {
       .config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(tag: String, buckets: Option[Int]): (ScdPipeline, TableStore) = {
-      val root = java.nio.file.Files.createTempDirectory(s"soak$tag").toString
-      val cfg = ScdConfig("soak",
-        StructType(Seq(StructField("k", LongType), StructField("code", StringType),
-          StructField("name", StringType), StructField("state", StringType))),
-        Seq("code"), Seq("state"),
-        duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne,
-        snapshotBuckets = buckets)
-      val store = new TableStore(s"$root/w", spark)
-      val stage = new Stage(s"$root/s")
-      val p = new ScdPipeline(spark, store, faithful = true, cfg)
-      val n = 20000
-      val rnd = new scala.util.Random(42) // same seed both runs
-      var total = 0L
-      val t0 = System.nanoTime()
-      for (cycle <- 1 to 10) {
-        // each cycle: 20k-row delta; ~30% keys mutate state, rest churn
-        val sb = new StringBuilder
-        for (i <- 1 to n) {
-          val key = rnd.nextInt(50000)
-          val state = if (rnd.nextInt(10) < 3) s"S${rnd.nextInt(50)}" else s"S${key % 50}"
-          sb.append(s"$key,C$key,Name$key,$state\n")
-        }
-        stage.putContent(f"batch$cycle%02d.csv", sb.toString)
-        total += p.runCycle(stage, Timestamp.valueOf(f"2024-01-${cycle}%02d 00:00:00"))
-        store.vacuum()
+    val root = java.nio.file.Files.createTempDirectory("soak").toString
+    val cfg = ScdConfig("soak",
+      StructType(Seq(StructField("k", LongType), StructField("code", StringType),
+        StructField("name", StringType), StructField("state", StringType))),
+      Seq("code"), Seq("state"),
+      duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne)
+    val store = new TableStore(s"$root/w", spark)
+    val stage = new Stage(s"$root/s")
+    val p = new ScdPipeline(spark, store, faithful = true, cfg)
+    val n = 20000
+    val rnd = new scala.util.Random(42)
+    var total = 0L
+    val t0 = System.nanoTime()
+    for (cycle <- 1 to 10) {
+      // each cycle: 20k-row delta; ~30% keys mutate state, rest churn
+      val sb = new StringBuilder
+      for (i <- 1 to n) {
+        val key = rnd.nextInt(50000)
+        val state = if (rnd.nextInt(10) < 3) s"S${rnd.nextInt(50)}" else s"S${key % 50}"
+        sb.append(s"$key,C$key,Name$key,$state\n")
       }
-      val secs = (System.nanoTime()-t0)/1e9
-      println(f"[$tag] 10 cycles x $n rows in $secs%.1f s (${total/secs}%.0f rows/s ingest)")
-      val staging = p.staging
-      val cur = staging.filter("current_flag='Y'")
-      println(s"[$tag] staging rows: " + staging.count() + ", current: " + cur.count())
-      // invariant: <=1 current row per (code,state)
-      val dup = cur.groupBy("code","state").count().filter("count > 1").count()
-      println(s"[$tag] duplicate current (code,state): " + dup)
-      println(s"[$tag] stream fully consumed: " + (p.streamChanges().count() == 0))
-      println(s"[$tag] master == current: " + (p.master.count() == cur.count()))
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).count()
-      println(s"[$tag] files on disk after vacuum: " + files)
-      (p, store)
+      stage.putContent(f"batch$cycle%02d.csv", sb.toString)
+      total += p.runCycle(stage, Timestamp.valueOf(f"2024-01-${cycle}%02d 00:00:00"))
+      store.vacuum()
     }
-
-    val (plain, _) = run("plain", None)
-    val (bucketed, _) = run("bucketed", Some(16))
-    // layouts are a physical choice — logical content must be identical
-    val cols = Seq("k","code","name","state","start_date","end_date","current_flag")
-    val a = plain.staging.select(cols.head, cols.tail: _*)
-    val b = bucketed.staging.select(cols.head, cols.tail: _*)
-    val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-    println("bucketed == plain staging history: " + (diff == 0))
+    val secs = (System.nanoTime()-t0)/1e9
+    println(f"10 cycles x $n rows in $secs%.1f s (${total/secs}%.0f rows/s ingest)")
+    val staging = p.staging
+    val cur = staging.filter("current_flag='Y'")
+    println("staging rows: " + staging.count() + ", current: " + cur.count())
+    // invariant: <=1 current row per (code,state)
+    val dup = cur.groupBy("code","state").count().filter("count > 1").count()
+    println("duplicate current (code,state): " + dup)
+    println("stream fully consumed: " + (p.streamChanges().count() == 0))
+    println("master == current: " + (p.master.count() == cur.count()))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).count()
+    println("files on disk after vacuum: " + files)
     spark.stop()
   }
 }
