@@ -100,48 +100,49 @@ object Merge {
     }
   }
 
-  /** The two outputs of [[upsertChanges]], both read from the checkpointed
-    * `joined`; [[release]] frees it once they are written. */
-  final case class Changes(next: DataFrame, cdc: DataFrame, joined: DataFrame) {
-    def release(): Unit = graft.operators.Dedup.releaseCheckpoint(joined)
+  /** The two outputs of [[upsertChanges]]: the target's next version and
+    * the checkpointed CDC it is built from; [[release]] frees the
+    * checkpoint once both are written. */
+  final case class Changes(next: DataFrame, cdc: DataFrame) {
+    def release(): Unit = graft.operators.Dedup.releaseCheckpoint(cdc)
   }
 
   /** [[upsert]] that also returns the delta it applies, in
-    * [[SnapshotCdc.diff]]'s shape — the MERGE's own changes, as a stream on
-    * the target shows them (`SCD-Configuration Setup.sql:220-232`): a
-    * changed key gives DELETE(old image) + INSERT(new image), both
-    * `_is_update`; a new key an INSERT. One broadcast join of the target
-    * against the source pairs the matched keys' images; its source-sized
-    * output is checkpointed once and `next` (target minus changed keys,
-    * plus every INSERT image) and the CDC both read it. NULL keys never
-    * match, as in [[upsert]]: a NULL-key row is new each time it is sent. */
+    * [[SnapshotCdc.diff]]'s shape, as a stream on the target shows it
+    * (`SCD-Configuration Setup.sql:220-232`): a changed key gives
+    * DELETE(old) + INSERT(new), both `_is_update`; a new key an INSERT.
+    * The target is streamed once through a broadcast semi-join on the
+    * source's keys; its matched, source-sized rows are broadcast back to
+    * the source, whose one left-outer pass is the CDC, checkpointed once.
+    * `next` (target minus the DELETE keys, plus the INSERT images) reads
+    * the checkpoint. NULL keys never match, as in [[upsert]]. */
   def upsertChanges(
       target: DataFrame,
       source: DataFrame,
       keys: Seq[String],
       compareCols: Option[Seq[String]] = None): Changes = {
     val cols = columnsOf(target, source)
-    def image(side: String) = struct(cols.map(c => col(s"$side.$c").as(c)): _*)
-    val joined = target.alias("__t")
-      .join(broadcast(source).alias("__s"),
-        keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _))
-      .select(image("__t").as("__old"), image("__s").as("__new"), coalesce(
-        changedCond(cols, keys, compareCols, nullSafe = false)("__t", "__s"),
-        lit(false)).as("__changed"))
+    val matched = target.join(broadcast(source.select(keys.map(col): _*)), keys, "left_semi")
+    val joined = source.alias("__s").join(broadcast(matched).alias("__t"),
+      keys.map(k => col(s"__s.$k") === col(s"__t.$k")).reduce(_ && _), "left_outer")
+    val isNew = col(s"__t.${keys.head}").isNull
+    val changed = coalesce(
+      changedCond(cols, keys, compareCols, nullSafe = false)("__t", "__s"), lit(false))
+    def image(side: String, action: String) =
+      struct(cols.map(c => col(s"$side.$c").as(c)) :+ lit(action).as(Schemas.cdcActionCol): _*)
+    val cdc = joined.filter(isNew || changed)
+      .select(explode(when(isNew, array(image("__s", "INSERT")))
+          .otherwise(array(image("__s", "INSERT"), image("__t", "DELETE")))).as("__c"),
+        (!isNew).as(Schemas.cdcIsUpdateCol))
+      .select(col("__c.*"), col(Schemas.cdcIsUpdateCol),
+        SnapshotCdc.rowId(keys.map(k => col(s"__c.$k"))).as(Schemas.cdcRowIdCol))
       .localCheckpoint(true)
-
-    def keysOf(df: DataFrame) = broadcast(df.select(keys.map(k => col(s"__new.$k").as(k)): _*))
-    def rows(df: DataFrame, action: String, isUpdate: Boolean) =
-      df.select(cols.map(col) ++ Seq(lit(action).as(Schemas.cdcActionCol),
-        lit(isUpdate).as(Schemas.cdcIsUpdateCol),
-        SnapshotCdc.rowId(keys.map(col)).as(Schemas.cdcRowIdCol)): _*)
-    val pairs = joined.filter(col("__changed"))
-    val cdc = rows(pairs.select("__new.*"), "INSERT", isUpdate = true)
-      .unionByName(rows(pairs.select("__old.*"), "DELETE", isUpdate = true))
-      .unionByName(rows(source.join(keysOf(joined), keys, "left_anti"), "INSERT", isUpdate = false))
-    val next = target.join(keysOf(pairs), keys, "left_anti").unionByName(
-      cdc.filter(col(Schemas.cdcActionCol) === "INSERT").select(cols.map(col): _*))
-    Changes(next, cdc, joined)
+    def imagesOf(action: String) = cdc.filter(col(Schemas.cdcActionCol) === action)
+    val next = target
+      .join(broadcast(imagesOf("DELETE").select(keys.map(col): _*)), keys, "left_anti")
+      .select(cols.map(col): _*)
+      .unionByName(imagesOf("INSERT").select(cols.map(col): _*))
+    Changes(next, cdc)
   }
 
   private def columnsOf(target: DataFrame, source: DataFrame): Seq[String] = {

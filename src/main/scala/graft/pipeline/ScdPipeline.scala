@@ -74,15 +74,15 @@ class ScdPipeline(
   private val stagingSchema = Schemas.scd2(config.baseSchema)
 
   /** The loaded batch's row count, and the batch with
-    * [[ScdConfig.duplicatePolicy]] enforced. One aggregation (rows per
-    * business key, summed and maxed) gives both the count and the
-    * duplicate verdict; the offenders are collected only when it fails. */
-  private def load(raw: DataFrame): (Long, DataFrame) = {
-    val perKey = raw.groupBy(config.businessKeys.map(col): _*).count()
-    val verdict = perKey.agg(sum("count"), max("count")).head()
-    val rowsLoaded = if (verdict.isNullAt(0)) 0L else verdict.getLong(0)
+    * [[ScdConfig.duplicatePolicy]] enforced. Under `Error` one aggregation
+    * (rows per business key, summed and maxed) gives both the count and
+    * the duplicate verdict; the offenders are collected only when it
+    * fails. `KeepOne` needs no verdict, so its count is a plain one. */
+  private def load(raw: DataFrame): (Long, DataFrame) =
     config.duplicatePolicy match {
       case DuplicatePolicy.Error =>
+        val perKey = raw.groupBy(config.businessKeys.map(col): _*).count()
+        val verdict = perKey.agg(sum("count"), max("count")).head()
         if (!verdict.isNullAt(1) && verdict.getLong(1) > 1) {
           val dups = perKey.filter(col("count") > 1).limit(5).collect()
           throw new IllegalArgumentException(
@@ -90,14 +90,13 @@ class ScdPipeline(
               s"Snowflake would raise too); first offenders: ${dups.mkString(", ")}. " +
               "Set ScdConfig.duplicatePolicy = DuplicatePolicy.KeepOne to dedupe.")
         }
-        (rowsLoaded, raw)
+        (if (verdict.isNullAt(0)) 0L else verdict.getLong(0), raw)
       case DuplicatePolicy.KeepOne =>
         val cols = raw.columns.toSeq
-        (rowsLoaded, raw.groupBy(config.businessKeys.map(col): _*)
+        (raw.count(), raw.groupBy(config.businessKeys.map(col): _*)
           .agg(min(struct(cols.map(col): _*)).as("__row"))
           .select(cols.map(c => col(s"__row.$c").as(c)): _*))
     }
-  }
 
   /** `table` at the version `pin` maps it to, or empty when unmapped. */
   private def readAt(pin: Map[String, String], table: String,

@@ -451,12 +451,22 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     overLanding.map(_._1).sorted shouldBe Seq("command", "localCheckpoint").sorted
     val cdcPlan = overLanding.collectFirst { case ("localCheckpoint", p) => p }.get
     Plans.collect(cdcPlan) { case f if scansLanding(f) => f }.size shouldBe 1
-    Plans.collect(cdcPlan) { case j: BroadcastHashJoinExec => j } should not be empty
+    // landing streams through a broadcast semi-join against the batch's keys
+    def semiJoinsLanding(p: SparkPlan): Boolean = p match {
+      case j: BroadcastHashJoinExec =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi &&
+          Plans.find(j.left)(scansLanding).isDefined
+      case _ => false
+    }
+    Plans.find(cdcPlan)(semiJoinsLanding) shouldBe defined
     overLanding.foreach { case (f, p) =>
       withClue(s"$f: $p") {
         Plans.collect(p) { case j: SortMergeJoinExec => j } shouldBe empty
         Plans.collect(p) { case e: ShuffleExchangeExec if Plans.find(e)(scansLanding).isDefined => e } shouldBe empty
-        Plans.collect(p) { case e: BroadcastExchangeExec if Plans.find(e)(scansLanding).isDefined => e } shouldBe empty
+        // the one broadcast over landing carries only its rows whose key
+        // the batch sends: the semi-join cuts landing before the exchange
+        Plans.collect(p) { case e: BroadcastExchangeExec if Plans.find(e)(scansLanding).isDefined => e }
+          .foreach(e => Plans.find(e)(semiJoinsLanding) shouldBe defined)
       }
     }
 

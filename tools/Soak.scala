@@ -6,8 +6,7 @@ import graft.sources.Stage
 import org.apache.spark.sql.types._
 
 /** Pipeline soak: 10 cycles x 20k-row duplicate-laden deltas through one
-  * pipeline, checking the history's invariants and that the stream is
-  * fully consumed. */
+  * pipeline, checking the history's invariants. */
 object Soak {
   def main(args: Array[String]): Unit = {
     val cores = Runtime.getRuntime.availableProcessors
@@ -51,7 +50,6 @@ object Soak {
     // invariant: <=1 current row per (code,state)
     val dup = cur.groupBy("code","state").count().filter("count > 1").count()
     println("duplicate current (code,state): " + dup)
-    println("stream fully consumed: " + (p.streamChanges().count() == 0))
     println("master == current: " + (p.master.count() == cur.count()))
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).count()
     println("files on disk after vacuum: " + files)
