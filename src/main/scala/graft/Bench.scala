@@ -56,7 +56,7 @@ object Bench {
     // Builds are timed once (not min-of-N): a build is a one-time cost
     // whose honest figure is the cold run, and N cold rebuilds would
     // triple the bench wall-clock for a smoother min nobody compares.
-    // Persisted FIXTURES (IndexSurface.persistAcrossBenches) are not
+    // Persisted FIXTURES (Fixture.persistAcrossBenches) are not
     // deleted and, once built, emit no row: re-timing a one-time corpus
     // fixture every run re-measures fixed replay machinery the spec and
     // its oracle row already pin (the 48-batch maintained-stream replay

@@ -203,14 +203,12 @@ object SparkEntry {
     * instead ([[graft.ops.Merge.upsertChanges]]). */
   private[graft] def upsertStoredTables(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val root = java.nio.file.Paths.get(fixtureRoot,
-      // the `v1` token versions the DERIVATION (largeDim's formula), not
-      // the data — the content fingerprint only tracks the source
-      // parquet, so a formula change without a version bump would
-      // silently reuse stale stored tables (the statsStore fixture's
-      // '2'-suffix lesson). Bump it whenever largeDim changes.
-      "graft-upsert-stored-v1-" +
-        corpusFingerprint(Seq(s"$dir/lineitem.parquet")))
+    // the `v1` token versions the DERIVATION (largeDim's formula), not
+    // the data — the content fingerprint only tracks the source
+    // parquet, so a formula change without a version bump would
+    // silently reuse stale stored tables (the statsStore fixture's
+    // '2'-suffix lesson). Bump it whenever largeDim changes.
+    val root = fixtureDir("upsert-stored-v1", "lineitem")(dir)
     val store = new graft.core.TableStore(root.toString, s)
     if (!store.exists("dim_base")) {
       val (b1, b2) = largeDim(s, dir)
@@ -294,8 +292,8 @@ object SparkEntry {
     * staleness handling unchanged; `SPARK_GRAFT_FIXTURE_DIR` overrides
     * for hosts where the working tree must stay clean. Everything under
     * it is rebuildable — safe to `rm -rf` to reclaim space (see
-    * tools/README.md). */
-  private lazy val fixtureRoot: String = {
+    * tools/README.md). Public so the dev tools list the same root. */
+  lazy val fixtureRoot: String = {
     val root = sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR",
       java.nio.file.Paths.get(sys.props("user.dir"), ".fixtures").toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
@@ -308,241 +306,207 @@ object SparkEntry {
     * mtime. Regenerated test data at the same path changes the
     * fingerprint, so a stale index/snapshot is never silently reused (the
     * earlier key, `dir.hashCode` alone, reused whatever was on disk). */
-  private def corpusFingerprint(sourceDirs: Seq[String]): String = {
+  private def corpusFingerprint(source: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    sourceDirs.sorted.foreach { d =>
-      val p = java.nio.file.Paths.get(d).toAbsolutePath
-      md.update(p.toString.getBytes("UTF-8"))
-      if (java.nio.file.Files.exists(p)) {
-        val files = java.nio.file.Files.walk(p)
-        try files.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .toSeq.sortBy(_.toString)
-          .foreach { f =>
-            md.update(s"$f|${java.nio.file.Files.size(f)}|${
-              java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-              .getBytes("UTF-8"))
-          }
-        finally files.close()
-      }
+    val p = java.nio.file.Paths.get(source).toAbsolutePath
+    md.update(p.toString.getBytes("UTF-8"))
+    if (java.nio.file.Files.exists(p)) {
+      val files = java.nio.file.Files.walk(p)
+      try files.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .toSeq.sortBy(_.toString)
+        .foreach { f =>
+          md.update(s"$f|${java.nio.file.Files.size(f)}|${
+            java.nio.file.Files.getLastModifiedTime(f).toMillis}"
+            .getBytes("UTF-8"))
+        }
+      finally files.close()
     }
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
-  /** Build-once accessor for the term-bucketed inverted index over
-    * `documents`. Reuse is gated on the `_stats` sidecar's `_SUCCESS`
-    * marker — the LAST artifact `writeInvertedIndex` produces — so a
-    * partial build (postings written, sidecar missing) is rebuilt, never
-    * reused. Shared by the conjunctive search, indexed BM25, and hybrid
-    * RRF queries, so one bench run builds the index once. */
-  private def invertedIndexLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-invidx2-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+  /** The one location rule for build-once state: `graft-<tag>-` plus the
+    * fingerprint of the `<table>` parquet it derives from. The
+    * fingerprint tracks the data, not the code, so a change to what a
+    * build writes bumps the version token in its tag (`invidx2`,
+    * `mvjaccard-v1`), or the old directory is silently reused. */
+  private def fixtureDir(tag: String, table: String)(
+      dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(fixtureRoot,
+      s"graft-$tag-" + corpusFingerprint(s"$dir/$table.parquet"))
 
-  private def invertedIndexPath(s: SparkSession, dir: String): String = {
-    val path = invertedIndexLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_stats").resolve("_SUCCESS")))
-      graft.operators.Keywords.writeInvertedIndex(
-        s.read.parquet(s"$dir/documents.parquet"), path.toString)
-    path.toString
-  }
-
-  /** Build-once accessor for the portable-plane LSH index over
-    * `embeddings`. Reuse is gated on the write's `_SUCCESS` marker, not
-    * bare existence: an interrupted writeLshIndexPortable leaves a
-    * partial directory that bare Files.exists would reuse forever.
-    * Shared by the indexed-ANN query and the hybrid RRF fusion. */
-  private def lshPortableIndexLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-lsh-pindex-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
-
-  private def lshPortableIndexPath(s: SparkSession, dir: String): String = {
-    val path = lshPortableIndexLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS")))
-      graft.operators.Similarity.writeLshIndexPortable(
-        s.read.parquet(s"$dir/embeddings.parquet"), path.toString)
-    path.toString
-  }
-
-  private def lsh6IndexLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-lsh-index-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
-
-  /** Build-once accessor for the Gaussian 6-plane × 4-table LSH index
-    * (`knn_lsh_indexed`'s perf-default index). Gated on the ROOT
-    * `_SUCCESS`: the 4 tables land in ONE (table, bucket)-partitioned
-    * write whose commit marker is the root's, so a crash mid-build
-    * leaves no marker and the whole index is rebuilt instead of a
-    * partial directory being reused. */
-  private def lsh6IndexPath(s: SparkSession, dir: String): String = {
-    val path = lsh6IndexLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS")))
-      graft.operators.Similarity.writeLshIndex(
-        s.read.parquet(s"$dir/embeddings.parquet"), path.toString, numPlanes = 6)
-    path.toString
-  }
-
-  private def pqIndexLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-pq-pindex-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
-
-  /** Build-once accessor for the portable-codebook PQ codes index. */
-  private def pqIndexPath(s: SparkSession, dir: String): String = {
-    val path = pqIndexLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("codes/_SUCCESS")))
-      graft.operators.Similarity.pqPortable()
-        .write(s.read.parquet(s"$dir/embeddings.parquet"), path.toString)
-    path.toString
-  }
-
-  private def posIndexLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-posidx-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
-
-  /** Build-once accessor for the positional index (gated on the
-    * `_meta` sidecar's `_SUCCESS` — the LAST artifact the write
-    * produces). */
-  private def posIndexPath(s: SparkSession, dir: String): String = {
-    val path = posIndexLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_meta").resolve("_SUCCESS")))
-      graft.operators.Keywords.writePositionalIndex(
-        s.read.parquet(s"$dir/documents.parquet"), path.toString)
-    path.toString
-  }
-
-  private def posAppendLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-posidx-app-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
-
-  /** Build-once accessor for the positional index exercised through
-    * its write-then-append maintenance path. */
-  private def posAppendPath(s: SparkSession, dir: String): String = {
-    val path = posAppendLoc(dir)
-    val marker = path.resolve("_APPEND_DONE")
-    if (!java.nio.file.Files.exists(marker)) {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val mid = docs.agg(max("doc_id")).head.getLong(0) / 2
-      graft.operators.Keywords.writePositionalIndex(
-        docs.filter(col("doc_id") <= mid), path.toString)
-      graft.operators.Keywords.appendToPositionalIndex(
-        docs.filter(col("doc_id") > mid), path.toString)
-      java.nio.file.Files.createFile(marker)
+  /** A build-once fixture behind indexed, replayed or MV rows, declared
+    * once: its bench name, its [[fixtureDir]], the completion markers
+    * that gate reuse (`done`, relative to the directory) and its build,
+    * which runs only while a marker is missing. A build that writes its
+    * markers last is never reused half-finished. An empty `done` means
+    * the build gates itself, as the TableStore fixtures do table by
+    * table; `ensure` then always calls it.
+    *
+    * The bench mains account BUILD time apart from probe time
+    * (`<name>_build` rows): an index amortizes its build over many
+    * probes, so folding the one-time build into the first timed probe
+    * run (the pre-round-9 accounting) made the indexed rows look
+    * corpus-dependent in the scale soaks even though the probe itself
+    * is partition-pruned and ~flat across scale factors. `loc` computes
+    * the location WITHOUT building (so a bench can delete it for a
+    * cold-build measurement); `ensure` is the build-on-miss accessor the
+    * queries call through `path`.
+    *
+    * Two accounting classes: an INDEX is deleted and cold-rebuilt every
+    * bench (its cold-build cost is the number users compare against the
+    * probe); a persisted FIXTURE (`persistAcrossBenches`) is built once
+    * per corpus and kept — re-timing it each run re-measures fixed
+    * replay machinery the spec and oracle row already pin, at the cost
+    * of drowning the artifact (the 48-batch maintained-stream replay
+    * alone was 26% of the sf0.1 bench wall). A fixture's first-ever
+    * build on a host is still timed and reported; after that `built`
+    * short-circuits the row. */
+  final class Fixture private[SparkEntry] (val name: String, tag: String,
+      table: String, done: Seq[String],
+      val persistAcrossBenches: Boolean = false)(
+      build: (SparkSession, String, java.nio.file.Path) => Unit) {
+    def loc(dir: String): java.nio.file.Path = fixtureDir(tag, table)(dir)
+    private def complete(at: java.nio.file.Path): Boolean =
+      done.nonEmpty && done.forall(m => java.nio.file.Files.exists(at.resolve(m)))
+    def built(dir: String): Boolean = complete(loc(dir))
+    def ensure(spark: SparkSession, dir: String): Unit = { path(spark, dir); () }
+    private[graft] def path(spark: SparkSession, dir: String): String = {
+      val at = loc(dir)
+      if (!complete(at)) build(spark, dir, at)
+      at.toString
     }
-    path.toString
   }
 
-  private def pqAppendLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-pq-app-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
+  /** The [[graft.core.TableStore]] a store fixture built: its directory,
+    * or `store/` under a [[graft.streaming.StoreStream.upsertReplay]]
+    * work dir. */
+  private def storeOf(f: Fixture, s: SparkSession, dir: String,
+      sub: String = ""): graft.core.TableStore =
+    new graft.core.TableStore(f.path(s, dir) + sub, s)
 
-  /** Build-once accessor for the PQ index exercised through its
-    * write-then-append maintenance path (second half encoded by the
-    * REHYDRATED index — the pqLoad round trip the append contract
-    * prescribes). */
-  private def pqAppendPath(s: SparkSession, dir: String): String = {
-    val path = pqAppendLoc(dir)
-    val marker = path.resolve("_APPEND_DONE")
-    if (!java.nio.file.Files.exists(marker)) {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val mid = e.agg(max("vec_id")).head.getLong(0) / 2
-      graft.operators.Similarity.pqPortable()
-        .write(e.filter(col("vec_id") <= mid), path.toString)
-      graft.operators.Similarity.pqLoad(s, path.toString)
-        .append(e.filter(col("vec_id") > mid), path.toString)
-      java.nio.file.Files.createFile(marker)
-    }
-    path.toString
-  }
+  /** The term-bucketed inverted index over `documents`. Reuse is gated
+    * on the `_stats` sidecar's `_SUCCESS` marker — the LAST artifact
+    * `writeInvertedIndex` produces — so a partial build (postings
+    * written, sidecar missing) is rebuilt, never reused. Shared by the
+    * conjunctive search, indexed BM25, and hybrid RRF queries, so one
+    * bench run builds the index once. */
+  private val invertedIndex = new Fixture("index_inverted", "invidx2",
+      "documents", Seq("_stats/_SUCCESS"))((s, dir, path) =>
+    graft.operators.Keywords.writeInvertedIndex(
+      s.read.parquet(s"$dir/documents.parquet"), path.toString))
 
-  private def ngramModelLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-ngram-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+  /** The portable-plane LSH index over `embeddings`. Reuse is gated on
+    * the write's `_SUCCESS` marker, not bare existence: an interrupted
+    * writeLshIndexPortable leaves a partial directory that bare
+    * Files.exists would reuse forever. Shared by the indexed-ANN query
+    * and the hybrid RRF fusion. */
+  private val lshPortableIndex = new Fixture("index_lsh_portable",
+      "lsh-pindex", "embeddings", Seq("_SUCCESS"))((s, dir, path) =>
+    graft.operators.Similarity.writeLshIndexPortable(
+      s.read.parquet(s"$dir/embeddings.parquet"), path.toString))
 
-  /** Build-once accessor for the stored bigram-backoff model (trained
-    * on the even-doc_id slice — the same split the inline
-    * text_surprisal derives its counts from). */
-  private def ngramModelPath(s: SparkSession, dir: String): String = {
-    val path = ngramModelLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_stats").resolve("_SUCCESS")))
-      graft.operators.Keywords.writeNgramModel(
-        s.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id") % 2 === 0), path.toString)
-    path.toString
-  }
+  /** The Gaussian 6-plane × 4-table LSH index (`knn_lsh_indexed`'s
+    * perf-default index). Gated on the ROOT `_SUCCESS`: the 4 tables
+    * land in ONE (table, bucket)-partitioned write whose commit marker
+    * is the root's, so a crash mid-build leaves no marker and the whole
+    * index is rebuilt instead of a partial directory being reused. */
+  private val lsh6Index = new Fixture("index_lsh6", "lsh-index",
+      "embeddings", Seq("_SUCCESS"))((s, dir, path) =>
+    graft.operators.Similarity.writeLshIndex(
+      s.read.parquet(s"$dir/embeddings.parquet"), path.toString, numPlanes = 6))
 
-  private def invertedAppendLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-invidx-app-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+  /** The portable-codebook PQ codes index. */
+  private val pqIndex = new Fixture("index_pq", "pq-pindex", "embeddings",
+      Seq("codes/_SUCCESS"))((s, dir, path) =>
+    graft.operators.Similarity.pqPortable()
+      .write(s.read.parquet(s"$dir/embeddings.parquet"), path.toString))
 
-  /** Build-once accessor for the inverted index exercised through its
-    * write-then-append maintenance path: first half of the corpus
-    * built, second half appended (`Keywords.appendToInvertedIndex` —
-    * only the batch is tokenized). Append ≡ rebuild exactly, so probes
-    * against this index hash-match the full-corpus BM25 oracle. */
-  private def invertedAppendPath(s: SparkSession, dir: String): String = {
-    val path = invertedAppendLoc(dir)
-    val marker = path.resolve("_APPEND_DONE")
-    if (!java.nio.file.Files.exists(marker)) {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val mid = docs.agg(max("doc_id")).head.getLong(0) / 2
-      graft.operators.Keywords.writeInvertedIndex(
-        docs.filter(col("doc_id") <= mid), path.toString)
-      graft.operators.Keywords.appendToInvertedIndex(
-        docs.filter(col("doc_id") > mid), path.toString)
-      java.nio.file.Files.createFile(marker)
-    }
-    path.toString
-  }
+  /** The positional index (gated on the `_meta` sidecar's `_SUCCESS` —
+    * the LAST artifact the write produces). */
+  private val posIndex = new Fixture("index_pos", "posidx", "documents",
+      Seq("_meta/_SUCCESS"))((s, dir, path) =>
+    graft.operators.Keywords.writePositionalIndex(
+      s.read.parquet(s"$dir/documents.parquet"), path.toString))
 
-  private def ivfAppendLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-ivf-append-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
+  /** The positional index exercised through its write-then-append
+    * maintenance path. */
+  private val posAppend = new Fixture("index_pos_append", "posidx-app",
+      "documents", Seq("_APPEND_DONE"))((s, dir, path) => {
+    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val mid = docs.agg(max("doc_id")).head.getLong(0) / 2
+    graft.operators.Keywords.writePositionalIndex(
+      docs.filter(col("doc_id") <= mid), path.toString)
+    graft.operators.Keywords.appendToPositionalIndex(
+      docs.filter(col("doc_id") > mid), path.toString)
+    java.nio.file.Files.createFile(path.resolve("_APPEND_DONE"))
+  })
 
-  /** Build-once accessor for the IVF index exercised through its
-    * write-then-append maintenance path (first half written, second
-    * half appended — frozen centers make append ≡ rebuild exactly). */
-  private def ivfAppendPath(s: SparkSession, dir: String): String = {
-    val path = ivfAppendLoc(dir)
-    val marker = path.resolve("_APPEND_DONE")
-    if (!java.nio.file.Files.exists(marker)) {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val idx = graft.operators.Similarity.IvfIndex(
-        graft.functions.VectorFunctions.portableCentroids(8, 64))
-      val mid = e.agg(max("vec_id")).head.getLong(0) / 2
-      idx.write(e.filter(col("vec_id") <= mid), path.toString)
-      idx.append(e.filter(col("vec_id") > mid), path.toString)
-      java.nio.file.Files.createFile(marker)
-    }
-    path.toString
-  }
+  /** The PQ index exercised through its write-then-append maintenance
+    * path (second half encoded by the REHYDRATED index — the pqLoad
+    * round trip the append contract prescribes). */
+  private val pqAppend = new Fixture("index_pq_append", "pq-app",
+      "embeddings", Seq("_APPEND_DONE"))((s, dir, path) => {
+    val e = s.read.parquet(s"$dir/embeddings.parquet")
+    val mid = e.agg(max("vec_id")).head.getLong(0) / 2
+    graft.operators.Similarity.pqPortable()
+      .write(e.filter(col("vec_id") <= mid), path.toString)
+    graft.operators.Similarity.pqLoad(s, path.toString)
+      .append(e.filter(col("vec_id") > mid), path.toString)
+    java.nio.file.Files.createFile(path.resolve("_APPEND_DONE"))
+  })
 
-  private def statsStoreLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      // "2": manifests without #hist records predate committedVersions —
-      // a pre-history store at the same fingerprint must not be reused
-      "graft-storestats2-" + corpusFingerprint(Seq(s"$dir/orders.parquet")))
+  /** The stored bigram-backoff model (trained on the even-doc_id slice —
+    * the same split the inline text_surprisal derives its counts from). */
+  private val ngramModel = new Fixture("index_ngram_model", "ngram",
+      "documents", Seq("_stats/_SUCCESS"))((s, dir, path) =>
+    graft.operators.Keywords.writeNgramModel(
+      s.read.parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") % 2 === 0), path.toString))
 
-  /** Build-once accessor for the stats-pruned orders store: one
-    * [[graft.core.TableStore]] version of `orders` clustered on
-    * `o_orderdate` (so each file covers a tight date range) with a
-    * [[graft.core.FileStats]] sidecar — min/max zone maps on
-    * `o_orderdate`, a per-file bloom on the hash-scattered
-    * `o_custkey`. Reuse is gated on the store manifest, which the
-    * build writes LAST and atomically, so a partial build (version
-    * staged, sidecar or commit missing) is rebuilt, never reused. */
-  private def statsStore(s: SparkSession, dir: String): graft.core.TableStore = {
-    val store = new graft.core.TableStore(statsStoreLoc(dir).toString, s)
+  /** The inverted index exercised through its write-then-append
+    * maintenance path: first half of the corpus built, second half
+    * appended (`Keywords.appendToInvertedIndex` — only the batch is
+    * tokenized). Append ≡ rebuild exactly, so probes against this index
+    * hash-match the full-corpus BM25 oracle. */
+  private val invertedAppend = new Fixture("index_inverted_append",
+      "invidx-app", "documents", Seq("_APPEND_DONE"))((s, dir, path) => {
+    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val mid = docs.agg(max("doc_id")).head.getLong(0) / 2
+    graft.operators.Keywords.writeInvertedIndex(
+      docs.filter(col("doc_id") <= mid), path.toString)
+    graft.operators.Keywords.appendToInvertedIndex(
+      docs.filter(col("doc_id") > mid), path.toString)
+    java.nio.file.Files.createFile(path.resolve("_APPEND_DONE"))
+  })
+
+  /** The IVF index exercised through its write-then-append maintenance
+    * path (first half written, second half appended — frozen centers
+    * make append ≡ rebuild exactly). */
+  private val ivfAppend = new Fixture("index_ivf_append", "ivf-append",
+      "embeddings", Seq("_APPEND_DONE"))((s, dir, path) => {
+    val e = s.read.parquet(s"$dir/embeddings.parquet")
+    val idx = graft.operators.Similarity.IvfIndex(
+      graft.functions.VectorFunctions.portableCentroids(8, 64))
+    val mid = e.agg(max("vec_id")).head.getLong(0) / 2
+    idx.write(e.filter(col("vec_id") <= mid), path.toString)
+    idx.append(e.filter(col("vec_id") > mid), path.toString)
+    java.nio.file.Files.createFile(path.resolve("_APPEND_DONE"))
+  })
+
+  /** The stats-pruned orders store: one [[graft.core.TableStore]]
+    * version of `orders` clustered on `o_orderdate` (so each file covers
+    * a tight date range) with a [[graft.core.FileStats]] sidecar —
+    * min/max zone maps on `o_orderdate`, a per-file bloom on the
+    * hash-scattered `o_custkey`. Reuse is gated on the store manifest,
+    * which the build writes LAST and atomically, so a partial build
+    * (version staged, sidecar or commit missing) is rebuilt, never
+    * reused. The tag's "2": manifests without #hist records predate
+    * committedVersions — a pre-history store at the same fingerprint
+    * must not be reused. */
+  private val statsStore = new Fixture("index_store_stats", "storestats2",
+      "orders", Nil)((s, dir, path) => {
+    val store = new graft.core.TableStore(path.toString, s)
     // the four tables are independent build chains — overlapped
     // (guide §2.6, [[runOverlapped]]); each chain keeps its own gates so
     // crash-resume converges per table exactly as before
@@ -613,18 +577,11 @@ object SparkEntry {
         statsCols = Seq("o_orderdate", "o_custkey"))))
     }
     runOverlapped(Seq(ordersChain, historyChain, restoreChain, zChain))
-    store
-  }
+  })
 
-  private def morStoreLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-storemor-" + corpusFingerprint(Seq(s"$dir/orders.parquet")))
-
-  /** Build-once accessor for the merge-on-read / metadata-aggregate
-    * store: four tables built from `orders`, each with a
-    * [[graft.core.FileStats]] sidecar on `o_totalprice` (+
-    * `o_custkey` for the stats table).
+  /** The merge-on-read / metadata-aggregate store: four tables built
+    * from `orders`, each with a [[graft.core.FileStats]] sidecar on
+    * `o_totalprice` (+ `o_custkey` for the stats table).
     *
     *  - `orders_stats`: untouched — the [[graft.core.TableStore.statsAgg]]
     *    metadata-only aggregate target.
@@ -643,8 +600,9 @@ object SparkEntry {
     * repeated build or a re-run against a built store converges on
     * the same content — which one oracle (the plain filtered
     * aggregate) checks for both the DV'd and the purged table. */
-  private def morStore(s: SparkSession, dir: String): graft.core.TableStore = {
-    val store = new graft.core.TableStore(morStoreLoc(dir).toString, s)
+  private val morStore = new Fixture("index_store_mor", "storemor",
+      "orders", Nil)((s, dir, path) => {
+    val store = new graft.core.TableStore(path.toString, s)
     // ONE pass computes the range-clustered layout all four tables stage
     // from (was a `def`: four repartitionByRange+sort recomputations of
     // the same 16-partition relation), and the four per-table build
@@ -716,23 +674,19 @@ object SparkEntry {
     }
     runOverlapped(Seq(statsChain, morChain, purgeChain, mergeChain))
     clustered.foreach(releaseBarrier)
-    store
-  }
+  })
 
-  private def streamMorLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-streammor-" + corpusFingerprint(Seq(s"$dir/orders.parquet")))
-
-  /** Build-once streaming-MERGE replay (StoreStream.upsertReplay):
-    * `orders` seeded price-clustered, then three key-synthesized CDC
-    * slices stream in as micro-batches — one stop/start cycle each,
-    * every batch applied as a TAGGED merge-on-read upsert with the
-    * batch id as the exactly-once high-water mark. Slices overlap
-    * (keys divisible by 24 are hit by all three), so the final table
-    * witnesses last-wins ordering, not just application: the oracle's
-    * CASE replays exactly "the LAST slice containing the key wins". */
-  private def streamMorStore(s: SparkSession, dir: String): graft.core.TableStore = {
+  /** Streaming-MERGE replay (StoreStream.upsertReplay): `orders` seeded
+    * price-clustered, then three key-synthesized CDC slices stream in as
+    * micro-batches — one stop/start cycle each, every batch applied as a
+    * TAGGED merge-on-read upsert with the batch id as the exactly-once
+    * high-water mark. Slices overlap (keys divisible by 24 are hit by
+    * all three), so the final table witnesses last-wins ordering, not
+    * just application: the oracle's CASE replays exactly "the LAST slice
+    * containing the key wins". Gated on `_replay_done`, the marker the
+    * replay writes last (and checks itself). */
+  private val streamMor = new Fixture("index_stream_mor", "streammor",
+      "orders", Seq("_replay_done"))((s, dir, path) => {
     val o = s.read.parquet(s"$dir/orders.parquet")
     val ts = tsLit(o, "o_orderdate", "1999-06-01 00:00:00")
     def slice(m: Long, status: String, bump: Double) =
@@ -748,24 +702,18 @@ object SparkEntry {
       o.repartitionByRange(8, col("o_totalprice"))
         .sortWithinPartitions(col("o_totalprice")),
       Seq(slice(4, "A", 0.5), slice(6, "B", 1000.5), slice(8, "C", 2000.5)),
-      Seq("o_orderkey"), streamMorLoc(dir).toString, "orders_live")
-  }
-
-  private def streamMaintLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-streammaint-" + corpusFingerprint(Seq(s"$dir/orders.parquet")))
+      Seq("o_orderkey"), path.toString, "orders_live")
+  })
 
   /** How many micro-batches the maintained replay drives and its
     * OPTIMIZE cadence — shared between the builder and the oracle. */
   private val StreamMaintBatches = 48
   private val StreamMaintEvery = 8
 
-  /** Build-once LONG-RUN streaming-MERGE replay with scheduled
-    * maintenance: 48 micro-batches (one per slice file,
-    * `maxFilesPerTrigger 1`) across 6 stop/start cycles, and every 8th
-    * applied batch the sink itself runs OPTIMIZE
-    * ([[graft.core.TableStore.purgeDeletes]] +
+  /** LONG-RUN streaming-MERGE replay with scheduled maintenance: 48
+    * micro-batches (one per slice file, `maxFilesPerTrigger 1`) across 6
+    * stop/start cycles, and every 8th applied batch the sink itself runs
+    * OPTIMIZE ([[graft.core.TableStore.purgeDeletes]] +
     * [[graft.core.TableStore.compactSmallFiles]]) — the production
     * trajectory where a MoR sink would otherwise grow one small file
     * plus one deletion vector per batch forever. Batch i rewrites the
@@ -774,8 +722,16 @@ object SparkEntry {
     * CASE closed form any SQL engine replays — and every batch still
     * tombstones base rows, so the DV/file-count trajectory is real.
     * Disjointness keeps the oracle trivial; the overlapping-slices row
-    * ([[streamMorStore]]) already witnesses last-wins ordering. */
-  private def streamMaintStore(s: SparkSession, dir: String): graft.core.TableStore = {
+    * ([[streamMor]]) already witnesses last-wins ordering.
+    *
+    * A persisted fixture, not a cold-timed index: the 48-batch /
+    * 6-cycle replay is a one-time corpus fixture whose build semantics
+    * the spec and the `stream_upsert_maintained_oracled` row pin;
+    * `index_stream_mor` stays the cold-timed representative of the
+    * stream-replay build family. */
+  private val streamMaint = new Fixture("index_stream_maint", "streammaint",
+      "orders", Seq("_replay_done"), persistAcrossBenches = true)(
+      (s, dir, path) => {
     val o = s.read.parquet(s"$dir/orders.parquet")
     val ts = tsLit(o, "o_orderdate", "1999-06-01 00:00:00")
     def slice(i: Int) =
@@ -791,13 +747,13 @@ object SparkEntry {
       o.repartitionByRange(8, col("o_totalprice"))
         .sortWithinPartitions(col("o_totalprice")),
       (0 until StreamMaintBatches).map(slice),
-      Seq("o_orderkey"), streamMaintLoc(dir).toString, "orders_maint",
+      Seq("o_orderkey"), path.toString, "orders_maint",
       // 4 MiB target: above the per-batch appends at every SF (so ticks
       // really bin-pack) and below the sf1+ base files (so those are
       // CARRIED, pinning the O(work since last tick) claim at scale)
       maintainEvery = StreamMaintEvery, targetBytes = 4L << 20,
       filesPerCycle = StreamMaintEvery)
-  }
+  })
 
   // ---- incremental-MV build surfaces: the one-time MV seed (and, for
   // the CDC aggregate, the ARRIVED delta — in production the stream/CDF
@@ -807,11 +763,6 @@ object SparkEntry {
   // refresh, so folding it into the timed row made O(delta+groups)
   // refreshes read as corpus-scale in the soaks.
 
-  private def mvAggLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mvagg-" + corpusFingerprint(Seq(s"$dir/lineitem.parquet")))
-
   /** Seed of the CDC-maintained aggregate MV: the per-flag aggregate of
     * the FIRST snapshot plus the CDC delta (diff of the two largeDim
     * snapshots) as it would arrive from the stream. The two writes are
@@ -820,112 +771,66 @@ object SparkEntry {
     * writes race, so neither is "last"), and both writes are
     * mode(overwrite), so a partial build converges on the next access
     * instead of being mistaken for a finished one. */
-  private def mvAggPath(s: SparkSession, dir: String): String = {
-    val path = mvAggLoc(dir)
-    val done = java.nio.file.Files.exists(
-        path.resolve("_mv").resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(
-        path.resolve("_delta").resolve("_SUCCESS"))
-    if (!done) {
-      val (b1, b2) = largeDim(s, dir)
-      val merged = Merge.upsert(b1, b2, Seq("dim_id"))
-      runOverlapped(Seq(
-        () => graft.ops.IncrementalAgg
-          .fullAggregate(b1, Seq("flag"), Seq("qty", "price"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path.resolve("_mv").toString),
-        () => SnapshotCdc.diff(b1, merged, Seq("dim_id"))
-          .write.mode("overwrite").parquet(path.resolve("_delta").toString)))
-    }
-    path.toString
-  }
-
-  private def mvDistinctLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mvdistinct-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+  private val mvAgg = new Fixture("index_mv_agg", "mvagg", "lineitem",
+      Seq("_mv/_SUCCESS", "_delta/_SUCCESS"))((s, dir, path) => {
+    val (b1, b2) = largeDim(s, dir)
+    val merged = Merge.upsert(b1, b2, Seq("dim_id"))
+    runOverlapped(Seq(
+      () => graft.ops.IncrementalAgg
+        .fullAggregate(b1, Seq("flag"), Seq("qty", "price"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(path.resolve("_mv").toString),
+      () => SnapshotCdc.diff(b1, merged, Seq("dim_id"))
+        .write.mode("overwrite").parquet(path.resolve("_delta").toString)))
+  })
 
   /** Seed of the sketch-backed DISTINCT MV: one HLL sketch per
     * event_type over the first half-window — mergeable state, so the
     * refresh unions the arriving inserts' sketch in O(batch + groups)
     * without this pass ever re-running. */
-  private def mvDistinctPath(s: SparkSession, dir: String): String = {
-    val path = mvDistinctLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      val ev = events(s, dir)
-        .withColumn("day", to_date(timestamp_micros(col("ts_us"))))
-      graft.ops.IncrementalAgg.fullDistinctSketch(
-          ev.filter(col("day") <= lit("2024-01-15")),
-          Seq("event_type"), "user_id")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(path.toString)
-    }
-    path.toString
-  }
-
-  private def mvMinhashLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mvminhash-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+  private val mvDistinct = new Fixture("index_mv_distinct", "mvdistinct",
+      "events", Seq("_SUCCESS"))((s, dir, path) => {
+    val ev = events(s, dir)
+      .withColumn("day", to_date(timestamp_micros(col("ts_us"))))
+    graft.ops.IncrementalAgg.fullDistinctSketch(
+        ev.filter(col("day") <= lit("2024-01-15")),
+        Seq("event_type"), "user_id")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(path.toString)
+  })
 
   /** Seed of the incremental-dedup band table: (band, id) rows of the
     * already-ingested corpus slice, built once — each arriving batch
     * probes it and appends its own bands, never re-shingling history. */
-  private def mvMinhashPath(s: SparkSession, dir: String): String = {
-    val path = mvMinhashLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      Dedup.minhashBandTable(docs.filter(col("doc_id") < 250),
-          portable = true)
-        .write.mode("overwrite").parquet(path.toString)
-    }
-    path.toString
-  }
+  private val mvMinhash = new Fixture("index_mv_minhash", "mvminhash",
+      "documents", Seq("_SUCCESS"))((s, dir, path) =>
+    Dedup.minhashBandTable(
+        s.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < 250),
+        portable = true)
+      .write.mode("overwrite").parquet(path.toString))
 
   /** Stored side of EXACT-Jaccard incremental admission: the rarity-
     * ordered prefix index + the full shingle sets of the ingested docs
-    * (< 250), built once per corpus (completion-marker-gated, derivation
-    * version token in the name). */
-  private def mvJaccardLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mvjaccard-v1-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
-
-  private def mvJaccardPath(s: SparkSession, dir: String): String = {
-    val path = mvJaccardLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("sets").resolve("_SUCCESS"))) {
-      val ingested = s.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") < 250)
-      Dedup.jaccardPrefixIndex(ingested)
-        .write.mode("overwrite").parquet(path.resolve("prefix").toString)
-      Dedup.jaccardShingleSets(ingested)
-        .write.mode("overwrite").parquet(path.resolve("sets").toString)
-    }
-    path.toString
-  }
-
-  private def mvClusterLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mvcluster-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+    * (< 250), built once per corpus (gated on the sets, written last;
+    * derivation version token in the tag). */
+  private val mvJaccard = new Fixture("index_mv_jaccard", "mvjaccard-v1",
+      "documents", Seq("sets/_SUCCESS"))((s, dir, path) => {
+    val ingested = s.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") < 250)
+    Dedup.jaccardPrefixIndex(ingested)
+      .write.mode("overwrite").parquet(path.resolve("prefix").toString)
+    Dedup.jaccardShingleSets(ingested)
+      .write.mode("overwrite").parquet(path.resolve("sets").toString)
+  })
 
   /** Seed of the incremental-cluster assignment: the transitive closure
     * of band-agreement pairs over the stored band table (no corpus
     * text), built once — each arriving batch folds in via
     * [[Dedup.incrementalClusters]] touching only collided clusters. */
-  private def mvClusterPath(s: SparkSession, dir: String): String = {
-    val path = mvClusterLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      Dedup.clustersFromBands(s.read.parquet(mvMinhashPath(s, dir)))
-        .coalesce(1).write.mode("overwrite").parquet(path.toString)
-    }
-    path.toString
-  }
-
-  private def mediaMixLoc(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      fixtureRoot,
-      "graft-mediamix-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+  private val mvCluster = new Fixture("index_mv_cluster", "mvcluster",
+      "documents", Seq("_SUCCESS"))((s, dir, path) =>
+    Dedup.clustersFromBands(s.read.parquet(mvMinhash.path(s, dir)))
+      .coalesce(1).write.mode("overwrite").parquet(path.toString))
 
   /** The quarantine corpus as a STORED fixture: decodable MPNG AVIs
     * (%4=0) and PCM16 WAVs (%4=2) interleaved with codec-compressed
@@ -933,27 +838,24 @@ object SparkEntry {
     * synthesized ONCE per corpus (the AVI frames are ImageIO
     * PNG-encoded: fixture construction, not the measured operator) so
     * the quarantine row times the pure sniff+decode routing probes. */
-  private def mediaMixPath(s: SparkSession, dir: String): String = {
-    val path = mediaMixLoc(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val badImages = docs.filter(col("doc_id") % 4 === 3)
-        .select(col("doc_id").as("media_id"), lit("image").as("kind"),
-          encode(concat(lit("txt:"), col("text")), "UTF-8").as("payload"),
-          col("source").as("meta_source"))
-        .as[graft.multimodal.Media.MediaFile]
-      graft.multimodal.Media
-        .synthesizeMpngAvis(docs.filter(col("doc_id") % 4 === 0))
-        .unionByName(graft.multimodal.Media
-          .synthesizeMp4s(docs.filter(col("doc_id") % 4 === 1)))
-        .unionByName(graft.multimodal.Media
-          .synthesizeWavs(docs.filter(col("doc_id") % 4 === 2)))
-        .unionByName(badImages)
-        .write.mode("overwrite").parquet(path.toString)
-    }
-    path.toString
-  }
+  private val mediaMix = new Fixture("index_media_mix", "mediamix",
+      "documents", Seq("_SUCCESS"))((s, dir, path) => {
+    import s.implicits._
+    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val badImages = docs.filter(col("doc_id") % 4 === 3)
+      .select(col("doc_id").as("media_id"), lit("image").as("kind"),
+        encode(concat(lit("txt:"), col("text")), "UTF-8").as("payload"),
+        col("source").as("meta_source"))
+      .as[graft.multimodal.Media.MediaFile]
+    graft.multimodal.Media
+      .synthesizeMpngAvis(docs.filter(col("doc_id") % 4 === 0))
+      .unionByName(graft.multimodal.Media
+        .synthesizeMp4s(docs.filter(col("doc_id") % 4 === 1)))
+      .unionByName(graft.multimodal.Media
+        .synthesizeWavs(docs.filter(col("doc_id") % 4 === 2)))
+      .unionByName(badImages)
+      .write.mode("overwrite").parquet(path.toString)
+  })
 
   /** A timestamp literal in the exact flavor (TIMESTAMP vs
     * TIMESTAMP_NTZ) the parquet column reads as, so range predicates
@@ -962,78 +864,13 @@ object SparkEntry {
   private def tsLit(df: DataFrame, c: String, v: String): Column =
     lit(v).cast(df.schema(c).dataType)
 
-  /** Stored-index surfaces, exposed so the bench mains can account
-    * index BUILD time separately from probe time (`<name>_build`
-    * rows): an index amortizes its build over many probes, so folding
-    * the one-time build into the first timed probe run (the
-    * pre-round-9 accounting) made the indexed rows look
-    * corpus-dependent in the scale soaks even though the probe itself
-    * is partition-pruned and ~flat across scale factors. `loc`
-    * computes the deterministic location WITHOUT building (so a bench
-    * can delete it for a cold-build measurement); `ensure` is the
-    * same build-on-miss accessor the queries call.
-    *
-    * Two accounting classes: an INDEX is deleted and cold-rebuilt every
-    * bench (its cold-build cost is the number users compare against the
-    * probe); a persisted FIXTURE (`persistAcrossBenches`) is built once
-    * per corpus and kept — re-timing it each run re-measures fixed
-    * replay machinery the spec and oracle row already pin, at the cost
-    * of drowning the artifact (the 48-batch maintained-stream replay
-    * alone was 26% of the sf0.1 bench wall). A fixture's first-ever
-    * build on a host is still timed and reported; after that `built`
-    * short-circuits the row. */
-  case class IndexSurface(loc: String => java.nio.file.Path,
-      ensure: (SparkSession, String) => Unit,
-      persistAcrossBenches: Boolean = false,
-      built: String => Boolean = _ => false)
-
-  def indexSurfaces: Map[String, IndexSurface] = Map(
-    "index_inverted" -> IndexSurface(invertedIndexLoc,
-      (s, d) => { invertedIndexPath(s, d); () }),
-    "index_lsh_portable" -> IndexSurface(lshPortableIndexLoc,
-      (s, d) => { lshPortableIndexPath(s, d); () }),
-    "index_lsh6" -> IndexSurface(lsh6IndexLoc,
-      (s, d) => { lsh6IndexPath(s, d); () }),
-    "index_pq" -> IndexSurface(pqIndexLoc,
-      (s, d) => { pqIndexPath(s, d); () }),
-    "index_ivf_append" -> IndexSurface(ivfAppendLoc,
-      (s, d) => { ivfAppendPath(s, d); () }),
-    "index_inverted_append" -> IndexSurface(invertedAppendLoc,
-      (s, d) => { invertedAppendPath(s, d); () }),
-    "index_ngram_model" -> IndexSurface(ngramModelLoc,
-      (s, d) => { ngramModelPath(s, d); () }),
-    "index_pos" -> IndexSurface(posIndexLoc,
-      (s, d) => { posIndexPath(s, d); () }),
-    "index_pos_append" -> IndexSurface(posAppendLoc,
-      (s, d) => { posAppendPath(s, d); () }),
-    "index_pq_append" -> IndexSurface(pqAppendLoc,
-      (s, d) => { pqAppendPath(s, d); () }),
-    "index_store_stats" -> IndexSurface(statsStoreLoc,
-      (s, d) => { statsStore(s, d); () }),
-    "index_store_mor" -> IndexSurface(morStoreLoc,
-      (s, d) => { morStore(s, d); () }),
-    "index_stream_mor" -> IndexSurface(streamMorLoc,
-      (s, d) => { streamMorStore(s, d); () }),
-    // persisted fixture, not a cold-timed index: the 48-batch / 6-cycle
-    // replay is a one-time corpus fixture whose build semantics the
-    // 260-test spec and the `stream_upsert_maintained_oracled` row pin;
-    // `index_stream_mor` stays the cold-timed representative of the
-    // stream-replay build family
-    "index_stream_maint" -> IndexSurface(streamMaintLoc,
-      (s, d) => { streamMaintStore(s, d); () },
-      persistAcrossBenches = true,
-      built = d => java.nio.file.Files.exists(
-        streamMaintLoc(d).resolve("_replay_done"))),
-    "index_mv_agg" -> IndexSurface(mvAggLoc,
-      (s, d) => { mvAggPath(s, d); () }),
-    "index_mv_distinct" -> IndexSurface(mvDistinctLoc,
-      (s, d) => { mvDistinctPath(s, d); () }),
-    "index_mv_minhash" -> IndexSurface(mvMinhashLoc,
-      (s, d) => { mvMinhashPath(s, d); () }),
-    "index_mv_cluster" -> IndexSurface(mvClusterLoc,
-      (s, d) => { mvClusterPath(s, d); () }),
-    "index_media_mix" -> IndexSurface(mediaMixLoc,
-      (s, d) => { mediaMixPath(s, d); () }))
+  /** Every [[Fixture]] by bench name: the bench mains cold-time each
+    * build as its `<name>_build` row. */
+  def indexSurfaces: Map[String, Fixture] = Seq(invertedIndex,
+    lshPortableIndex, lsh6Index, pqIndex, ivfAppend, invertedAppend,
+    ngramModel, posIndex, posAppend, pqAppend, statsStore, morStore,
+    streamMor, streamMaint, mvAgg, mvDistinct, mvMinhash, mvJaccard,
+    mvCluster, mediaMix).map(f => f.name -> f).toMap
 
   private def queryVec(s: SparkSession, dir: String): Seq[Float] =
     s.read.parquet(s"$dir/embeddings.parquet")
@@ -1672,14 +1509,15 @@ object SparkEntry {
         .orderBy("flag")
     }),
 
-    // the flagship MERGE upsert through the PRODUCTION layout: dimension
-    // and delta both stored hash-bucketed on the merge key, so the
+    // the flagship MERGE upsert over a stored layout: dimension and
+    // delta both stored hash-bucketed on the merge key, so the
     // full-outer merge joins two co-partitioned sorted scans with zero
     // Exchange (PlanSpec-pinned) — scd_upsert_large above is the honest
     // derived-frame twin that pays the two-sided shuffle and inherited
-    // its variance at scale. Layouts are built once per corpus (the
-    // pipeline cycle writes the dimension bucketed anyway); same oracle
-    // as the large twin: the layout is physical, the result identical.
+    // its variance at scale. The layouts are a build-once fixture, paid
+    // at staging time and not timed here (the pipeline writes landing
+    // plain and broadcasts its delta instead); same oracle as the large
+    // twin: the layout is physical, the result identical.
     "scd_upsert_stored" -> ((s, dir) => {
       val (base, delta) = upsertStoredTables(s, dir)
       Merge.upsert(base, delta, Seq("dim_id"), broadcastSource = false)
@@ -1712,7 +1550,7 @@ object SparkEntry {
       // MV. Nothing in the timed plan scans lineitem or re-derives the
       // snapshots; cost is O(delta + groups), the claim the PlanSpec
       // pins and this accounting finally lets the soaks measure.
-      val root = mvAggPath(s, dir)
+      val root = mvAgg.path(s, dir)
       val maintained = graft.ops.IncrementalAgg.applyCdc(
         s.read.parquet(s"$root/_mv"),
         s.read.parquet(s"$root/_delta"),
@@ -1723,19 +1561,18 @@ object SparkEntry {
         .orderBy("flag")
     }),
 
-    // the same fact-scale CDC diff, but through the production path: both
-    // snapshots STORED hash-bucketed on the key, so the diff join plans
-    // with no Exchange on either side. The snapshots are materialized once
-    // per corpus (in the pipeline the cycle writes them anyway — the write
-    // is not an extra cost of the diff) so this measures the steady-state
-    // exchange-free diff against scd_cdc_large's derived-frame shuffle
-    // diff. Same oracle: the layout is physical, the result identical.
+    // the same fact-scale CDC diff over a stored layout: both snapshots
+    // STORED hash-bucketed on the key, so the diff join plans with no
+    // Exchange on either side. The snapshots are a build-once fixture
+    // (not timed here), so this measures the exchange-free diff against
+    // scd_cdc_large's derived-frame shuffle diff. The pipeline itself
+    // diffs no snapshots: its CDC comes from the landing merge
+    // ([[graft.ops.Merge.upsertChanges]]). Same oracle: the layout is
+    // physical, the result identical.
     "scd_cdc_stored" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(fixtureRoot,
-        // v1 = derivation version (largeDim + the upsert that derives
-        // snap_curr) — bump on formula change; see upsertStoredTables
-        "graft-cdc-stored-v1-" +
-          corpusFingerprint(Seq(s"$dir/lineitem.parquet")))
+      // v1 = derivation version (largeDim + the upsert that derives
+      // snap_curr) — bump on formula change; see upsertStoredTables
+      val root = fixtureDir("cdc-stored-v1", "lineitem")(dir)
       val store = new graft.core.TableStore(root.toString, s)
       if (!store.exists("snap_prev")) {
         val (b1, b2) = largeDim(s, dir)
@@ -1762,7 +1599,7 @@ object SparkEntry {
     "store_prune_range" -> ((s, dir) => {
       // date-range slice of the o_orderdate-clustered store: ~7% of the
       // 1995..2001 span touches 1-2 of the 16 range-partitioned files
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       val o = s.read.parquet(s"$dir/orders.parquet")
       store.readPrunedRange("orders", "o_orderdate",
           tsLit(o, "o_orderdate", "1998-01-01 00:00:00"),
@@ -1777,7 +1614,7 @@ object SparkEntry {
       // point lookup on the hash-scattered o_custkey: every file's
       // [min, max] brackets the whole key domain, so only the per-file
       // bloom prunes — the high-cardinality complement to range skipping
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       store.readPrunedPoint("orders", "o_custkey", lit(42L))
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         .orderBy("o_orderkey")
@@ -1787,7 +1624,7 @@ object SparkEntry {
       // compound predicate: zone maps ∧ bloom intersect at the METADATA
       // level (a file survives only if every conjunct may match), so a
       // clustered-date range AND a point key typically plans 0-1 files
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       val o = s.read.parquet(s"$dir/orders.parquet")
       val dataDir = store.currentPath("orders").get
       val lo = tsLit(o, "o_orderdate", "1995-01-01 00:00:00")
@@ -1810,7 +1647,7 @@ object SparkEntry {
       // it at volume. Same oracle discipline as store_prune_range: the
       // exact predicate re-applies after the pruned scan, so the layout
       // can never change the result.
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       val o = s.read.parquet(s"$dir/orders.parquet")
       val dataDir = store.currentPath("orders_z").get
       val lo = tsLit(o, "o_orderdate", "1996-01-01 00:00:00")
@@ -1834,7 +1671,7 @@ object SparkEntry {
       // is a plain pruned read of its version dir, no log replay. The
       // oracle recomputes what that first version held (the even-key
       // half) from the raw table.
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       val v0 = store.committedVersions("orders_history").head
       store.readVersion("orders_history", v0,
           s.read.parquet(s"$dir/orders.parquet").schema)
@@ -1852,7 +1689,7 @@ object SparkEntry {
       // store_time_travel content, reached through the rollback path
       // instead of an as-of read), with the full-table mistake still in
       // history for audit.
-      val store = statsStore(s, dir)
+      val store = storeOf(statsStore, s, dir)
       store.read("orders_restore")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1870,7 +1707,7 @@ object SparkEntry {
       // file carried verbatim, zero data bytes rewritten at delete
       // time — and the scan anti-joins the broadcast DV sidecar, so
       // the result equals the plain post-delete table
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       store.read("orders_mor")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1883,7 +1720,7 @@ object SparkEntry {
       // files the DV names (the price-clustered layout concentrates
       // the tail in the top range files) and committed a DV-free
       // version — identical content, plain scan, same oracle
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       store.read("orders_purge")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1896,7 +1733,7 @@ object SparkEntry {
       // updates + inserts appended as new files — zero carried bytes
       // rewritten; the read composes carried-minus-tombstoned with the
       // appended files through the same DV anti-join
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       store.read("orders_merge")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1911,7 +1748,7 @@ object SparkEntry {
       // DELETEs, appended files as INSERTs, the unchanged corpus never
       // scanned and no diff join (vs SnapshotCdc's two full scans +
       // key shuffle)
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       val vs = store.committedVersions("orders_merge")
       store.changesBetween("orders_merge", vs.head, vs.last)
         .groupBy(col("_action"), col("o_orderstatus"))
@@ -1926,7 +1763,7 @@ object SparkEntry {
       // tombstone sidecar — a metadata-only commit whose read must
       // equal the source's read at clone time (same oracle as
       // store_delete_mor)
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       store.read("orders_mor_clone")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1940,7 +1777,7 @@ object SparkEntry {
       // cycles — exactly-once effect via the version-tag high-water
       // mark; the oracle's CASE replays the batch last-wins merge, so
       // any dropped or doubled batch breaks the hash
-      val store = streamMorStore(s, dir)
+      val store = storeOf(streamMor, s, dir, "/store")
       store.read("orders_live")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1955,7 +1792,7 @@ object SparkEntry {
       // while the content hash still witnesses exactly-once across all
       // 6 restarts and every maintenance tick (a tick that dropped the
       // tag would re-apply a batch and break the hash)
-      val store = streamMaintStore(s, dir)
+      val store = storeOf(streamMaint, s, dir, "/store")
       store.read("orders_maint")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1970,7 +1807,7 @@ object SparkEntry {
       // not approximate: sidecar min/max are true per-file column
       // aggregates, so their fold equals the global answer; the spec
       // pins that no data file is opened)
-      val store = morStore(s, dir)
+      val store = storeOf(morStore, s, dir)
       store.statsAgg("orders_stats", Seq("o_totalprice", "o_custkey"))
     }),
 
@@ -2113,7 +1950,7 @@ object SparkEntry {
     // verbatim — the stored-model equivalence IS the check
     "text_surprisal_stored" -> ((s, dir) =>
       graft.operators.Keywords.surprisalFromModel(
-          s, ngramModelPath(s, dir),
+          s, ngramModel.path(s, dir),
           score = s.read.parquet(s"$dir/documents.parquet"))
         .orderBy("doc_id")),
 
@@ -2124,21 +1961,21 @@ object SparkEntry {
     // carries ALL query terms, ranked by summed tf with an id tiebreak
     "search_indexed_oracled" -> ((s, dir) =>
       graft.operators.Keywords.searchInvertedIndex(
-        s, invertedIndexPath(s, dir), Seq("spark", "join"), k = 20)),
+        s, invertedIndex.path(s, dir), Seq("spark", "join"), k = 20)),
 
     // exact-phrase search against the STORED positional index: shifted
     // position-list intersection per doc, partition-pruned term buckets,
     // occurrence-count ranking with id tiebreak
     "search_phrase_oracled" -> ((s, dir) =>
       graft.operators.Keywords.phraseSearch(
-        s, posIndexPath(s, dir), Seq("table", "scan"), k = 20)),
+        s, posIndex.path(s, dir), Seq("table", "scan"), k = 20)),
 
     // positional-index O(batch) append, equivalence-oracled: postings
     // are per-document, so build-half + append-half must answer phrase
     // probes identically to the full build — same oracle verbatim
     "search_phrase_append" -> ((s, dir) =>
       graft.operators.Keywords.phraseSearch(
-        s, posAppendPath(s, dir), Seq("table", "scan"), k = 20)),
+        s, posAppend.path(s, dir), Seq("table", "scan"), k = 20)),
 
     // BM25 retrieval from the STORED inverted index — the production
     // path: the index carries tf/dl on the posting rows and (N, total
@@ -2148,7 +1985,7 @@ object SparkEntry {
     // full-scan bm25TopDocs, so the same oracle SQL verifies this path.
     "text_bm25_indexed" -> ((s, dir) =>
       graft.operators.Keywords.bm25FromIndex(
-        s, invertedIndexPath(s, dir), Seq("spark", "join", "window"), k = 20)),
+        s, invertedIndex.path(s, dir), Seq("spark", "join", "window"), k = 20)),
 
     // O(batch) index MAINTENANCE, equivalence-oracled like the IVF
     // append: the index is built from the first half of the corpus,
@@ -2159,7 +1996,7 @@ object SparkEntry {
     // sidecar totals), so append ≡ rebuild exactly
     "text_bm25_index_append" -> ((s, dir) =>
       graft.operators.Keywords.bm25FromIndex(
-        s, invertedAppendPath(s, dir), Seq("spark", "join", "window"),
+        s, invertedAppend.path(s, dir), Seq("spark", "join", "window"),
         k = 20)),
 
     // full-scan BM25 twin (graft.operators.Keywords.bm25TopDocs): the
@@ -2198,9 +2035,9 @@ object SparkEntry {
     // rationals. Query cost is O(candidates), independent of corpus size.
     "search_hybrid_rrf" -> ((s, dir) => {
       val bm = graft.operators.Keywords.bm25FromIndex(
-        s, invertedIndexPath(s, dir), Seq("spark", "join", "window"), k = 50)
+        s, invertedIndex.path(s, dir), Seq("spark", "join", "window"), k = 50)
       val ann = Similarity.lshTopKIndexedPortable(
-        s, lshPortableIndexPath(s, dir), queryVec(s, dir), k = 50,
+        s, lshPortableIndex.path(s, dir), queryVec(s, dir), k = 50,
         probeHamming = 2)
       graft.operators.Keywords.rrfFuse(
           Seq((bm, "doc_id", "bm25"), (ann, "vec_id", "cos")), k = 20)
@@ -2733,9 +2570,7 @@ object SparkEntry {
       val tagged = ev.crossJoin(broadcast(bounds))
         .withColumn("__base", col("day") <= date_add(col("__mn"),
           (datediff(col("__mx"), col("__mn")) / 2).cast("int")))
-      val path = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-drift-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val path = fixtureDir("drift", "events")(dir)
       if (!java.nio.file.Files.exists(path.resolve("_SUCCESS")))
         graft.operators.Drift.histogram(tagged.filter(col("__base")),
             "event_type", "value", binWidth = 50.0, nBins = 10)
@@ -2761,9 +2596,7 @@ object SparkEntry {
       val tagged = ev.crossJoin(broadcast(bounds))
         .withColumn("__base", col("day") <= date_add(col("__mn"),
           (datediff(col("__mx"), col("__mn")) / 2).cast("int")))
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sdrift-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("sdrift", "events")(dir)
       val basePath = work.resolve("baseline")
       if (!java.nio.file.Files.exists(basePath.resolve("_SUCCESS")))
         graft.operators.Drift.histogram(tagged.filter(col("__base")),
@@ -2792,9 +2625,7 @@ object SparkEntry {
       val tagged = ev.crossJoin(broadcast(bounds))
         .withColumn("__base", col("day") <= date_add(col("__mn"),
           (datediff(col("__mx"), col("__mn")) / 2).cast("int")))
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sanom-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("sanom", "events")(dir)
       val fences = graft.operators.Quality.madFences(
         tagged.filter(col("__base")), "event_type", "value")
       graft.streaming.Replay.madMonitorReplay(s, fences,
@@ -2814,9 +2645,7 @@ object SparkEntry {
     // event_resample_ohlc oracle hash-checks it verbatim, so one hash
     // witnesses exactly-once AND partial-merge ≡ recompute
     "stream_ohlc_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sohlc-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("sohlc", "events")(dir)
       graft.streaming.Replay.ohlcReplay(s,
           events(s, dir).select(col("event_id").as("id"),
             col("event_type").as("grp"), col("ts_us").as("ts"),
@@ -2841,9 +2670,7 @@ object SparkEntry {
       val ev = events(s, dir)
       val items = ev.select(col("event_id").as("id"),
         concat(lit("u"), col("user_id")).as("item"))
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-stopk-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("stopk", "events")(dir)
       val sk = graft.streaming.Replay.topkSketchReplay(
         s, items, work.toString)
       import graft.functions.FrequencySketch._
@@ -2960,7 +2787,7 @@ object SparkEntry {
         .withColumn("day", to_date(timestamp_micros(col("ts_us"))))
       val half2 = ev.filter(col("day") > lit("2024-01-15"))
       val mv = graft.ops.IncrementalAgg.applyInsertsDistinct(
-        s.read.parquet(mvDistinctPath(s, dir)),
+        s.read.parquet(mvDistinct.path(s, dir)),
         half2.select("event_type", "user_id"), Seq("event_type"), "user_id")
       val inc = graft.ops.IncrementalAgg
         .estimateDistinct(mv, Seq("event_type"))
@@ -3021,9 +2848,7 @@ object SparkEntry {
     // inline monitor_drift_embedding oracle verbatim
     "monitor_drift_embedding_stored" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val path = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-driftbase-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
+      val path = fixtureDir("driftbase", "embeddings")(dir)
       if (!java.nio.file.Files.exists(path.resolve("_SUCCESS")))
         graft.operators.Drift.embeddingHistogram(
             e.filter(col("vec_id") % 2 === 0))
@@ -3060,9 +2885,7 @@ object SparkEntry {
     // same oracle SQL hash-checks exactly-once accumulation
     "stream_drift_embedding_oracled" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sedrift-" + corpusFingerprint(Seq(s"$dir/embeddings.parquet")))
+      val work = fixtureDir("sedrift", "embeddings")(dir)
       val basePath = work.resolve("baseline")
       if (!java.nio.file.Files.exists(basePath.resolve("_SUCCESS")))
         graft.operators.Drift.embeddingHistogram(
@@ -3163,9 +2986,7 @@ object SparkEntry {
     // text_bpe_encode, verbatim — storage must be a pure round trip
     "text_bpe_encode_stored" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val path = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-bpe-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+      val path = fixtureDir("bpe", "documents")(dir)
       if (!java.nio.file.Files.exists(path.resolve("_SUCCESS")))
         graft.operators.Vocab.writeMerges(
           graft.operators.Vocab.bpeMergesLocal(docs, nMerges = 4),
@@ -3416,7 +3237,7 @@ object SparkEntry {
       // band relation — history is never re-shingled, the whole point
       // of incremental dedup at ingest time
       Dedup.incrementalMinhash(batch,
-          s.read.parquet(mvMinhashPath(s, dir)), portable = true)
+          s.read.parquet(mvMinhash.path(s, dir)), portable = true)
         .select("doc_id", "source")
         .orderBy("doc_id")
     }),
@@ -3440,7 +3261,7 @@ object SparkEntry {
             concat(col("src_text"), lit(" "), col("src_text")))
             .otherwise(col("text")).as("text"),
           col("source"))
-      val root = mvJaccardPath(s, dir)
+      val root = mvJaccard.path(s, dir)
       Dedup.incrementalJaccardPrefix(batch,
           s.read.parquet(s"$root/prefix"), s.read.parquet(s"$root/sets"))
         .select("doc_id", "source")
@@ -3458,9 +3279,7 @@ object SparkEntry {
     // effect across 5 restarts AND the fold's equivalence to full
     // re-clustering. Built once per corpus (completion-marker-gated).
     "stream_clusters_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sclust-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+      val work = fixtureDir("sclust", "documents")(dir)
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val base = docs.filter(col("doc_id") < 250)
@@ -3534,8 +3353,7 @@ object SparkEntry {
     // is the closed-form UNION of the two generations minus the
     // deleted keys.
     "store_evolution" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(fixtureRoot,
-        "graft-evo-" + corpusFingerprint(Seq(s"$dir/orders.parquet")))
+      val work = fixtureDir("evo", "orders")(dir)
       graft.core.Fs.deleteRecursively(work)
       val store = new graft.core.TableStore(work.toString, s)
       val o = s.read.parquet(s"$dir/orders.parquet")
@@ -3569,8 +3387,8 @@ object SparkEntry {
             .otherwise(col("text")).as("text"),
           col("source"))
       Dedup.incrementalClusters(batch,
-          s.read.parquet(mvMinhashPath(s, dir)),
-          s.read.parquet(mvClusterPath(s, dir)), portable = true)
+          s.read.parquet(mvMinhash.path(s, dir)),
+          s.read.parquet(mvCluster.path(s, dir)), portable = true)
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy("doc_id")
     }),
@@ -4379,9 +4197,7 @@ object SparkEntry {
     // drops a resend whose original arrived cycles earlier. Built once
     // per corpus (completion-marker-gated)
     "stream_dedup_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sdedup-" + corpusFingerprint(Seq(s"$dir/documents.parquet")))
+      val work = fixtureDir("sdedup", "documents")(dir)
       graft.streaming.Replay.streamingDedupReplay(s,
           s.read.parquet(s"$dir/documents.parquet"), work.toString)
         .orderBy("doc_id")
@@ -4520,7 +4336,7 @@ object SparkEntry {
     // corpus into a deterministic location (same amortization argument as
     // knn_lsh_indexed)
     "knn_lsh_indexed_oracled" -> ((s, dir) =>
-      Similarity.lshTopKIndexedPortable(s, lshPortableIndexPath(s, dir),
+      Similarity.lshTopKIndexedPortable(s, lshPortableIndex.path(s, dir),
         queryVec(s, dir), k = 20, probeHamming = 2)),
 
     // SemDeDup-style semantic dedup hash-verified end to end: nearest-
@@ -4575,7 +4391,7 @@ object SparkEntry {
     // centers: append must be indistinguishable from a rebuild
     "knn_ivf_append_oracled" -> ((s, dir) =>
       Similarity.IvfIndex(V.portableCentroids(8, 64))
-        .topKStored(s, ivfAppendPath(s, dir), queryVec(s, dir),
+        .topKStored(s, ivfAppend.path(s, dir), queryVec(s, dir),
           k = 20, nProbes = 3)),
 
     // product-quantization ADC top-20 under fixed md5 codebooks: encode
@@ -4593,7 +4409,7 @@ object SparkEntry {
     // Same oracle SQL as knn_pq_oracled: storage must be a pure round
     // trip, so this row pins write → load → probe end to end
     "knn_pq_indexed_oracled" -> ((s, dir) => {
-      val path = pqIndexPath(s, dir)
+      val path = pqIndex.path(s, dir)
       Similarity.pqLoad(s, path)
         .topKIndexed(s, path, queryVec(s, dir), k = 20)
     }),
@@ -4602,7 +4418,7 @@ object SparkEntry {
     // index (frozen codebooks => append ≡ re-encode exactly), probes
     // must match the full-corpus ADC oracle verbatim
     "knn_pq_append_oracled" -> ((s, dir) => {
-      val path = pqAppendPath(s, dir)
+      val path = pqAppend.path(s, dir)
       Similarity.pqLoad(s, path)
         .topKIndexed(s, path, queryVec(s, dir), k = 20)
     }),
@@ -4675,9 +4491,7 @@ object SparkEntry {
     // recovery against an engine that never saw a stream. Built once per
     // corpus (completion-marker-gated), like the stored ANN indexes.
     "stream_replay_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-replay-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("replay", "events")(dir)
       val ev = events(s, dir).select(col("event_id"),
         timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -4690,9 +4504,7 @@ object SparkEntry {
     // the whole table — pinning cross-restart session state, inline
     // gap-close emission, and event-time timeout flushing cross-engine
     "stream_sessions_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-sessreplay-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("sessreplay", "events")(dir)
       val ev = events(s, dir).select(col("event_id"),
         timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -4705,9 +4517,7 @@ object SparkEntry {
     // join — pinning cross-restart join buffers and interval-conditional
     // state eviction cross-engine
     "stream_join_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-joinreplay-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("joinreplay", "events")(dir)
       val ev = events(s, dir).select(col("event_id"),
         timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -4720,9 +4530,7 @@ object SparkEntry {
     // columns — emitted only after the watermark proved no partner can
     // arrive (deferred-null semantic, sentinel-flushed at the tail)
     "stream_join_outer_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-ojoinreplay-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("ojoinreplay", "events")(dir)
       val ev = events(s, dir).select(col("event_id"),
         timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -4734,9 +4542,7 @@ object SparkEntry {
     // FULL OUTER completes the stream-stream join matrix: unmatched rows
     // surface from BOTH sides once their watermark windows close
     "stream_join_full_oracled" -> ((s, dir) => {
-      val work = java.nio.file.Paths.get(
-        fixtureRoot,
-        "graft-fjoinreplay-" + corpusFingerprint(Seq(s"$dir/events.parquet")))
+      val work = fixtureDir("fjoinreplay", "events")(dir)
       val ev = events(s, dir).select(col("event_id"),
         timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -4756,7 +4562,7 @@ object SparkEntry {
 
     "media_quarantine" -> ((s, dir) => {
       // the codec boundary as a ROUTE, not a silent stub: the mixed
-      // corpus (see mediaMixPath — decodable MPNG AVIs and PCM16 WAVs
+      // corpus (see the mediaMix fixture — decodable MPNG AVIs and PCM16 WAVs
       // interleaved with codec-compressed MP4s and mislabeled
       // text-byte "images") flows through the same sniff+decode probes
       // the embedding path dispatches on; exactly the rows whose
@@ -4769,7 +4575,7 @@ object SparkEntry {
       // row leaking in (or clean row leaking out) breaks the hash.
       import s.implicits._
       Media.quarantineUndecodable(
-          s.read.parquet(mediaMixPath(s, dir)).as[Media.MediaFile])
+          s.read.parquet(mediaMix.path(s, dir)).as[Media.MediaFile])
         .orderBy("media_id")
     }),
 
@@ -4810,7 +4616,7 @@ object SparkEntry {
       // buckets/table, sized so each bucket holds many rows at this
       // corpus size (2^planes ≪ rows — the file-count sizing rule at any
       // scale).
-      Similarity.lshTopKIndexed(s, lsh6IndexPath(s, dir), queryVec(s, dir),
+      Similarity.lshTopKIndexed(s, lsh6Index.path(s, dir), queryVec(s, dir),
         k = 20, numPlanes = 6, probeHamming = 2)),
 
     "knn_ivf" -> ((s, dir) => {

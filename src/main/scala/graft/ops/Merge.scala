@@ -6,8 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.core.Schemas
 
 /** Join-based MERGE rewrite (no Delta/Iceberg in this environment, so MERGE
-  * INTO is re-expressed as one full-outer join + per-row resolution +
-  * full-table rewrite — SURVEY.md §2.3 J1).
+  * INTO is re-expressed as joins + per-row resolution — SURVEY.md §2.3 J1).
+  * By default the source is broadcast and the target streamed map-side
+  * ([[upsert]]'s plan shape); `broadcastSource = false` falls back to the
+  * textbook full-outer join. [[upsertChanges]] also returns the CDC of
+  * the merge, from one delta-sized join.
   *
   * Semantics reproduced from the reference's landing merge
   * (`SCD-Configuration Setup.sql:99-119`, `SCD-Automation.sql:57-74`):
@@ -155,7 +158,7 @@ object Merge {
     * images over `compareCols` (default: every non-key column):
     * null-propagating `!=` like Snowflake's, so a NULL on either side
     * makes that disjunct UNKNOWN, or `IS DISTINCT FROM` when `nullSafe`. */
-  private def changedCond(cols: Seq[String], keys: Seq[String],
+  private[ops] def changedCond(cols: Seq[String], keys: Seq[String],
       compareCols: Option[Seq[String]], nullSafe: Boolean)(
       tSide: String, sSide: String): Column =
     compareCols.getOrElse(cols.filterNot(keys.contains))

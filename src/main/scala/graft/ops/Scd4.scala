@@ -2,7 +2,7 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SCD Type 4 — the current + history TABLE PAIR: the dimension itself
@@ -54,12 +54,7 @@ object Scd4 {
     val t = current.alias("__t")
     val d = broadcast(delta).alias("__s")
     val joinCond = keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _)
-    val changed: Column = cols.filterNot(keys.contains)
-      .map { c =>
-        if (nullSafe) !(col(s"__t.$c") <=> col(s"__s.$c"))
-        else col(s"__t.$c") =!= col(s"__s.$c")
-      }
-      .reduceOption(_ || _).getOrElse(lit(false))
+    val changed = Merge.changedCond(cols, keys, None, nullSafe)("__t", "__s")
     val historyAppend = t.join(d, joinCond, "inner")
       .filter(coalesce(changed, lit(false)))
       .select(cols.map(c => col(s"__t.$c").as(c)): _*)

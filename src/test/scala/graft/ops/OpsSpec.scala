@@ -464,6 +464,40 @@ class OpsSpec extends AnyFunSuite with Matchers with SparkSpec {
       Array("Pune", "Ranchi", "Gujarat", "Punjab")
   }
 
+  test("scd4: current and history agree on NULL compare values in both null modes") {
+    // a key's current row changes exactly when history gains its prior
+    // image, whether a NULL makes the change UNKNOWN (Snowflake `!=`, no
+    // update) or distinct (IS DISTINCT FROM, update)
+    val ts = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+    val cur0 = suppliers(
+      (1L, "A101", null, "Delhi"),     // name NULL → value
+      (2L, "A102", "Dhoni", "Ranchi"), // name value → NULL
+      (3L, "A103", null, "Gujarat"),   // name NULL → NULL, state kept
+      (4L, "A104", null, "Punjab"),    // name NULL → NULL, state changed
+      (5L, "A105", "Gill", "Goa"))     // plain change
+    val delta = suppliers(
+      (1L, "A101", "Kohli", "Delhi"),
+      (2L, "A102", null, "Ranchi"),
+      (3L, "A103", null, "Gujarat"),
+      (4L, "A104", null, "Kerala"),
+      (5L, "A105", "Gill", "Pune"))
+    val before = cur0.collect().map(r => r.getString(1) -> r).toMap
+    for ((nullSafe, expected) <- Seq(
+        false -> Set("A104", "A105"),
+        true -> Set("A101", "A102", "A104", "A105"))) {
+      val (cur, hist) = Scd4(cur0, delta, Seq("supplier_code"), ts, nullSafe)
+      val updated = cur.collect()
+        .filter(r => before.get(r.getString(1)).exists(_ != r))
+        .map(_.getString(1)).toSet
+      val prior = hist.drop("superseded_at").collect()
+      withClue(s"nullSafe = $nullSafe: ") {
+        updated shouldBe expected
+        prior.map(_.getString(1)).sorted shouldBe expected.toSeq.sorted
+        prior.foreach(r => r shouldBe before(r.getString(1)))
+      }
+    }
+  }
+
   // ---- Scd3 (Type 3 previous-value columns, Type 6 overlay) ---------------
 
   test("scd3: tracked change moves old value to prev, untracked overwrites, inserts null-prev") {

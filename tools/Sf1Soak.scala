@@ -276,23 +276,18 @@ object Sf1Soak {
     // per-source token-budget prefix cut (one shuffle + per-group sort)
     "graph_scc", "curation_select_budget")
 
-  /** Top-level entries under the build-once fixture root (the same
-    * resolution SparkEntry uses) — fixture dirs are content-fingerprinted
-    * and created whole, so a new entry appearing across a timed run means
-    * that run paid a first build. */
+  /** Top-level entries under SparkEntry's build-once fixture root —
+    * fixture dirs are content-fingerprinted and created whole, so a new
+    * entry appearing across a timed run means that run paid a first
+    * build. */
   private def fixtureEntries(): Set[String] = {
-    val root = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIR",
-        java.nio.file.Paths.get(sys.props("user.dir"), ".fixtures").toString))
-    if (!java.nio.file.Files.isDirectory(root)) Set.empty
-    else {
-      val s = java.nio.file.Files.list(root)
-      try {
-        val b = Set.newBuilder[String]
-        s.forEach(p => b += p.getFileName.toString)
-        b.result()
-      } finally s.close()
-    }
+    val s = java.nio.file.Files.list(
+      java.nio.file.Paths.get(graft.SparkEntry.fixtureRoot))
+    try {
+      val b = Set.newBuilder[String]
+      s.forEach(p => b += p.getFileName.toString)
+      b.result()
+    } finally s.close()
   }
 
   private def bench(spark: SparkSession): (Seq[(String, Double)], Seq[String]) = {
