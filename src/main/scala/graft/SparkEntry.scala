@@ -100,30 +100,6 @@ object SparkEntry {
         lr.rdd.unpersist(false); ()
     }.getOrElse(())
 
-  /** Run independent build chains as overlapping Spark jobs (guide §2.6:
-    * actions are only sequential because driver code calls them
-    * sequentially; a small pool lets the next chain's tasks back-fill
-    * executors freed by the current chain's tail). Used by the one-time
-    * store-fixture builds, whose wall was the SUM of many small
-    * driver-orchestrated jobs; with overlap it is the longest chain.
-    * Commits stay safe: [[graft.core.TableStore.commit]] merges the
-    * manifest under an exclusive lock, and every chain touches its own
-    * table(s). Exceptions propagate (first failure rethrown) so a broken
-    * build stays loud. */
-  private def runOverlapped(chains: Seq[() => Unit]): Unit = {
-    if (chains.size <= 1) { chains.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
-    try {
-      val futures = chains.map(c => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = c()
-      }))
-      futures.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
-
   /** Run the real operator chain for two batches, faithful mode. */
   private def scd2After2(s: SparkSession, dir: String): DataFrame = {
     val l1 = cycleBarrier(b1(s, dir))
@@ -508,8 +484,9 @@ object SparkEntry {
       "orders", Nil)((s, dir, path) => {
     val store = new graft.core.TableStore(path.toString, s)
     // the four tables are independent build chains — overlapped
-    // (guide §2.6, [[runOverlapped]]); each chain keeps its own gates so
-    // crash-resume converges per table exactly as before
+    // ([[graft.core.Overlap]]; each commit merges the manifest under the
+    // store's lock); each chain keeps its own gates so crash-resume
+    // converges per table exactly as before
     val ordersChain = () => if (!store.exists("orders")) {
       val o = s.read.parquet(s"$dir/orders.parquet")
       // 4 Mibit blooms: at the sf10 soak's ~1M rows/file the default
@@ -576,7 +553,7 @@ object SparkEntry {
           .drop("__z"),
         statsCols = Seq("o_orderdate", "o_custkey"))))
     }
-    runOverlapped(Seq(ordersChain, historyChain, restoreChain, zChain))
+    graft.core.Overlap.run(Seq(ordersChain, historyChain, restoreChain, zChain))
   })
 
   /** The merge-on-read / metadata-aggregate store: four tables built
@@ -672,7 +649,7 @@ object SparkEntry {
       store.upsertMoR("orders_merge", upd.unionByName(ins), Seq("o_orderkey"))
       ()
     }
-    runOverlapped(Seq(statsChain, morChain, purgeChain, mergeChain))
+    graft.core.Overlap.run(Seq(statsChain, morChain, purgeChain, mergeChain))
     clustered.foreach(releaseBarrier)
   })
 
@@ -767,7 +744,7 @@ object SparkEntry {
     * the FIRST snapshot plus the CDC delta (diff of the two largeDim
     * snapshots) as it would arrive from the stream. The two writes are
     * independent given the checkpointed base, so they overlap
-    * ([[runOverlapped]]); reuse is gated on BOTH `_SUCCESS` markers (the
+    * ([[graft.core.Overlap]]); reuse is gated on BOTH `_SUCCESS` markers (the
     * writes race, so neither is "last"), and both writes are
     * mode(overwrite), so a partial build converges on the next access
     * instead of being mistaken for a finished one. */
@@ -775,7 +752,7 @@ object SparkEntry {
       Seq("_mv/_SUCCESS", "_delta/_SUCCESS"))((s, dir, path) => {
     val (b1, b2) = largeDim(s, dir)
     val merged = Merge.upsert(b1, b2, Seq("dim_id"))
-    runOverlapped(Seq(
+    graft.core.Overlap.run(Seq(
       () => graft.ops.IncrementalAgg
         .fullAggregate(b1, Seq("flag"), Seq("qty", "price"))
         .coalesce(1)

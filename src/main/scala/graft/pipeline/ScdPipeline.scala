@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Schemas, TableStore}
+import graft.core.{Overlap, Schemas, TableStore}
 import graft.ops.{Merge, Scd2}
 import graft.sources.Stage
 
@@ -26,9 +26,22 @@ import graft.sources.Stage
   * plus a run-log append (our TASK_HISTORY, `SCD-Automation.sql:116,147`).
   * Task 5 writes nothing: [[master]] is a pruned read of staging.
   *
-  * The driver program '''is''' the DAG (SURVEY.md §2.7 W3): the five tasks
-  * are sequential statements here; Snowflake's AFTER-chaining is Scala
-  * statement order. Cron scheduling lives in [[ScdStream]]. The
+  * The driver program '''is''' the DAG (SURVEY.md §2.7 W3). Snowflake
+  * orders the tasks by AFTER edges; here each Spark action waits only for
+  * the data it reads, and independent actions overlap as concurrent jobs
+  * on one small per-call driver pool ([[graft.core.Overlap]]):
+  * {{{
+  *   ledger check -> raw write -+-> duplicate verdict --+-> landing write  -+
+  *                              |   (KeepOne: count)    |   staging write   |
+  *                              +-> CDC checkpoint -----+   each MV write   +-> commit
+  *                                  (task3's join)          run-log write   |
+  *                                                          ledger write   -+
+  * }}}
+  * The verdict and the CDC both read only the raw version; the five kinds
+  * of write read the CDC (landing, staging, the MVs), the verdict's row
+  * count (run log) or nothing of either (ledger). The writes start only
+  * once the verdict passes, so a poisoned batch stages no version beyond
+  * raw. Cron scheduling lives in [[ScdStream]]. The
   * reference's resume-children-before-root ordering
   * (`SCD-Automation.sql:108-114`) collapses into `ScdStream.start()`: with
   * the five tasks expressed as one driver function there is no window in
@@ -73,29 +86,33 @@ class ScdPipeline(
 
   private val stagingSchema = Schemas.scd2(config.baseSchema)
 
-  /** The loaded batch's row count, and the batch with
-    * [[ScdConfig.duplicatePolicy]] enforced. Under `Error` one aggregation
-    * (rows per business key, summed and maxed) gives both the count and
-    * the duplicate verdict; the offenders are collected only when it
-    * fails. `KeepOne` needs no verdict, so its count is a plain one. */
-  private def load(raw: DataFrame): (Long, DataFrame) =
+  /** The batch with [[ScdConfig.duplicatePolicy]] enforced (a lazy
+    * frame), and the action that returns the loaded batch's row count.
+    * Under `Error` the action's one aggregation (rows per business key,
+    * summed and maxed) gives both the count and the duplicate verdict; the
+    * offenders are collected only when it fails. `KeepOne` needs no
+    * verdict, so its count is a plain one. The frame does not depend on
+    * the action, so the cycle runs the two side by side. */
+  private def load(raw: DataFrame): (DataFrame, () => Long) =
     config.duplicatePolicy match {
       case DuplicatePolicy.Error =>
-        val perKey = raw.groupBy(config.businessKeys.map(col): _*).count()
-        val verdict = perKey.agg(sum("count"), max("count")).head()
-        if (!verdict.isNullAt(1) && verdict.getLong(1) > 1) {
-          val dups = perKey.filter(col("count") > 1).limit(5).collect()
-          throw new IllegalArgumentException(
-            "duplicate business keys in one batch (nondeterministic MERGE, " +
-              s"Snowflake would raise too); first offenders: ${dups.mkString(", ")}. " +
-              "Set ScdConfig.duplicatePolicy = DuplicatePolicy.KeepOne to dedupe.")
-        }
-        (if (verdict.isNullAt(0)) 0L else verdict.getLong(0), raw)
+        (raw, () => {
+          val perKey = raw.groupBy(config.businessKeys.map(col): _*).count()
+          val verdict = perKey.agg(sum("count"), max("count")).head()
+          if (!verdict.isNullAt(1) && verdict.getLong(1) > 1) {
+            val dups = perKey.filter(col("count") > 1).limit(5).collect()
+            throw new IllegalArgumentException(
+              "duplicate business keys in one batch (nondeterministic MERGE, " +
+                s"Snowflake would raise too); first offenders: ${dups.mkString(", ")}. " +
+                "Set ScdConfig.duplicatePolicy = DuplicatePolicy.KeepOne to dedupe.")
+          }
+          if (verdict.isNullAt(0)) 0L else verdict.getLong(0)
+        })
       case DuplicatePolicy.KeepOne =>
         val cols = raw.columns.toSeq
-        (raw.count(), raw.groupBy(config.businessKeys.map(col): _*)
+        (raw.groupBy(config.businessKeys.map(col): _*)
           .agg(min(struct(cols.map(col): _*)).as("__row"))
-          .select(cols.map(c => col(s"__row.$c").as(c)): _*))
+          .select(cols.map(c => col(s"__row.$c").as(c)): _*), () => raw.count())
     }
 
   /** `table` at the version `pin` maps it to, or empty when unmapped. */
@@ -195,7 +212,11 @@ class ScdPipeline(
         lit(new Timestamp(System.currentTimeMillis())).as("completed_time"),
         lit(status).as("status")))
 
-  /** One cycle against `pin`, the manifest read at its start. */
+  /** One cycle against `pin`, the manifest read at its start: the
+    * class doc's DAG, run as two overlapped phases between the raw write
+    * and the commit. Whatever fails, every job the cycle started has
+    * returned before the checkpoint is released and the failure recorded,
+    * and the original exception is rethrown. */
   private def cycle(pin: Map[String, String], rawBatch: DataFrame,
       batchTime: Timestamp, afterCommit: () => Unit,
       loadedFiles: Seq[String]): Long = try {
@@ -208,64 +229,69 @@ class ScdPipeline(
     // files can be purged after commit and downstream reads are from
     // parquet, not the half-typed CSV path.
     val rawVersion = store.stage(Raw, rawBatch)
-    val (rowsLoaded, raw) =
+    val (raw, countRows) =
       load(store.readVersion(Raw, rawVersion, config.baseSchema))
 
-    // task3: MERGE raw → landing (J1), null-propagating change detection.
-    // Its join also yields the stream on landing since the offset (the
-    // landing version the cycle started from): the rows this merge changes.
-    val changes = Merge.upsertChanges(landingPrev, raw, config.businessKeys,
-      compareCols = config.compareCols)
+    // phase A: the duplicate verdict (KeepOne: the count) beside task3's
+    // MERGE raw → landing (J1), null-propagating change detection, whose
+    // join yields the stream on landing since the offset (the landing
+    // version the cycle started from): the rows this merge changes,
+    // checkpointed. Neither reads the other; both read the raw version.
+    var rowsLoaded = 0L
+    var changes: Merge.Changes = null
     try {
+      Overlap.run(Seq(
+        () => rowsLoaded = countRows(),
+        () => changes = Merge.upsertChanges(landingPrev, raw,
+          config.businessKeys, compareCols = config.compareCols)))
       val cdc = changes.cdc
-      val landingVersion = store.stage(Landing, changes.next)
 
-      // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
-      // Partitioned by current_flag: master (and most readers) touch only
-      // the pruned 'Y' partition, never the closed history.
-      val stagingNext = Scd2.merge(stagingPrev, cdc, batchTime,
-        matchKeys = config.matchKeys, faithful = faithful)
-      val stagingVersion = store.stage(Staging, stagingNext,
-        partitionBy = Seq("current_flag"))
-
-      // registered materialized aggregates: refreshed by signed application
-      // of the SAME consumed delta (IncrementalAgg) and committed in the
-      // SAME manifest swap — the MV, the staging history, and the stream
-      // offset can never disagree, and each refresh costs the delta plus
-      // the group domain, never a landing rescan
-      val mvUpdates = config.aggregates.map { mv =>
-        val tbl = mvTable(mv)
-        val prev = readAt(pin, tbl, mvSchema(mv))
-        tbl -> store.stage(tbl,
-          graft.ops.IncrementalAgg.applyCdc(prev, cdc, mv.keys, mv.measures))
-      }.toMap
-
-      // run-log append (TASK_HISTORY stand-in)
-      val logVersion = store.stage(RunLog, logAppend(
-        readAt(pin, RunLog, Schemas.runLog), batchTime, rowsLoaded, "SUCCEEDED"))
-
-      // COPY load-history ledger: the newly loaded file names join the same
-      // commit, so "loaded" and "visible in the tables" are one atomic fact
-      val ledgerUpdate =
-        if (loadedFiles.isEmpty) Map.empty[String, String]
-        else {
-          val prevLedger = readAt(pin, LoadHistory, Schemas.loadHistory)
+      // phase B, only once the verdict passed: every table version the
+      // commit swaps in, staged concurrently. Staging, the longest write,
+      // is listed first (the FIFO scheduler serves the earliest job first).
+      val staged = Overlap.run(Seq[() => (String, String)](
+        // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
+        // Partitioned by current_flag: master (and most readers) touch
+        // only the pruned 'Y' partition, never the closed history.
+        () => Staging -> store.stage(Staging,
+          Scd2.merge(stagingPrev, cdc, batchTime,
+            matchKeys = config.matchKeys, faithful = faithful),
+          partitionBy = Seq("current_flag")),
+        // task3's write: landing minus the changed keys plus their images
+        () => Landing -> store.stage(Landing, changes.next),
+        // run-log append (TASK_HISTORY stand-in)
+        () => RunLog -> store.stage(RunLog, logAppend(
+          readAt(pin, RunLog, Schemas.runLog), batchTime, rowsLoaded, "SUCCEEDED"))
+      ) ++
+        // registered materialized aggregates: refreshed by signed
+        // application of the SAME consumed delta (IncrementalAgg) and
+        // committed in the SAME manifest swap — the MV, the staging
+        // history, and the stream offset can never disagree, and each
+        // refresh costs the delta plus the group domain, never a landing
+        // rescan
+        config.aggregates.map { mv => () =>
+          val tbl = mvTable(mv)
+          tbl -> store.stage(tbl, graft.ops.IncrementalAgg.applyCdc(
+            readAt(pin, tbl, mvSchema(mv)), cdc, mv.keys, mv.measures))
+        } ++
+        // COPY load-history ledger: the newly loaded file names join the
+        // same commit, so "loaded" and "visible in the tables" are one
+        // atomic fact
+        Option.when(loadedFiles.nonEmpty) { () =>
           val rows = spark.createDataFrame(
             loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
             Schemas.loadHistory)
-          Map(LoadHistory -> store.stage(LoadHistory, prevLedger.unionByName(rows)))
-        }
+          LoadHistory -> store.stage(LoadHistory,
+            readAt(pin, LoadHistory, Schemas.loadHistory).unionByName(rows))
+        }).toMap
 
       // ---- the atomic multi-table commit: committing landing advances the
       // stream; every table the cycle read must still be at `pin` ---------
-      val readTables = Seq(Landing, Staging, RunLog, LoadHistory) ++ mvUpdates.keys
-      store.commit(Map(
-          Raw -> rawVersion,
-          Landing -> landingVersion,
-          Staging -> stagingVersion,
-          RunLog -> logVersion) ++ ledgerUpdate ++ mvUpdates,
+      val readTables =
+        Seq(Landing, Staging, RunLog, LoadHistory) ++ config.aggregates.map(mvTable)
+      store.commit(staged + (Raw -> rawVersion),
         expect = readTables.map(t => t -> pin.get(t)).toMap)
-    } finally changes.release()
+    } finally if (changes != null) changes.release()
 
     afterCommit()
     rowsLoaded

@@ -27,6 +27,14 @@ import graft.sources.Stage
   * cycle rewrites its tables — a replayed batch re-merges rows that are
   * already present, which the upsert + SCD2 anti-join absorb idempotently
   * when values are unchanged.
+  *
+  * The cycle's overlapped writes run on threads it creates inside the
+  * foreachBatch call ([[graft.core.Overlap]]), so they inherit the
+  * micro-batch's job group and SQL execution, as the batch's own thread's
+  * jobs do, and end before the call returns. `StreamingQuery.stop()`
+  * therefore cancels their jobs with the batch's, and its interrupt is
+  * passed on to them; the micro-batch fails only after every write has
+  * returned, with nothing committed.
   */
 object ScdStream {
 
