@@ -1,30 +1,87 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.graftbridge.Bridge
+
 object Bench {
+
+  /** Where one timed run's time went: its jobs and completed stages, the
+    * stages' summed task time, shuffle and spill bytes, and the stage
+    * with the longest wall time (submission to completion). */
+  private[graft] final case class RunProfile(jobs: Int, stages: Int,
+      taskMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+      spillBytes: Long, widestStage: String, widestStageMs: Long) {
+    def json: String =
+      s""""jobs":$jobs,"stages":$stages,"task_ms":$taskMs,""" +
+        s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
+        s""""spill_bytes":$spillBytes,"widest_stage":${jsonString(widestStage)},""" +
+        s""""widest_stage_ms":$widestStageMs"""
+  }
+
+  /** Collects the jobs and completed stages of every run between `reset`
+    * and `snapshot`. Both drain the listener bus first: events reach a
+    * listener after the action that caused them has returned, so without
+    * the drain a run would lose its last stages to the next run. */
+  private[graft] final class RowProfiler(sc: SparkContext) extends SparkListener {
+    private var jobs = 0
+    private val stages = mutable.ArrayBuffer[StageInfo]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += e.stageInfo }
+
+    def reset(): Unit = {
+      Bridge.drainListenerBus(sc)
+      synchronized { jobs = 0; stages.clear() }
+    }
+
+    /** A stage's name: the plan operators its RDDs were built under, in
+      * RDD order. `StageInfo.name` is the call site, and under AQE every
+      * stage is submitted from the same pool thread, so it names none. */
+    private def operators(s: StageInfo): String = {
+      val ops = s.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
+      if (ops.isEmpty) s.name else ops.mkString(" > ")
+    }
+
+    def snapshot(): RunProfile = {
+      Bridge.drainListenerBus(sc)
+      synchronized {
+        def wallMs(s: StageInfo): Long =
+          (for (a <- s.submissionTime; b <- s.completionTime) yield b - a)
+            .getOrElse(0L)
+        val m = stages.toSeq.flatMap(s => Option(s.taskMetrics))
+        val widest = stages.maxByOption(wallMs)
+        RunProfile(jobs, stages.size, m.map(_.executorRunTime).sum,
+          m.map(_.shuffleReadMetrics.totalBytesRead).sum,
+          m.map(_.shuffleWriteMetrics.bytesWritten).sum,
+          m.map(t => t.memoryBytesSpilled + t.diskBytesSpilled).sum,
+          widest.fold("")(operators), widest.fold(0L)(wallMs))
+      }
+    }
+  }
+
+  /** A JSON string literal: backslash, quote and every control char
+    * below 0x20 escaped. A raw \f or \b in an exception message, or a tab
+    * in oracle SQL, would otherwise make the artifact unparseable. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private final case class Run(secs: Double, ok: Boolean, profile: RunProfile)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's coalescing floor is byte-based (default 1 MB) and blind to
-      // CPU cost per byte: the engine's array/edit-distance/decode stages
-      // push only a few MB through their exchanges but carry seconds of
-      // compute, and the 1 MB floor was coalescing them to 2-6 tasks on a
-      // 32-core session (measured: linkage_fuzzy2_pairs 4.9 → 3.4 s,
-      // dedup_jaccard_prefix 7.6 → 4.6 s at 64k). Scale-neutral: with
-      // AQE's parallelism-first rule the floor only decides partition
-      // counts for SMALL shuffles — a 100 TB exchange sizes partitions by
-      // total bytes / parallelism, far above any floor. Env-overridable
-      // for A/B (SPARK_GRAFT_AQE_MIN_PARTITION).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // JVM/codegen warmup so the first timed query doesn't absorb startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     // min of three runs per query: local[N] timings are noisy (GC, page
@@ -45,7 +102,24 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val errors = scala.collection.mutable.Map[String, String]()
+    val errors = mutable.Map[String, String]()
+    val profiler = new RowProfiler(spark.sparkContext)
+    spark.sparkContext.addSparkListener(profiler)
+    // a failure is recorded, never swallowed: a silently-failing query
+    // would otherwise bench as a suspiciously-fast near-zero time
+    def timed(name: String)(body: => Unit): Run = {
+      profiler.reset()
+      val t0 = System.nanoTime()
+      val ok =
+        try { body; true }
+        catch { case e: Throwable =>
+          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          System.err.println(s"[bench] $name FAILED: ${errors(name)}")
+          false
+        }
+      val secs = (System.nanoTime() - t0) / 1e9
+      Run(secs, ok, profiler.snapshot())
+    }
     // Stored-index BUILD/PROBE separation: each index is deleted and
     // cold-built ONCE here, timed as its own `<index>_build` row, so
     // the regular indexed-query rows below time pure probes — without
@@ -69,45 +143,22 @@ object Bench {
         else {
           if (!surf.persistAcrossBenches)
             graft.core.Fs.deleteRecursively(surf.loc(sfDir))
-          val t0 = System.nanoTime()
-          val ok =
-            try { surf.ensure(spark, sfDir); true }
-            catch { case e: Throwable =>
-              errors(n + "_build") =
-                Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-              System.err.println(s"[bench] ${n}_build FAILED: ${errors(n + "_build")}")
-              false
-            }
-          Some((n + "_build") -> Seq(((System.nanoTime() - t0) / 1e9, ok)))
+          Some((n + "_build") -> Seq(timed(n + "_build")(surf.ensure(spark, sfDir))))
         }
       }
     val queryRuns = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
-      // a failure is recorded, never swallowed: a silently-failing query
-      // would otherwise bench as a suspiciously-fast near-zero time
-      def once(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-            System.err.println(s"[bench] $name FAILED: ${errors(name)}")
-            false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
+        name -> Seq.fill(nRuns)(timed(name)(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
       }
-      name -> Seq.fill(nRuns)(once())
-    }
     val runs = buildRuns ++ queryRuns
     def r(d: Double): Double = math.rint(d * 10000) / 10000
     // min over SUCCESSFUL runs only — a fast failure must not masquerade
     // as the query's reproducible cost; all-failed → -1 (clearly invalid)
     // and excluded from the total
     val results = runs.map { case (k, v) =>
-      val ok = v.collect { case (t, true) => t }
+      val ok = v.filter(_.ok).map(_.secs)
       k -> (if (ok.nonEmpty) r(ok.min) else -1.0)
     }
     // stdout map carries only queries with a successful run, so the
@@ -117,26 +168,17 @@ object Bench {
     val qs = results.collect { case (k, v) if v >= 0 => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = r(results.map(_._2).filter(_ >= 0).sum)
-    // full JSON string escape (same contract as Verify's q()): every
-    // control char < 0x20 — a raw \f or \b in an exception message would
-    // make the artifact unparseable exactly in the failure case it
-    // exists to record
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     // Self-written artifact with the FULL per-query map: stdout capture
     // truncates (a past round lost the head of the map and made
-    // regression adjudication manual), so the bench reports itself.
+    // regression adjudication manual), so the bench reports itself. The
+    // fastest successful run also records where its time went.
     val detail = runs.map { case (k, v) =>
-      val times = v.map(_._1)
-      val sortedOk = v.collect { case (t, true) => t }.sorted
-      val err = errors.get(k).map(m => s""","err":"${esc(m)}"""").getOrElse("")
-      val minOk = if (sortedOk.nonEmpty) r(sortedOk.head) else -1.0
-      val medOk = if (sortedOk.nonEmpty) r(sortedOk(sortedOk.size / 2)) else -1.0
-      s"""    "$k":{"runs":[${times.map(r).mkString(",")}],"min":$minOk,"median":$medOk$err}"""
+      val sortedOk = v.filter(_.ok).sortBy(_.secs)
+      val err = errors.get(k).map(m => s""","err":${jsonString(m)}""").getOrElse("")
+      val minOk = if (sortedOk.nonEmpty) r(sortedOk.head.secs) else -1.0
+      val medOk = if (sortedOk.nonEmpty) r(sortedOk(sortedOk.size / 2).secs) else -1.0
+      val prof = sortedOk.headOption.fold("")("," + _.profile.json)
+      s"""    "$k":{"runs":[${v.map(x => r(x.secs)).mkString(",")}],"min":$minOk,"median":$medOk$prof$err}"""
     }.mkString("{\n", ",\n", "\n  }")
     val json =
       s"""{
@@ -161,7 +203,7 @@ object Bench {
     // the stdout line stays flat (the driver's parse contract); "detail"
     // points at the self-written artifact carrying per-run times, medians,
     // and errors, so no consumer ever needs to tail-parse stdout
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","detail":"${esc(out.toString)}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","detail":${jsonString(out.toString)}}""")
     spark.stop()
   }
 }

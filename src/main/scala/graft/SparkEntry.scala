@@ -91,15 +91,6 @@ object SparkEntry {
   private def cycleBarrier(df: DataFrame): DataFrame =
     df.localCheckpoint(true)
 
-  /** Deterministically free an eager `localCheckpoint`'s blocks (the
-    * [[graft.operators.Dedup.releaseCheckpoint]] discipline — the
-    * ContextCleaner would only reclaim after GC). */
-  private def releaseBarrier(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-    }.getOrElse(())
-
   /** Run the real operator chain for two batches, faithful mode. */
   private def scd2After2(s: SparkSession, dir: String): DataFrame = {
     val l1 = cycleBarrier(b1(s, dir))
@@ -650,7 +641,7 @@ object SparkEntry {
       ()
     }
     graft.core.Overlap.run(Seq(statsChain, morChain, purgeChain, mergeChain))
-    clustered.foreach(releaseBarrier)
+    clustered.foreach(Dedup.releaseCheckpoint)
   })
 
   /** Streaming-MERGE replay (StoreStream.upsertReplay): `orders` seeded

@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Catalyst Expression bridge.
+/** Bridge to the `private[spark]` members the engine needs.
   *
   * Spark 4 moved the Column↔Expression conversions behind
   * `private[sql] org.apache.spark.sql.classic.ExpressionUtils`; extension
@@ -15,4 +16,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Waits until every event already posted to the listener bus has been
+    * delivered, so a listener has seen every job that ran before the
+    * call. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

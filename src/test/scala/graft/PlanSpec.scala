@@ -434,7 +434,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     try {
       stage.putContent("b2.csv", "2,A102,Two,S9\n4,A104,Four,S4")
       pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     } finally {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

@@ -1,27 +1,30 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
-/** Shared local SparkSession for all specs. */
+/** Shared local SparkSession for all specs; temp dirs handed out by
+  * `tmpDir` are deleted when the suite ends. */
 trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkSpec.session
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new ConcurrentLinkedQueue[String]
+
+  def tmpDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    tmpDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => graft.core.Fs.deleteRecursively(Paths.get(d)))
+    finally super.afterAll()
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Session.local(4)
 }

@@ -1042,7 +1042,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val path = java.nio.file.Files.createTempDirectory("pq-idx").toString
+    val path = tmpDir("pq-idx")
 
     val pq = Similarity.pqPortable()
     pq.write(e, path)
@@ -1067,8 +1067,8 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val full = java.nio.file.Files.createTempDirectory("pq-full").toString
-    val inc = java.nio.file.Files.createTempDirectory("pq-inc").toString
+    val full = tmpDir("pq-full")
+    val inc = tmpDir("pq-inc")
     val pq = Similarity.pqPortable()
     pq.write(e, full)
     pq.write(e.filter(col("vec_id") <= 250), inc)
@@ -1105,7 +1105,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     top.head._1 shouldBe 0L
 
     // stored: cell-partitioned codes probe returns exactly the scan path
-    val path = java.nio.file.Files.createTempDirectory("ivfpq-idx").toString
+    val path = tmpDir("ivfpq-idx")
     ivfpq.write(e, path)
     val stored = ivfpq.topKStored(spark, path, q, k = 20, nProbes = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -1847,7 +1847,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       (2L, "table scan table scan"),     // 2 occurrences
       (3L, "scan table"),                // reversed — no match
       (4L, "a a a"))                     // overlapping self-phrase
-    val path = java.nio.file.Files.createTempDirectory("posidx").toString
+    val path = tmpDir("posidx")
     graft.operators.Keywords.writePositionalIndex(d, path)
     val hits = graft.operators.Keywords.phraseSearch(
         spark, path, Seq("table", "scan"))
@@ -2106,7 +2106,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     (filtered.getLong(1), filtered.getDouble(2)) shouldBe ((400L, 0.0))
     // stored-baseline round trip is pure: persisting the base histogram
     // and comparing against the read-back rows yields the identical TVD
-    val path = java.nio.file.Files.createTempDirectory("driftbase").toString
+    val path = tmpDir("driftbase")
     graft.operators.Drift.embeddingHistogram(base, dim = 16)
       .write.mode("overwrite").parquet(path)
     val stored = graft.operators.Drift.tvdEmbeddingHistograms(
@@ -2208,7 +2208,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toDF("k", "part")
     val parts = d.groupBy("part").agg(hll_sketch_agg(col("k")).as("sk"))
     // sketch table survives a parquet round trip (the stored layout)
-    val path = java.nio.file.Files.createTempDirectory("hll").toString
+    val path = tmpDir("hll")
     parts.write.mode("overwrite").parquet(path)
     val merged = spark.read.parquet(path)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
@@ -2249,7 +2249,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     // TVD against the second half must reproduce the single-pass rows
     // bit-for-bit (storage is a pure round trip)
     val mid = java.sql.Date.valueOf("2024-03-07")
-    val path = java.nio.file.Files.createTempDirectory("drift").toString
+    val path = tmpDir("drift")
     graft.operators.Drift.histogram(
         rows.filter(col("day") <= mid), "g", "v", 50.0, 10)
       .write.mode("overwrite").parquet(path)
@@ -2274,7 +2274,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toDF("v", "part")
     val parts = d.groupBy("part").agg(kllAgg(col("v")).as("sk"))
     // sketch table survives a parquet round trip (the stored layout)
-    val path = java.nio.file.Files.createTempDirectory("kll").toString
+    val path = tmpDir("kll")
     parts.write.mode("overwrite").parquet(path)
     val merged = spark.read.parquet(path)
       .agg(kllUnionAgg(col("sk")).as("sk"))
@@ -2313,7 +2313,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       (item, i % 10)
     }.toDF("item", "part")
     val parts = d.groupBy("part").agg(freqAgg(col("item"), 32).as("sk"))
-    val path = java.nio.file.Files.createTempDirectory("freq").toString
+    val path = tmpDir("freq")
     parts.write.mode("overwrite").parquet(path)
     val sk = spark.read.parquet(path)
       .agg(freqUnionAgg(col("sk"), 32).as("sk"))
@@ -2360,7 +2360,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     learned should contain("low")
     pieces should contain("low")
     // the stored tokenizer model round-trips: write merges, load, same rules
-    val path = java.nio.file.Files.createTempDirectory("merges").toString
+    val path = tmpDir("merges")
     graft.operators.Vocab.writeMerges(
       graft.operators.Vocab.bpeMerges(corpus, nMerges = 3), path)
     graft.operators.Vocab.loadMerges(spark, path) shouldBe merges

@@ -78,7 +78,7 @@ class KeywordsSpec extends AnyFunSuite with Matchers with SparkSpec {
       3L -> "join and window",
       4L -> "spark join",
       5L -> "nothing relevant")
-    val dir = java.nio.file.Files.createTempDirectory("invidx").toString
+    val dir = tmpDir("invidx")
     Keywords.writeInvertedIndex(d, dir, nBuckets = 16)
 
     // driver twin == executor column for every indexed term
@@ -109,7 +109,7 @@ class KeywordsSpec extends AnyFunSuite with Matchers with SparkSpec {
       3L -> "join window join",
       4L -> "spark join",
       5L -> "nothing relevant here")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tmpDir("bm25idx")
     Keywords.writeInvertedIndex(d, dir, nBuckets = 16)
 
     // _stats sidecar records exact corpus totals and stays invisible to
@@ -140,8 +140,8 @@ class KeywordsSpec extends AnyFunSuite with Matchers with SparkSpec {
       4L -> "spark join",
       5L -> "nothing relevant here",
       6L -> "window join spark window")
-    val full = java.nio.file.Files.createTempDirectory("bm25full").toString
-    val inc = java.nio.file.Files.createTempDirectory("bm25inc").toString
+    val full = tmpDir("bm25full")
+    val inc = tmpDir("bm25inc")
     Keywords.writeInvertedIndex(all, full, nBuckets = 16)
     Keywords.writeInvertedIndex(all.filter(col("doc_id") <= 3), inc, nBuckets = 16)
     Keywords.appendToInvertedIndex(all.filter(col("doc_id") > 3), inc)
@@ -181,8 +181,8 @@ class KeywordsSpec extends AnyFunSuite with Matchers with SparkSpec {
       3L -> "table scan table scan table scan",
       4L -> "unrelated words only",
       5L -> "the table scan returns")
-    val full = java.nio.file.Files.createTempDirectory("posfull").toString
-    val inc = java.nio.file.Files.createTempDirectory("posinc").toString
+    val full = tmpDir("posfull")
+    val inc = tmpDir("posinc")
     Keywords.writePositionalIndex(all, full, nBuckets = 16)
     Keywords.writePositionalIndex(all.filter(col("doc_id") <= 2), inc, nBuckets = 16)
     Keywords.appendToPositionalIndex(all.filter(col("doc_id") > 2), inc)
@@ -209,7 +209,7 @@ class KeywordsSpec extends AnyFunSuite with Matchers with SparkSpec {
       3L -> "q q q",       // scored only: all-OOV
       5L -> "c a b")       // scored only: in-distribution
     val model = corpus.filter(col("doc_id") % 2 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ngram").toString
+    val dir = tmpDir("ngram")
     Keywords.writeNgramModel(model, dir)
     // stats sidecar holds the exact model token total (5 + 4 + 3)
     spark.read.parquet(s"$dir/_stats").head().getAs[Long]("n_total") shouldBe 12L

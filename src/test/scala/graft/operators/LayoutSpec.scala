@@ -40,7 +40,7 @@ class LayoutSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   test("z-clustered layout prunes file stats in BOTH dimensions; " +
       "single-key sort prunes only its own") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout")
+    val dir = tmpDir("graft-layout")
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     val nFiles = 32
 

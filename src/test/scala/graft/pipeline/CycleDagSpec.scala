@@ -128,7 +128,7 @@ class CycleDagSpec extends AnyFunSuite with Matchers with SparkSpec {
     val e = intercept[RuntimeException](pipeline.runCycle(stage, t2))
     // the status tracker lags the scheduler by the listener bus: drain it,
     // so a job still listed is one that is really running
-    org.apache.spark.ListenerBusDrain(sc)
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
     sc.statusTracker.getActiveJobIds() shouldBe empty
     e shouldBe theSameInstanceAs(injected)
     store.landingStaged shouldBe true

@@ -85,7 +85,7 @@ class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSpec {
       (6L, ts(50), 9L, "view", 1.0),
       (7L, Timestamp.valueOf("2024-01-01 02:35:00"), 3L, "purchase", 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val work = java.nio.file.Files.createTempDirectory("ijoin").toString
+    val work = tmpDir("ijoin")
     val out = Replay.intervalJoinReplay(spark, ev, work, nBatches = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     // ntile(2) over 7 time-ordered rows → slice 1 = events 1-4, slice 2 =
@@ -105,7 +105,7 @@ class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSpec {
       (6L, ts(50), 9L, "view", 1.0),
       (7L, Timestamp.valueOf("2024-01-01 02:35:00"), 3L, "purchase", 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val work = java.nio.file.Files.createTempDirectory("ojoin").toString
+    val work = tmpDir("ojoin")
     val out = Replay.intervalJoinReplay(spark, ev, work, nBatches = 2,
         joinType = "leftOuter")
       .collect()
@@ -171,7 +171,7 @@ class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSpec {
     import s.implicits._
     val n = 3000
     val rows = (1 to n).map(i => (i.toLong, s"u${i % 50}")).toDF("id", "item")
-    val work = java.nio.file.Files.createTempDirectory("stopk").toString
+    val work = tmpDir("stopk")
     val sk = graft.streaming.Replay.topkSketchReplay(s, rows, work,
       nBatches = 3, maxMapSize = 64)
     val row = sk.select(freqStreamLength(col("sk")).as("n"),
@@ -205,7 +205,7 @@ class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSpec {
     val rows = (1 to 600).map { i =>
       (i.toLong, s"g${i % 3}", ((i * 7919) % 100).toLong, i / 3.0)
     }.toDF("id", "grp", "ts", "v")
-    val work = java.nio.file.Files.createTempDirectory("sohlc").toString
+    val work = tmpDir("sohlc")
     val streamed = graft.streaming.Replay.ohlcReplay(s, rows, work,
         bucketWidth = 10L, nBatches = 3)
       .select(col("grp"), col("bucket"), col("open"), col("high"),
@@ -243,7 +243,7 @@ class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSpec {
         (94L, "gx", 5.0)))
       .toDF("id", "grp", "v")
     val fences = graft.operators.Quality.madFences(baseline, "grp", "v")
-    val work = java.nio.file.Files.createTempDirectory("sanom").toString
+    val work = tmpDir("sanom")
     val streamed = graft.streaming.Replay.madMonitorReplay(
         s, fences, stream, "grp", "v", k = 5, work, nBatches = 3)
       .orderBy("grp").collect()

@@ -1,4 +1,3 @@
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Iterative-graph-operator scale measurement: `GraphScale [n] [mode]`
@@ -34,13 +33,7 @@ object GraphScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val mode = if (args.length > 1) args(1) else "cc"
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[graph-scale] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -1,6 +1,3 @@
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** A/B for the prefix-filtered exact-Jaccard join: `PrefixJoinAb [sfDir]`
   * (default sf0.1) times `Dedup.ngramJaccardPairs` (all-pairs) vs
   * `Dedup.jaccardPrefixPairs` (prefix-filtered) over the FULL documents
@@ -10,16 +7,7 @@ import org.apache.spark.sql.functions._
 object PrefixJoinAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("prefix-join-ab")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").cache()
     val n = docs.count()

@@ -47,15 +47,7 @@ object Sf1Soak {
     if (args.length > 0) Copies = args(0).toInt
     Label = if (args.length > 1) args(1) else s"sf${Copies / 10}"
     if (Copies > 30) BenchRuns = 1
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
 
     generate(spark)
     val (times, firstBuilds) = bench(spark)
@@ -485,36 +477,39 @@ object Sf1Soak {
     //    only the batch shuffles, whatever the corpus size).
     val corpus = spark.read.parquet(s"$Dst/documents.parquet")
     val incRoot = java.nio.file.Files.createTempDirectory("incdedup").toString
-    val incStore = new TableStore(incRoot, spark)
-    val fps = corpus.select(
-        graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
-      .distinct()
-    val (v, tStage) = timed {
-      incStore.stageBucketed("seen_fps", fps, Seq("fp"), 32)
-    }
-    val seen = incStore.readVersion("seen_fps", v, fps.schema)
-    val reSent = corpus.select(col("text")).limit(500)
-      .withColumn("doc_id", monotonically_increasing_id() + 2000000000L)
-    val newDocs = spark.range(500).select(
-      (col("id") + 3000000000L).as("doc_id"),
-      concat_ws(" ", lit("incremental unique doc"), col("id").cast("string"),
-        (col("id") * 7919 % 104729).cast("string")).as("text"))
-    val batch = reSent.select("doc_id", "text").unionByName(newDocs)
-      .localCheckpoint(true)
-    val (nNew, tIncr) = timed {
-      graft.operators.Dedup.incrementalExact(batch, seen).count()
-    }
-    if (nNew != 500) fail(s"incremental dedup kept $nNew of the 1000-doc batch (want 500 new)")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val plan = graft.operators.Dedup.incrementalExact(batch, seen)
-        .queryExecution.executedPlan.toString
-      if (!plan.contains("Bucketed: true"))
-        fail(s"$Label incremental dedup is not reading the bucketed fingerprint store")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    println(f"[skew] incremental dedup: 1000-doc batch vs ${Copies * 5000}%d-doc corpus store " +
-      f"in $tIncr%.2f s (one-time fp stage $tStage%.2f s); 500 new kept")
+    val tIncr = try {
+      val incStore = new TableStore(incRoot, spark)
+      val fps = corpus.select(
+          graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
+        .distinct()
+      val (v, tStage) = timed {
+        incStore.stageBucketed("seen_fps", fps, Seq("fp"), 32)
+      }
+      val seen = incStore.readVersion("seen_fps", v, fps.schema)
+      val reSent = corpus.select(col("text")).limit(500)
+        .withColumn("doc_id", monotonically_increasing_id() + 2000000000L)
+      val newDocs = spark.range(500).select(
+        (col("id") + 3000000000L).as("doc_id"),
+        concat_ws(" ", lit("incremental unique doc"), col("id").cast("string"),
+          (col("id") * 7919 % 104729).cast("string")).as("text"))
+      val batch = reSent.select("doc_id", "text").unionByName(newDocs)
+        .localCheckpoint(true)
+      val (nNew, t) = timed {
+        graft.operators.Dedup.incrementalExact(batch, seen).count()
+      }
+      if (nNew != 500) fail(s"incremental dedup kept $nNew of the 1000-doc batch (want 500 new)")
+      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val plan = graft.operators.Dedup.incrementalExact(batch, seen)
+          .queryExecution.executedPlan.toString
+        if (!plan.contains("Bucketed: true"))
+          fail(s"$Label incremental dedup is not reading the bucketed fingerprint store")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      println(f"[skew] incremental dedup: 1000-doc batch vs ${Copies * 5000}%d-doc corpus store " +
+        f"in $t%.2f s (one-time fp stage $tStage%.2f s); 500 new kept")
+      t
+    } finally graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(incRoot))
 
     Seq("skew_hot_token_dedup" -> tHot,
       "skew_dense_knn_join" -> tKnn,
@@ -527,32 +522,34 @@ object Sf1Soak {
     * a registered MV; asserts MV ≡ full recompute at the end. */
   private def pipelineSoak(spark: SparkSession): Unit = {
     val root = java.nio.file.Files.createTempDirectory("sf1soak").toString
-    val cfg = ScdConfig("sf1soak",
-      StructType(Seq(StructField("k", LongType), StructField("code", StringType),
-        StructField("name", StringType), StructField("state", StringType))),
-      Seq("code"), Seq("state"),
-      duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne,
-      aggregates = Seq(MaterializedAggregate("by_state", Seq("state"), Seq("k"))))
-    val store = new TableStore(s"$root/w", spark)
-    val p = new ScdPipeline(spark, store, faithful = true, cfg)
-    val n = 200000
-    val t0 = System.nanoTime()
-    for (cycle <- 1 to 5) {
-      // ~1/3 of keys flip state per cycle; ~5% duplicate rows in-batch
-      val b = spark.range(n)
-        .select(col("id").as("k"),
-          concat(lit("C"), col("id") % 300000).as("code"),
-          concat(lit("N"), col("id") % 300000).as("name"),
-          concat(lit("S"), pmod(col("id") + lit(cycle) * when(col("id") % 3 === 0, 1).otherwise(0), lit(40))).as("state"))
-      p.runCycleWithBatch(b, Timestamp.valueOf(s"2024-02-0$cycle 00:00:00"))
-      store.vacuum()
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[soak] 5 cycles x $n rows (+ MV) in $secs%.1f s")
-    val got = p.aggregate("by_state").orderBy("state").collect().map(_.toSeq).toSeq
-    val want = graft.ops.IncrementalAgg.fullAggregate(p.landing, Seq("state"), Seq("k"))
-      .orderBy("state").collect().map(_.toSeq).toSeq
-    if (got != want) fail("sf1 soak: MV diverged from full recompute")
-    println(s"[soak] MV ≡ full recompute over ${p.landing.count()} landing rows")
+    try {
+      val cfg = ScdConfig("sf1soak",
+        StructType(Seq(StructField("k", LongType), StructField("code", StringType),
+          StructField("name", StringType), StructField("state", StringType))),
+        Seq("code"), Seq("state"),
+        duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne,
+        aggregates = Seq(MaterializedAggregate("by_state", Seq("state"), Seq("k"))))
+      val store = new TableStore(s"$root/w", spark)
+      val p = new ScdPipeline(spark, store, faithful = true, cfg)
+      val n = 200000
+      val t0 = System.nanoTime()
+      for (cycle <- 1 to 5) {
+        // ~1/3 of keys flip state per cycle; ~5% duplicate rows in-batch
+        val b = spark.range(n)
+          .select(col("id").as("k"),
+            concat(lit("C"), col("id") % 300000).as("code"),
+            concat(lit("N"), col("id") % 300000).as("name"),
+            concat(lit("S"), pmod(col("id") + lit(cycle) * when(col("id") % 3 === 0, 1).otherwise(0), lit(40))).as("state"))
+        p.runCycleWithBatch(b, Timestamp.valueOf(s"2024-02-0$cycle 00:00:00"))
+        store.vacuum()
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"[soak] 5 cycles x $n rows (+ MV) in $secs%.1f s")
+      val got = p.aggregate("by_state").orderBy("state").collect().map(_.toSeq).toSeq
+      val want = graft.ops.IncrementalAgg.fullAggregate(p.landing, Seq("state"), Seq("k"))
+        .orderBy("state").collect().map(_.toSeq).toSeq
+      if (got != want) fail("sf1 soak: MV diverged from full recompute")
+      println(s"[soak] MV ≡ full recompute over ${p.landing.count()} landing rows")
+    } finally graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(root))
   }
 }

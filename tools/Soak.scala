@@ -1,5 +1,4 @@
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import graft.core.TableStore
 import graft.pipeline.{ScdConfig, ScdPipeline}
 import graft.sources.Stage
@@ -9,50 +8,45 @@ import org.apache.spark.sql.types._
   * pipeline, checking the history's invariants. */
 object Soak {
   def main(args: Array[String]): Unit = {
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = graft.core.Session.local()
     val root = java.nio.file.Files.createTempDirectory("soak").toString
-    val cfg = ScdConfig("soak",
-      StructType(Seq(StructField("k", LongType), StructField("code", StringType),
-        StructField("name", StringType), StructField("state", StringType))),
-      Seq("code"), Seq("state"),
-      duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne)
-    val store = new TableStore(s"$root/w", spark)
-    val stage = new Stage(s"$root/s")
-    val p = new ScdPipeline(spark, store, faithful = true, cfg)
-    val n = 20000
-    val rnd = new scala.util.Random(42)
-    var total = 0L
-    val t0 = System.nanoTime()
-    for (cycle <- 1 to 10) {
-      // each cycle: 20k-row delta; ~30% keys mutate state, rest churn
-      val sb = new StringBuilder
-      for (i <- 1 to n) {
-        val key = rnd.nextInt(50000)
-        val state = if (rnd.nextInt(10) < 3) s"S${rnd.nextInt(50)}" else s"S${key % 50}"
-        sb.append(s"$key,C$key,Name$key,$state\n")
+    try {
+      val cfg = ScdConfig("soak",
+        StructType(Seq(StructField("k", LongType), StructField("code", StringType),
+          StructField("name", StringType), StructField("state", StringType))),
+        Seq("code"), Seq("state"),
+        duplicatePolicy = graft.pipeline.DuplicatePolicy.KeepOne)
+      val store = new TableStore(s"$root/w", spark)
+      val stage = new Stage(s"$root/s")
+      val p = new ScdPipeline(spark, store, faithful = true, cfg)
+      val n = 20000
+      val rnd = new scala.util.Random(42)
+      var total = 0L
+      val t0 = System.nanoTime()
+      for (cycle <- 1 to 10) {
+        // each cycle: 20k-row delta; ~30% keys mutate state, rest churn
+        val sb = new StringBuilder
+        for (i <- 1 to n) {
+          val key = rnd.nextInt(50000)
+          val state = if (rnd.nextInt(10) < 3) s"S${rnd.nextInt(50)}" else s"S${key % 50}"
+          sb.append(s"$key,C$key,Name$key,$state\n")
+        }
+        stage.putContent(f"batch$cycle%02d.csv", sb.toString)
+        total += p.runCycle(stage, Timestamp.valueOf(f"2024-01-${cycle}%02d 00:00:00"))
+        store.vacuum()
       }
-      stage.putContent(f"batch$cycle%02d.csv", sb.toString)
-      total += p.runCycle(stage, Timestamp.valueOf(f"2024-01-${cycle}%02d 00:00:00"))
-      store.vacuum()
-    }
-    val secs = (System.nanoTime()-t0)/1e9
-    println(f"10 cycles x $n rows in $secs%.1f s (${total/secs}%.0f rows/s ingest)")
-    val staging = p.staging
-    val cur = staging.filter("current_flag='Y'")
-    println("staging rows: " + staging.count() + ", current: " + cur.count())
-    // invariant: <=1 current row per (code,state)
-    val dup = cur.groupBy("code","state").count().filter("count > 1").count()
-    println("duplicate current (code,state): " + dup)
-    println("master == current: " + (p.master.count() == cur.count()))
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).count()
-    println("files on disk after vacuum: " + files)
+      val secs = (System.nanoTime()-t0)/1e9
+      println(f"10 cycles x $n rows in $secs%.1f s (${total/secs}%.0f rows/s ingest)")
+      val staging = p.staging
+      val cur = staging.filter("current_flag='Y'")
+      println("staging rows: " + staging.count() + ", current: " + cur.count())
+      // invariant: <=1 current row per (code,state)
+      val dup = cur.groupBy("code","state").count().filter("count > 1").count()
+      println("duplicate current (code,state): " + dup)
+      println("master == current: " + (p.master.count() == cur.count()))
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).count()
+      println("files on disk after vacuum: " + files)
+    } finally graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     spark.stop()
   }
 }
