@@ -299,10 +299,22 @@ class TableStore(val root: String, spark: SparkSession) {
       minSmallFiles: Int = 4): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val curV = currentVersion(table)
-    val curDir = versionDir(table, curV)
-    if (!isFlat(curDir)) return 0
+    stageCompactSmall(table, curV, targetBytes, minSmallFiles).fold(0) {
+      case (version, packed) =>
+        commit(Map(table -> version), expect = Map(table -> Some(curV)))
+        packed
+    }
+  }
+
+  /** [[compactSmallFiles]] of version `base`, stage-only: the packed
+    * version and the number of files packed, or None when it would
+    * commit nothing. */
+  private def stageCompactSmall(table: String, base: String, targetBytes: Long,
+      minSmallFiles: Int): Option[(String, Int)] = {
+    val curDir = versionDir(table, base)
+    if (!isFlat(curDir)) return None
     val (small, big) = dataFiles(curDir).partition(Files.size(_) < targetBytes)
-    if (small.size < minSmallFiles) return 0
+    if (small.size < minSmallFiles) return None
 
     val smallBytes = small.map(Files.size).sum
     val n = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
@@ -321,8 +333,7 @@ class TableStore(val root: String, spark: SparkSession) {
       .localCheckpoint(true)).filter(_.count() > 0L)
     val (version, _) = stageCarry(table, curDir, big,
       append = Some(packed.coalesce(n)), dv = keptDv)
-    commit(Map(table -> version), expect = Map(table -> Some(curV)))
-    small.size
+    Some((version, small.size))
   }
 
   /** [[stage]] plus a [[FileStats]] sidecar: per-file min/max/null
@@ -374,11 +385,9 @@ class TableStore(val root: String, spark: SparkSession) {
   /** Materialize `df` as a new (uncommitted) version of `table`; returns the
     * version id to pass to [[commit]]. The write is the only Spark action —
     * the data lands on disk before any pointer moves. `partitionBy` lays the
-    * version out hive-partitioned (e.g. the SCD staging table by
-    * `current_flag`: the hot 'Y' slice is a pruned partition read, and at
-    * 100 TB the closed-history partition is never touched by the master
-    * refresh). Partition columns must be last in the schema so reads
-    * preserve column order. */
+    * version out hive-partitioned (a layout the carry tier does not
+    * model: its DML rewrites such a version flat). Partition columns must
+    * be last in the schema so reads preserve column order. */
   def stage(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): String = {
     val version = newVersion()
     val writer = df.write.mode("errorifexists")
@@ -722,16 +731,17 @@ class TableStore(val root: String, spark: SparkSession) {
 
   /** Build the successor version of a carry-tier DML — the one
     * implementation behind [[deleteRange]], [[deleteWhereMoR]],
-    * [[purgeDeletes]], [[upsertMoR]], [[appendEvolved]],
+    * [[purgeDeletes]], [[stageMerge]], [[appendEvolved]],
     * [[compactSmallFiles]], [[cloneTable]] and [[restoreTable]], so a
     * sidecar kind can never be carried by one and dropped by another.
     * In order:
-    *  1. hard-link `keep` (files of the flat version at `src`) into a
-    *     new version directory of `table`;
-    *  2. write `append` beside them as fresh files (Spark's UUID part
-    *     names cannot collide with carried ones; its append write emits
-    *     `_SUCCESS`), or, with nothing to append, create `_SUCCESS`;
-    *  3. write `dv` as the new version's deletion vector;
+    *  1. [[stage]] `append` as a new version of `table`, or, with nothing
+    *     to append, create an empty version directory with `_SUCCESS`;
+    *     concurrently, write `dv` as the new version's deletion vector;
+    *  2. hard-link `keep` (files of the flat version at `src`) beside the
+    *     appended files (Spark's UUID part names cannot collide with
+    *     carried ones) and move the deletion vector in, unless it holds
+    *     no tombstone;
     *  4. carry the stats sidecar (`carryStats`): rows of `src`'s files
     *     outside (src files − keep) are path-remapped into the new
     *     directory, appended files get fresh rows;
@@ -746,21 +756,27 @@ class TableStore(val root: String, spark: SparkSession) {
       append: Option[DataFrame] = None, dv: Option[DataFrame] = None,
       tag: Option[String] = None,
       carryStats: Boolean = true): (String, Seq[String]) = {
-    val version = newVersion()
+    // the deletion vector is written beside the append, into a scratch
+    // directory that looks like write-ahead garbage until it moves in
+    val dvScratch = dv.map(_ => versionDir(table, newVersion()))
+    val version = Overlap.run(Seq[() => String](() => append.fold {
+        val v = newVersion()
+        Files.createDirectories(versionDir(table, v))
+        Files.createFile(versionDir(table, v).resolve("_SUCCESS"))
+        v
+      }(stage(table, _))) ++
+      dv.map(d => () => { DeleteVectors.write(d, dvScratch.get.toString); "" })).head
     val dst = versionDir(table, version)
-    Files.createDirectories(dst)
+    val appended = dataFiles(dst).map(_.toUri.toString)
     keep.foreach(carryFile(_, dst))
     val keptNames = keep.map(_.getFileName.toString).toSet
-    val appended = append match {
-      case Some(df) =>
-        df.write.mode("append").parquet(dst.toString)
-        dataFiles(dst).filterNot(p => keptNames(p.getFileName.toString))
-          .map(_.toUri.toString)
-      case None =>
-        Files.createFile(dst.resolve("_SUCCESS"))
-        Seq.empty
+    dvScratch.foreach { d =>
+      // a DV that tombstones nothing would only tax every read
+      val dvDir = d.resolve(DeleteVectors.DvDir)
+      if (footerRows(dataFiles(dvDir)).sum > 0L)
+        Files.move(dvDir, dst.resolve(DeleteVectors.DvDir), StandardCopyOption.ATOMIC_MOVE)
+      Fs.deleteRecursively(d)
     }
-    dv.foreach(DeleteVectors.write(_, dst.toString))
     if (carryStats) FileStats.read(spark, src.toString).foreach { rows =>
       val dropped = dataFiles(src).map(_.getFileName.toString).toSet -- keptNames
       carrySidecar(rows, dropped, dst, appended)
@@ -864,9 +880,10 @@ class TableStore(val root: String, spark: SparkSession) {
     // each re-run the predicate scan
     val withPos = DeleteVectors.withPosition(dataScan(curDir))
     val oldDv = DeleteVectors.read(spark, curDir.toString)
-    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _))
+    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _, curDir.toString))
     val fresh = alive.filter(coalesce(predicate, lit(false)))
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+      .select(DeleteVectors.fileNameOf(col("__dv_file")).as("file"),
+        col("__dv_pos").as("pos"))
       .localCheckpoint(true)
     val freshN = fresh.count()
     if (freshN == 0L) return 0L
@@ -891,13 +908,21 @@ class TableStore(val root: String, spark: SparkSession) {
     * (0, committing nothing, when the version has no DV). */
   def purgeDeletes(table: String): Long = {
     val curV = currentVersion(table)
-    val curDir = versionDir(table, curV)
-    DeleteVectors.read(spark, curDir.toString) match {
-      case None => 0L
-      case Some(dv) =>
-        val dvRows = dv.localCheckpoint(true)
-        val dvN = dvRows.count()
-        if (dvN == 0L) return 0L // pathological empty DV: nothing to do
+    stagePurge(table, curV).fold(0L) { case (version, purged) =>
+      commit(Map(table -> version), expect = Map(table -> Some(curV)))
+      purged
+    }
+  }
+
+  /** [[purgeDeletes]] of version `base`, stage-only: the DV-free version
+    * and the number of tombstones it materialized, or None when `base`
+    * has no (or an empty) deletion vector. */
+  private def stagePurge(table: String, base: String): Option[(String, Long)] = {
+    val curDir = versionDir(table, base)
+    DeleteVectors.read(spark, curDir.toString).flatMap { dv =>
+      val dvRows = dv.localCheckpoint(true)
+      val dvN = dvRows.count()
+      Option.when(dvN > 0L) {
         val dvFiles = dvRows.select("file").distinct()
           .collect().map(_.getString(0)).toSet
         val (rewrite, untouched) =
@@ -910,12 +935,75 @@ class TableStore(val root: String, spark: SparkSession) {
             .option("basePath", curDir.toString)
             .parquet(rewrite.map(_.toUri.toString): _*),
           curDir.toString))
-        val (version, _) =
-          stageCarry(table, curDir, untouched, append = survivors)
-        commit(Map(table -> version), expect = Map(table -> Some(curV)))
-        dvN
+        (stageCarry(table, curDir, untouched, append = survivors)._1, dvN)
+      }
     }
   }
+
+  /** Share of a version's rows its deletion vector may tombstone before
+    * [[stageUpkeep]] purges it. Every read of a DV'd version still scans
+    * the tombstoned rows and anti-joins them away, so this bounds the
+    * wasted share of each scan. */
+  private val MaxTombstoneShare = 0.10
+
+  /** Data files a version may hold before [[stageUpkeep]] packs its
+    * small ones: each carry-tier append adds files, and every scan pays a
+    * per-file open and footer read. */
+  private val MaxFiles = 32
+
+  /** The one rule that bounds a carry-tier table's debt, stage-only:
+    * when version `base`'s deletion vector tombstones more than
+    * [[MaxTombstoneShare]] of its rows, purge it ([[purgeDeletes]]); when
+    * the version then holds more than [[MaxFiles]] data files, pack its
+    * small ones ([[compactSmallFiles]]). Returns the maintained version,
+    * or None when `base` is within both bounds (or not flat). The debt
+    * is read from metadata alone — the data files' and the DV's parquet
+    * footers and a directory listing — so checking it costs no Spark job.
+    * Same rows, new layout: the caller commits it expecting `base`. */
+  def stageUpkeep(table: String, base: String): Option[String] = {
+    val dir = versionDir(table, base)
+    if (!isFlat(dir)) return None
+    val tombstones =
+      if (!DeleteVectors.exists(dir.toString)) 0L
+      else footerRows(dataFiles(dir.resolve(DeleteVectors.DvDir))).sum
+    val purged =
+      if (tombstones == 0L || tombstones <= MaxTombstoneShare * versionRows(table, dir)) None
+      else stagePurge(table, base).map(_._1)
+    val current = purged.getOrElse(base)
+    val packed =
+      if (dataFiles(versionDir(table, current)).size <= MaxFiles) None
+      else stageCompactSmall(table, current, 128L << 20, minSmallFiles = 2).map(_._1)
+    packed.orElse(purged)
+  }
+
+  /** Rows in each parquet file of `files`, from its footer (a
+    * driver-side metadata read, no Spark job). */
+  private def footerRows(files: Seq[Path]): Seq[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try reader.getRecordCount finally reader.close()
+    }
+  }
+
+  /** Rows of the flat version at `dir`. Carried files keep their names,
+    * so each file's footer count is remembered per table (for the files
+    * of its latest counted version only) and a version costs footer
+    * reads only for the files it added. */
+  private def versionRows(table: String, dir: Path): Long = {
+    val files = dataFiles(dir)
+    val known = rowCounts.getOrDefault(table, Map.empty)
+    val (seen, fresh) = files.partition(f => known.contains(f.getFileName.toString))
+    val counts = seen.map(f => f.getFileName.toString -> known(f.getFileName.toString)) ++
+      fresh.map(_.getFileName.toString).zip(footerRows(fresh))
+    rowCounts.put(table, counts.toMap)
+    counts.map(_._2).sum
+  }
+
+  private val rowCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
 
   /** Metadata-only aggregates: row count and, per requested column,
     * min / max / non-null count of the CURRENT version, answered from
@@ -953,26 +1041,128 @@ class TableStore(val root: String, spark: SparkSession) {
     }
   }
 
+  /** The carry tier's MERGE, stage-only: the successor of `table`'s
+    * version `base` that tombstones rows R and appends rows A, returned
+    * uncommitted (the caller commits it, expecting `base`). It runs in
+    * two halves, so a caller can read before it may write: [[touch]]
+    * reads and materializes what the change reads, then [[stageMerge]]
+    * stages the version.
+    *
+    * `select` picks, from the base's rows (its scan with the
+    * [[DeleteVectors.withPosition]] columns), the rows the change reads —
+    * a delta-sized slice, minus the base's tombstones, checkpointed. It
+    * must only select rows (a filter or a semi-join), so that it
+    * commutes with the tombstones: only the slice pays the deletion
+    * vector's anti-join. Without `select` nothing of the base is read
+    * and the slice is empty: a pure append ([[stageAppend]]). Touching
+    * stages nothing; [[Touched.release]] frees the slice. */
+  def touch(table: String, base: Option[String], schema: StructType,
+      select: Option[DataFrame => DataFrame]): Touched =
+    new Touched(table, base, schema, select)
+
+  /** A touched slice of one version ([[touch]]). */
+  final class Touched private[TableStore] (val table: String,
+      val base: Option[String], schema: StructType,
+      select: Option[DataFrame => DataFrame]) {
+    private[TableStore] val dir = base.map(versionDir(table, _))
+    private[TableStore] val flat = dir.exists(isFlat)
+    // the base's declared read schema, or the caller's: never inferred
+    // (inference costs a footer-reading job per call)
+    private[TableStore] val readSchema = dir.flatMap(declaredSchema).getOrElse(schema)
+    private[TableStore] val oldDv = dir.flatMap(d => DeleteVectors.read(spark, d.toString))
+    // lazy: a pure append never plans a scan of the base
+    private[TableStore] lazy val scan = (base, dir) match {
+      case (Some(v), Some(d)) => DeleteVectors.withPosition(
+        catalogNameIfBucketed(table, v).map(spark.table)
+          .getOrElse(spark.read.schema(readSchema).parquet(d.toString)))
+      case _ => spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
+        .withColumn("__dv_file", lit(null).cast("string"))
+        .withColumn("__dv_pos", lit(null).cast("long"))
+    }
+    private[TableStore] def alive(rows: DataFrame): DataFrame =
+      oldDv.fold(rows)(DeleteVectors.antiJoin(rows, _, dir.get.toString))
+    private val slice = select.map(f => alive(f(scan)).localCheckpoint(true))
+    private[TableStore] def selected = select.isDefined
+    /** The touched rows (with the position columns); no rows without a
+      * selection. */
+    def rows: DataFrame = slice.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema))
+    /** Free the checkpointed slice (idempotent). */
+    def release(): Unit = slice.foreach(graft.operators.Dedup.releaseCheckpoint)
+  }
+
+  /** The write half of the carry tier's MERGE (see [[touch]]): `change`
+    * maps the touched rows to R (a subset of them, position columns
+    * kept; `None` tombstones nothing) and A, and the new version carries
+    * every base file by hard link, records R's positions in its deletion
+    * vector on top of the base's, and writes A (in the table's column
+    * order) as fresh files through [[stage]], one per non-empty partition
+    * of A — no existing byte is rewritten, so the cost is the touched
+    * slice plus O(|A|) writes however the rows scatter, the MERGE shape
+    * of the lakehouse formats' deletion vectors. The read tax is the DV's
+    * anti-join until [[purgeDeletes]]; see [[stageUpkeep]] for the bound.
+    * Two layouts have no base to carry: with no `base` the version is A
+    * alone; a base the flat carry can't model (hive-partitioned,
+    * bucketed) is rewritten flat once, as its alive rows minus R plus A.
+    * Every later version of the table then takes the carry. Releases the
+    * touched slice on return. */
+  def stageMerge(touched: Touched,
+      change: DataFrame => (Option[DataFrame], DataFrame),
+      tag: Option[String] = None): String = try {
+    import touched.{alive, dir, flat, oldDv, scan, table}
+    val (remove, add) = change(touched.rows)
+    require(touched.selected || remove.isEmpty,
+      s"stageMerge('$table'): rows to tombstone need a touched slice")
+    val rows = add.select(touched.readSchema.fieldNames.toSeq.map(col): _*)
+    val positions = remove.map(_.select(
+      DeleteVectors.fileNameOf(col("__dv_file")).as("file"), col("__dv_pos").as("pos")))
+    dir match {
+      case Some(d) if flat =>
+        val dv = positions.fold(oldDv)(p => Some(oldDv.fold(p)(_.unionByName(p))))
+        stageCarry(table, d, dataFiles(d), append = Some(rows), dv = dv, tag = tag)._1
+      case Some(d) =>
+        // by full path: a partitioned layout repeats part-file names
+        // across its directories
+        val rowsNow = alive(scan)
+        val survivors = remove.fold(rowsNow)(r => rowsNow.join(
+          r.select("__dv_file", "__dv_pos"), Seq("__dv_file", "__dv_pos"), "left_anti"))
+        stageCarry(table, d, Nil,
+          append = Some(survivors.select(rows.columns.toSeq.map(col): _*).unionByName(rows)),
+          tag = tag, carryStats = false)._1
+      case None =>
+        val v = stage(table, rows)
+        tag.foreach(t => Files.write(versionDir(table, v).resolve(TagFile),
+          t.getBytes(StandardCharsets.UTF_8)))
+        v
+    }
+  } finally touched.release()
+
+  /** INSERT INTO, stage-only: `rows` appended to `table`'s version `base`
+    * (or as its first version) — [[stageMerge]] tombstoning nothing, so
+    * nothing of the base is read and the write is O(|rows|). */
+  def stageAppend(table: String, base: Option[String], rows: DataFrame): String =
+    stageMerge(touch(table, base, rows.schema, select = None), _ => (None, rows))
+
+  /** INSERT INTO: [[stageAppend]] onto the current version, committed
+    * expecting it (a racing writer makes the append refuse, never lose
+    * its rows). */
+  def append(table: String, rows: DataFrame): Unit = {
+    val base = manifest.get(table)
+    commit(Map(table -> stageAppend(table, base, rows)), expect = Map(table -> base))
+  }
+
   /** Merge-on-read UPSERT (MERGE): rows of `updates` replace current
     * rows sharing their `keys` value and insert otherwise — committed
-    * WITHOUT rewriting one byte of existing data. Matched current rows
-    * become `(file, pos)` tombstones in the version's
-    * [[DeleteVectors]] sidecar (computed on the DV-adjusted view, so
-    * re-upserting a key already tombstoned records nothing twice),
-    * every current file is carried verbatim, and `updates` lands as
-    * freshly appended files in the same version dir — reads see
-    * carried-minus-tombstoned plus appended through the normal DV
-    * path, no special casing. Cost: one key semi-join scan plus
-    * O(|updates|) write, independent of how matches scatter across
-    * files — against [[graft.ops.Merge.upsert]]'s full-rewrite
+    * WITHOUT rewriting one byte of existing data: the [[stageMerge]]
+    * whose touched rows are the alive rows sharing a key with `updates`
+    * (one key semi-join scan), all of them tombstoned, with `updates`
+    * appended. Re-upserting a key already tombstoned records nothing
+    * twice; a pure insert on a DV-free version writes no deletion vector
+    * (no read tax). Against [[graft.ops.Merge.upsert]]'s full-rewrite
     * copy-on-write, this is the tier for a trickle of updates into a
-    * 100 TB table (the MERGE shape of the lakehouse formats' deletion
-    * vectors). The read tax and its bound are [[purgeDeletes]]'s, which
-    * also materializes upsert tombstones. Contract: `updates` must be
-    * key-unique and share the table's columns (written in table column
-    * order); NULL keys never match and therefore insert. Falls back to
-    * a copy-on-write merge for bucketed / hive-partitioned layouts
-    * (flat-version DV application doesn't cover their readers).
+    * 100 TB table. Contract: `updates` must be key-unique and share the
+    * table's columns; NULL keys never match and therefore insert.
     * Returns the number of current rows replaced.
     *
     * `tag`: an optional opaque marker written INTO the version dir
@@ -981,52 +1171,19 @@ class TableStore(val root: String, spark: SparkSession) {
     * upsert is, which is exactly the idempotence token a streaming
     * MERGE sink needs for exactly-once-effect across restarts (tag =
     * micro-batch id; a replayed batch sees its own tag and skips —
-    * [[graft.streaming.StoreStream]]). Refused on the copy-on-write
-    * fallback layouts, where silently dropping it would void that
-    * contract. */
+    * [[graft.streaming.StoreStream]]). */
   def upsertMoR(table: String, updates: DataFrame, keys: Seq[String],
       tag: Option[String] = None): Long = {
     val curV = currentVersion(table)
-    val curDir = versionDir(table, curV)
-    val cols = read(table).columns.toSeq
-    val aligned = updates.select(cols.map(col): _*)
-    if (!isFlat(curDir)) {
-      require(tag.isEmpty, "upsertMoR: version tags require the MoR path; " +
-        "this layout (bucketed/partitioned) falls back to copy-on-write")
-      // copy-on-write fallback: anti-join out the matched rows, append
-      // the updates, overwrite (plain layout, like deleteWhere's)
-      val cur = read(table)
-      val matched = cur.join(aligned.select(keys.map(col): _*).distinct(),
-        keys, "left_semi").count()
-      overwrite(table, cur.join(
-          aligned.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        .unionByName(aligned))
-      return matched
-    }
-    val files = dataFiles(curDir)
-    // tombstones for alive rows whose key a fresh update row carries;
-    // position capture directly above the scan (before any join), the
-    // key semi-join after — `_metadata` doesn't resolve through joins
-    val withPos = DeleteVectors.withPosition(dataScan(curDir))
-    val oldDv = DeleteVectors.read(spark, curDir.toString)
-    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _))
-    val fresh = alive.join(aligned.select(keys.map(col): _*).distinct(),
-        keys, "left_semi")
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .localCheckpoint(true)
-    val freshN = fresh.count()
-
-    // pure-insert upsert with no inherited DV: no sidecar at all — the
-    // new version reads as a plain scan with no anti-join tax. Carried
-    // files keep their stats rows (stats may only skip, and tombstoned
-    // rows only widen bounds). The tag lands before the commit: visible
-    // iff the version is; an untagged upsert carries the current tag.
-    val dv = oldDv.map(_.unionByName(fresh))
-      .orElse(Option.when(freshN > 0L)(fresh))
-    val (version, _) = stageCarry(table, curDir, files,
-      append = Some(aligned), dv = dv, tag = tag)
+    var replaced = 0L
+    val version = stageMerge(touch(table, Some(curV), read(table).schema,
+        select = Some(_.join(updates.select(keys.map(col): _*), keys, "left_semi"))),
+      change = { touched =>
+        replaced = touched.count()
+        (Option.when(replaced > 0L)(touched), updates)
+      }, tag = tag)
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
-    freshN
+    replaced
   }
 
   /** SCHEMA EVOLUTION: append `rows` whose schema is a SUPERSET of the
@@ -1276,6 +1433,7 @@ class TableStore(val root: String, spark: SparkSession) {
     def scanOf(names: Seq[String]) = DeleteVectors.withPosition(
       spark.read.schema(dataSchema).option("basePath", toDir.toString)
         .parquet(names.map(n => toDir.resolve(n).toUri.toString): _*))
+      .withColumn("__dv_file", DeleteVectors.fileNameOf(col("__dv_file")))
     val dataCols = dataSchema.fieldNames.toSeq
     def shaped(df: DataFrame, a: String) =
       df.select(dataCols.map(col): _*).withColumn(action, lit(a))
@@ -1315,7 +1473,7 @@ class TableStore(val root: String, spark: SparkSession) {
     val inserts =
       if (appended.isEmpty) empty
       else shaped(dvTo match {
-        case Some(dv) => DeleteVectors.antiJoin(scanOf(appended), dv)
+        case Some(dv) => DeleteVectors.antiJoin(scanOf(appended), dv, toDir.toString)
         case None     => scanOf(appended)
       }, "INSERT")
 

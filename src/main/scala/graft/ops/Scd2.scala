@@ -33,15 +33,21 @@ import graft.core.Schemas
   * `current_flag = 'Y'` rows, so closed-out history never swallows a
   * returning value — a new version is opened as standard SCD2 would.
   *
-  * Scale: the CDC delta is per-cycle small against an ever-growing history —
-  * both joins broadcast the delta side so the 100 TB history
-  * never shuffles; the history table itself is only ever appended-to/
-  * column-touched via this rewrite, and should be stored partitioned by
-  * `current_flag` (tiny hot partition) or bucketed by the business key.
+  * Scale: a cycle's CDC is small against an ever-growing history, so
+  * the merge is a [[Plan]] whose parts are all delta-sized: the history
+  * is streamed once through a semi-join against a broadcast of the CDC's
+  * match keys ([[Plan.touched]]), and every other part reads only those
+  * touched rows and the CDC. The history is never shuffled or broadcast.
+  * [[merge]] assembles the whole next history from the plan;
+  * [[graft.pipeline.ScdPipeline]] applies it to a stored history as
+  * tombstones plus appended files ([[graft.core.TableStore.stageMerge]]),
+  * so a cycle writes only the rows it closes and opens.
   */
 object Scd2 {
 
-  /** Apply one CDC batch to the history table.
+  /** Apply one CDC batch to the history table: the rows no DELETE image
+    * closes, the closed re-images, and the opened versions — the whole
+    * next history, assembled from [[plan]].
     *
     * @param staging   current history (base columns + start_date/end_date/
     *                  current_flag)
@@ -55,60 +61,108 @@ object Scd2 {
       batchTime: Timestamp,
       matchKeys: Seq[String],
       faithful: Boolean = true): DataFrame = {
+    val p = plan(staging.columns.toSeq, cdc, batchTime, matchKeys, faithful)
+    val touched = p.touched(staging)
+    p.kept(staging)
+      .unionByName(p.closed(p.toClose(touched)))
+      .unionByName(p.opened(touched))
+  }
 
-    val ts = lit(batchTime).cast(TimestampType)
-    val baseCols = staging.columns.toSeq
-      .filterNot(Seq("start_date", "end_date", "current_flag").contains)
+  /** The delta-sized [[Plan]] of one cycle's merge into a history with
+    * columns `historyCols`. */
+  def plan(historyCols: Seq[String], cdc: DataFrame, batchTime: Timestamp,
+      matchKeys: Seq[String], faithful: Boolean = true): Plan =
+    new Plan(historyCols, cdc, batchTime, matchKeys, faithful)
+
+  /** One cycle's merge in three delta-sized parts: the history rows the
+    * CDC touches, the rows it closes (and their closed re-images), and the
+    * versions it opens. Every part but [[touched]] and [[kept]] reads only
+    * touched rows, so applied to stored history the merge costs one
+    * streamed scan plus the delta. History frames may carry extra columns
+    * (row positions); the row-selecting parts keep them, [[closed]] and
+    * [[opened]] emit exactly `historyCols`. */
+  final class Plan private[Scd2] (historyCols: Seq[String], cdc: DataFrame,
+      batchTime: Timestamp, matchKeys: Seq[String], faithful: Boolean) {
+
+    private val ts = lit(batchTime).cast(TimestampType)
+    private val baseCols =
+      historyCols.filterNot(Seq("start_date", "end_date", "current_flag").contains)
 
     // Match-key equality: faithful mode keeps Snowflake's null-unsafe `=`
     // (a NULL tracked value never matches, so NULL-keyed images re-insert
     // every cycle — the reference's observable behavior); corrected mode
     // matches null-safely so NULL is one value like any other.
-    def keyCond(left: String, right: String): Column =
+    private def keyCond(left: String, right: String): Column =
       matchKeys.map { k =>
         if (faithful) col(s"$left.$k") === col(s"$right.$k")
         else col(s"$left.$k") <=> col(s"$right.$k")
       }.reduce(_ && _)
 
-    // WHEN MATCHED AND action='DELETE' → close out.
-    val closeKeys = broadcast(cdc
-      .filter(col(Schemas.cdcActionCol) === "DELETE")
-      .select(matchKeys.map(col): _*)
-      .distinct()
-      .withColumn("__close", lit(true)))
+    /** Corrected mode reads only the rows current before the merge. */
+    private def matchable(side: String): Column =
+      if (faithful) lit(true) else col(s"$side.current_flag") === "Y"
 
-    val matchableForClose =
-      if (faithful) lit(true) else col("st.current_flag") === "Y"
+    private def images(action: String): DataFrame =
+      cdc.filter(col(Schemas.cdcActionCol) === action)
 
-    val hit = col("__ck.__close").isNotNull && matchableForClose
-    val closed = staging.alias("st")
-      .join(closeKeys.alias("__ck"), keyCond("st", "__ck"), "left_outer")
-      .select(staging.columns.toSeq.map {
-        case "end_date" =>
-          when(hit, ts).otherwise(col("st.end_date")).as("end_date")
-        case "current_flag" =>
-          when(hit, lit("N")).otherwise(col("st.current_flag")).as("current_flag")
-        case c => col(s"st.$c").as(c)
+    /** The history rows some CDC image matches — the only history rows
+      * the merge reads: one semi-join against a broadcast of the CDC's
+      * match keys (both actions, duplicates and all: a semi-join needs no
+      * `distinct`), so the history streams past map-side. */
+    def touched(history: DataFrame): DataFrame =
+      history.alias("__h").join(
+        broadcast(cdc.select(matchKeys.map(col): _*)).alias("__k"),
+        keyCond("__h", "__k"), "left_semi")
+
+    /** WHEN MATCHED AND action='DELETE': `rows` the join `how` keeps
+      * against the DELETE images' keys. In faithful mode closed-out rows
+      * match too, so their end date is re-stamped (SURVEY.md §4b.1). */
+    private def closeJoin(rows: DataFrame, how: String): DataFrame =
+      rows.alias("__h").join(
+        broadcast(images("DELETE").select(matchKeys.map(col): _*)).alias("__k"),
+        keyCond("__h", "__k") && matchable("__h"), how)
+
+    /** Of `rows`, the ones this cycle closes. */
+    def toClose(rows: DataFrame): DataFrame = closeJoin(rows, "left_semi")
+
+    /** Of `rows`, the ones this cycle leaves as they are. */
+    def kept(rows: DataFrame): DataFrame = closeJoin(rows, "left_anti")
+
+    /** `rows` closed out: `end_date = batchTime`, `current_flag = 'N'`. */
+    def closed(rows: DataFrame): DataFrame =
+      rows.select(historyCols.map {
+        case "end_date" => ts.as("end_date")
+        case "current_flag" => lit("N").as("current_flag")
+        case c => col(c)
       }: _*)
 
-    // WHEN NOT MATCHED AND action='INSERT' → open a new version. In faithful
-    // mode "matched" means *any* history row (closed-out rows swallow
-    // returning values — SURVEY.md §4b.1); corrected mode anti-joins only
-    // against current rows.
-    val antiTarget =
-      if (faithful) staging else staging.filter(col("current_flag") === "Y")
+    /** WHEN NOT MATCHED AND action='INSERT': the versions this cycle
+      * opens, given the `touched` history. In faithful mode "matched"
+      * means any history row (closed-out rows swallow returning values —
+      * SURVEY.md §4b.1); corrected mode anti-joins only against rows
+      * current before the merge. Every row an INSERT image can match is a
+      * touched row, and touched rows are delta-sized, so they are the
+      * broadcast side. */
+    def opened(touched: DataFrame): DataFrame =
+      images("INSERT").select(baseCols.map(col): _*).alias("__i")
+        .join(broadcast(touched.alias("__h").filter(matchable("__h"))
+            .select(matchKeys.map(k => col(s"__h.$k")): _*)).alias("__t"),
+          keyCond("__i", "__t"), "left_anti")
+        .select(historyCols.map {
+          case "start_date" => ts.as("start_date")
+          case "end_date" => lit(null).cast(TimestampType).as("end_date")
+          case "current_flag" => lit("Y").as("current_flag")
+          case c => col(c)
+        }: _*)
 
-    val opened = cdc
-      .filter(col(Schemas.cdcActionCol) === "INSERT")
-      .select(baseCols.map(col): _*)
-      .alias("in")
-      .join(antiTarget.select(matchKeys.map(col): _*).alias("at"),
-        keyCond("in", "at"), "left_anti")
-      .withColumn("start_date", ts)
-      .withColumn("end_date", lit(null).cast(TimestampType))
-      .withColumn("current_flag", lit("Y"))
-
-    closed.unionByName(opened).select(staging.columns.map(col).toSeq: _*)
+    /** The rows a stored history appends for this cycle: the closed
+      * re-images in one partition, then the opened versions in the CDC's
+      * own partitions — a write lays the cycle's N rows and Y rows out in
+      * separate files (parquet row-group statistics on `current_flag` then
+      * skip the closed history for current-row reads), and a large batch
+      * still writes its opened versions in parallel. */
+    def appended(touched: DataFrame): DataFrame =
+      closed(toClose(touched)).coalesce(1).union(opened(touched))
   }
 
   /** INSERT OVERWRITE INTO master: the current view of the history

@@ -24,7 +24,7 @@ import graft.sources.Stage
   *   task5  master := staging 'Y' view  (SCD-Automation.sql:97-102)  [D4]
   * }}}
   * plus a run-log append (our TASK_HISTORY, `SCD-Automation.sql:116,147`).
-  * Task 5 writes nothing: [[master]] is a pruned read of staging.
+  * Task 5 writes nothing: [[master]] is a filtered read of staging.
   *
   * The driver program '''is''' the DAG (SURVEY.md §2.7 W3). Snowflake
   * orders the tasks by AFTER edges; here each Spark action waits only for
@@ -33,15 +33,38 @@ import graft.sources.Stage
   * {{{
   *   ledger check -> raw write -+-> duplicate verdict --+-> landing write  -+
   *                              |   (KeepOne: count)    |   staging write   |
-  *                              +-> CDC checkpoint -----+   each MV write   +-> commit
-  *                                  (task3's join)          run-log write   |
-  *                                                          ledger write   -+
+  *                              +-> CDC checkpoint      |   each MV write   +-> commit
+  *                                  (task3's join)      |   run-log write   |     |
+  *                                  -> staging's -------+   ledger write   -+  upkeep
+  *                                     touched slice
   * }}}
   * The verdict and the CDC both read only the raw version; the five kinds
   * of write read the CDC (landing, staging, the MVs), the verdict's row
   * count (run log) or nothing of either (ledger). The writes start only
   * once the verdict passes, so a poisoned batch stages no version beyond
-  * raw. Cron scheduling lives in [[ScdStream]]. The
+  * raw.
+  *
+  * Staging lives on the carry tier ([[TableStore.stageMerge]]): its write
+  * stages one carry version of the pinned history, built from the
+  * delta-sized [[Scd2.Plan]]. The history is scanned once, semi-joined
+  * against a broadcast of the CDC's match keys, and the touched rows are
+  * checkpointed ([[TableStore.touch]]) right after the CDC, in phase A:
+  * a read, so a failed verdict still stages nothing. In phase B the rows
+  * the cycle closes become deletion-vector
+  * tombstones, and their closed re-images (N) and the opened versions (Y)
+  * are appended in separate files, beside every other history file
+  * carried by hard link. The run log and the load ledger are plain
+  * appends ([[TableStore.stageAppend]]). So a cycle writes its delta, not
+  * its history; the one commit swaps all of it in. A staging version an
+  * older store wrote hive-partitioned is rewritten flat once, by the next
+  * cycle.
+  *
+  * The carry tier's debt is bounded inside the cycle: after the commit,
+  * each of those three tables whose committed version passes
+  * [[TableStore.stageUpkeep]]'s rule (tombstones over a fixed share of its
+  * rows: purge; more than a fixed number of data files: pack the small
+  * ones) is maintained, all of them in one more commit that expects the
+  * cycle's versions. Cron scheduling lives in [[ScdStream]]. The
   * reference's resume-children-before-root ordering
   * (`SCD-Automation.sql:108-114`) collapses into `ScdStream.start()`: with
   * the five tasks expressed as one driver function there is no window in
@@ -192,20 +215,19 @@ class ScdPipeline(
   private def recordFailure(batchTime: Timestamp, cause: Throwable): Unit =
     try {
       val pin = store.manifest
-      val prevLog = readAt(pin, RunLog, Schemas.runLog)
-      store.commit(Map(RunLog -> store.stage(RunLog,
-          logAppend(prevLog, batchTime, rowsLoaded = null, status = "FAILED"))),
-        expect = Map(RunLog -> pin.get(RunLog)))
+      store.commit(Map(RunLog -> logAppend(pin, batchTime, rowsLoaded = null,
+          status = "FAILED")), expect = Map(RunLog -> pin.get(RunLog)))
     } catch { case f: Throwable => cause.addSuppressed(f) }
 
-  /** The run log plus one row; its `cycle_id` = max(cycle_id)+1 of the
-    * PREVIOUS log contents, an aggregate inside the write that stages the
-    * new log, not a separate driver read. (Counting the on-disk version
-    * dirs instead broke monotonicity: `vacuum()` deletes superseded
-    * versions, so every post-vacuum cycle re-counted to the same id.) */
-  private def logAppend(prevLog: DataFrame, batchTime: Timestamp,
-      rowsLoaded: java.lang.Long, status: String): DataFrame =
-    prevLog.unionByName(prevLog
+  /** Stage the run log at `pin` plus one row. The row's `cycle_id` =
+    * max(cycle_id)+1 of the PREVIOUS log contents, an aggregate inside
+    * the write that appends the row, not a separate driver read.
+    * (Counting the on-disk version dirs instead broke monotonicity:
+    * `vacuum()` deletes superseded versions, so every post-vacuum cycle
+    * re-counted to the same id.) */
+  private def logAppend(pin: Map[String, String], batchTime: Timestamp,
+      rowsLoaded: java.lang.Long, status: String): String =
+    store.stageAppend(RunLog, pin.get(RunLog), readAt(pin, RunLog, Schemas.runLog)
       .agg((coalesce(max(col("cycle_id")), lit(0L)) + 1L).as("cycle_id"))
       .select(col("cycle_id"), lit(batchTime).as("batch_time"),
         lit(rowsLoaded).cast("long").as("rows_loaded"),
@@ -214,16 +236,16 @@ class ScdPipeline(
 
   /** One cycle against `pin`, the manifest read at its start: the
     * class doc's DAG, run as two overlapped phases between the raw write
-    * and the commit. Whatever fails, every job the cycle started has
-    * returned before the checkpoint is released and the failure recorded,
-    * and the original exception is rethrown. */
+    * and the commit, then the upkeep of the tables it appended to.
+    * Whatever fails, every job the cycle started has returned before the
+    * checkpoint is released and the failure recorded, and the original
+    * exception is rethrown. */
   private def cycle(pin: Map[String, String], rawBatch: DataFrame,
       batchTime: Timestamp, afterCommit: () => Unit,
       loadedFiles: Seq[String]): Long = try {
 
     // ---- the pre-cycle snapshot: every input is read at `pin` ------------
     val landingPrev = readAt(pin, Landing, config.baseSchema)
-    val stagingPrev = readAt(pin, Staging, stagingSchema)
 
     // task1+2: truncate raw + COPY INTO raw. Materialized first so the CSV
     // files can be purged after commit and downstream reads are from
@@ -237,13 +259,23 @@ class ScdPipeline(
     // join yields the stream on landing since the offset (the landing
     // version the cycle started from): the rows this merge changes,
     // checkpointed. Neither reads the other; both read the raw version.
+    // The CDC's chain then reads staging's touched slice (task4's read
+    // half: a read, it stages nothing), so phase B only writes.
     var rowsLoaded = 0L
     var changes: Merge.Changes = null
-    try {
+    var plan: Scd2.Plan = null
+    var touched: store.Touched = null
+    val staged = try {
       Overlap.run(Seq(
         () => rowsLoaded = countRows(),
-        () => changes = Merge.upsertChanges(landingPrev, raw,
-          config.businessKeys, compareCols = config.compareCols)))
+        () => {
+          changes = Merge.upsertChanges(landingPrev, raw,
+            config.businessKeys, compareCols = config.compareCols)
+          plan = Scd2.plan(stagingSchema.fieldNames.toSeq, changes.cdc, batchTime,
+            config.matchKeys, faithful)
+          touched = store.touch(Staging, pin.get(Staging), stagingSchema,
+            select = Some(plan.touched))
+        }))
       val cdc = changes.cdc
 
       // phase B, only once the verdict passed: every table version the
@@ -251,17 +283,16 @@ class ScdPipeline(
       // is listed first (the FIFO scheduler serves the earliest job first).
       val staged = Overlap.run(Seq[() => (String, String)](
         // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
-        // Partitioned by current_flag: master (and most readers) touch
-        // only the pruned 'Y' partition, never the closed history.
-        () => Staging -> store.stage(Staging,
-          Scd2.merge(stagingPrev, cdc, batchTime,
-            matchKeys = config.matchKeys, faithful = faithful),
-          partitionBy = Seq("current_flag")),
+        // A carry version of the pinned history: of the touched rows, the
+        // ones the cycle closes are tombstoned, and the closed re-images
+        // and opened versions are appended (N and Y rows in separate
+        // files) — no history byte is rewritten.
+        () => Staging -> store.stageMerge(touched,
+          change = rows => (Some(plan.toClose(rows)), plan.appended(rows))),
         // task3's write: landing minus the changed keys plus their images
         () => Landing -> store.stage(Landing, changes.next),
         // run-log append (TASK_HISTORY stand-in)
-        () => RunLog -> store.stage(RunLog, logAppend(
-          readAt(pin, RunLog, Schemas.runLog), batchTime, rowsLoaded, "SUCCEEDED"))
+        () => RunLog -> logAppend(pin, batchTime, rowsLoaded, "SUCCEEDED")
       ) ++
         // registered materialized aggregates: refreshed by signed
         // application of the SAME consumed delta (IncrementalAgg) and
@@ -278,11 +309,10 @@ class ScdPipeline(
         // same commit, so "loaded" and "visible in the tables" are one
         // atomic fact
         Option.when(loadedFiles.nonEmpty) { () =>
-          val rows = spark.createDataFrame(
-            loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
-            Schemas.loadHistory)
-          LoadHistory -> store.stage(LoadHistory,
-            readAt(pin, LoadHistory, Schemas.loadHistory).unionByName(rows))
+          LoadHistory -> store.stageAppend(LoadHistory, pin.get(LoadHistory),
+            spark.createDataFrame(
+              loadedFiles.map(f => org.apache.spark.sql.Row(f, batchTime)).asJava,
+              Schemas.loadHistory))
         }).toMap
 
       // ---- the atomic multi-table commit: committing landing advances the
@@ -291,14 +321,33 @@ class ScdPipeline(
         Seq(Landing, Staging, RunLog, LoadHistory) ++ config.aggregates.map(mvTable)
       store.commit(staged + (Raw -> rawVersion),
         expect = readTables.map(t => t -> pin.get(t)).toMap)
-    } finally if (changes != null) changes.release()
+      staged
+    } finally {
+      if (touched != null) touched.release()
+      if (changes != null) changes.release()
+    }
 
+    upkeep(staged)
     afterCommit()
     rowsLoaded
   } catch {
     case e: Throwable =>
       recordFailure(batchTime, e)
       throw e
+  }
+
+  /** Bound the debt of the tables the cycle appended to: each one whose
+    * committed version passes [[TableStore.stageUpkeep]]'s rule is
+    * maintained, all of them in one commit that expects the cycle's own
+    * versions. A refused commit (another writer moved a table since) is
+    * skipped; the next cycle's versions carry the same debt and retry. */
+  private def upkeep(committed: Map[String, String]): Unit = {
+    val maintained = Seq(Staging, RunLog, LoadHistory).flatMap(t =>
+      committed.get(t).flatMap(store.stageUpkeep(t, _)).map(t -> _)).toMap
+    if (maintained.nonEmpty)
+      try store.commit(maintained, expect = maintained.map { case (t, _) =>
+        t -> committed.get(t) })
+      catch { case _: java.util.ConcurrentModificationException => () }
   }
 
   /** The COPY load-history ledger (file name → load batch time). */
@@ -334,7 +383,9 @@ class ScdPipeline(
   def landing: DataFrame = store.readOrEmpty(Landing, config.baseSchema)
   def staging: DataFrame = store.readOrEmpty(Staging, stagingSchema)
   /** The end-user current view (task 5): the committed staging version's
-    * `current_flag = 'Y'` partition, so it can never disagree with it. */
+    * `current_flag = 'Y'` rows, so it can never disagree with it. Each
+    * cycle appends its Y and N rows in separate files, so the filter
+    * pushed into the scan skips the closed history's row groups. */
   def master: DataFrame =
     Scd2.currentView(staging, config.baseSchema.fieldNames.toSeq)
 

@@ -53,8 +53,78 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
       withClue(s"faithful=$faithful") {
         plan should not include "SortMergeJoin"
         plan should include("BroadcastHashJoin")
+        // no shuffle at all: the close keys need no distinct
+        plan should not include "Exchange hashpartitioning"
+        plan should not include "HashAggregate"
       }
     }
+  }
+
+  test("the cycle's staging task scans staging once, under a broadcast semi-join against the CDC's keys") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    object Plans extends AdaptiveSparkPlanHelper
+
+    val store = new graft.core.TableStore(tmpDir("stg-store"), spark)
+    val stage = new graft.sources.Stage(tmpDir("stg-stage"))
+    val pipeline = new graft.pipeline.ScdPipeline(spark, store)
+    // 40 suppliers, then one state change: one tombstone, so the cycle's
+    // upkeep stays idle and every plan over staging is the merge's own
+    stage.putContent("b1.csv",
+      (1 to 40).map(i => f"$i,A$i%03d,N$i,S${i % 5}").mkString("\n"))
+    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+
+    val ran = scala.collection.mutable.ArrayBuffer[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.synchronized(ran += f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // every broadcast over staging must be the merge's own hint
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    val before = store.manifest("supplier_staging")
+    try {
+      stage.putContent("b2.csv", "2,A002,N2,S9")
+      pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
+    store.committedVersions("supplier_staging").takeRight(2).head shouldBe before
+
+    def scansStaging(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("/supplier_staging/"))
+      case _ => false
+    }
+    def semiJoinsStaging(p: SparkPlan): Boolean = p match {
+      case j: BroadcastHashJoinExec =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi &&
+          Plans.find(j.left)(scansStaging).isDefined
+      case _ => false
+    }
+    // one plan reads staging — the touched slice's checkpoint — and it
+    // scans staging once, streamed through the semi-join
+    val overStaging = ran.toSeq.filter { case (_, p) => Plans.find(p)(scansStaging).isDefined }
+    overStaging.map(_._1) shouldBe Seq("localCheckpoint")
+    val touched = overStaging.head._2
+    Plans.collect(touched) { case f if scansStaging(f) => f }.size shouldBe 1
+    Plans.find(touched)(semiJoinsStaging) shouldBe defined
+    Plans.collect(touched) { case j: SortMergeJoinExec => j } shouldBe empty
+    Plans.collect(touched) {
+      case e: ShuffleExchangeExec if Plans.find(e)(scansStaging).isDefined => e
+    } shouldBe empty
+    Plans.collect(touched) {
+      case e: BroadcastExchangeExec if Plans.find(e)(scansStaging).isDefined => e
+    }.foreach(e => Plans.find(e)(semiJoinsStaging) shouldBe defined)
+
+    pipeline.staging.count() shouldBe 41 // 40 opened + A002's new version
+    pipeline.master.count() shouldBe 40
   }
 
   test("AQE skew-join splits a skewed shuffle join at runtime") {

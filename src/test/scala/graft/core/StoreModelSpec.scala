@@ -13,13 +13,14 @@ import graft.SparkSpec
   * step sequences through one handle on a small flat, statted table,
   * checked after every step against an in-memory `Map` of id → value.
   * The steps are the carry DMLs (MoR delete and upsert, purge, surgical
-  * range delete, small-file bin-packing) — the operations whose
+  * range delete, small-file bin-packing, a stage-only tombstone+append
+  * committed by the caller, a plain append) — the operations whose
   * successor versions carry files, deletion vectors and stats sidecars
   * from one version to the next, where a dropped or misapplied sidecar
   * shows up as resurrected, lost or duplicated rows. */
 class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
 
-  import org.apache.spark.sql.functions.{col, lit}
+  import org.apache.spark.sql.functions.{col, concat, lit}
 
   private sealed trait Step
   private case class DeleteMoR(mod: Int, rem: Int) extends Step
@@ -27,6 +28,12 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
   private case object Purge extends Step
   private case class DeleteRange(lo: Long, hi: Long) extends Step
   private case class CompactSmall(targetBytes: Long) extends Step
+  /** Tombstone the rows with `id % mod == rem` and append their
+    * re-images (value marked), staged and then committed separately —
+    * the shape of the SCD close. */
+  private case class Reimage(mod: Int, rem: Int) extends Step
+  /** Append `n` rows with ids above every id the table holds. */
+  private case class Append(n: Int) extends Step
 
   private val KeySpace = 60L
   private val initial: Map[Long, String] =
@@ -48,7 +55,11 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
     // this table's files are 700-800 bytes: a target inside that band
     // packs some files and carries the rest, 4 KiB packs them all
     2 -> Gen.oneOf(Gen.choose(700L, 800L), Gen.const(4096L))
-      .map(CompactSmall(_)))
+      .map(CompactSmall(_)),
+    2 -> (for {
+      mod <- Gen.choose(2, 7); rem <- Gen.choose(0, mod - 1)
+    } yield Reimage(mod, rem)),
+    2 -> Gen.choose(1, 4).map(Append(_)))
 
   private val genSteps: Gen[List[Step]] =
     Gen.choose(1, 6).flatMap(Gen.listOfN(_, genStep))
@@ -82,6 +93,20 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
       case CompactSmall(target) =>
         store.compactSmallFiles("t", targetBytes = target, minSmallFiles = 2)
         model
+      case Reimage(mod, rem) =>
+        val base = store.manifest.get("t")
+        val hit = col("id") % mod === rem
+        val version = store.stageMerge(
+          store.touch("t", base, store.read("t").schema, select = Some(_.filter(hit))),
+          change = touched => (Some(touched),
+            touched.select(col("id"), concat(col("v"), lit("*")).as("v"))))
+        store.commit(Map("t" -> version), expect = Map("t" -> base))
+        model.map { case (k, v) => k -> (if (k % mod == rem) v + "*" else v) }
+      case Append(n) =>
+        val from = (model.keys ++ Seq(KeySpace)).max + 1
+        val rows = (from until from + n).map(k => k -> s"a$k")
+        store.append("t", rows.toDF("id", "v"))
+        model ++ rows
     }
   }
 

@@ -12,9 +12,9 @@ final case class Supp(key: Long, code: String, name: String, state: String) {
   * absent while the version is open. */
 final case class Version(s: Supp, start: Long, end: Option[Long], current: Boolean)
 
-/** Independent in-memory SCD Type-2 model of one pipeline cycle in
-  * faithful mode, written from the reference semantics in plain Scala
-  * collections (no Spark). A copy of the benchmark's model
+/** Independent in-memory SCD Type-2 model of one pipeline cycle, written
+  * from the reference semantics in plain Scala collections (no Spark). In
+  * faithful mode a copy of the benchmark's model
   * (`perfbench/scala/ScdModel.scala`) with SQL NULL semantics added:
   *
   *  - a batch carries each business key at most once;
@@ -31,13 +31,27 @@ final case class Version(s: Supp, start: Long, end: Option[Long], current: Boole
   *    return to a prior state opens nothing, and a name-only change
   *    closes the current row without reopening it (the two documented
   *    quirks);
-  *  - master: the current rows. */
-final class ScdModel {
+  *  - master: the current rows.
+  *
+  * Corrected mode (`faithful = false`) changes only the staging step:
+  * only current rows close, matching is null-safe (a NULL state is one
+  * value like any other), and an INSERT image opens a version unless a
+  * row that was current before this cycle's closes has the same (code,
+  * state). A return to a prior state therefore opens a version, and a
+  * name-only change still closes its current row without reopening it
+  * (the closed row was current before the merge). */
+final class ScdModel(faithful: Boolean = true) {
   val landing = mutable.LinkedHashMap[String, Supp]()
   private val history = mutable.HashMap[String, mutable.ArrayBuffer[Version]]()
 
   /** SQL `=`, with UNKNOWN read as false. */
   private def sqlEq(a: Any, b: Any): Boolean = a != null && b != null && a == b
+
+  /** Whether history row `v` matches an image with tracked value
+    * `state`: faithful mode any row under SQL `=`, corrected mode only
+    * current rows under null-safe equality. */
+  private def hit(v: Version, state: String): Boolean =
+    if (faithful) sqlEq(v.s.state, state) else v.current && v.s.state == state
 
   /** Snowflake's OR of `!=` over the non-key columns, UNKNOWN read as false. */
   private def changed(o: Supp, n: Supp): Boolean =
@@ -62,10 +76,10 @@ final class ScdModel {
     // the open-version anti-join reads the history as it was before
     // this cycle's closes
     val opened = inserts.filterNot(s =>
-      history.getOrElse(s.code, Nil).exists(v => sqlEq(v.s.state, s.state)))
+      history.getOrElse(s.code, Nil).exists(v => hit(v, s.state)))
     deletes.map(d => (d.code, d.state)).distinct.foreach { case (code, state) =>
       history.get(code).foreach { vs =>
-        for (i <- vs.indices if sqlEq(vs(i).s.state, state))
+        for (i <- vs.indices if hit(vs(i), state))
           vs(i) = vs(i).copy(end = Some(ts), current = false)
       }
     }

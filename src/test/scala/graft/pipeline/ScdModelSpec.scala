@@ -13,8 +13,9 @@ import graft.core.TableStore
 import graft.sources.Stage
 
 /** The pipeline against [[ScdModel]], row for row, after every cycle of
-  * seeded random multi-cycle deltas (faithful mode). Invariant checks
-  * alone would miss a wrong `end_date` or a version opened twice. */
+  * seeded random multi-cycle deltas, in faithful and in corrected mode.
+  * Invariant checks alone would miss a wrong `end_date` or a version
+  * opened twice. */
 class ScdModelSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private val states = Vector("Delhi", "Goa", "Assam", null)
@@ -33,12 +34,21 @@ class ScdModelSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("random multi-cycle deltas: landing, staging and master equal the model after every cycle") {
+    replay(faithful = true)
+  }
+
+  test("corrected mode: random multi-cycle deltas equal the corrected model after every cycle") {
+    replay(faithful = false)
+  }
+
+  private def replay(faithful: Boolean): Unit = {
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
-      val pipeline = new ScdPipeline(spark, new TableStore(tmpDir("model-store"), spark))
+      val pipeline = new ScdPipeline(spark, new TableStore(tmpDir("model-store"), spark),
+        faithful = faithful)
       val stage = new Stage(tmpDir("model-stage"))
-      val model = new ScdModel
+      val model = new ScdModel(faithful)
       // per key: the row last sent and every state it was sent with
       val sent = mutable.LinkedHashMap[String, Supp]()
       val held = mutable.Map[String, Set[String]]()

@@ -71,8 +71,9 @@ object Sf1Soak {
     val json =
       s"""{"metric":"total_$Label","value":$total,"value_skew":$totalSkew,"unit":"sec","queries":$qs,"first_build":$fb,"sf":"$Dst"}"""
     println(json)
+    // beside the working directory, like Bench's own artifact
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"/root/repo/BENCH_$Label.json"), json + "\n")
+      java.nio.file.Paths.get(sys.props("user.dir"), s"BENCH_$Label.json"), json + "\n")
     spark.stop()
   }
 
