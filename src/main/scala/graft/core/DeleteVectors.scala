@@ -109,7 +109,7 @@ object DeleteVectors {
     * through untouched, `_metadata` never referenced. The tombstones'
     * keys are read on the driver and broadcast as local rows: a version
     * is immutable, so they are computed once per version ([[localKeys]])
-    * and a read pays no Spark job and no planning work for them. */
+    * and a read pays no Spark job for them. */
   def applyTo(spark: SparkSession, df: DataFrame, dataDir: String): DataFrame =
     if (!exists(dataDir)) df
     else {
