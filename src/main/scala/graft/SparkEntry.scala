@@ -3662,8 +3662,8 @@ object SparkEntry {
     // BPE merge learning: one corpus pass to the (token, freq) vocab,
     // then merge rounds learned DRIVER-SIDE over the collected bounded
     // vocabulary (Vocab.bpeMergesLocal — incremental pair stats, the
-    // production trainer; per-round-Spark-job bpeMerges is its
-    // spec-pinned distributed twin), replayed round-for-round in DuckDB
+    // production trainer; the specs pin it to a per-round-Spark-job
+    // distributed twin), replayed round-for-round in DuckDB
     "vocab_bpe_merges" -> ((s, dir) =>
       graft.operators.Vocab.bpeMergesLocal(
           s.read.parquet(s"$dir/documents.parquet"), nMerges = 4)

@@ -318,19 +318,15 @@ class TableStore(val root: String, spark: SparkSession) {
 
     val smallBytes = small.map(Files.size).sum
     val n = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
-    val dv = DeleteVectors.read(spark, curDir.toString)
-    val smallScan = declaredSchema(curDir)
+    // rewritten files materialize their tombstones (the full DV applied:
+    // entries naming carried files simply never match)
+    val packed = DeleteVectors.applyTo(spark, declaredSchema(curDir)
       .fold(spark.read)(sc => spark.read.schema(sc))
       .option("basePath", curDir.toString)
-      .parquet(small.map(_.toUri.toString): _*)
-    // rewritten files materialize their tombstones (applyTo's anti-join
-    // on the full DV: entries naming carried files simply never match)
-    val packed = dv.fold(smallScan)(_ =>
-      DeleteVectors.applyTo(spark, smallScan, curDir.toString))
+      .parquet(small.map(_.toUri.toString): _*), curDir.toString)
     // tombstones of CARRIED files keep pointing at unmoved rows
-    val bigNames = big.map(_.getFileName.toString).toSet
-    val keptDv = dv.map(_.filter(col("file").isInCollection(bigNames))
-      .localCheckpoint(true)).filter(_.count() > 0L)
+    val keptDv = DeleteVectors.load(spark, curDir.toString)
+      .on(big.map(_.getFileName.toString).toSet)
     val (version, _) = stageCarry(table, curDir, big,
       append = Some(packed.coalesce(n)), dv = keptDv)
     Some((version, small.size))
@@ -737,11 +733,12 @@ class TableStore(val root: String, spark: SparkSession) {
     * In order:
     *  1. [[stage]] `append` as a new version of `table`, or, with nothing
     *     to append, create an empty version directory with `_SUCCESS`;
-    *     concurrently, write `dv` as the new version's deletion vector;
     *  2. hard-link `keep` (files of the flat version at `src`) beside the
     *     appended files (Spark's UUID part names cannot collide with
-    *     carried ones) and move the deletion vector in, unless it holds
-    *     no tombstone;
+    *     carried ones);
+    *  3. write `dv`, the new version's tombstones (combined on the driver
+    *     by the caller; they name files of this version), as its deletion
+    *     vector ([[DeleteVectors.write]]; an empty one is not written);
     *  4. carry the stats sidecar (`carryStats`): rows of `src`'s files
     *     outside (src files − keep) are path-remapped into the new
     *     directory, appended files get fresh rows;
@@ -753,30 +750,20 @@ class TableStore(val root: String, spark: SparkSession) {
     * Returns the staged version (the caller owns the commit and its OCC
     * expectation) and the appended files' URIs. */
   private def stageCarry(table: String, src: Path, keep: Seq[Path],
-      append: Option[DataFrame] = None, dv: Option[DataFrame] = None,
+      append: Option[DataFrame] = None, dv: Tombstones = Tombstones.empty,
       tag: Option[String] = None,
       carryStats: Boolean = true): (String, Seq[String]) = {
-    // the deletion vector is written beside the append, into a scratch
-    // directory that looks like write-ahead garbage until it moves in
-    val dvScratch = dv.map(_ => versionDir(table, newVersion()))
-    val version = Overlap.run(Seq[() => String](() => append.fold {
-        val v = newVersion()
-        Files.createDirectories(versionDir(table, v))
-        Files.createFile(versionDir(table, v).resolve("_SUCCESS"))
-        v
-      }(stage(table, _))) ++
-      dv.map(d => () => { DeleteVectors.write(d, dvScratch.get.toString); "" })).head
+    val version = append.fold {
+      val v = newVersion()
+      Files.createDirectories(versionDir(table, v))
+      Files.createFile(versionDir(table, v).resolve("_SUCCESS"))
+      v
+    }(stage(table, _))
     val dst = versionDir(table, version)
     val appended = dataFiles(dst).map(_.toUri.toString)
     keep.foreach(carryFile(_, dst))
     val keptNames = keep.map(_.getFileName.toString).toSet
-    dvScratch.foreach { d =>
-      // a DV that tombstones nothing would only tax every read
-      val dvDir = d.resolve(DeleteVectors.DvDir)
-      if (footerRows(dataFiles(dvDir)).sum > 0L)
-        Files.move(dvDir, dst.resolve(DeleteVectors.DvDir), StandardCopyOption.ATOMIC_MOVE)
-      Fs.deleteRecursively(d)
-    }
+    DeleteVectors.write(spark, dv, dst.toString)
     if (carryStats) FileStats.read(spark, src.toString).foreach { rows =>
       val dropped = dataFiles(src).map(_.getFileName.toString).toSet -- keptNames
       carrySidecar(rows, dropped, dst, appended)
@@ -875,27 +862,19 @@ class TableStore(val root: String, spark: SparkSession) {
     // tombstones of the NEWLY matching rows, computed on the DV-adjusted
     // view so already-deleted rows are never re-recorded (positions are
     // captured directly above the scan — before the anti-join — because
-    // `_metadata` doesn't resolve through joins); localCheckpoint pins
-    // the small result so the count and the sidecar write below don't
-    // each re-run the predicate scan
-    val withPos = DeleteVectors.withPosition(dataScan(curDir))
-    val oldDv = DeleteVectors.read(spark, curDir.toString)
-    val alive = oldDv.fold(withPos)(DeleteVectors.antiJoin(withPos, _, curDir.toString))
-    val fresh = alive.filter(coalesce(predicate, lit(false)))
-      .select(DeleteVectors.fileNameOf(col("__dv_file")).as("file"),
-        col("__dv_pos").as("pos"))
-      .localCheckpoint(true)
-    val freshN = fresh.count()
-    if (freshN == 0L) return 0L
+    // `_metadata` doesn't resolve through joins), collected in one job
+    val oldDv = DeleteVectors.load(spark, curDir.toString)
+    val fresh = DeleteVectors.positions(DeleteVectors.join(spark,
+        DeleteVectors.withPosition(dataScan(curDir)), oldDv, curDir.toString, "left_anti")
+      .filter(coalesce(predicate, lit(false))))
+    if (fresh.isEmpty) return 0L
 
-    // the old DV and the fresh tombstones are disjoint by construction.
     // Zone maps / blooms describe the FILES (tombstones included) and
     // stats can only skip, so the sidecar carries over untouched; the
     // stale row_cnt is why [[statsAgg]] won't answer from metadata here
-    val (version, _) = stageCarry(table, curDir, files,
-      dv = Some(oldDv.fold(fresh)(_.unionByName(fresh))))
+    val (version, _) = stageCarry(table, curDir, files, dv = oldDv ++ fresh)
     commit(Map(table -> version), expect = Map(table -> Some(curV)))
-    freshN
+    fresh.size
   }
 
   /** Materialize a version's deletion vector: rewrite ONLY the files
@@ -919,24 +898,19 @@ class TableStore(val root: String, spark: SparkSession) {
     * has no (or an empty) deletion vector. */
   private def stagePurge(table: String, base: String): Option[(String, Long)] = {
     val curDir = versionDir(table, base)
-    DeleteVectors.read(spark, curDir.toString).flatMap { dv =>
-      val dvRows = dv.localCheckpoint(true)
-      val dvN = dvRows.count()
-      Option.when(dvN > 0L) {
-        val dvFiles = dvRows.select("file").distinct()
-          .collect().map(_.getString(0)).toSet
-        val (rewrite, untouched) =
-          dataFiles(curDir).partition(f => dvFiles(f.getFileName.toString))
-        // declared-schema read: DV'd files can span generations (see
-        // deleteRange) — rewrite under the union schema
-        val survivors = Option.when(rewrite.nonEmpty)(DeleteVectors.applyTo(
-          spark,
-          declaredSchema(curDir).fold(spark.read)(sc => spark.read.schema(sc))
-            .option("basePath", curDir.toString)
-            .parquet(rewrite.map(_.toUri.toString): _*),
-          curDir.toString))
-        (stageCarry(table, curDir, untouched, append = survivors)._1, dvN)
-      }
+    val dv = DeleteVectors.load(spark, curDir.toString)
+    Option.when(!dv.isEmpty) {
+      // every loaded tombstone names a file of the version
+      val (rewrite, untouched) =
+        dataFiles(curDir).partition(f => dv.files(f.getFileName.toString))
+      // declared-schema read: DV'd files can span generations (see
+      // deleteRange) — rewrite under the union schema
+      val survivors = DeleteVectors.applyTo(spark,
+        declaredSchema(curDir).fold(spark.read)(sc => spark.read.schema(sc))
+          .option("basePath", curDir.toString)
+          .parquet(rewrite.map(_.toUri.toString): _*),
+        curDir.toString)
+      (stageCarry(table, curDir, untouched, append = Some(survivors))._1, dv.size)
     }
   }
 
@@ -955,24 +929,28 @@ class TableStore(val root: String, spark: SparkSession) {
     * when version `base`'s deletion vector tombstones more than
     * [[MaxTombstoneShare]] of its rows, purge it ([[purgeDeletes]]); when
     * the version then holds more than [[MaxFiles]] data files, pack its
-    * small ones ([[compactSmallFiles]]). Returns the maintained version,
-    * or None when `base` is within both bounds (or not flat). The debt
-    * is read from metadata alone — the data files' and the DV's parquet
-    * footers and a directory listing — so checking it costs no Spark job.
-    * Same rows, new layout: the caller commits it expecting `base`. */
+    * small ones ([[compactSmallFiles]]) toward one file per core, so
+    * later scans stay parallel. Returns the maintained version, or None
+    * when `base` is within both bounds (or not flat). The debt is read
+    * from metadata alone — the DV, the data files' parquet footers and a
+    * directory listing — so checking it costs no Spark job. Same rows,
+    * new layout: the caller commits it expecting `base`. */
   def stageUpkeep(table: String, base: String): Option[String] = {
     val dir = versionDir(table, base)
     if (!isFlat(dir)) return None
-    val tombstones =
-      if (!DeleteVectors.exists(dir.toString)) 0L
-      else footerRows(dataFiles(dir.resolve(DeleteVectors.DvDir))).sum
+    val tombstones = DeleteVectors.load(spark, dir.toString).size
     val purged =
       if (tombstones == 0L || tombstones <= MaxTombstoneShare * versionRows(table, dir)) None
       else stagePurge(table, base).map(_._1)
     val current = purged.getOrElse(base)
+    val files = dataFiles(versionDir(table, current))
     val packed =
-      if (dataFiles(versionDir(table, current)).size <= MaxFiles) None
-      else stageCompactSmall(table, current, 128L << 20, minSmallFiles = 2).map(_._1)
+      if (files.size <= MaxFiles) None
+      else {
+        val cores = spark.sparkContext.defaultParallelism
+        val target = math.max(1L, (files.map(Files.size).sum + cores - 1) / cores)
+        stageCompactSmall(table, current, target, minSmallFiles = 2).map(_._1)
+      }
     packed.orElse(purged)
   }
 
@@ -1053,9 +1031,11 @@ class TableStore(val root: String, spark: SparkSession) {
     * a delta-sized slice, minus the base's tombstones, checkpointed. It
     * must only select rows (a filter or a semi-join), so that it
     * commutes with the tombstones: only the slice pays the deletion
-    * vector's anti-join. Without `select` nothing of the base is read
-    * and the slice is empty: a pure append ([[stageAppend]]). Touching
-    * stages nothing; [[Touched.release]] frees the slice. */
+    * vector's keyed anti-join ([[DeleteVectors.join]]) against the base's
+    * tombstones, which are loaded on the driver, so the slice scans the
+    * base's data once and never its DV. Without `select` nothing of the
+    * base is read and the slice is empty: a pure append ([[stageAppend]]).
+    * Touching stages nothing; [[Touched.release]] frees the slice. */
   def touch(table: String, base: Option[String], schema: StructType,
       select: Option[DataFrame => DataFrame]): Touched =
     new Touched(table, base, schema, select)
@@ -1069,7 +1049,8 @@ class TableStore(val root: String, spark: SparkSession) {
     // the base's declared read schema, or the caller's: never inferred
     // (inference costs a footer-reading job per call)
     private[TableStore] val readSchema = dir.flatMap(declaredSchema).getOrElse(schema)
-    private[TableStore] val oldDv = dir.flatMap(d => DeleteVectors.read(spark, d.toString))
+    private[TableStore] val dv =
+      dir.fold(Tombstones.empty)(d => DeleteVectors.load(spark, d.toString))
     // lazy: a pure append never plans a scan of the base
     private[TableStore] lazy val scan = (base, dir) match {
       case (Some(v), Some(d)) => DeleteVectors.withPosition(
@@ -1081,7 +1062,7 @@ class TableStore(val root: String, spark: SparkSession) {
         .withColumn("__dv_pos", lit(null).cast("long"))
     }
     private[TableStore] def alive(rows: DataFrame): DataFrame =
-      oldDv.fold(rows)(DeleteVectors.antiJoin(rows, _, dir.get.toString))
+      dir.fold(rows)(d => DeleteVectors.join(spark, rows, dv, d.toString, "left_anti"))
     private val slice = select.map(f => alive(f(scan)).localCheckpoint(true))
     private[TableStore] def selected = select.isDefined
     /** The touched rows (with the position columns); no rows without a
@@ -1110,17 +1091,16 @@ class TableStore(val root: String, spark: SparkSession) {
   def stageMerge(touched: Touched,
       change: DataFrame => (Option[DataFrame], DataFrame),
       tag: Option[String] = None): String = try {
-    import touched.{alive, dir, flat, oldDv, scan, table}
+    import touched.{alive, dir, dv, flat, scan, table}
     val (remove, add) = change(touched.rows)
     require(touched.selected || remove.isEmpty,
       s"stageMerge('$table'): rows to tombstone need a touched slice")
     val rows = add.select(touched.readSchema.fieldNames.toSeq.map(col): _*)
-    val positions = remove.map(_.select(
-      DeleteVectors.fileNameOf(col("__dv_file")).as("file"), col("__dv_pos").as("pos")))
     dir match {
       case Some(d) if flat =>
-        val dv = positions.fold(oldDv)(p => Some(oldDv.fold(p)(_.unionByName(p))))
-        stageCarry(table, d, dataFiles(d), append = Some(rows), dv = dv, tag = tag)._1
+        // R is a subset of the touched slice: delta-sized, collected
+        stageCarry(table, d, dataFiles(d), append = Some(rows),
+          dv = remove.fold(dv)(dv ++ DeleteVectors.positions(_)), tag = tag)._1
       case Some(d) =>
         // by full path: a partitioned layout repeats part-file names
         // across its directories
@@ -1233,7 +1213,7 @@ class TableStore(val root: String, spark: SparkSession) {
       else f.copy(nullable = true) // old generation is the null population
     })
     val (version, _) = stageCarry(table, curDir, dataFiles(curDir),
-      append = Some(rows), dv = DeleteVectors.read(spark, curDir.toString),
+      append = Some(rows), dv = DeleteVectors.load(spark, curDir.toString),
       tag = tag, carryStats = false)
     // the union declaration lands LAST among sidecars (overwriting any
     // carried older declaration) and before the commit: visible iff the
@@ -1321,7 +1301,7 @@ class TableStore(val root: String, spark: SparkSession) {
     // concurrent commit on SRC cannot corrupt the clone — only a racing
     // creation of DST itself must refuse
     val (version, _) = stageCarry(dst, curDir, dataFiles(curDir),
-      dv = DeleteVectors.read(spark, curDir.toString))
+      dv = DeleteVectors.load(spark, curDir.toString))
     commit(Map(dst -> version), expect = Map(dst -> None))
   }
 
@@ -1374,7 +1354,7 @@ class TableStore(val root: String, spark: SparkSession) {
       return
     }
     val (v, _) = stageCarry(table, srcDir, dataFiles(srcDir),
-      dv = DeleteVectors.read(spark, srcDir.toString))
+      dv = DeleteVectors.load(spark, srcDir.toString))
     commit(Map(table -> v), expect = Map(table -> Some(cur)))
   }
 
@@ -1430,10 +1410,12 @@ class TableStore(val root: String, spark: SparkSession) {
     // changed files null-fill the added columns like any other read
     val dataSchema = declaredSchema(toDir)
       .getOrElse(spark.read.parquet(toDir.toString).schema)
-    def scanOf(names: Seq[String]) = DeleteVectors.withPosition(
-      spark.read.schema(dataSchema).option("basePath", toDir.toString)
-        .parquet(names.map(n => toDir.resolve(n).toUri.toString): _*))
-      .withColumn("__dv_file", DeleteVectors.fileNameOf(col("__dv_file")))
+    // a scan of the changed files, joined `how` against tombstones of `toV`
+    def scanOf(names: Seq[String], t: Tombstones, how: String) =
+      DeleteVectors.join(spark, DeleteVectors.withPosition(
+        spark.read.schema(dataSchema).option("basePath", toDir.toString)
+          .parquet(names.map(n => toDir.resolve(n).toUri.toString): _*)),
+        t, toDir.toString, how)
     val dataCols = dataSchema.fieldNames.toSeq
     def shaped(df: DataFrame, a: String) =
       df.select(dataCols.map(col): _*).withColumn(action, lit(a))
@@ -1448,34 +1430,19 @@ class TableStore(val root: String, spark: SparkSession) {
 
     // DELETEs: toV tombstones on files fromV already had, minus
     // tombstones fromV already carried — read back from ONLY the files
-    // the delta names (collect is bounded by changed-file count, the
-    // same metadata scale purgeDeletes works at)
-    val dvTo = DeleteVectors.read(spark, toDir.toString)
-    val deletes = dvTo match {
-      case None => empty
-      case Some(dv) =>
-        val inFrom = dv.filter(col("file").isInCollection(fromNames))
-        val delta = (DeleteVectors.read(spark, fromDir.toString) match {
-          case Some(old) => inFrom.join(old, Seq("file", "pos"), "left_anti")
-          case None      => inFrom
-        }).localCheckpoint(true)
-        val names = delta.select("file").distinct()
-          .collect().map(_.getString(0)).toSeq
-        if (names.isEmpty) empty
-        else shaped(scanOf(names).join(
-          delta.select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
-          Seq("__dv_file", "__dv_pos"), "left_semi"), "DELETE")
-    }
+    // the delta names
+    val dvTo = DeleteVectors.load(spark, toDir.toString)
+    val delta = dvTo.on(fromNames) -- DeleteVectors.load(spark, fromDir.toString)
+    val deletes =
+      if (delta.isEmpty) empty
+      else shaped(scanOf(delta.files.toSeq.sorted, delta, "left_semi"), "DELETE")
 
     // INSERTs: files appended since fromV, minus rows toV tombstoned
     // within them (inserted-and-deleted inside the span nets out)
     val appended = (toNames -- fromNames).toSeq
     val inserts =
       if (appended.isEmpty) empty
-      else shaped(dvTo match {
-        case Some(dv) => DeleteVectors.antiJoin(scanOf(appended), dv, toDir.toString)
-        case None     => scanOf(appended)
-      }, "INSERT")
+      else shaped(scanOf(appended, dvTo, "left_anti"), "INSERT")
 
     deletes.unionByName(inserts)
   }

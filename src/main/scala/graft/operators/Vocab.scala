@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** BPE merge learning — the tokenizer-training step of an LLM data
@@ -35,7 +35,7 @@ object Vocab {
 
   /** `(syms, freq)` vocabulary: distinct lowercased whitespace tokens
     * with corpus frequencies, each exploded to its character array. */
-  private def vocabulary(docs: DataFrame, textCol: String): DataFrame =
+  private[operators] def vocabulary(docs: DataFrame, textCol: String): DataFrame =
     docs
       .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
@@ -45,26 +45,9 @@ object Vocab {
           i => col("tok").substr(i + 1, lit(1))).as("syms"),
         col("freq"))
 
-  /** Adjacent-pair counts over the vocabulary, weighted by token
-    * frequency. The adjacent zip is slice+zip_with (NOT an index
-    * sequence — a single-symbol token would make `sequence(0, -1)`
-    * descend and element_at throw): both slices are empty for 1-symbol
-    * tokens, so they contribute no pairs. */
-  private def pairCounts(vocab: DataFrame): DataFrame = {
-    val syms = col("syms")
-    val pairs = zip_with(
-      slice(syms, lit(1), size(syms) - 1),
-      slice(syms, lit(2), size(syms) - 1),
-      (l, r) => struct(l.as("l"), r.as("r")))
-    vocab
-      .select(explode(pairs).as("p"), col("freq"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("freq")).as("cnt"))
-  }
-
   /** Greedy left-to-right application of merge (l, r) to a symbol
     * array, as a single fold. */
-  private def applyMerge(syms: Column, l: String, r: String): Column =
+  private[operators] def applyMerge(syms: Column, l: String, r: String): Column =
     aggregate(syms,
       array().cast("array<string>"),
       (acc, x) =>
@@ -73,7 +56,7 @@ object Vocab {
           .otherwise(concat(acc, array(x))))
 
   /** ENCODE a corpus with an already-learned merge list — the inference
-    * half of the tokenizer ([[bpeMerges]] is the training half): each
+    * half of the tokenizer ([[bpeMergesLocal]] is the training half): each
     * document becomes its ordered BPE piece stream
     * `(idCol, pos, piece)`, `pos` 1-based over the whole document.
     *
@@ -155,7 +138,7 @@ object Vocab {
         round(col("n_pieces").cast("double") / col("n_tokens"), 4))
   }
 
-  /** Persist a learned merge table ([[bpeMerges]] output) as the stored
+  /** Persist a learned merge table ([[bpeMergesLocal]] output) as the stored
     * tokenizer model — tiny (one row per merge), written as one file.
     * The tokenizer analog of the stored ANN indexes: train once, encode
     * many corpora against the artifact, never re-learn. */
@@ -173,9 +156,10 @@ object Vocab {
   /** Unsigned byte-wise UTF-8 comparison — the collation Spark's
     * UTF8String and DuckDB's string ORDER BY share. The driver-side
     * trainer must tie-break with exactly this ordering or its merge
-    * table diverges from [[bpeMerges]] (and the DuckDB oracle) on the
-    * first count tie. Scala's `String.compareTo` is UTF-16 code-unit
-    * order, which differs above the BMP — so compare bytes. */
+    * table diverges from the distributed trainer's (and the DuckDB
+    * oracle's) on the first count tie. Scala's `String.compareTo` is
+    * UTF-16 code-unit order, which differs above the BMP — so compare
+    * bytes. */
   private def utf8Lt(a: String, b: String): Boolean = {
     val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
     val n = math.min(x.length, y.length)
@@ -205,9 +189,10 @@ object Vocab {
 
   /** Learn the first `nMerges` BPE merge rules DRIVER-SIDE over the
     * collected vocabulary — the production trainer for realistic merge
-    * counts. [[bpeMerges]] runs one Spark job per merge round, which is
-    * the right demonstration shape for a handful of rounds but caps a
-    * real tokenizer (32k merges = 32k scheduler round-trips). The
+    * counts. The distributed trainer (the specs' reference) runs one
+    * Spark job per merge round, which is the right demonstration shape
+    * for a handful of rounds but caps a real tokenizer (32k merges = 32k
+    * scheduler round-trips). The
     * vocabulary, however, is BOUNDED — distinct whitespace tokens, not
     * corpus tokens — so this is the k-means-fit pattern: ONE corpus pass
     * reduces to `(syms, freq)` rows, the bounded table collects to the
@@ -220,9 +205,9 @@ object Vocab {
     * (every pair in every word) learn in ~42 s — corpus size only ever
     * affects the one vocabulary pass.
     *
-    * Byte-identical contract with [[bpeMerges]] (spec-pinned): same
-    * greedy fold per word, same `(count desc, pair asc)` selection with
-    * unsigned-UTF-8 tie-break, same output schema
+    * Byte-identical contract with that distributed reference
+    * (spec-pinned): same greedy fold per word, same `(count desc, pair
+    * asc)` selection with unsigned-UTF-8 tie-break, same output schema
     * `(round, left_sym, right_sym, pair_count)`, same early stop. */
   def bpeMergesLocal(docs: DataFrame, textCol: String = "text",
       nMerges: Int = 4): DataFrame = {
@@ -305,38 +290,6 @@ object Vocab {
       index.remove(bestP)
       flushDirty()
       round += 1
-      }
-    }
-    merges.result().toDF("round", "left_sym", "right_sym", "pair_count")
-  }
-
-  /** Learn the first `nMerges` BPE merge rules with one Spark job per
-    * round — the fully-distributed reference implementation
-    * ([[bpeMergesLocal]] is the production trainer; their equality is
-    * spec-pinned). Output: one row per round —
-    * `(round, left_sym, right_sym, pair_count)` — the merge
-    * table a tokenizer trainer persists. Stops early when no pair is
-    * left to merge. */
-  def bpeMerges(docs: DataFrame, textCol: String = "text",
-      nMerges: Int = 4): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var vocab = vocabulary(docs, textCol).localCheckpoint(true)
-    val merges = Seq.newBuilder[(Long, String, String, Long)]
-    var round = 0
-    var exhausted = false
-    while (round < nMerges && !exhausted) {
-      val top = pairCounts(vocab)
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      top.headOption match {
-        case Some(Row(l: String, r: String, cnt: Long)) =>
-          merges += ((round.toLong, l, r, cnt))
-          vocab = vocab
-            .withColumn("syms", applyMerge(col("syms"), l, r))
-            .localCheckpoint(true)
-          round += 1
-        case _ => exhausted = true
       }
     }
     merges.result().toDF("round", "left_sym", "right_sym", "pair_count")

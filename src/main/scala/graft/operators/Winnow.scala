@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   * ([[graft.functions.KgramHashes]]: one UTF-8 walk hashing each gram
   * window in place; [[graft.functions.WinnowSelect]]: O(nG)
   * monotone-deque sliding min), with the compositional HOF forms kept
-  * as spec-pinned reference implementations. Pair generation reuses
-  * the standard blocking shape: explode `(h, id)`, group by the 8-byte
-  * hash, in-block pairs under a hot-block guard, then count shared
-  * fingerprints per pair — shuffles carry 16-byte rows only.
+  * in the test tree as spec-pinned reference implementations. Pair
+  * generation reuses the standard blocking shape: explode `(h, id)`,
+  * group by the 8-byte hash, in-block pairs under a hot-block guard,
+  * then count shared fingerprints per pair — shuffles carry 16-byte
+  * rows only.
   *
   * Hash choice is SEMANTIC here, unlike the MinHash/SimHash families:
   * winnowing selects each window's minimum hash, so a different hash
@@ -47,35 +48,11 @@ object Winnow {
   /** Character k-gram hashes of the normalized text — the native
     * one-pass kernel ([[graft.functions.KgramHashes]]: code-point
     * offsets over the UTF-8 bytes, each window hashed in place),
-    * bit-identical to the compositional HOF form kept below as the
-    * spec's reference. */
+    * bit-identical to the compositional HOF form the specs keep as
+    * its reference. */
   private[operators] def kgramHashes(norm: Column, k: Int,
       hashMode: String): Column =
     graft.functions.KgramHashes(norm, k, hashMode)
-
-  /** Reference HOF formulation of [[kgramHashes]] (spec-pinned equal).
-    * `norm` must be a materialized attribute (see
-    * [[selectionsFromHashesHof]]'s no-inline-expression rule — the gram
-    * lambda references it once per k-gram). */
-  private[operators] def kgramHashesHof(norm: Column, k: Int, hashMode: String): Column = {
-    val n = length(norm)
-    val grams = transform(sequence(lit(0), n - k),
-      i => norm.substr(i + 1, lit(k)))
-    val hashed = hashMode match {
-      // 12 hex digits = 48 bits: wide enough that a corpus-scale
-      // fingerprint table stays collision-free w.h.p. (32 bits expects
-      // a birthday collision by ~80k fingerprints — observed as a
-      // manufactured shared fingerprint on the sf0.01 corpus), while
-      // still fitting a signed BIGINT in both engines
-      case "md5" => transform(grams,
-        g => conv(substring(md5(g), 1, 12), 16, 10).cast("long"))
-      case "xxhash64" => transform(grams, g => xxhash64(g))
-      case other => throw new IllegalArgumentException(
-        s"hashMode must be md5 or xxhash64, got $other")
-    }
-    when(n >= k, hashed)
-      .otherwise(array().cast("array<bigint>"))
-  }
 
   /** Winnowing selection over a k-gram hash array column:
     * `array<struct<pos:int, h:long>>` of the distinct selected
@@ -86,44 +63,13 @@ object Winnow {
     *
     * Runs the native O(nG) monotone-deque kernel
     * ([[graft.functions.WinnowSelect]]) inside whole-stage codegen —
-    * the HOF fold it replaced ([[selectionsFromHashesHof]], kept as
-    * the spec's reference implementation) costs O(nG·w) interpreted
+    * the HOF fold it replaced (kept in the test tree as the spec's
+    * reference implementation) costs O(nG·w) interpreted
     * lambda dispatches per document, which measured ~20× slower at
     * bench scale and would make corpus-scale selection CPU-bound on
     * expression interpretation. */
   def selectionsFromHashes(hashes: Column, w: Int = 4): Column =
     graft.functions.WinnowSelect.select(hashes, w)
-
-  /** Reference HOF formulation of the selection — same semantics as
-    * the kernel (spec-pinned equal on real documents), kept because
-    * an independent executable statement of the algorithm is what
-    * makes the kernel auditable.
-    *
-    * `hashes` MUST be a plain column attribute, not an inline
-    * expression: higher-order functions evaluate interpreted, with no
-    * common-subexpression elimination inside the lambda — an inline
-    * k-gram-hash expression here would be recomputed for every
-    * element_at reference, turning the O(nG·w) fold into
-    * O(nG²·w) md5 work per document ([[fingerprints]] stages the
-    * projections in the right shape; CollapseProject keeps the
-    * many-times-referenced expensive producer un-inlined). */
-  private[operators] def selectionsFromHashesHof(hashes: Column, w: Int = 4): Column = {
-    val nG = size(hashes)
-    val width = least(lit(w), nG)
-    val nWindows = greatest(nG - w + 1, lit(1))
-    // rightmost-min fold per window: <= lets later positions win ties,
-    // which is the winnowing tie rule (robust winnowing picks rightmost
-    // so adjacent windows re-select the same gram where possible)
-    val sels = transform(sequence(lit(0), nWindows - 1), j =>
-      aggregate(sequence(j, j + width - 1),
-        struct(lit(-1).as("pos"), lit(Long.MaxValue).as("h")),
-        (acc, p) => when(element_at(hashes, p + 1) <= acc.getField("h"),
-            struct(p.cast("int").as("pos"),
-              element_at(hashes, p + 1).as("h")))
-          .otherwise(acc)))
-    when(nG > 0, array_sort(array_distinct(sels)))
-      .otherwise(array().cast("array<struct<pos:int,h:bigint>>"))
-  }
 
   /** Exploded per-document fingerprints: `(id, pos, h)` — the stored
     * form a fingerprint index would persist. Staged as three stacked

@@ -127,6 +127,55 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     pipeline.master.count() shouldBe 40
   }
 
+  test("over a DV'd staging base, the cycle's staging task scans staging's data once and never its deletion vector") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+
+    val store = new graft.core.TableStore(tmpDir("stg-dv-store"), spark)
+    val stage = new graft.sources.Stage(tmpDir("stg-dv-stage"))
+    val pipeline = new graft.pipeline.ScdPipeline(spark, store)
+    // 40 suppliers, then one state change: staging's base carries a
+    // one-tombstone DV, below the upkeep's purge share
+    stage.putContent("b1.csv",
+      (1 to 40).map(i => f"$i,A$i%03d,N$i,S${i % 5}").mkString("\n"))
+    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    stage.putContent("b2.csv", "2,A002,N2,S9")
+    pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    graft.core.DeleteVectors.exists(store.currentPath("supplier_staging").get) shouldBe true
+
+    val ran = scala.collection.mutable.ArrayBuffer[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.synchronized(ran += f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      stage.putContent("b3.csv", "3,A003,N3,S9")
+      pipeline.runCycle(stage, java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    def scans(p: SparkPlan, part: String): Boolean = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains(part))
+      case _ => false
+    }
+    def scansStagingData(p: SparkPlan): Boolean =
+      scans(p, "/supplier_staging/") && !scans(p, graft.core.DeleteVectors.DvDir)
+    // the touched slice's checkpoint is the one plan over staging's data
+    val overStaging = ran.toSeq.filter { case (_, p) => Plans.find(p)(scansStagingData).isDefined }
+    overStaging.map(_._1) shouldBe Seq("localCheckpoint")
+    Plans.collect(overStaging.head._2) { case f if scansStagingData(f) => f }.size shouldBe 1
+    // no plan of the cycle scans a deletion vector: it is loaded and
+    // written on the driver
+    ran.toSeq.filter { case (_, p) =>
+      Plans.find(p)(scans(_, graft.core.DeleteVectors.DvDir)).isDefined } shouldBe empty
+
+    pipeline.staging.count() shouldBe 42 // 40 opened + two new versions
+    pipeline.master.count() shouldBe 40
+  }
+
   test("AQE skew-join splits a skewed shuffle join at runtime") {
     // complements graft.operators.Salt: salting is the PLANNED answer for
     // known-hot keys (deterministic, engine-independent); AQE skew-join is

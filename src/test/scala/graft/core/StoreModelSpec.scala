@@ -14,10 +14,11 @@ import graft.SparkSpec
   * checked after every step against an in-memory `Map` of id → value.
   * The steps are the carry DMLs (MoR delete and upsert, purge, surgical
   * range delete, small-file bin-packing, a stage-only tombstone+append
-  * committed by the caller, a plain append) — the operations whose
-  * successor versions carry files, deletion vectors and stats sidecars
-  * from one version to the next, where a dropped or misapplied sidecar
-  * shows up as resurrected, lost or duplicated rows. */
+  * committed by the caller, a plain append, a restore to an earlier
+  * committed version, a clone, the debt rule's upkeep) — the operations
+  * whose successor versions carry files, deletion vectors and stats
+  * sidecars from one version to the next, where a dropped or misapplied
+  * sidecar shows up as resurrected, lost or duplicated rows. */
 class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   import org.apache.spark.sql.functions.{col, concat, lit}
@@ -34,6 +35,13 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
   private case class Reimage(mod: Int, rem: Int) extends Step
   /** Append `n` rows with ids above every id the table holds. */
   private case class Append(n: Int) extends Step
+  /** Restore the `pick`-th (modulo their number) earlier committed
+    * version; a no-op while there is none. */
+  private case class Restore(pick: Int) extends Step
+  /** Clone the table to a fresh one, which must read as the model. */
+  private case object Clone extends Step
+  /** [[TableStore.stageUpkeep]] of the current version, committed. */
+  private case object Upkeep extends Step
 
   private val KeySpace = 60L
   private val initial: Map[Long, String] =
@@ -59,15 +67,19 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
     2 -> (for {
       mod <- Gen.choose(2, 7); rem <- Gen.choose(0, mod - 1)
     } yield Reimage(mod, rem)),
-    2 -> Gen.choose(1, 4).map(Append(_)))
+    2 -> Gen.choose(1, 4).map(Append(_)),
+    1 -> Gen.choose(0, 99).map(Restore(_)),
+    1 -> Gen.const(Clone),
+    1 -> Gen.const(Upkeep))
 
   private val genSteps: Gen[List[Step]] =
     Gen.choose(1, 6).flatMap(Gen.listOfN(_, genStep))
 
   /** Applies one step to the store, checks the count the store returns
-    * where the model determines it, and returns the next model. */
+    * where the model determines it, and returns the next model.
+    * `history` holds the model of every version the table committed. */
   private def step(store: TableStore, model: Map[Long, String],
-      s: Step): Map[Long, String] = {
+      history: Map[String, Map[Long, String]], s: Step): Map[Long, String] = {
     val sp = spark
     import sp.implicits._
     def removing(drop: Long => Boolean, n: Long): Map[Long, String] = {
@@ -107,6 +119,27 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
         val rows = (from until from + n).map(k => k -> s"a$k")
         store.append("t", rows.toDF("id", "v"))
         model ++ rows
+      case Restore(pick) =>
+        val cur = store.manifest("t")
+        val earlier = store.committedVersions("t").filter(_ != cur)
+        if (earlier.isEmpty) model
+        else {
+          val target = earlier(pick % earlier.size)
+          store.restoreTable("t", target)
+          history(target)
+        }
+      case Clone =>
+        val clone = s"c${store.manifest.size}"
+        store.cloneTable("t", clone)
+        val rows = store.read(clone).as[(Long, String)].collect().toSeq
+        assert(rows.size == rows.toMap.size && rows.toMap == model,
+          s"$s: clone ${rows.sorted} != model ${model.toSeq.sorted}")
+        model
+      case Upkeep =>
+        val cur = store.manifest("t")
+        store.stageUpkeep("t", cur).foreach(v =>
+          store.commit(Map("t" -> v), expect = Map("t" -> Some(cur))))
+        model
     }
   }
 
@@ -122,13 +155,14 @@ class StoreModelSpec extends AnyFunSuite with Matchers with SparkSpec {
         initial.toSeq.sorted.toDF("id", "v")
           .repartitionByRange(4, col("id")).sortWithinPartitions("id"),
         Seq("id"))))
-      steps.foldLeft(initial) { (model, s) =>
-        val next = step(store, model, s)
-        val rows = store.read("t").as[(Long, String)].collect().toSeq
-        assert(rows.size == rows.toMap.size, s"after $s: duplicate ids in $rows")
-        assert(rows.toMap == next,
-          s"after $s in $steps: store ${rows.sorted} != model ${next.toSeq.sorted}")
-        next
+      steps.foldLeft((initial, Map(store.manifest("t") -> initial))) {
+        case ((model, history), s) =>
+          val next = step(store, model, history, s)
+          val rows = store.read("t").as[(Long, String)].collect().toSeq
+          assert(rows.size == rows.toMap.size, s"after $s: duplicate ids in $rows")
+          assert(rows.toMap == next,
+            s"after $s in $steps: store ${rows.sorted} != model ${next.toSeq.sorted}")
+          (next, history + (store.manifest("t") -> next))
       }
       true
     }

@@ -380,6 +380,26 @@ class TableStoreSpec extends AnyFunSuite with Matchers with SparkSpec {
       (1L to 2000L).sum
   }
 
+  test("stageUpkeep packs a table past its file bound toward one file per core, not into one file") {
+    val s = spark
+    import s.implicits._
+    val store = new TableStore(tmpDir("upkeep-pack"), spark)
+    store.overwrite("t", (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    (100L until 133L).foreach(i => store.append("t", Seq((i, s"a$i")).toDF("id", "v")))
+    import scala.jdk.CollectionConverters._
+    def files(version: String) = java.nio.file.Files
+      .list(java.nio.file.Paths.get(store.root, "t", version)).iterator().asScala
+      .count(_.toString.endsWith(".parquet"))
+    val base = store.manifest("t")
+    files(base) shouldBe 34 // past the bound of 32 data files
+
+    val packed = store.stageUpkeep("t", base).get
+    store.commit(Map("t" -> packed), expect = Map("t" -> Some(base)))
+    store.read("t").select("id").as[Long].collect().sorted.toSeq shouldBe (0L until 133L)
+    // local[4]: about one file per core, so later scans stay parallel
+    files(packed) should (be > 1 and be <= 8)
+  }
+
   test("compactClustered: z-ordered rewrite tightens per-file min/max in both dims") {
     val s = spark
     import s.implicits._

@@ -1867,17 +1867,17 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     // tokens: aa×2, ab×1 → round 0 merges (a,a) cnt 2; round 1 (a,b) cnt 1;
     // then no pairs remain → trainer stops early with 2 of 4 requested rows
     val d = docs((1L, "aa ab aa"))
-    val out = graft.operators.Vocab.bpeMerges(d, nMerges = 4)
+    val out = graft.operators.VocabReference.bpeMerges(d, nMerges = 4)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     out shouldBe Seq((0L, "a", "a", 2L), (1L, "a", "b", 1L))
     // equal counts resolve to the lexicographically smallest pair
     val t = docs((1L, "cd ab"))
-    graft.operators.Vocab.bpeMerges(t, nMerges = 1)
+    graft.operators.VocabReference.bpeMerges(t, nMerges = 1)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq shouldBe Seq(("a", "b"))
     // merged symbols are multi-char in later rounds: "abab" learns (a,b)
     // then (ab,ab)
     val m = docs((1L, "abab abab"))
-    graft.operators.Vocab.bpeMerges(m, nMerges = 2)
+    graft.operators.VocabReference.bpeMerges(m, nMerges = 2)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq shouldBe
       Seq(("a", "b"), ("ab", "ab"))
   }
@@ -1886,7 +1886,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     // same greedy fold, same tie-break, same early stop as bpeMerges
     for (text <- Seq("aa ab aa", "cd ab", "abab abab", "aaa aaaa baa")) {
       val d = docs((1L, text))
-      val dist = graft.operators.Vocab.bpeMerges(d, nMerges = 4).collect()
+      val dist = graft.operators.VocabReference.bpeMerges(d, nMerges = 4).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       val loc = graft.operators.Vocab.bpeMergesLocal(d, nMerges = 4).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
@@ -1894,7 +1894,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
     // full-corpus agreement at the query's merge count
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dist4 = graft.operators.Vocab.bpeMerges(corpus, nMerges = 4)
+    val dist4 = graft.operators.VocabReference.bpeMerges(corpus, nMerges = 4)
       .orderBy("round").collect().map(_.toSeq).toSeq
     val loc4 = graft.operators.Vocab.bpeMergesLocal(corpus, nMerges = 4)
       .orderBy("round").collect().map(_.toSeq).toSeq
@@ -2350,7 +2350,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     // encode(corpus, bpeMerges(corpus)) reproduces the trainer's final
     // vocabulary state: every piece is a learned symbol or a residual char
     val corpus = docs((1L, "low lower lowest low low"))
-    val merges = graft.operators.Vocab.bpeMerges(corpus, nMerges = 3)
+    val merges = graft.operators.VocabReference.bpeMerges(corpus, nMerges = 3)
       .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val pieces = graft.operators.Vocab.bpeEncode(corpus, merges)
       .select("piece").distinct().collect().map(_.getString(0)).toSet
@@ -2362,7 +2362,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkSpec {
     // the stored tokenizer model round-trips: write merges, load, same rules
     val path = tmpDir("merges")
     graft.operators.Vocab.writeMerges(
-      graft.operators.Vocab.bpeMerges(corpus, nMerges = 3), path)
+      graft.operators.VocabReference.bpeMerges(corpus, nMerges = 3), path)
     graft.operators.Vocab.loadMerges(spark, path) shouldBe merges
   }
 

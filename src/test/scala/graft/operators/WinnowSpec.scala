@@ -80,7 +80,7 @@ class WinnowSpec extends AnyFunSuite with Matchers with SparkSpec {
       // hashing: native byte-window kernel ≡ compositional substr+hash
       val hashed = norm.select(col("doc_id"),
           Winnow.kgramHashes(col("__t"), k, mode).as("__kh"),
-          Winnow.kgramHashesHof(col("__t"), k, mode).as("__khRef"))
+          WinnowReference.kgramHashesHof(col("__t"), k, mode).as("__khRef"))
         .localCheckpoint(true)
       hashed.filter(col("__kh") =!= col("__khRef")).count() shouldBe 0L
       // selection: native deque kernel ≡ reference HOF fold
@@ -88,7 +88,7 @@ class WinnowSpec extends AnyFunSuite with Matchers with SparkSpec {
           Winnow.selectionsFromHashes(col("__kh"), w).as("sel"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toList).toMap
       val hof = hashed.select(col("doc_id"),
-          Winnow.selectionsFromHashesHof(col("__kh"), w).as("sel"))
+          WinnowReference.selectionsFromHashesHof(col("__kh"), w).as("sel"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toList).toMap
       kernel.keySet shouldBe hof.keySet
       kernel.foreach { case (id, sel) => sel shouldBe hof(id) }
@@ -97,7 +97,7 @@ class WinnowSpec extends AnyFunSuite with Matchers with SparkSpec {
     val uni = Seq((1L, "héllo wörld déjà vu ñoño")).toDF("doc_id", "text")
       .select(col("doc_id"), Winnow.normalize(col("text")).as("__t"))
     uni.select(Winnow.kgramHashes(col("__t"), k, "md5").as("a"),
-        Winnow.kgramHashesHof(col("__t"), k, "md5").as("b"))
+        WinnowReference.kgramHashesHof(col("__t"), k, "md5").as("b"))
       .filter(col("a") =!= col("b")).count() shouldBe 0L
   }
 
