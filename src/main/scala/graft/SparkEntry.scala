@@ -166,8 +166,9 @@ object SparkEntry {
     * a merge over tables already stored that way, while
     * `scd_upsert_large` stays the derived-frame twin that pays (and at
     * sf10 showed a 2.7× swing from) the two-sided shuffle. The pipeline
-    * itself writes landing plain: its cycle's merge broadcasts the delta
-    * instead ([[graft.ops.Merge.upsertChanges]]). */
+    * itself keeps landing flat on the carry tier: its cycle's merge
+    * broadcasts the delta's keys, then tombstones the replaced rows and
+    * appends the new images ([[graft.ops.Merge.upsertChanges]]). */
   private[graft] def upsertStoredTables(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // the `v1` token versions the DERIVATION (largeDim's formula), not
@@ -1483,8 +1484,8 @@ object SparkEntry {
     // Exchange (PlanSpec-pinned) — scd_upsert_large above is the honest
     // derived-frame twin that pays the two-sided shuffle and inherited
     // its variance at scale. The layouts are a build-once fixture, paid
-    // at staging time and not timed here (the pipeline writes landing
-    // plain and broadcasts its delta instead); same oracle as the large
+    // at staging time and not timed here (the pipeline keeps landing flat
+    // on the carry tier and broadcasts its delta instead); same oracle as the large
     // twin: the layout is physical, the result identical.
     "scd_upsert_stored" -> ((s, dir) => {
       val (base, delta) = upsertStoredTables(s, dir)

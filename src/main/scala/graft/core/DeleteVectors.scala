@@ -115,10 +115,10 @@ object DeleteVectors {
       .withColumn("__dv_pos", col("_metadata.row_index"))
 
   /** The rows of `df` (carrying the [[withPosition]] columns) as
-    * tombstones: collected, so `df` must be delta-sized. */
+    * tombstones: collected in one task, so `df` must be delta-sized. */
   def positions(df: DataFrame): Tombstones =
-    Tombstones.of(df.select(fileNameOf(col("__dv_file")), col("__dv_pos")).collect()
-      .iterator.map(r => (r.getString(0), r.getLong(1))))
+    Tombstones.of(df.select(fileNameOf(col("__dv_file")), col("__dv_pos"))
+      .coalesce(1).collect().iterator.map(r => (r.getString(0), r.getLong(1))))
 
   /** The one application of tombstones: `df` (a scan of the version at
     * `dataDir`, with the [[withPosition]] columns) joined `how`

@@ -738,7 +738,9 @@ class TableStore(val root: String, spark: SparkSession) {
     *     carried ones);
     *  3. write `dv`, the new version's tombstones (combined on the driver
     *     by the caller; they name files of this version), as its deletion
-    *     vector ([[DeleteVectors.write]]; an empty one is not written);
+    *     vector ([[DeleteVectors.write]]; an empty one is not written).
+    *     `dv` is taken while step 1 writes: a caller's may be a
+    *     delta-sized collect ([[stageMerge]]'s R);
     *  4. carry the stats sidecar (`carryStats`): rows of `src`'s files
     *     outside (src files − keep) are path-remapped into the new
     *     directory, appended files get fresh rows;
@@ -750,20 +752,23 @@ class TableStore(val root: String, spark: SparkSession) {
     * Returns the staged version (the caller owns the commit and its OCC
     * expectation) and the appended files' URIs. */
   private def stageCarry(table: String, src: Path, keep: Seq[Path],
-      append: Option[DataFrame] = None, dv: Tombstones = Tombstones.empty,
+      append: Option[DataFrame] = None, dv: => Tombstones = Tombstones.empty,
       tag: Option[String] = None,
       carryStats: Boolean = true): (String, Seq[String]) = {
-    val version = append.fold {
-      val v = newVersion()
-      Files.createDirectories(versionDir(table, v))
-      Files.createFile(versionDir(table, v).resolve("_SUCCESS"))
-      v
-    }(stage(table, _))
+    var tombstones = Tombstones.empty
+    val Seq(Some(version), _) = Overlap.run(Seq[() => Option[String]](
+      () => Some(append.fold {
+        val v = newVersion()
+        Files.createDirectories(versionDir(table, v))
+        Files.createFile(versionDir(table, v).resolve("_SUCCESS"))
+        v
+      }(stage(table, _))),
+      () => { tombstones = dv; None }))
     val dst = versionDir(table, version)
     val appended = dataFiles(dst).map(_.toUri.toString)
     keep.foreach(carryFile(_, dst))
     val keptNames = keep.map(_.getFileName.toString).toSet
-    DeleteVectors.write(spark, dv, dst.toString)
+    DeleteVectors.write(spark, tombstones, dst.toString)
     if (carryStats) FileStats.read(spark, src.toString).foreach { rows =>
       val dropped = dataFiles(src).map(_.getFileName.toString).toSet -- keptNames
       carrySidecar(rows, dropped, dst, appended)
@@ -954,34 +959,50 @@ class TableStore(val root: String, spark: SparkSession) {
     packed.orElse(purged)
   }
 
-  /** Rows in each parquet file of `files`, from its footer (a
-    * driver-side metadata read, no Spark job). */
-  private def footerRows(files: Seq[Path]): Seq[Long] = {
+  /** A value read from each data file of the flat version at `dir`
+    * through its parquet footer (a driver-side metadata read, no Spark
+    * job). Carried files keep their names, so the values are remembered
+    * per `key` (for the files of its latest read version only) and a
+    * version costs footer reads only for the files it added. */
+  private def perFile[T](key: String, dir: Path)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try reader.getRecordCount finally reader.close()
+    val known = footerValues.getOrDefault(key, Map.empty)
+    val values = dataFiles(dir).map { f =>
+      val name = f.getFileName.toString
+      name -> known.getOrElse(name, {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try read(reader) finally reader.close()
+      })
     }
+    footerValues.put(key, values.toMap)
+    values.map(_._2.asInstanceOf[T])
   }
 
-  /** Rows of the flat version at `dir`. Carried files keep their names,
-    * so each file's footer count is remembered per table (for the files
-    * of its latest counted version only) and a version costs footer
-    * reads only for the files it added. */
-  private def versionRows(table: String, dir: Path): Long = {
-    val files = dataFiles(dir)
-    val known = rowCounts.getOrDefault(table, Map.empty)
-    val (seen, fresh) = files.partition(f => known.contains(f.getFileName.toString))
-    val counts = seen.map(f => f.getFileName.toString -> known(f.getFileName.toString)) ++
-      fresh.map(_.getFileName.toString).zip(footerRows(fresh))
-    rowCounts.put(table, counts.toMap)
-    counts.map(_._2).sum
-  }
+  private val footerValues =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Any]]()
 
-  private val rowCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+  /** Rows of the flat version at `dir`, from its files' footers. */
+  private def versionRows(table: String, dir: Path): Long =
+    perFile(s"$table#rows", dir)(_.getRecordCount).sum
+
+  /** The largest value of the long column `column` in `table`'s flat
+    * version `base`, from its files' parquet footer statistics — no Spark
+    * job, and each file's footer is read once per handle ([[perFile]]).
+    * Tombstoned rows count too, so under a deletion vector this bounds
+    * the live rows' max from above. None when the version holds no
+    * non-null value of the column. */
+  def footerMax(table: String, base: String, column: String): Option[Long] =
+    perFile(s"$table#max:$column", versionDir(table, base)) { reader =>
+      reader.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
+        .map(_.getStatistics)
+        .collect { case st: org.apache.parquet.column.statistics.LongStatistics
+          if st.hasNonNullValue => st.getMax }
+        .maxOption
+    }.flatten.maxOption
 
   /** Metadata-only aggregates: row count and, per requested column,
     * min / max / non-null count of the CURRENT version, answered from
@@ -1023,19 +1044,22 @@ class TableStore(val root: String, spark: SparkSession) {
     * version `base` that tombstones rows R and appends rows A, returned
     * uncommitted (the caller commits it, expecting `base`). It runs in
     * two halves, so a caller can read before it may write: [[touch]]
-    * reads and materializes what the change reads, then [[stageMerge]]
-    * stages the version.
+    * pins what the change reads, then [[stageMerge]] stages the version.
     *
     * `select` picks, from the base's rows (its scan with the
     * [[DeleteVectors.withPosition]] columns), the rows the change reads —
-    * a delta-sized slice, minus the base's tombstones, checkpointed. It
-    * must only select rows (a filter or a semi-join), so that it
-    * commutes with the tombstones: only the slice pays the deletion
-    * vector's keyed anti-join ([[DeleteVectors.join]]) against the base's
-    * tombstones, which are loaded on the driver, so the slice scans the
-    * base's data once and never its DV. Without `select` nothing of the
-    * base is read and the slice is empty: a pure append ([[stageAppend]]).
-    * Touching stages nothing; [[Touched.release]] frees the slice. */
+    * a delta-sized slice, minus the base's tombstones, checkpointed when
+    * first read ([[Touched.rows]]). It must only select rows (a filter or
+    * a semi-join), so that it commutes with the tombstones: only the
+    * slice pays the deletion vector's keyed anti-join
+    * ([[DeleteVectors.join]]) against the base's tombstones, which are
+    * loaded on the driver, so the slice scans the base's data once and
+    * never its DV. Without `select` nothing of the base is read and the
+    * slice is empty: a pure append ([[stageAppend]]). A caller that reads
+    * the slice once, inside a job of its own (a checkpointed join whose
+    * output already names R and A), reads [[Touched.selection]] instead,
+    * and the slice is never materialized. Touching stages nothing;
+    * [[Touched.release]] frees the slice. */
   def touch(table: String, base: Option[String], schema: StructType,
       select: Option[DataFrame => DataFrame]): Touched =
     new Touched(table, base, schema, select)
@@ -1063,18 +1087,25 @@ class TableStore(val root: String, spark: SparkSession) {
     }
     private[TableStore] def alive(rows: DataFrame): DataFrame =
       dir.fold(rows)(d => DeleteVectors.join(spark, rows, dv, d.toString, "left_anti"))
-    private val slice = select.map(f => alive(f(scan)).localCheckpoint(true))
     private[TableStore] def selected = select.isDefined
-    /** The touched rows (with the position columns); no rows without a
-      * selection. */
-    def rows: DataFrame = slice.getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema))
-    /** Free the checkpointed slice (idempotent). */
-    def release(): Unit = slice.foreach(graft.operators.Dedup.releaseCheckpoint)
+    /** The touched rows (with the position columns) as a plan over the
+      * base, for a caller that reads them once, inside its own job; no
+      * rows without a selection. */
+    val selection: DataFrame = select.fold(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema))(f => alive(f(scan)))
+    @volatile private var checkpointed = false
+    /** The touched rows, checkpointed when first read, so a change that
+      * reads them more than once scans the base once. */
+    lazy val rows: DataFrame =
+      if (!selected) selection
+      else { val slice = selection.localCheckpoint(true); checkpointed = true; slice }
+    /** Free the checkpointed slice, if it was read (idempotent). */
+    def release(): Unit = if (checkpointed) graft.operators.Dedup.releaseCheckpoint(rows)
   }
 
   /** The write half of the carry tier's MERGE (see [[touch]]): `change`
-    * maps the touched rows to R (a subset of them, position columns
+    * maps the touched rows (by name: a change that never reads them never
+    * materializes the slice) to R (rows of the slice, position columns
     * kept; `None` tombstones nothing) and A, and the new version carries
     * every base file by hard link, records R's positions in its deletion
     * vector on top of the base's, and writes A (in the table's column
@@ -1089,7 +1120,7 @@ class TableStore(val root: String, spark: SparkSession) {
     * Every later version of the table then takes the carry. Releases the
     * touched slice on return. */
   def stageMerge(touched: Touched,
-      change: DataFrame => (Option[DataFrame], DataFrame),
+      change: (=> DataFrame) => (Option[DataFrame], DataFrame),
       tag: Option[String] = None): String = try {
     import touched.{alive, dir, dv, flat, scan, table}
     val (remove, add) = change(touched.rows)
@@ -1098,7 +1129,7 @@ class TableStore(val root: String, spark: SparkSession) {
     val rows = add.select(touched.readSchema.fieldNames.toSeq.map(col): _*)
     dir match {
       case Some(d) if flat =>
-        // R is a subset of the touched slice: delta-sized, collected
+        // R is delta-sized: collected while A is written
         stageCarry(table, d, dataFiles(d), append = Some(rows),
           dv = remove.fold(dv)(dv ++ DeleteVectors.positions(_)), tag = tag)._1
       case Some(d) =>

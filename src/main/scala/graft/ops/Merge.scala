@@ -9,8 +9,15 @@ import graft.core.Schemas
   * INTO is re-expressed as joins + per-row resolution — SURVEY.md §2.3 J1).
   * By default the source is broadcast and the target streamed map-side
   * ([[upsert]]'s plan shape); `broadcastSource = false` falls back to the
-  * textbook full-outer join. [[upsertChanges]] also returns the CDC of
-  * the merge, from one delta-sized join.
+  * textbook full-outer join.
+  *
+  * A stored target is merged in two delta-sized steps instead of being
+  * rewritten: [[matched]] selects the target rows whose key the source
+  * sends (one streamed scan of the target), and [[upsertChanges]] joins
+  * those rows with the source into the merge's CDC. The store then
+  * tombstones the replaced rows and appends the INSERT images
+  * ([[graft.core.TableStore.stageMerge]]), so no target byte is rewritten
+  * ([[graft.pipeline.ScdPipeline]]'s task 3).
   *
   * Semantics reproduced from the reference's landing merge
   * (`SCD-Configuration Setup.sql:99-119`, `SCD-Automation.sql:57-74`):
@@ -103,29 +110,53 @@ object Merge {
     }
   }
 
-  /** The two outputs of [[upsertChanges]]: the target's next version and
-    * the checkpointed CDC it is built from; [[release]] frees the
-    * checkpoint once both are written. */
-  final case class Changes(next: DataFrame, cdc: DataFrame) {
-    def release(): Unit = graft.operators.Dedup.releaseCheckpoint(cdc)
+  /** J1's matched side as a row selection of `target`: its rows whose key
+    * `source` sends, streamed through a semi-join against a broadcast of
+    * the source's keys, so only source-sized rows leave the scan. NULL
+    * keys never match. It only selects rows, so it serves as
+    * [[graft.core.TableStore.touch]]'s `select`. */
+  def matched(source: DataFrame, keys: Seq[String])(target: DataFrame): DataFrame =
+    target.alias("__t").join(broadcast(source.select(keys.map(col): _*)).alias("__k"),
+      keys.map(k => col(s"__t.$k") === col(s"__k.$k")).reduce(_ && _), "left_semi")
+
+  /** The delta of one upsert ([[upsertChanges]]), checkpointed once: the
+    * CDC in the stream's shape, and the two halves a carry MERGE applies
+    * ([[graft.core.TableStore.stageMerge]]). [[release]] frees the
+    * checkpoint once every reader has run. */
+  final class Changes private[Merge] (images: DataFrame, cols: Seq[String],
+      carried: Seq[String]) {
+    /** The CDC, in [[SnapshotCdc.diff]]'s shape. */
+    def cdc: DataFrame = images.drop(carried: _*)
+    /** The matched rows a DELETE image replaces, with the extra columns
+      * they carried (a carry MERGE's tombstones, R). */
+    def replaced: DataFrame = images
+      .filter(col(Schemas.cdcActionCol) === "DELETE").select((cols ++ carried).map(col): _*)
+    /** The INSERT images, in the target's columns (a carry MERGE's
+      * appended rows, A). */
+    def inserted: DataFrame =
+      images.filter(col(Schemas.cdcActionCol) === "INSERT").select(cols.map(col): _*)
+    def release(): Unit = graft.operators.Dedup.releaseCheckpoint(images)
   }
 
-  /** [[upsert]] that also returns the delta it applies, in
-    * [[SnapshotCdc.diff]]'s shape, as a stream on the target shows it
+  /** The delta [[upsert]] applies to a target, in [[SnapshotCdc.diff]]'s
+    * shape, as a stream on the target shows it
     * (`SCD-Configuration Setup.sql:220-232`): a changed key gives
     * DELETE(old) + INSERT(new), both `_is_update`; a new key an INSERT.
-    * The target is streamed once through a broadcast semi-join on the
-    * source's keys; its matched, source-sized rows are broadcast back to
-    * the source, whose one left-outer pass is the CDC, checkpointed once.
-    * `next` (target minus the DELETE keys, plus the INSERT images) reads
-    * the checkpoint. NULL keys never match, as in [[upsert]]. */
+    * `matched` is the target's [[matched]] rows — source-sized, so it is
+    * broadcast back to the source, whose one left-outer pass is the CDC,
+    * checkpointed once. Columns of `matched` beyond the source's (a
+    * store's row positions) ride along on the images of their key, so
+    * [[Changes.replaced]] names the rows to tombstone without another
+    * join. NULL keys never match, as in [[upsert]]. */
   def upsertChanges(
-      target: DataFrame,
+      matched: DataFrame,
       source: DataFrame,
       keys: Seq[String],
       compareCols: Option[Seq[String]] = None): Changes = {
-    val cols = columnsOf(target, source)
-    val matched = target.join(broadcast(source.select(keys.map(col): _*)), keys, "left_semi")
+    val cols = matched.columns.toSeq.filter(source.columns.toSet)
+    require(source.columns.toSet == cols.toSet, s"source columns " +
+      s"${source.columns.mkString(",")} must match target ${matched.columns.mkString(",")}")
+    val carried = matched.columns.toSeq.filterNot(cols.toSet)
     val joined = source.alias("__s").join(broadcast(matched).alias("__t"),
       keys.map(k => col(s"__s.$k") === col(s"__t.$k")).reduce(_ && _), "left_outer")
     val isNew = col(s"__t.${keys.head}").isNull
@@ -133,19 +164,15 @@ object Merge {
       changedCond(cols, keys, compareCols, nullSafe = false)("__t", "__s"), lit(false))
     def image(side: String, action: String) =
       struct(cols.map(c => col(s"$side.$c").as(c)) :+ lit(action).as(Schemas.cdcActionCol): _*)
-    val cdc = joined.filter(isNew || changed)
-      .select(explode(when(isNew, array(image("__s", "INSERT")))
+    val images = joined.filter(isNew || changed)
+      .select(Seq(explode(when(isNew, array(image("__s", "INSERT")))
           .otherwise(array(image("__s", "INSERT"), image("__t", "DELETE")))).as("__c"),
-        (!isNew).as(Schemas.cdcIsUpdateCol))
-      .select(col("__c.*"), col(Schemas.cdcIsUpdateCol),
-        SnapshotCdc.rowId(keys.map(k => col(s"__c.$k"))).as(Schemas.cdcRowIdCol))
+        (!isNew).as(Schemas.cdcIsUpdateCol)) ++ carried.map(c => col(s"__t.$c").as(c)): _*)
+      .select(Seq(col("__c.*"), col(Schemas.cdcIsUpdateCol),
+        SnapshotCdc.rowId(keys.map(k => col(s"__c.$k"))).as(Schemas.cdcRowIdCol)) ++
+        carried.map(col): _*)
       .localCheckpoint(true)
-    def imagesOf(action: String) = cdc.filter(col(Schemas.cdcActionCol) === action)
-    val next = target
-      .join(broadcast(imagesOf("DELETE").select(keys.map(col): _*)), keys, "left_anti")
-      .select(cols.map(col): _*)
-      .unionByName(imagesOf("INSERT").select(cols.map(col): _*))
-    Changes(next, cdc)
+    new Changes(images, cols, carried)
   }
 
   private def columnsOf(target: DataFrame, source: DataFrame): Seq[String] = {

@@ -36,9 +36,10 @@ import graft.core.Schemas
   * Scale: a cycle's CDC is small against an ever-growing history, so
   * the merge is a [[Plan]] whose parts are all delta-sized: the history
   * is streamed once through a semi-join against a broadcast of the CDC's
-  * match keys ([[Plan.touched]]), and every other part reads only those
-  * touched rows and the CDC. The history is never shuffled or broadcast.
-  * [[merge]] assembles the whole next history from the plan;
+  * match keys ([[Plan.touched]]), or of the batch's business keys
+  * ([[touchedBy]]), and every other part reads only those touched rows
+  * and the CDC. The history is never shuffled or broadcast. [[merge]]
+  * assembles the whole next history from the plan;
   * [[graft.pipeline.ScdPipeline]] applies it to a stored history as
   * tombstones plus appended files ([[graft.core.TableStore.stageMerge]]),
   * so a cycle writes only the rows it closes and opens.
@@ -67,6 +68,22 @@ object Scd2 {
       .unionByName(p.closed(p.toClose(touched)))
       .unionByName(p.opened(touched))
   }
+
+  /** The history rows whose business key `batch` sends, streamed through
+    * a semi-join against a broadcast of the batch's keys (equal as the
+    * [[Plan]]'s match keys are: null-unsafe when `faithful`). Every image
+    * of the batch's CDC carries one of those keys, so this is a superset
+    * of [[Plan.touched]], and every part of the plan yields the same rows
+    * on it; unlike [[Plan.touched]] it needs only the batch, so a stored
+    * history can be touched before the CDC exists. */
+  def touchedBy(batch: DataFrame, businessKeys: Seq[String], faithful: Boolean)(
+      history: DataFrame): DataFrame =
+    history.alias("__h").join(
+      broadcast(batch.select(businessKeys.map(col): _*)).alias("__k"),
+      businessKeys.map { k =>
+        if (faithful) col(s"__h.$k") === col(s"__k.$k")
+        else col(s"__h.$k") <=> col(s"__k.$k")
+      }.reduce(_ && _), "left_semi")
 
   /** The delta-sized [[Plan]] of one cycle's merge into a history with
     * columns `historyCols`. */

@@ -31,41 +31,52 @@ import graft.sources.Stage
   * the data it reads, and independent actions overlap as concurrent jobs
   * on one small per-call driver pool ([[graft.core.Overlap]]):
   * {{{
-  *   ledger check -> raw write -+-> duplicate verdict --+-> landing write  -+
-  *                              |   (KeepOne: count)    |   staging write   |
-  *                              +-> CDC checkpoint      |   each MV write   +-> commit
-  *                                  (task3's join)      |   run-log write   |     |
-  *                                  -> staging's -------+   ledger write   -+  upkeep
-  *                                     touched slice
+  *   ledger check -> raw write -+-> duplicate verdict ---+-> landing write  -+
+  *                              |   (KeepOne: count)     |   staging write   |
+  *                              +-> landing's touched    |   each MV write   +-> commit
+  *                              |   rows -> CDC          |   run-log write   |     |
+  *                              |   checkpoint (task3)   |   ledger write   -+  upkeep
+  *                              +-> staging's touched ---+
+  *                                  slice (task4's read)
   * }}}
-  * The verdict and the CDC both read only the raw version; the five kinds
-  * of write read the CDC (landing, staging, the MVs), the verdict's row
+  * The verdict, the CDC and staging's touched slice each read only the
+  * raw version and the pinned tables; the five kinds of write read the
+  * CDC and staging's slice (landing, staging, the MVs), the verdict's row
   * count (run log) or nothing of either (ledger). The writes start only
   * once the verdict passes, so a poisoned batch stages no version beyond
   * raw.
   *
-  * Staging lives on the carry tier ([[TableStore.stageMerge]]): its write
-  * stages one carry version of the pinned history, built from the
-  * delta-sized [[Scd2.Plan]]. The history is scanned once, semi-joined
-  * against a broadcast of the CDC's match keys, and the touched rows are
-  * checkpointed ([[TableStore.touch]]) right after the CDC, in phase A:
-  * a read, so a failed verdict still stages nothing. In phase B the rows
-  * the cycle closes become deletion-vector
-  * tombstones, and their closed re-images (N) and the opened versions (Y)
-  * are appended in separate files, beside every other history file
-  * carried by hard link. The run log and the load ledger are plain
-  * appends ([[TableStore.stageAppend]]). So a cycle writes its delta, not
-  * its history; the one commit swaps all of it in. A staging version an
-  * older store wrote hive-partitioned is rewritten flat once, by the next
+  * Both of the paper's MERGE targets live on the carry tier
+  * ([[TableStore.touch]] + [[TableStore.stageMerge]]): each write stages
+  * one carry version of the pinned table, in which the rows the cycle
+  * replaces become deletion-vector tombstones and their successors are
+  * appended, beside every other file carried by hard link. Each table is
+  * scanned once in phase A, a read, so a failed verdict still stages
+  * nothing; phase B only writes.
+  *  - Landing (task 3): its rows whose key the batch sends stream through
+  *    a broadcast semi-join into the CDC's join ([[Merge.upsertChanges]]),
+  *    which carries their row positions, so the CDC's DELETE images name
+  *    the tombstones and its INSERT images are the appended rows.
+  *  - Staging (task 4): its rows whose key the batch sends
+  *    ([[Scd2.touchedBy]]) are checkpointed beside the CDC; the
+  *    delta-sized [[Scd2.Plan]] over them tombstones the rows the cycle
+  *    closes and appends their closed re-images (N) and the opened
+  *    versions (Y) in separate files.
+  * The run log and the load ledger are plain appends
+  * ([[TableStore.stageAppend]]). So a cycle writes its delta, not its
+  * tables; the one commit swaps all of it in. A version an older store
+  * wrote bucketed or hive-partitioned is rewritten flat once, by the next
   * cycle.
   *
-  * The carry tier's debt is bounded inside the cycle: after the commit,
-  * each of those three tables whose committed version passes
-  * [[TableStore.stageUpkeep]]'s rule (tombstones over a fixed share of its
+  * The carry tier's debt is bounded inside the cycle by one rule,
+  * [[TableStore.stageUpkeep]]'s (tombstones over a fixed share of its
   * rows: purge; more than a fixed number of data files: pack the small
-  * ones) is maintained, all of them in one more commit that expects the
-  * cycle's versions. Cron scheduling lives in [[ScdStream]]. The
-  * reference's resume-children-before-root ordering
+  * ones). Landing's staged version is maintained before the commit, so
+  * each committed landing version is one consumed batch; after the commit
+  * each of staging, the run log and the ledger whose committed version
+  * passes the rule is maintained, all of them in one more commit that
+  * expects the cycle's versions. Cron scheduling lives in [[ScdStream]].
+  * The reference's resume-children-before-root ordering
   * (`SCD-Automation.sql:108-114`) collapses into `ScdStream.start()`: with
   * the five tasks expressed as one driver function there is no window in
   * which a resumed root could tick before its children are resumed.
@@ -81,8 +92,9 @@ import graft.sources.Stage
   * The CDC stream on landing keeps no data: its offset is landing's
   * committed version. Task 3's MERGE ([[Merge.upsertChanges]]) yields the
   * rows it changes in landing, in the stream's shape, from its own
-  * broadcast join of landing against the raw batch: the stream's content
-  * since the offset, which task 4 and the aggregate refresh consume. This
+  * broadcast join of landing's touched rows with the raw batch: the
+  * stream's content since the offset, which task 4 and the aggregate
+  * refresh consume. This
   * rests on one invariant: '''landing is written only by the cycle that
   * consumes it''' — so between cycles the stream is empty.
   *
@@ -220,48 +232,49 @@ class ScdPipeline(
     } catch { case f: Throwable => cause.addSuppressed(f) }
 
   /** Stage the run log at `pin` plus one row. The row's `cycle_id` =
-    * max(cycle_id)+1 of the PREVIOUS log contents, an aggregate inside
-    * the write that appends the row, not a separate driver read.
-    * (Counting the on-disk version dirs instead broke monotonicity:
-    * `vacuum()` deletes superseded versions, so every post-vacuum cycle
-    * re-counted to the same id.) */
+    * max(cycle_id)+1 of the PREVIOUS log contents, read on the driver from
+    * its files' parquet footer statistics ([[TableStore.footerMax]]), so
+    * the append is one job. (Counting the on-disk version dirs instead
+    * broke monotonicity: `vacuum()` deletes superseded versions, so every
+    * post-vacuum cycle re-counted to the same id.) */
   private def logAppend(pin: Map[String, String], batchTime: Timestamp,
-      rowsLoaded: java.lang.Long, status: String): String =
-    store.stageAppend(RunLog, pin.get(RunLog), readAt(pin, RunLog, Schemas.runLog)
-      .agg((coalesce(max(col("cycle_id")), lit(0L)) + 1L).as("cycle_id"))
-      .select(col("cycle_id"), lit(batchTime).as("batch_time"),
-        lit(rowsLoaded).cast("long").as("rows_loaded"),
-        lit(new Timestamp(System.currentTimeMillis())).as("completed_time"),
-        lit(status).as("status")))
+      rowsLoaded: java.lang.Long, status: String): String = {
+    val cycleId = pin.get(RunLog).flatMap(store.footerMax(RunLog, _, "cycle_id"))
+      .getOrElse(0L) + 1L
+    store.stageAppend(RunLog, pin.get(RunLog), spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(cycleId, batchTime, rowsLoaded,
+        new Timestamp(System.currentTimeMillis()), status)),
+      Schemas.runLog))
+  }
 
   /** One cycle against `pin`, the manifest read at its start: the
     * class doc's DAG, run as two overlapped phases between the raw write
     * and the commit, then the upkeep of the tables it appended to.
     * Whatever fails, every job the cycle started has returned before the
-    * checkpoint is released and the failure recorded, and the original
+    * checkpoints are released and the failure recorded, and the original
     * exception is rethrown. */
   private def cycle(pin: Map[String, String], rawBatch: DataFrame,
       batchTime: Timestamp, afterCommit: () => Unit,
       loadedFiles: Seq[String]): Long = try {
 
-    // ---- the pre-cycle snapshot: every input is read at `pin` ------------
-    val landingPrev = readAt(pin, Landing, config.baseSchema)
-
     // task1+2: truncate raw + COPY INTO raw. Materialized first so the CSV
     // files can be purged after commit and downstream reads are from
-    // parquet, not the half-typed CSV path.
+    // parquet, not the half-typed CSV path. Every other input is read at
+    // `pin`, the pre-cycle snapshot.
     val rawVersion = store.stage(Raw, rawBatch)
     val (raw, countRows) =
       load(store.readVersion(Raw, rawVersion, config.baseSchema))
 
-    // phase A: the duplicate verdict (KeepOne: the count) beside task3's
-    // MERGE raw → landing (J1), null-propagating change detection, whose
-    // join yields the stream on landing since the offset (the landing
-    // version the cycle started from): the rows this merge changes,
-    // checkpointed. Neither reads the other; both read the raw version.
-    // The CDC's chain then reads staging's touched slice (task4's read
-    // half: a read, it stages nothing), so phase B only writes.
+    // phase A: three reads of the raw version, none of which reads
+    // another: the duplicate verdict (KeepOne: the count); the read half
+    // of task3's MERGE raw → landing (J1), landing's rows whose key the
+    // batch sends and the merge's null-propagating change detection over
+    // them, whose join yields the stream on landing since the offset (the
+    // landing version the cycle started from): the rows this merge
+    // changes, checkpointed; and task4's read half, staging's rows whose
+    // key the batch sends, checkpointed. So phase B only writes.
     var rowsLoaded = 0L
+    var matched: store.Touched = null
     var changes: Merge.Changes = null
     var plan: Scd2.Plan = null
     var touched: store.Touched = null
@@ -269,28 +282,41 @@ class ScdPipeline(
       Overlap.run(Seq(
         () => rowsLoaded = countRows(),
         () => {
-          changes = Merge.upsertChanges(landingPrev, raw,
+          matched = store.touch(Landing, pin.get(Landing), config.baseSchema,
+            select = Some(Merge.matched(raw, config.businessKeys)))
+          changes = Merge.upsertChanges(matched.selection, raw,
             config.businessKeys, compareCols = config.compareCols)
           plan = Scd2.plan(stagingSchema.fieldNames.toSeq, changes.cdc, batchTime,
             config.matchKeys, faithful)
+        },
+        () => {
           touched = store.touch(Staging, pin.get(Staging), stagingSchema,
-            select = Some(plan.touched))
+            select = Some(Scd2.touchedBy(raw, config.businessKeys, faithful)))
+          touched.rows // checkpointed here, beside the CDC
         }))
       val cdc = changes.cdc
 
       // phase B, only once the verdict passed: every table version the
       // commit swaps in, staged concurrently. Staging, the longest write,
       // is listed first (the FIFO scheduler serves the earliest job first).
+      // Both MERGEs write carry versions: of the touched rows, the ones
+      // the cycle replaces are tombstoned and their successors appended,
+      // beside every other file carried by hard link — no byte of either
+      // table is rewritten.
       val staged = Overlap.run(Seq[() => (String, String)](
-        // task4: MERGE stream → staging (J2/SCD2) — consuming the stream.
-        // A carry version of the pinned history: of the touched rows, the
-        // ones the cycle closes are tombstoned, and the closed re-images
-        // and opened versions are appended (N and Y rows in separate
-        // files) — no history byte is rewritten.
+        // task4: MERGE stream → staging (J2/SCD2) — consuming the stream:
+        // the closed rows tombstoned, their closed re-images and the
+        // opened versions appended (N and Y rows in separate files)
         () => Staging -> store.stageMerge(touched,
           change = rows => (Some(plan.toClose(rows)), plan.appended(rows))),
-        // task3's write: landing minus the changed keys plus their images
-        () => Landing -> store.stage(Landing, changes.next),
+        // task3's write: the changed keys' old rows tombstoned, their new
+        // images and the new keys appended; landing's upkeep is staged
+        // on top, inside the cycle (see [[upkeep]])
+        () => Landing -> {
+          val v = store.stageMerge(matched,
+            change = _ => (Some(changes.replaced), changes.inserted))
+          store.stageUpkeep(Landing, v).getOrElse(v)
+        },
         // run-log append (TASK_HISTORY stand-in)
         () => RunLog -> logAppend(pin, batchTime, rowsLoaded, "SUCCEEDED")
       ) ++
@@ -323,6 +349,7 @@ class ScdPipeline(
         expect = readTables.map(t => t -> pin.get(t)).toMap)
       staged
     } finally {
+      if (matched != null) matched.release()
       if (touched != null) touched.release()
       if (changes != null) changes.release()
     }
@@ -340,7 +367,10 @@ class ScdPipeline(
     * committed version passes [[TableStore.stageUpkeep]]'s rule is
     * maintained, all of them in one commit that expects the cycle's own
     * versions. A refused commit (another writer moved a table since) is
-    * skipped; the next cycle's versions carry the same debt and retry. */
+    * skipped; the next cycle's versions carry the same debt and retry.
+    * Landing is maintained by the same rule before the cycle's commit
+    * instead: its committed version is the stream's offset, so each of
+    * its committed versions is exactly one consumed batch. */
   private def upkeep(committed: Map[String, String]): Unit = {
     val maintained = Seq(Staging, RunLog, LoadHistory).flatMap(t =>
       committed.get(t).flatMap(store.stageUpkeep(t, _)).map(t -> _)).toMap

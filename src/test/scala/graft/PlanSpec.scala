@@ -60,7 +60,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
-  test("the cycle's staging task scans staging once, under a broadcast semi-join against the CDC's keys") {
+  test("the cycle's staging task scans staging once, under a broadcast semi-join against the batch's keys") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -565,10 +565,20 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
       case _ => false
     }
     val overLanding = ran.toSeq.filter { case (_, p) => Plans.find(p)(scansLanding).isDefined }
-    // two plans read landing: the CDC join and the landing write; the
-    // staging merge and the bookkeeping never do
-    overLanding.map(_._1).sorted shouldBe Seq("command", "localCheckpoint").sorted
-    val cdcPlan = overLanding.collectFirst { case ("localCheckpoint", p) => p }.get
+    // a scan of a version directory reads the whole version; the upkeep's
+    // purge reads only the files the deletion vector names
+    def readsWholeVersion(p: SparkPlan): Boolean = Plans.collect(p) {
+      case f: FileSourceScanExec if scansLanding(f) => f.relation.location.rootPaths
+    }.flatten.exists(!_.getName.endsWith(".parquet"))
+    val (merge, purge) = overLanding.partition { case (_, p) => readsWholeVersion(p) }
+    // one plan reads landing for the merge: the touched slice's checkpoint,
+    // which the CDC reads. Landing's write appends the INSERT images and
+    // reads no landing file; the staging merge and the bookkeeping never
+    // do. This batch tombstones one of landing's three rows, past the
+    // upkeep's tombstone share, so the cycle also purges the DV'd file.
+    merge.map(_._1) shouldBe Seq("localCheckpoint")
+    purge.map(_._1) shouldBe Seq("command")
+    val cdcPlan = merge.head._2
     Plans.collect(cdcPlan) { case f if scansLanding(f) => f }.size shouldBe 1
     // landing streams through a broadcast semi-join against the batch's keys
     def semiJoinsLanding(p: SparkPlan): Boolean = p match {

@@ -102,16 +102,27 @@ class OpsSpec extends AnyFunSuite with Matchers with SparkSpec {
       val order = if (seed % 2 == 1) cols.drop(2) ++ cols.take(2) else cols
       val prev = frame(target).select(order.map(col): _*)
       val batch = frame(rnd.shuffle(source)).select(order.map(col): _*)
-      val ch = Merge.upsertChanges(prev, batch, keys, compareCols)
+      // the next version is the carry MERGE of the changes into a store
+      // holding `prev` (none when the target is empty): the replaced rows
+      // tombstoned, the INSERT images appended
+      val store = new graft.core.TableStore(tmpDir("upsert-changes"), spark)
+      val base = Option.when(target.nonEmpty)(store.stage("t", prev))
+      base.foreach(v => store.commit(Map("t" -> v)))
+      val touched = store.touch("t", base, prev.schema,
+        select = Some(Merge.matched(batch, keys)))
+      val ch = Merge.upsertChanges(touched.rows, batch, keys, compareCols)
       try {
         val want = Merge.upsert(prev, batch, keys, compareCols)
-        ch.next.columns.toSeq shouldBe order
-        bag(ch.next) shouldBe bag(want)
         ch.cdc.schema.map(f => f.name -> f.dataType) shouldBe graft.core.Schemas
           .withCdcColumns(StructType(order.map(schema(_)))).map(f => f.name -> f.dataType)
         if (nullKey) ch.cdc.filter(col("k1").isNull).count() shouldBe 1
         else bag(ch.cdc) shouldBe bag(SnapshotCdc.diff(prev, want, keys))
-      } finally ch.release()
+        store.commit(Map("t" -> store.stageMerge(touched,
+          _ => (Some(ch.replaced), ch.inserted))), expect = Map("t" -> base))
+        val next = store.readOrEmpty("t", prev.schema)
+        next.columns.toSeq shouldBe order
+        bag(next) shouldBe bag(want)
+      } finally { touched.release(); ch.release() }
     }
   }
 
